@@ -14,6 +14,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import read_parquet
 from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import block_histogram_dict
 from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import CacheResult, PartitionCache
 from data_pipeline_with_hdfs_sql_integration_spark.operators.retry import with_retry
@@ -59,7 +60,7 @@ class Pipeline:
                 lo, hi = band
                 df = df.filter((F.col(band_col) > lo) & (F.col(band_col) < hi))
             df.write.mode("overwrite").parquet(self.main_path)
-            n = self.spark.read.parquet(self.main_path).count()
+            n = read_parquet(self.spark, self.main_path).count()
             return f"Imported {n} rows to {self.main_path}"
 
         return with_retry(run, attempts=attempts, sleep_s=sleep_s)
@@ -82,7 +83,7 @@ class Pipeline:
     def _cache(self) -> PartitionCache:
         return PartitionCache(
             self.spark,
-            self.spark.read.parquet(self.main_path),
+            read_parquet(self.spark, self.main_path),
             self.key_col,
             self.value_col,
             self.cache_root,

@@ -3,11 +3,30 @@
 The reference infers schemas end-to-end (SURVEY.md §1.3); we do the
 same — parquet is self-describing — but pin the table *names* so every
 query addresses tables identically to the DuckDB oracle views.
+
+Every parquet read of a table, a derived store or the serve path's
+main goes through ``read_parquet``, which infers each path's schema
+once per session: inference costs a Spark job and 100+ ms of driver
+time per read, and plans load the same tables many times per build.
+
+- Key: (applicationId, absolute path), holding the listing
+  fingerprint the schema was inferred under — the relative path,
+  ``st_mtime_ns`` and size of every data file (``_listing``) — plus the
+  parquet confs that change inference. A read whose fingerprint or
+  confs differ (the path was rewritten) re-infers and replaces it.
+- Value: the schema, never a DataFrame. A repeat read is
+  ``spark.read.schema(s).parquet(path)`` — a fresh relation with fresh
+  expression IDs, so two loads of one table still self-join.
+- Entries of other applicationIds (a restarted session) are evicted
+  on access, as in ``memo_persist``; a lock guards the dict.
+- Non-local paths (hdfs://, s3a://...) have no driver-side listing and
+  keep the plain inferring read.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,12 +50,72 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _listing(path: str) -> list[tuple[str, int, int]] | None:
+    """(relative path, size, st_mtime_ns) of every data file under a
+    local parquet path, from the driver's file listing — no Spark job.
+    Names starting with ``_`` or ``.`` (_SUCCESS, .crc) are skipped.
+    None for non-local paths (hdfs://, s3a://...)."""
+    if os.path.isdir(path):
+        out = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                if f.startswith(("_", ".")):
+                    continue
+                full = os.path.join(root, f)
+                try:
+                    st = os.stat(full)
+                except FileNotFoundError:  # removed mid-walk by a writer
+                    continue
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+        return sorted(out)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return [("", st.st_size, st.st_mtime_ns)]
+
+
+# Confs that change what parquet schema inference returns; a change
+# re-infers like a rewrite does.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMAS: dict[tuple, tuple] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local path's schema
+    once per session and listing fingerprint (see the module
+    docstring). Inference runs outside the lock: concurrent cold reads
+    of one path each infer, and the last insert wins."""
+    listing = _listing(path)
+    if listing is None:
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, os.path.abspath(path))
+    version = (tuple(listing), tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    with _SCHEMAS_LOCK:
+        for k in [k for k in _SCHEMAS if k[0] != key[0]]:
+            del _SCHEMAS[k]
+        seen_version, schema = _SCHEMAS.get(key, (None, None))
+    if seen_version == version:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = (version, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
@@ -58,41 +137,42 @@ def _estimated_scan_splits(spark: SparkSession, path: str) -> int:
     """Driver-side estimate of the scan's partition count from the file
     listing alone — no plan-to-RDD conversion, no job. Mirrors Spark's
     FilePartition bin-packing: files are chunked at maxPartitionBytes
-    and packed with an openCostInBytes surcharge per file."""
+    and packed with an openCostInBytes surcharge per chunk, and a
+    partition never holds less than one chunk."""
+    listing = _listing(path)
+    if listing is None:  # non-local path (hdfs://, s3://...) — let Spark answer
+        return -1
     max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20)
-    total = 0
-    n_files = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                total += os.path.getsize(os.path.join(root, f))
-                n_files += 1
-    elif os.path.exists(path):
-        total = os.path.getsize(path)
-        n_files = 1
-    else:  # non-local path (hdfs://, s3://...) — let Spark answer
-        return -1
-    return max(1, -(-(total + n_files * open_cost) // max_bytes))
+    total = sum(size for _f, size, _m in listing)
+    chunks = sum(max(1, -(-size // max_bytes)) for _f, size, _m in listing)
+    return max(1, min(chunks, -(-(total + chunks * open_cost) // max_bytes)))
 
 
 def table_on_disk_bytes(sf_dir: str, name: str) -> int:
     """On-disk parquet size of a table from the driver's file listing —
     no Spark job. Returns -1 for non-local paths (hdfs://, s3://...),
     where the caller must NOT assume 'small'."""
+    listing = _listing(table_path(sf_dir, name))
+    if listing is None:
+        return -1
+    return sum(size for _f, size, _m in listing)
+
+
+def table_row_count(sf_dir: str, name: str) -> int:
+    """Row count of a table from its parquet footers, read on the
+    driver — no Spark job. Returns -1 for non-local paths, where the
+    caller must count with Spark."""
+    import pyarrow.parquet as pq
+
     path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if not f.startswith(("_", ".")):
-                    total += os.path.getsize(os.path.join(root, f))
-        return total
-    if os.path.exists(path):
-        return os.path.getsize(path)
-    return -1
+    listing = _listing(path)
+    if listing is None:
+        return -1
+    return sum(
+        pq.read_metadata(os.path.join(path, f) if f else path).num_rows
+        for f, _size, _m in listing
+    )
 
 
 def broadcast_gate(sf_dir: str, name: str, limit_bytes: int = 64 << 20):
@@ -175,7 +255,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalize_events_ts). nanosAsLong stays on so a legacy
     TIMESTAMP(NANOS) fixture reads as long instead of erroring."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    df = read_parquet(spark, table_path(sf_dir, "events"))
     return normalize_events_ts(df)
 
 
@@ -196,7 +276,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 # clearCache, so callers may clear the session cache freely between
 # queries to bound memory at one query's working set.
 _MEMO_PERSIST: dict[tuple, DataFrame] = {}
-_MEMO_LOCK = __import__("threading").Lock()
+_MEMO_LOCK = threading.Lock()
 
 
 def memo_persist(spark: SparkSession, key: tuple, build) -> DataFrame:

@@ -22,13 +22,25 @@ write via the Hadoop FileSystem API when the storage supports it.
 from __future__ import annotations
 
 import logging
+import threading
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _log = logging.getLogger(__name__)
+
+# In-process single flight for partition writes: the partition paths
+# being created or recreated, each with the event its waiters block
+# on. A partition directory appears before its files commit, so a
+# request that probed it mid-write would read no rows (and a second
+# writer would collide with the first); it waits for the write instead
+# and then takes the reuse path. Module-level because callers may
+# build a PartitionCache per request.
+_WRITES: dict[str, threading.Event] = {}
+_WRITES_LOCK = threading.Lock()
 
 
 @dataclass
@@ -72,8 +84,9 @@ class PartitionCache:
         self.replication = replication
         # Partition files carry main's schema minus the key column; pin
         # it so every reuse-path read skips driver-side schema inference
-        # (one footer read per calc_avg otherwise).
-        self._cache_schema = main.drop(key_col).schema
+        # (one footer read per calc_avg otherwise). Filtered in Python:
+        # analysing main.drop(key_col) costs a plan analysis per request.
+        self._cache_schema = StructType([f for f in main.schema.fields if f.name != key_col])
 
     # -- paths ---------------------------------------------------------
     def partition_path(self, key: object) -> str:
@@ -160,15 +173,38 @@ class PartitionCache:
             return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
         return CacheResult(key, int(a), source)
 
+    def _recompute_once(self, key: object, source: str) -> CacheResult:
+        """_recompute unless another request in this process is already
+        writing the partition; then wait for it and re-run calc_avg."""
+        path = self.partition_path(key)
+        with _WRITES_LOCK:
+            pending = _WRITES.get(path)
+            if pending is None:
+                done = _WRITES[path] = threading.Event()
+        if pending is not None:
+            pending.wait()
+            return self.calc_avg(key)
+        try:
+            return self._recompute(key, source)
+        finally:
+            with _WRITES_LOCK:
+                del _WRITES[path]
+            done.set()
+
     # -- public API ----------------------------------------------------
     def calc_avg(self, key: object) -> CacheResult:
         """The CalcAvgLoan state machine (server.py:103-143)."""
-        if not self._exists(self.partition_path(key)):
-            return self._recompute(key, "create")  # server.py:113-116
+        path = self.partition_path(key)
+        with _WRITES_LOCK:
+            pending = _WRITES.get(path)
+            exists = pending is None and self._exists(path)
+        if pending is not None:
+            pending.wait()
+            return self.calc_avg(key)
+        if not exists:
+            return self._recompute_once(key, "create")  # server.py:113-116
         try:
-            cached = self.spark.read.schema(self._cache_schema).parquet(
-                self.partition_path(key)
-            )
+            cached = self.spark.read.schema(self._cache_schema).parquet(path)
             avg = self._avg_of(cached)
             if avg is None:
                 return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
@@ -176,15 +212,15 @@ class PartitionCache:
         except AnalysisException as exc:
             if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
                 # Raced deletion between the exists probe and the read.
-                return self._recompute(key, "create")
-            return self._recompute(key, "recreate")  # corrupt metadata etc.
+                return self._recompute_once(key, "create")
+            return self._recompute_once(key, "recreate")  # corrupt metadata etc.
         except Exception as exc:
             # With a pinned schema the path is first touched at job time,
             # so a raced deletion surfaces here as FileNotFound — keep the
             # reference's FileNotFoundError→create mapping (server.py:113).
             if "FileNotFound" in str(exc) or "Path does not exist" in str(exc):
-                return self._recompute(key, "create")
-            return self._recompute(key, "recreate")  # server.py:118-121 (OSError)
+                return self._recompute_once(key, "create")
+            return self._recompute_once(key, "recreate")  # server.py:118-121 (OSError)
 
     def calc_avg_many(self, keys: list) -> list[CacheResult]:
         """calc_avg over a key list with a few jobs in flight

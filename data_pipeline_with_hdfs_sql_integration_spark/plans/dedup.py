@@ -105,6 +105,7 @@ def minhash_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         deterministic_tmp_dir,
         params_digest,
         publish_store,
+        read_parquet,
         table_path,
     )
 
@@ -119,7 +120,7 @@ def minhash_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(staging),
     )
-    return spark.read.parquet(store)
+    return read_parquet(spark, store)
 
 
 def _shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, read_parquet
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
@@ -136,7 +136,7 @@ def lsh_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(staging),
     )
-    return spark.read.parquet(store)
+    return read_parquet(spark, store)
 
 
 _SQL_VECS = "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings"
@@ -428,8 +428,8 @@ def ivf_index_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
 
     publish_store(store, build)
     return (
-        spark.read.parquet(os.path.join(store, "centroids")),
-        spark.read.parquet(os.path.join(store, "assignments")),
+        read_parquet(spark, os.path.join(store, "centroids")),
+        read_parquet(spark, os.path.join(store, "assignments")),
     )
 
 
@@ -451,7 +451,7 @@ def ivf_probes_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"v{params_digest(_SEED_MULT, _SEED_MOD, _FP, IVF_PROBES_STORED)}",
         table_path(sf_dir, "embeddings"),
     )
-    return spark.read.parquet(os.path.join(store, "probes"))
+    return read_parquet(spark, os.path.join(store, "probes"))
 
 
 # ------------------------------------------- two-level IVF refinement
@@ -632,7 +632,7 @@ def ivf2_fine_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, rn, cell_id, sub_id, srn) from the two-level store."""
     import os
 
-    return spark.read.parquet(os.path.join(ivf2_index_store(spark, sf_dir), "fprobes"))
+    return read_parquet(spark, os.path.join(ivf2_index_store(spark, sf_dir), "fprobes"))
 
 
 def ivf2_max_occupancy(spark: SparkSession, sf_dir: str) -> int:
@@ -657,7 +657,7 @@ def ivf2_fine_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cell_id, sub_id): primary fine cell per vector."""
     import os
 
-    return spark.read.parquet(os.path.join(ivf2_index_store(spark, sf_dir), "fine"))
+    return read_parquet(spark, os.path.join(ivf2_index_store(spark, sf_dir), "fine"))
 
 
 def _sql_kmeans2_ctes() -> tuple[str, str]:
@@ -1220,8 +1220,8 @@ def pq_index_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
 
     publish_store(store, build)
     return (
-        spark.read.parquet(os.path.join(store, "codebook")),
-        spark.read.parquet(os.path.join(store, "codes")),
+        read_parquet(spark, os.path.join(store, "codebook")),
+        read_parquet(spark, os.path.join(store, "codes")),
     )
 
 

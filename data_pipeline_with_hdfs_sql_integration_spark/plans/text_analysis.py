@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, table_row_count
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
@@ -493,10 +493,13 @@ def text_tfidf_topterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     apply_runtime_confs(spark)
-    # Count the PLAIN scan: parquet count-star answers from footer
-    # metadata; counting the load_parallel frame would pay its
-    # repartition exchange just to count rows (guide §1.4 note).
-    n_docs = load(spark, sf_dir, "documents").count()
+    # The corpus size from the parquet footers on the driver: counting
+    # with Spark ran a job at plan-build time. Off-local paths have no
+    # driver listing and count the PLAIN scan (footer metadata, no
+    # load_parallel repartition exchange).
+    n_docs = table_row_count(sf_dir, "documents")
+    if n_docs < 0:
+        n_docs = load(spark, sf_dir, "documents").count()
     # tfs feeds BOTH the df aggregate and the scored join — without the
     # persist the optimizer re-derives it per consumer and the corpus
     # is scanned + exploded + aggregated twice (r12 plan: two parquet

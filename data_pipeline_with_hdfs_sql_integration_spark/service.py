@@ -209,13 +209,15 @@ class LenderHttpClient:
 
     def _call(self, verb: str, body: dict) -> dict:
         if self.wire == "proto":
-            from google.protobuf import json_format
-
             from data_pipeline_with_hdfs_sql_integration_spark.lender_pb import (
                 messages,
             )
 
+            # messages() resolves the _vendor protobuf shim; only then
+            # can google.protobuf be imported in a fresh process.
             classes = messages()
+            from google.protobuf import json_format
+
             req_name, resp_name = _VERB_MESSAGES[verb]
             data = json_format.ParseDict(
                 body, classes[req_name]()

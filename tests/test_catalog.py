@@ -1,0 +1,156 @@
+"""catalog.read_parquet: one schema inference per path and listing
+fingerprint per session, with fresh relations on every read."""
+
+from __future__ import annotations
+
+import os
+import sys
+import uuid
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import functions as F
+
+from data_pipeline_with_hdfs_sql_integration_spark import catalog
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, read_parquet
+
+from tests.conftest import SF_DIR
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, number of Spark jobs fn started on this thread)."""
+    sc = spark.sparkContext
+    group = f"read-parquet-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_repeat_read_of_unchanged_path_starts_no_job(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(50).withColumn("s", F.col("id").cast("string")).write.parquet(path)
+    first, first_jobs = _jobs_started(spark, lambda: read_parquet(spark, path))
+    again, again_jobs = _jobs_started(spark, lambda: read_parquet(spark, path))
+    assert first_jobs >= 1  # schema inference
+    assert again_jobs == 0
+    assert again.schema == first.schema
+    assert _rows(again) == _rows(first)
+
+
+def test_rewrite_with_added_column_shows_new_schema(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(5).write.parquet(path)
+    assert read_parquet(spark, path).columns == ["id"]
+    spark.range(5).withColumn("x", F.col("id") * 2).write.mode("overwrite").parquet(path)
+    df = read_parquet(spark, path)
+    assert df.columns == ["id", "x"]
+    assert _rows(df) == [(i, 2 * i) for i in range(5)]
+
+
+def test_db_to_store_rewrite_reaches_calc_avg(spark, tmp_path):
+    """A second DbToHdfs rewrites main with another value type and an
+    extra column; the serve path must read the new main, not the
+    schema it inferred for the old one."""
+    from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
+
+    pipe = Pipeline(spark, str(tmp_path / "main"), str(tmp_path / "cache"), "k", "v")
+    pipe.db_to_store(
+        spark.createDataFrame([(1, 10), (1, 20), (2, 5)], "k int, v long"),
+        attempts=1, sleep_s=0.0,
+    )
+    assert pipe.calc_avg(1).avg == 15
+    pipe.invalidate_cache()
+    pipe.db_to_store(
+        spark.createDataFrame(
+            [(1, 100.5, "a"), (1, 201.5, "b"), (2, 7.0, "c")], "k int, v double, tag string"
+        ),
+        attempts=1, sleep_s=0.0,
+    )
+    assert read_parquet(spark, pipe.main_path).columns == ["k", "v", "tag"]
+    res = pipe.calc_avg(1)
+    assert (res.avg, res.source, res.error) == (151, "create", "")
+    assert pipe.calc_avg(1).source == "reuse"
+
+
+def test_stale_application_entries_are_evicted(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(path)
+    stale_key = ("app-dead-0000", "/tmp/x")
+    catalog._SCHEMAS[stale_key] = ((), spark.range(1).schema)
+    read_parquet(spark, path)
+    assert stale_key not in catalog._SCHEMAS
+    live = (spark.sparkContext.applicationId, os.path.abspath(path))
+    assert live in catalog._SCHEMAS
+
+
+def test_two_loads_of_one_table_self_join(spark, duck):
+    """A repeat load is a fresh relation, so column references through
+    each frame stay unambiguous in a self-join."""
+    a = load(spark, SF_DIR, "nation")
+    b = load(spark, SF_DIR, "nation")
+    got = sorted(
+        tuple(r)
+        for r in a.join(b, a.n_regionkey == b.n_regionkey)
+        .filter(a.n_nationkey < b.n_nationkey)
+        .select(a.n_name, b.n_name)
+        .collect()
+    )
+    want = sorted(
+        duck.sql(
+            "SELECT x.n_name, y.n_name FROM nation x JOIN nation y "
+            "ON x.n_regionkey = y.n_regionkey WHERE x.n_nationkey < y.n_nationkey"
+        ).fetchall()
+    )
+    assert got == want and got
+
+
+def test_hive_partitioned_dir_keeps_partition_column(spark, tmp_path):
+    path = str(tmp_path / "hive")
+    spark.range(12).withColumn("p", (F.col("id") % 3).cast("int")).write.partitionBy(
+        "p"
+    ).parquet(path)
+    first = read_parquet(spark, path)
+    again, jobs = _jobs_started(spark, lambda: read_parquet(spark, path))
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert again.schema["p"].dataType.simpleString() == "int"
+    assert _rows(again) == _rows(first) == sorted((i, i % 3) for i in range(12))
+
+
+def test_concurrent_cold_reads_agree(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(20).withColumn("d", F.col("id") / 2).write.parquet(path)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            schemas = list(
+                pool.map(lambda _: read_parquet(spark, path).schema, range(8), timeout=300)
+            )
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(s == schemas[0] for s in schemas)
+    assert read_parquet(spark, path).schema == schemas[0]
+
+
+def test_listing_helpers_agree(spark, tmp_path):
+    """table_on_disk_bytes and table_row_count read the same listing;
+    off-local paths answer -1."""
+    sf = str(tmp_path)
+    path = catalog.table_path(sf, "orders")
+    spark.range(30).repartition(3).write.parquet(path)
+    listing = catalog._listing(path)
+    assert len(listing) == 3
+    assert catalog.table_on_disk_bytes(sf, "orders") == sum(size for _f, size, _m in listing)
+    assert catalog.table_row_count(sf, "orders") == 30
+    assert catalog.table_row_count(SF_DIR, "documents") == load(spark, SF_DIR, "documents").count()
+    assert catalog._listing("hdfs://nowhere/x.parquet") is None
+    assert catalog.table_row_count("hdfs://nowhere", "orders") == -1
+    assert catalog.table_on_disk_bytes("hdfs://nowhere", "orders") == -1

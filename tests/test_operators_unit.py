@@ -39,6 +39,31 @@ def test_cache_recreate_on_corruption(cache):
     assert third.avg == first.avg == fourth.avg
 
 
+def test_cache_concurrent_first_requests_create_once(cache):
+    """Simultaneous first requests for one key: one create, the rest
+    wait for it and reuse — never a read of the half-written partition."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    barrier = threading.Barrier(6, timeout=60)
+
+    def hit(_):
+        barrier.wait()
+        return cache.calc_avg(7)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=6) as pool:
+            results = list(pool.map(hit, range(6), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert [r.error for r in results] == [""] * 6
+    assert len({r.avg for r in results}) == 1
+    assert sorted(r.source for r in results) == ["create"] + ["reuse"] * 5
+
+
 def test_cache_empty_key_is_error_not_null(cache):
     # Reference: int(NaN) raises -> error response (server.py:145-147).
     r = cache.calc_avg(424242)

@@ -227,3 +227,37 @@ def test_three_verbs_over_proto_wire(service):
     # In-band error shape survives the proto transport (defaults filled).
     missing = proto_client.calc_avg_loan(9999)
     assert missing["avg_loan"] == 0 and missing["source"] == "" and missing["error"]
+
+
+def test_proto_client_in_fresh_process(service):
+    """A proto-wire client in a fresh interpreter, with nothing having
+    resolved the _vendor protobuf shim beforehand, must still work."""
+    import json as _json
+    import subprocess
+    import sys
+
+    from data_pipeline_with_hdfs_sql_integration_spark.lender_pb import (
+        protobuf_available,
+    )
+
+    if not protobuf_available():
+        pytest.skip("no protobuf runtime on this host")
+    svc, json_client = service
+    json_client.db_to_hdfs()
+    want = json_client.calc_avg_loan(5)
+    port = int(json_client.base.rsplit(":", 1)[1])
+    script = (
+        "import json\n"
+        "from data_pipeline_with_hdfs_sql_integration_spark.service import LenderHttpClient\n"
+        f"print(json.dumps(LenderHttpClient({port}, wire='proto').calc_avg_loan(5)))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p
+    )}
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    got = _json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {**want, "source": "reuse"}
