@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import read_parquet
-from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import block_histogram_dict
+from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import block_histogram_dict, hadoop_fs
 from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import CacheResult, PartitionCache
 from data_pipeline_with_hdfs_sql_integration_spark.operators.retry import with_retry
 
@@ -94,4 +94,6 @@ class Pipeline:
         return self._cache().calc_avg(key)
 
     def invalidate_cache(self) -> None:
-        self._cache().invalidate()
+        """Drop the whole partition cache; main is not read."""
+        fs, hpath = hadoop_fs(self.spark, self.cache_root)
+        fs.delete(hpath, True)

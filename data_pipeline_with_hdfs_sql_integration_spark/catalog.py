@@ -319,61 +319,60 @@ def memo_persist(spark: SparkSession, key: tuple, build) -> DataFrame:
 STORE_BUILD_TIMES: dict[str, float] = {}
 
 
-def publish_store(store: str, write_fn) -> None:
-    """Materialize a derived parquet store exactly once, atomically.
+def _has_success(path: str) -> bool:
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
 
-    Builds into a process-unique staging dir, then renames it into
-    place — rename is atomic on a POSIX filesystem, so a concurrent
-    builder (another test session, the driver) either wins the rename
-    or finds the published store and discards its own staging copy.
-    A plain write.mode('overwrite') straight to the store path would
-    let two builders interleave files. No-op if already published.
+
+def publish_store(target: str, build, complete=_has_success) -> None:
+    """Materialize a derived directory exactly once, atomically.
+
+    ``build(path)`` writes the directory; ``complete(path)`` tells a
+    finished one from a partial one. No-op if ``target`` is complete.
+    Otherwise builds into a private ``<target>.build-<uuid>`` (removed
+    if the build raises) and renames it into place, atomic on POSIX:
+    racing builders each build, one rename wins and the rest drop their
+    copies. An incomplete ``target`` in the way, re-probed just before,
+    is renamed aside and deleted. Raises RuntimeError when nothing
+    complete can be published.
     """
     import shutil
     import time
+    import uuid
 
-    if os.path.exists(os.path.join(store, "_SUCCESS")):
+    if complete(target):
         return
-    if os.path.exists(store):  # crashed/partial build from an old scheme
-        # TOCTOU guard: between the _SUCCESS check above and this
-        # removal, a concurrent builder may have atomically renamed a
-        # COMPLETE store into place. Re-check _SUCCESS immediately
-        # before removing, and only remove dirs that have had time to
-        # settle — a complete store's mtime is its (recent) staging
-        # build time, so the age gate alone protects it; a genuinely
-        # dead partial ages past the grace period and gets cleaned by a
-        # later call.
-        if os.path.exists(os.path.join(store, "_SUCCESS")):
-            return
-        try:
-            age = time.time() - os.stat(store).st_mtime
-        except OSError:
-            age = float("inf")  # vanished mid-probe: nothing to remove
-        if age >= 60.0:
-            shutil.rmtree(store, ignore_errors=True)
-    staging = f"{store}.staging.{os.getpid()}"
-    shutil.rmtree(staging, ignore_errors=True)
+    staged = f"{target}.build-{uuid.uuid4().hex}"
     t0 = time.monotonic()
-    write_fn(staging)
-    STORE_BUILD_TIMES[os.path.basename(store)] = round(
-        STORE_BUILD_TIMES.get(os.path.basename(store), 0.0)
-        + (time.monotonic() - t0),
-        4,
-    )
     try:
-        os.rename(staging, store)
-    except OSError:
-        if os.path.exists(os.path.join(store, "_SUCCESS")):
-            shutil.rmtree(staging, ignore_errors=True)  # raced: other builder won
-        else:
-            # Blocked by a partial the age gate spared; our build is
-            # complete, so replace it (retry once — a publisher landing
-            # in this gap wins and we discard our copy).
-            shutil.rmtree(store, ignore_errors=True)
+        build(staged)
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    name = os.path.basename(target)
+    STORE_BUILD_TIMES[name] = round(
+        STORE_BUILD_TIMES.get(name, 0.0) + (time.monotonic() - t0), 4
+    )
+    for _ in range(3):
+        if complete(target):
+            break  # a racer published while we built: keep theirs
+        if os.path.isdir(target):
+            stale = f"{target}.stale-{uuid.uuid4().hex}"
             try:
-                os.rename(staging, store)
+                os.rename(target, stale)
+                shutil.rmtree(stale, ignore_errors=True)
             except OSError:
-                shutil.rmtree(staging, ignore_errors=True)
+                pass  # a racer moved it first; the rename below arbitrates
+        try:
+            os.rename(staged, target)
+            return
+        except OSError:
+            continue  # target reappeared mid-race: re-probe and retry
+    shutil.rmtree(staged, ignore_errors=True)
+    if not complete(target):
+        raise RuntimeError(
+            f"publish_store: could not publish {target} after 3 attempts"
+            " and no complete copy exists"
+        )
 
 
 def clear_derived_stores(sf_dir: str) -> list[str]:
@@ -391,23 +390,13 @@ def clear_derived_stores(sf_dir: str) -> list[str]:
     stores (bench runs standalone; gate via
     SPARK_GRAFT_BENCH_COLD_STORES=0 when sharing the box)."""
     import glob
-    import hashlib
     import shutil
     import tempfile
 
-    sources = [sf_dir] + [table_path(sf_dir, t) for t in TABLES]
     removed: list[str] = []
-    for src in sources:
-        ap = os.path.abspath(src)
-        try:
-            st = os.stat(ap)
-            token = f"{ap}|{st.st_mtime_ns}|{st.st_size}"
-        except OSError:
-            continue
-        digest = hashlib.sha256(token.encode()).hexdigest()[:16]
-        for d in glob.glob(
-            os.path.join(tempfile.gettempdir(), f"dps_*_{digest}")
-        ):
+    for src in [sf_dir] + [table_path(sf_dir, t) for t in TABLES]:
+        pattern = f"dps_*_{_source_digest(src)}"
+        for d in glob.glob(os.path.join(tempfile.gettempdir(), pattern)):
             shutil.rmtree(d, ignore_errors=True)
             removed.append(os.path.basename(d))
     return sorted(removed)
@@ -424,12 +413,11 @@ def params_digest(*params) -> str:
     return hashlib.sha256(repr(params).encode()).hexdigest()[:8]
 
 
-def deterministic_tmp_dir(kind: str, source_path: str) -> str:
-    """Stable scratch dir for artifacts derived from `source_path`,
-    keyed on the source's identity AND content version (mtime+size),
-    so regenerated fixtures can never serve a stale derived copy."""
+def _source_digest(source_path: str) -> str:
+    """sha256[:16] of a source's absolute path, mtime and size: the
+    version key of every store derived from it (just the path when the
+    source is missing)."""
     import hashlib
-    import tempfile
 
     ap = os.path.abspath(source_path)
     try:
@@ -437,5 +425,13 @@ def deterministic_tmp_dir(kind: str, source_path: str) -> str:
         token = f"{ap}|{st.st_mtime_ns}|{st.st_size}"
     except OSError:
         token = ap
-    digest = hashlib.sha256(token.encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"dps_{kind}_{digest}")
+    return hashlib.sha256(token.encode()).hexdigest()[:16]
+
+
+def deterministic_tmp_dir(kind: str, source_path: str) -> str:
+    """Stable scratch dir for artifacts derived from `source_path`,
+    keyed on the source's identity AND content version (mtime+size),
+    so regenerated fixtures can never serve a stale derived copy."""
+    import tempfile
+
+    return os.path.join(tempfile.gettempdir(), f"dps_{kind}_{_source_digest(source_path)}")

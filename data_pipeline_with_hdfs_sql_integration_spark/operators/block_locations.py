@@ -5,21 +5,23 @@ flatten each block's host list, count blocks per DataNode host.
 
 Spark-native version: Hadoop ``FileSystem.getFileBlockLocations`` via
 the JVM gateway — works uniformly for file://, hdfs://, s3a://. The
-flatten+count runs as a DataFrame explode + hash aggregate (O12) so
-the same code path scales to millions of blocks.
+listing is already on the driver, so the count is a plain Python loop
+like the reference's; no Spark job runs.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` under the session's
+    Hadoop configuration."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def block_locations(spark: SparkSession, path: str) -> list[dict]:
@@ -27,7 +29,7 @@ def block_locations(spark: SparkSession, path: str) -> list[dict]:
 
     Returns [{"file": str, "offset": int, "length": int, "hosts": [str]}].
     """
-    fs, hpath, _ = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     out: list[dict] = []
     stack = [hpath]
     while stack:
@@ -49,19 +51,19 @@ def block_locations(spark: SparkSession, path: str) -> list[dict]:
     return out
 
 
-def block_location_histogram(spark: SparkSession, path: str) -> DataFrame:
-    """Host → block-count map (reference server.py:80-89) as a DataFrame."""
-    blocks = block_locations(spark, path)
-    if not blocks:
-        return spark.createDataFrame([], "host string, n_blocks bigint")
-    df = spark.createDataFrame([(b["hosts"],) for b in blocks], "hosts array<string>")
-    return (
-        df.select(F.explode("hosts").alias("host"))
-        .groupBy("host")
-        .agg(F.count("*").alias("n_blocks"))
-    )
+def host_counts(blocks: Iterable[dict]) -> dict[str, int]:
+    """Host → block count, one count per replica host per block
+    (reference server.py:80-87)."""
+    return dict(Counter(host for b in blocks for host in b["hosts"]))
 
 
 def block_histogram_dict(spark: SparkSession, path: str) -> dict[str, int]:
     """The reference's map<string,int32> response shape (lender.proto:10)."""
-    return {r["host"]: r["n_blocks"] for r in block_location_histogram(spark, path).collect()}
+    return host_counts(block_locations(spark, path))
+
+
+def block_location_histogram(spark: SparkSession, path: str) -> DataFrame:
+    """Host → block-count map (reference server.py:80-89) as a DataFrame."""
+    return spark.createDataFrame(
+        list(block_histogram_dict(spark, path).items()), "host string, n_blocks bigint"
+    )

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import hadoop_fs
+
 _log = logging.getLogger(__name__)
 
 # In-process single flight for partition writes: the partition paths
@@ -124,9 +126,7 @@ class PartitionCache:
 
     def _set_replication(self, path: str) -> None:
         try:
-            jvm = self.spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+            fs, hpath = hadoop_fs(self.spark, path)
             for st in fs.listStatus(hpath):
                 if st.isFile():
                     fs.setReplication(st.getPath(), self.replication)
@@ -138,18 +138,14 @@ class PartitionCache:
                        exc_info=True)
 
     def _delete(self, path: str) -> None:
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, hpath = hadoop_fs(self.spark, path)
         fs.delete(hpath, True)
 
     def _exists(self, path: str) -> bool:
         """Metadata-only FileSystem.exists probe — no Spark job, no
         exception-driven control flow (an AnalysisException probe pays a
         full JVM stack unwind per cache miss and floods the logs)."""
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, hpath = hadoop_fs(self.spark, path)
         return bool(fs.exists(hpath))
 
     def _recompute(self, key: object, source: str) -> CacheResult:
@@ -246,10 +242,7 @@ class PartitionCache:
 
     def invalidate(self) -> None:
         """Drop the whole cache (performance_analyzer.py:26-34, O16)."""
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(self.cache_root)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        fs.delete(hpath, True)
+        self._delete(self.cache_root)
 
     def warm_all(self) -> None:
         """Bulk idiomatic variant: one partitioned write materializes every

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import json
 import os
-import time as _time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1134,8 +1133,8 @@ def scratch_table(kind: str, source_path: str) -> TxTable:
 
 def _probe_latest(root: str) -> int:
     """latest_version of the table at ``root`` WITHOUT instantiating
-    TxTable (whose __init__ mkdirs — which would block the atomic
-    rename publish below by pre-creating a non-empty target)."""
+    TxTable (whose __init__ mkdirs — which would block build_once's
+    atomic rename publish by pre-creating a non-empty target)."""
     import re
 
     try:
@@ -1154,87 +1153,33 @@ def _probe_latest(root: str) -> int:
 
 def build_once(kind: str, source_path: str, target_version: int, builder) -> TxTable:
     """Materialize a derived scratch table EXACTLY ONCE under
-    concurrency: if the deterministic root already holds a table at
-    >= ``target_version``, reuse it; otherwise run ``builder(TxTable)``
-    against a private temp sibling and atomically ``rename()`` the
-    finished directory into place. Racing builders each construct a
-    complete table; exactly one rename wins, losers discard their
-    build and read the winner's — so no reader can ever observe a
-    half-built table or a duplicated commit sequence (the
-    read-modify-write race a shared incremental build has).
+    concurrency: reuse the deterministic root if it already holds a
+    table at >= ``target_version``, else run ``builder(TxTable)`` on a
+    private sibling and publish it with ``catalog.publish_store``, so
+    no reader can observe a half-built table or a duplicated commit
+    sequence. Raises ValueError when the builder stops short of
+    ``target_version``.
 
     Relies on log entries being root-relative (round 9) so the rename
     relocates data and log together."""
-    import shutil
-
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
         deterministic_tmp_dir,
+        publish_store,
     )
 
-    root = deterministic_tmp_dir(f"txtable_{kind}", source_path)
-    if _probe_latest(root) >= target_version:
-        return TxTable(root)
-    build_root = f"{root}.build-{uuid.uuid4().hex}"
-    bt = TxTable(build_root)
-    # Fixture-build seconds land in the same ledger the index stores
-    # use (catalog.STORE_BUILD_TIMES -> bench store_build_s), so a
-    # bench key that reads a multi-commit scratch table reports the
-    # table's construction cost separately from the operator's read
-    # cost (round-11 verdict: format_txlog_cdf's headline conflated
-    # the two).
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
-        STORE_BUILD_TIMES,
-    )
-
-    _t0 = _time.monotonic()
-    try:
-        builder(bt)
-        built = bt.latest_version()
+    def build(path: str) -> None:
+        t = TxTable(path)
+        builder(t)
+        built = t.latest_version()
         if built < target_version:
             raise ValueError(
                 f"builder for {kind} stopped at version {built}"
                 f" < target {target_version}"
             )
-        STORE_BUILD_TIMES[os.path.basename(root)] = round(
-            STORE_BUILD_TIMES.get(os.path.basename(root), 0.0)
-            + (_time.monotonic() - _t0),
-            4,
-        )
-    except BaseException:
-        # Never leak a table-sized private build tree on failure.
-        shutil.rmtree(build_root, ignore_errors=True)
-        raise
-    for _ in range(3):
-        if _probe_latest(root) >= target_version:
-            # A racer published a complete table while we built; ours
-            # is redundant — drop it and read the winner's.
-            shutil.rmtree(build_root, ignore_errors=True)
-            return TxTable(root)
-        if os.path.isdir(root):
-            # Incomplete dir in the way (pre-atomic partial build, or
-            # bare data/_log dirs mkdir-ed by a concurrent TxTable()
-            # handle): move it aside — re-probed as incomplete just
-            # above, so nothing complete is ever displaced — and
-            # delete the garbage. A racer may win the move; the
-            # rename below arbitrates.
-            try:
-                stale = f"{root}.stale-{uuid.uuid4().hex}"
-                os.rename(root, stale)
-                shutil.rmtree(stale, ignore_errors=True)
-            except OSError:
-                pass
-        try:
-            os.rename(build_root, root)
-            return TxTable(root)
-        except OSError:
-            continue  # target reappeared mid-race: re-probe and retry
-    shutil.rmtree(build_root, ignore_errors=True)
-    if _probe_latest(root) >= target_version:
-        return TxTable(root)
-    raise RuntimeError(
-        f"build_once({kind}): could not publish after 3 attempts and no"
-        f" complete table exists at {root}"
-    )
+
+    root = deterministic_tmp_dir(f"txtable_{kind}", source_path)
+    publish_store(root, build, complete=lambda p: _probe_latest(p) >= target_version)
+    return TxTable(root)
 
 
 class ConstraintViolation(ValueError):

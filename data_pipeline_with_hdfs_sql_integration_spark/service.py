@@ -323,11 +323,6 @@ def serve_grpc(pipeline: Pipeline, port: int = 5000, max_workers: int = 10):
     )
     # Generic handler: method name -> unary-unary servicer call with the
     # runtime message classes (what generated _pb2_grpc stubs automate).
-    rpcs = {
-        "DbToHdfs": ("Empty", "StatusString"),
-        "BlockLocations": ("BlockLocationsReq", "BlockLocationsResp"),
-        "CalcAvgLoan": ("CalcAvgLoanReq", "CalcAvgLoanResp"),
-    }
     servicer = LenderServicer()
     handlers = {
         name: grpc.unary_unary_rpc_method_handler(
@@ -335,7 +330,7 @@ def serve_grpc(pipeline: Pipeline, port: int = 5000, max_workers: int = 10):
             request_deserializer=classes[req].FromString,
             response_serializer=classes[resp].SerializeToString,
         )
-        for name, (req, resp) in rpcs.items()
+        for name, (req, resp) in _VERB_MESSAGES.items()
     }
     server.add_generic_rpc_handlers(
         (grpc.method_handlers_generic_handler("Lender", handlers),)

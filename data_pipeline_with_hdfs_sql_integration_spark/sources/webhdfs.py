@@ -16,7 +16,7 @@ deployment with a real NameNode gets wire parity:
   (offset/length ranged reads), the building block for a
   locality-aware custom reader.
 
-Pure stdlib (urllib) — no `requests` dependency; redirects for OPEN
+Stdlib HTTP (urllib) — no `requests` dependency; redirects for OPEN
 are followed manually because the redirect target (a DataNode) is part
 of the protocol, not an incidental hop.
 
@@ -31,6 +31,8 @@ import json
 import urllib.error
 import urllib.parse
 import urllib.request
+
+from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import host_counts
 
 
 class WebHdfsError(RuntimeError):
@@ -111,12 +113,11 @@ def block_histogram(base_url: str, path: str, *, timeout: float = 30.0) -> dict[
     (server.py:80-87): every block contributes one count per host it
     is replicated on. Directories recurse over their files so a
     parquet directory reports like the JVM-API histogram."""
-    blocks: dict[str, int] = {}
-    for f in walk_files(base_url, path, timeout=timeout):
-        for b in get_file_block_locations(base_url, f, timeout=timeout):
-            for host in b["hosts"]:
-                blocks[host] = blocks.get(host, 0) + 1
-    return blocks
+    return host_counts(
+        b
+        for f in walk_files(base_url, path, timeout=timeout)
+        for b in get_file_block_locations(base_url, f, timeout=timeout)
+    )
 
 
 def open_read(base_url: str, path: str, *, offset: int | None = None,

@@ -8,6 +8,7 @@ import sys
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark import catalog
@@ -154,3 +155,45 @@ def test_listing_helpers_agree(spark, tmp_path):
     assert catalog._listing("hdfs://nowhere/x.parquet") is None
     assert catalog.table_row_count("hdfs://nowhere", "orders") == -1
     assert catalog.table_on_disk_bytes("hdfs://nowhere", "orders") == -1
+
+
+def _write_store(path, data="data"):
+    os.makedirs(path)
+    with open(os.path.join(path, "part-0"), "w") as f:
+        f.write(data)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def test_publish_store_raises_when_every_rename_fails(tmp_path, monkeypatch):
+    store = str(tmp_path / "store")
+
+    def refuse(src, dst):
+        raise OSError("rename refused")
+
+    monkeypatch.setattr(os, "rename", refuse)
+    with pytest.raises(RuntimeError, match="could not publish"):
+        catalog.publish_store(store, _write_store)
+    assert os.listdir(tmp_path) == []  # the build dir was removed
+
+
+def test_publish_store_complete_probe_and_build_time(tmp_path):
+    """A custom ``complete`` probe decides reuse; an incomplete target
+    is moved aside and replaced; the build time lands once under the
+    target's name."""
+    store = str(tmp_path / "store")
+    os.makedirs(store)  # incomplete under the probe below
+    catalog.STORE_BUILD_TIMES.pop("store", None)
+
+    def has_part(path):
+        return os.path.exists(os.path.join(path, "part-0"))
+
+    catalog.publish_store(store, _write_store, complete=has_part)
+    assert sorted(os.listdir(tmp_path)) == ["store"]
+    assert sorted(os.listdir(store)) == ["_SUCCESS", "part-0"]
+    assert catalog.STORE_BUILD_TIMES["store"] >= 0.0
+
+    def must_not_run(path):
+        raise AssertionError("rebuilt a complete store")
+
+    catalog.publish_store(store, must_not_run, complete=has_part)
+

@@ -122,6 +122,54 @@ def test_block_locations_local_fs(spark):
     assert sum(hist.values()) == len(blocks)
 
 
+def test_host_counts_one_per_replica_host():
+    from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import (
+        host_counts,
+    )
+
+    assert host_counts([{"hosts": ["a", "b"]}, {"hosts": ["a"]}]) == {"a": 2, "b": 1}
+    assert host_counts([]) == {}
+
+
+def test_block_histogram_starts_no_spark_job(spark):
+    from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import (
+        block_histogram_dict,
+    )
+
+    from tests.test_catalog import _jobs_started
+
+    hist, jobs = _jobs_started(
+        spark, lambda: block_histogram_dict(spark, f"{SF_DIR}/lineitem.parquet")
+    )
+    assert hist and jobs == 0
+
+
+def test_o13_rows_equal_histogram_dict(spark):
+    from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import (
+        block_histogram_dict,
+    )
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    df = all_queries()["o13_block_locations"].fn(spark, SF_DIR)
+    assert df.schema.simpleString() == "struct<host:string,n_blocks:bigint>"
+    rows = {r["host"]: r["n_blocks"] for r in df.collect()}
+    assert rows == block_histogram_dict(spark, f"{SF_DIR}/lineitem.parquet")
+
+
+def test_invalidate_before_first_store_does_not_read_main(spark, tmp_path):
+    from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
+
+    pipe = Pipeline(spark, str(tmp_path / "main"), str(tmp_path / "cache"), "k", "v")
+    pipe.invalidate_cache()  # no main yet
+    pipe.db_to_store(
+        spark.createDataFrame([(1, 10), (1, 21), (2, 5)], "k int, v long"),
+        attempts=1, sleep_s=0.0,
+    )
+    first, second = pipe.calc_avg(1), pipe.calc_avg(1)
+    assert (first.avg, first.source) == (15, "create")
+    assert (second.avg, second.source) == (15, "reuse")
+
+
 def test_pipeline_facade_end_to_end(spark):
     from pyspark.sql import functions as F
 

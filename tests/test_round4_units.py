@@ -170,5 +170,5 @@ def test_publish_store_builds_once_and_survives_races(tmp_path):
     publish_store(store, racing_build)
     assert os.path.exists(os.path.join(store, "_SUCCESS"))
     assert open(marker).read() == "other"  # partial store was replaced
-    assert not any(p.name.startswith("store.staging") for p in tmp_path.iterdir())
+    assert sorted(os.listdir(tmp_path)) == ["store"]  # no build dir leaked
     assert before == "data"

@@ -131,7 +131,7 @@ class TestBuildOnce:
         t = txlog.build_once("t9_race", src, 1, self._builder(spark, 3))
         assert calls["n"] >= 2, "publish loop must re-probe"
         assert t.live_files() == winner_files  # winner untouched
-        assert not glob.glob(f"{winner.root}.build-*"), "losing build must be discarded"
+        assert glob.glob(f"{winner.root}*") == [winner.root], "losing build must be discarded"
 
     def test_builder_failure_leaks_no_build_dir(self, spark, tmp_path):
         import glob
@@ -155,7 +155,7 @@ class TestBuildOnce:
         with pytest.raises(RuntimeError, match="mid-build crash"):
             build_once("t9_crash", src, 1, boom)
         root = deterministic_tmp_dir("txtable_t9_crash", src)
-        assert not glob.glob(f"{root}.build-*"), "crashed build tree leaked"
+        assert not glob.glob(f"{root}*"), "crashed build tree leaked"
 
     def test_short_build_raises(self, spark, tmp_path):
         import pytest
