@@ -15,7 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import read_parquet
-from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import block_histogram_dict, hadoop_fs
+from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import (
+    block_histogram_dict,
+    hadoop_fs,
+    set_replication,
+)
 from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import CacheResult, PartitionCache
 from data_pipeline_with_hdfs_sql_integration_spark.operators.retry import with_retry
 
@@ -49,7 +53,8 @@ class Pipeline:
         """Extract → optional broadcast join → band filter → parquet sink.
 
         Returns the row-count status string like reference server.py:57-58.
-        Retries the whole job like server.py:25-27/61-68 (O14).
+        Retries the whole job like server.py:25-27/61-68 (O14). Main is
+        stored at ``main_replication`` (reference: 2x, server.py:49).
         """
 
         def run() -> str:
@@ -60,6 +65,7 @@ class Pipeline:
                 lo, hi = band
                 df = df.filter((F.col(band_col) > lo) & (F.col(band_col) < hi))
             df.write.mode("overwrite").parquet(self.main_path)
+            set_replication(self.spark, self.main_path, self.main_replication)
             n = read_parquet(self.spark, self.main_path).count()
             return f"Imported {n} rows to {self.main_path}"
 

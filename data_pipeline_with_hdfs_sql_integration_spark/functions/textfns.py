@@ -4,7 +4,7 @@ Each primitive has two implementations sharing the same constants:
 a Spark Column builder (JVM-side higher-order functions — no Python
 UDFs, stays inside whole-stage codegen) and a DuckDB SQL fragment
 generator used to build the correctness oracles. The pair is proven
-bit-identical by tests/test_textfns.py.
+bit-identical by tests/test_textfns_property.py.
 
 Production note (100 TB): the portable polynomial hash below keeps the
 oracle checkable. For throughput-critical jobs, `F.xxhash64` is a
@@ -50,32 +50,6 @@ def poly_hash_longs(arr: Column) -> Column:
     return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, x: (acc * BASE + x) % MOD)
 
 
-def word_shingles(tokens_col: Column, n: int = 3) -> Column:
-    """Distinct space-joined word n-grams of a token array.
-
-    Guarded: Spark's sequence(a, b) runs *descending* when a > b, so a
-    too-short doc must short-circuit to an empty array (DuckDB's
-    generate_series returns [] there).
-    """
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(tokens_col) - n),
-        lambda i: F.array_join(F.slice(tokens_col, i + 1, n), " "),
-    )
-    empty = F.array().cast("array<string>")
-    return F.when(F.size(tokens_col) >= n, F.array_distinct(grams)).otherwise(empty)
-
-
-def char_ngrams(col: Column, n: int = 3) -> Column:
-    """Distinct character n-grams of a (lowercased) string."""
-    lowered = F.lower(col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.length(lowered) - n + 1),
-        lambda i: lowered.substr(i, F.lit(n)),
-    )
-    empty = F.array().cast("array<string>")
-    return F.when(F.length(lowered) >= n, F.array_distinct(grams)).otherwise(empty)
-
-
 def _affine_mod(a: int, b: int):
     # One-arg lambda factory (pyspark HOFs dispatch on lambda arity).
     return lambda x: (F.lit(a) * x + F.lit(b)) % MOD
@@ -116,24 +90,6 @@ def sql_poly_hash_longs(expr: str) -> str:
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), {expr}), "
         f"(a, b) -> (a * {BASE} + b) % {MOD})"
-    )
-
-
-def sql_word_shingles(tokens_col: str, n: int = 3) -> str:
-    """``tokens_col`` must be a plain column name (lambdas can't nest
-    subqueries in DuckDB) — put the token expression in a prior CTE."""
-    joined = " || ' ' || ".join(f"{tokens_col}[i + {j}]" for j in range(n))
-    return (
-        f"list_distinct(list_transform(generate_series(1, len({tokens_col}) - {n - 1}), "
-        f"i -> {joined}))"
-    )
-
-
-def sql_char_ngrams(expr: str, n: int = 3) -> str:
-    return (
-        f"list_distinct(list_filter(list_transform("
-        f"generate_series(1, len(lower({expr})) - {n - 1}), "
-        f"i -> substr(lower({expr}), CAST(i AS INT), {n})), g -> len(g) = {n}))"
     )
 
 

@@ -21,7 +21,6 @@ write via the Hadoop FileSystem API when the storage supports it.
 
 from __future__ import annotations
 
-import logging
 import threading
 from dataclasses import dataclass
 
@@ -30,9 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import hadoop_fs
-
-_log = logging.getLogger(__name__)
+from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import hadoop_fs, set_replication
 
 # In-process single flight for partition writes: the partition paths
 # being created or recreated, each with the event its waiters block
@@ -122,20 +119,7 @@ class PartitionCache:
         # One key's subset is small by construction — coalesce(1) mirrors
         # the reference's single partition file per key (server.py:139-140).
         subset.drop(self.key_col).coalesce(1).write.mode("overwrite").parquet(path)
-        self._set_replication(path)
-
-    def _set_replication(self, path: str) -> None:
-        try:
-            fs, hpath = hadoop_fs(self.spark, path)
-            for st in fs.listStatus(hpath):
-                if st.isFile():
-                    fs.setReplication(st.getPath(), self.replication)
-        except Exception:
-            # Local fs treats replication as a no-op, but on a real
-            # cluster a failed setReplication is a durability signal —
-            # record it instead of swallowing silently.
-            _log.debug("setReplication(%s, %d) failed", path, self.replication,
-                       exc_info=True)
+        set_replication(self.spark, path, self.replication)
 
     def _delete(self, path: str) -> None:
         fs, hpath = hadoop_fs(self.spark, path)
@@ -249,4 +233,4 @@ class PartitionCache:
         key at once (df.write.partitionBy) — at 100 TB this replaces N
         per-key jobs with a single shuffle-free partitioned write."""
         self.main.write.partitionBy(self.key_col).mode("overwrite").parquet(self.cache_root)
-        self._set_replication(self.cache_root)
+        set_replication(self.spark, self.cache_root, self.replication)

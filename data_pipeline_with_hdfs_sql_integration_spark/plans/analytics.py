@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.functions import numfns as nf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 def _sum_dec(col: F.Column, scale: int = 2) -> F.Column:
@@ -85,7 +84,6 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value-identical to the decimal formulation field-by-field at sf1
     # and oracle-green at sf0.001/0.01/0.1/1 (OPTIMIZATION_r13.md);
     # tests/test_numeric_parity.py pins long==decimal on the fixture.
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2000-09-02 00:00:00").cast("timestamp")
     )
@@ -162,7 +160,6 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "join"),
 )
 def join_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = load(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
@@ -212,7 +209,6 @@ def join_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "join"),
 )
 def join_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n = load(spark, sf_dir, "nation")
     s = load(spark, sf_dir, "supplier")
@@ -244,7 +240,6 @@ def join_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "window"),
 )
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
     return (
         load(spark, sf_dir, "orders")
@@ -268,7 +263,6 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "window"),
 )
 def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy(F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
@@ -296,7 +290,6 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "join"),
 )
 def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").select("o_custkey")
     semi = (
@@ -327,7 +320,6 @@ def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "agg"),
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return (
         load(spark, sf_dir, "orders")
         .rollup("o_orderstatus", "o_orderpriority")
@@ -354,7 +346,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "setops"),
 )
 def set_ops_customer_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")

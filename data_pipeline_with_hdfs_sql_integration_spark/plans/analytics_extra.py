@@ -14,7 +14,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_par
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.operators.skew import salted_group_count
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 @query(
@@ -36,7 +35,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_
     tags=("agg", "histogram"),
 )
 def agg_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders")
     x = F.col("o_totalprice")
     bin_expr = (
@@ -73,7 +71,6 @@ def agg_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "filter"),
 )
 def agg_filtered_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_total"),
@@ -113,7 +110,6 @@ def agg_filtered_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("array", "embeddings"),
 )
 def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "label",
         F.round(tf.norm(F.transform("embedding", lambda x: x.cast("double"))), 6).alias("nrm"),
@@ -144,7 +140,6 @@ def emb_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "skew"),
 )
 def agg_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").select("event_type")
     return salted_group_count(ev, "event_type", n_salts=16)
 
@@ -174,7 +169,6 @@ def layout_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_path,
     )
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     # Keyed on the SOURCE file's content version (mtime+size): a
     # regenerated fixture can never serve a stale partitioned copy.
@@ -228,7 +222,6 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_join,
     )
 
-    apply_runtime_confs(spark)
     for tbl, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
         path = deterministic_tmp_dir(f"bucketed_{tbl}", table_path(sf_dir, tbl))
         # Table identifier carries the same content-version digest as
@@ -294,7 +287,6 @@ def layout_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
         table_path,
     )
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     fact_path = deterministic_tmp_dir("layout_day", table_path(sf_dir, "events"))
     if not os.path.exists(os.path.join(fact_path, "_SUCCESS")):
@@ -345,7 +337,6 @@ def layout_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
     tags=("agg", "nested"),
 )
 def agg_collect_sorted_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     return c.groupBy("c_nationkey").agg(
         F.array_join(F.array_sort(F.collect_set("c_mktsegment")), "|").alias("segments"),
@@ -392,7 +383,6 @@ def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         zorder2,
     )
 
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice", "l_returnflag"
     )
@@ -467,7 +457,6 @@ def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_path,
     )
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     frag = deterministic_tmp_dir("layout_frag64", table_path(sf_dir, "events"))
     if not os.path.exists(os.path.join(frag, "_SUCCESS")):
@@ -543,7 +532,6 @@ def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     per_c = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
@@ -625,7 +613,6 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     part = load_parallel(spark, sf_dir, "part")
     pts = part.select(
         "p_partkey",
@@ -705,7 +692,6 @@ def agg_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layout", "pruning", "join", "bloom"),
 )
 def layout_bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     tuned = {
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1",
         # The rule also declines when the BUILD side's size estimate

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
 
@@ -28,7 +27,6 @@ SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
     tags=("analytics", "agg"),
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return (
         load(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
@@ -53,7 +51,6 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "agg"),
 )
 def agg_pivot_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return (
         load(spark, sf_dir, "customer")
         .groupBy("c_nationkey")
@@ -82,7 +79,6 @@ def agg_pivot_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "agg"),
 )
 def agg_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return (
         load(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
@@ -129,7 +125,6 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_row_number,
     )
 
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
     ranked = global_row_number(
         o, [("o_orderstatus", "asc"), ("o_totalprice", "asc")], alias="gr"
@@ -203,7 +198,6 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "agg", "approx"),
 )
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders").select("o_orderstatus", "o_custkey")
     exact = (
         o.groupBy("o_orderstatus", "o_custkey")
@@ -266,7 +260,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "stats"),
 )
 def agg_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     g = li.select(
         F.col("l_returnflag").alias("flag"),
@@ -324,7 +317,6 @@ def agg_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
 
-    apply_runtime_confs(spark)
     register_views(spark, sf_dir)
     # groupingSets has no stable DataFrame builder pre-4.0 — the SQL
     # form IS the DataFrame plan (same Expand+Aggregate).
@@ -374,7 +366,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     counts = c.groupBy("c_mktsegment", "c_nationkey").agg(F.count("*").alias("n"))
     w = Window.partitionBy("c_mktsegment").orderBy(
@@ -426,7 +417,6 @@ def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "agg", "approx", "sketch"),
 )
 def agg_hll_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer").select(
         "c_mktsegment",
         (F.col("c_nationkey") * 1_000_000 + F.col("c_custkey")).alias("k"),
@@ -497,7 +487,6 @@ def agg_hll_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "stats"),
 )
 def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", F.col("l_quantity").cast("long").alias("x")
     )
@@ -558,7 +547,6 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "stats"),
 )
 def agg_mean_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = (
         load(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") >= 1)
@@ -643,7 +631,6 @@ def agg_mean_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "stats"),
 )
 def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("long").alias("q"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("p"),

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 def _dec(col, scale: int = 4):
@@ -41,7 +40,6 @@ def _dec(col, scale: int = 4):
     tags=("tpch", "agg"),
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -79,7 +77,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "join"),
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -122,7 +119,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "agg"),
 )
 def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-02-01 00:00:00").cast("timestamp"))
@@ -163,7 +159,6 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "subquery"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
@@ -203,7 +198,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "filter"),
 )
 def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
     joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -245,7 +239,6 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "agg"),
 )
 def q12_priority_class_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 def _dec(col, scale: int = 4):
@@ -57,7 +56,6 @@ _REV = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))"
     tags=("tpch", "join"),
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = load(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1996-06-01 00:00:00").cast("timestamp")
@@ -102,7 +100,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "subquery"),
 )
 def q4_order_priority_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01 00:00:00").cast("timestamp"))
@@ -141,7 +138,6 @@ def q4_order_priority_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "join"),
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -190,7 +186,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "join"),
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
@@ -253,7 +248,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "join"),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     p = load(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
@@ -316,7 +310,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "join"),
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     p = load(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
@@ -360,7 +353,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "subquery"),
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").filter((F.col("p_brand") == "Brand#23") & (F.col("p_size") < 15))
     pavg = li.groupBy("l_partkey").agg(
@@ -401,7 +393,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "subquery"),
 )
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
@@ -467,7 +458,6 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "subquery"),
 )
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     s = load(spark, sf_dir, "supplier").filter(F.col("s_nationkey") < 5)
@@ -525,7 +515,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "subquery"),
 )
 def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     o = (
         load(spark, sf_dir, "orders")

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 def _dec(col, scale: int = 4):
@@ -102,7 +101,6 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "subquery"),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ps = _partsupp(spark, sf_dir)
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
@@ -167,7 +165,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "subquery"),
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ps = _partsupp(spark, sf_dir)
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
@@ -214,7 +211,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "join"),
 )
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     ps = li.select(
         F.col("l_partkey").alias("ps_partkey"), F.col("l_suppkey").alias("ps_suppkey")
@@ -277,7 +273,6 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "subquery"),
 )
 def q20_surging_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     ps = _partsupp(spark, sf_dir)
     yr = (

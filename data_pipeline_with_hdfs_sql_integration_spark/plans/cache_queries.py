@@ -18,11 +18,11 @@ from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
     deterministic_tmp_dir,
     load,
     publish_store,
+    read_parquet,
     table_path,
 )
 from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import PartitionCache
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 # The 5-county benchmark analog (reference performance_analyzer.py:7).
 CACHE_KEYS = [0, 5, 10, 15, 24]
@@ -68,7 +68,7 @@ def build_cache(spark: SparkSession, sf_dir: str, cache_root: str | None = None)
     #   of the full join width (pruned ReadSchema), and per-key
     #   partition files shrink to the single value column the
     #   reuse-path average needs.
-    main = spark.read.parquet(main_path).select(KEY_COL, VALUE_COL)
+    main = read_parquet(spark, main_path).select(KEY_COL, VALUE_COL)
     return PartitionCache(spark, main, KEY_COL, VALUE_COL, root)
 
 
@@ -87,7 +87,6 @@ def build_cache(spark: SparkSession, sf_dir: str, cache_root: str | None = None)
     tags=("cache", "agg"),
 )
 def o10_partition_cache_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     cache = build_cache(spark, sf_dir)
     rows = [(r.key, r.avg) for k in CACHE_KEYS for r in [cache.calc_avg(k)] if not r.error]
     return spark.createDataFrame(rows, "group_key int, avg_amount int")
@@ -103,7 +102,6 @@ def o10_partition_cache_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cache",),
 )
 def o11_cache_state_machine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     cache = build_cache(spark, sf_dir)
     rows = []
     for k in CACHE_KEYS:

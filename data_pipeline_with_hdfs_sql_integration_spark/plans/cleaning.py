@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 # Redaction patterns, shared verbatim with the oracle. Java regex and
 # RE2 agree on this subset ([...] classes, +, {m,n} — no lookaround).
@@ -82,7 +81,6 @@ RE_DIGITS = "[0-9]+"
     tags=("cleaning", "text"),
 )
 def pii_scrub_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # load_parallel: the regex chain is CPU-bound per row, and the
     # fixture's single-row-group file otherwise decodes (and scrubs) in
     # ONE task — repartition-to-cores halves the query locally and is a
@@ -180,7 +178,6 @@ def _scrub_report(scrubbed: DataFrame) -> DataFrame:
     tags=("cleaning", "temporal"),
 )
 def scd2_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     changes = (
@@ -248,7 +245,6 @@ def scd2_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cleaning", "streaming"),
 )
 def stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     from data_pipeline_with_hdfs_sql_integration_spark.streaming import windows as W
 
     ev = W.events_stream(spark, sf_dir)

@@ -23,7 +23,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.plans.dedup import (
     dedup_minhash_lsh,
 )
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 MAX_ITERATIONS = 50  # backstop only; diameter bounds the real count
 
@@ -218,7 +217,6 @@ def connected_components_star(pairs: DataFrame, src: str, dst: str) -> DataFrame
     tags=("dedup", "clustering", "iterative"),
 )
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     pairs = dedup_minhash_lsh(spark, sf_dir)
     cc = connected_components_star(pairs, "doc_a", "doc_b")
     return cc.select(F.col("node").cast("long").alias("doc_id"), F.col("cluster_id").cast("long"))
@@ -252,7 +250,6 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "clustering", "iterative"),
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     pairs = dedup_minhash_lsh(spark, sf_dir)
     cc = connected_components(pairs, "doc_a", "doc_b")
     return cc.select(F.col("node").cast("long").alias("doc_id"), F.col("cluster_id").cast("long"))
@@ -273,7 +270,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("reshape",),
 )
 def transform_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     p = load(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_size").cast("double").alias("size"),
@@ -318,7 +314,6 @@ def transform_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "clustering", "pipeline"),
 )
 def dedup_keep_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     pairs = dedup_minhash_lsh(spark, sf_dir)
     cc = connected_components(pairs, "doc_a", "doc_b")
     dropped = cc.filter(F.col("node") != F.col("cluster_id")).select(
@@ -379,7 +374,6 @@ GRAPH_CC_OFFSET = 1_000_000  # suppliers live at suppkey + OFFSET
     tags=("graph", "clustering", "iterative"),
 )
 def graph_components_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     edges = (
         li.filter(

@@ -10,8 +10,8 @@ Numeric-parity rules used throughout (Spark vs the DuckDB oracle):
 - The reference truncates averages toward zero with Python ``int()``
   (reference server.py:109). Spark's ``cast(int)`` truncates; DuckDB's
   CAST rounds, so oracles spell it ``CAST(TRUNC(...) AS INTEGER)``.
-- Timestamps rely on ``spark.sql.session.timeZone=UTC`` (set
-  defensively per query via ``apply_runtime_confs``).
+- Timestamps rely on ``spark.sql.session.timeZone=UTC`` (set by the
+  registry before every query call).
 
 Scale notes (100 TB posture) are in each docstring; tests assert the
 physical-plan properties (pushdown, broadcast) in
@@ -28,16 +28,10 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 # Band filter analog of the reference's loan_amount ∈ (30000, 800000)
 # (reference server.py:36) — open interval on l_extendedprice.
 BAND_LO, BAND_HI = 5_000.0, 90_000.0
-
-
-def _dec2(c: str) -> F.Column:
-    """Exact-sum input cast: double → DECIMAL(18,2)."""
-    return F.col(c).cast("decimal(18,2)")
 
 
 @query(
@@ -49,7 +43,6 @@ def _dec2(c: str) -> F.Column:
     tags=("core", "scan"),
 )
 def o01_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return load(spark, sf_dir, "orders")
 
 
@@ -66,7 +59,6 @@ def o01_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("core", "join"),
 )
 def o02_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
     return (
@@ -88,7 +80,6 @@ def o02_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("core", "filter"),
 )
 def o03_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return (
         load(spark, sf_dir, "lineitem")
         .filter((F.col("l_extendedprice") > BAND_LO) & (F.col("l_extendedprice") < BAND_HI))
@@ -105,7 +96,6 @@ def o03_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("core", "projection"),
 )
 def o04_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
 
 
@@ -124,7 +114,6 @@ def o04_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("core", "sink"),
 )
 def o05_parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     out = os.path.join(tempfile.mkdtemp(prefix="dps_sink_"), "extract.parquet")
     extract = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_extendedprice") > BAND_LO) & (F.col("l_extendedprice") < BAND_HI)
@@ -141,7 +130,6 @@ def o05_parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("core", "scan"),
 )
 def o06_parquet_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return load(spark, sf_dir, "part")
 
 
@@ -161,7 +149,6 @@ def o06_parquet_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("core", "filter", "pushdown"),
 )
 def o07_pushdown_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return (
         load(spark, sf_dir, "lineitem")
         .filter(
@@ -180,7 +167,6 @@ def o07_pushdown_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("core", "filter"),
 )
 def o08_equality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return (
         load(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -206,7 +192,6 @@ def o08_equality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("core", "agg", "flagship"),
 )
 def o09_avg_int_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
     return (
@@ -235,7 +220,6 @@ def o09_avg_int_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("core", "agg", "explode"),
 )
 def o12_explode_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return (
         load(spark, sf_dir, "documents")
         .select(F.explode(F.split(F.col("text"), " ")).alias("token"))
@@ -257,7 +241,6 @@ def o12_explode_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def o13_block_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import block_location_histogram
 
-    apply_runtime_confs(spark)
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import table_path
 
     return block_location_histogram(spark, table_path(sf_dir, "lineitem"))
@@ -287,7 +270,6 @@ def o13_block_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_interface_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
 
-    apply_runtime_confs(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -341,7 +323,6 @@ _TPCH_Q1_SQL = """
 def sql_interface_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
 
-    apply_runtime_confs(spark)
     register_views(spark, sf_dir)
     return spark.sql(_TPCH_Q1_SQL)
 
@@ -373,7 +354,6 @@ _LATERAL_TOPK_SQL = """
 def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
 
-    apply_runtime_confs(spark)
     register_views(spark, sf_dir)
     return spark.sql(_LATERAL_TOPK_SQL)
 
@@ -410,7 +390,6 @@ PYDS_MOD = 1_000_003
     tags=("source", "python-datasource", "api"),
 )
 def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
     class TelemetrySource(DataSource):
@@ -476,7 +455,6 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
     import uuid
 
-    apply_runtime_confs(spark)
     from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
     class TelemetryStream(DataSource):
@@ -574,7 +552,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import tempfile as _tempfile
 
-    apply_runtime_confs(spark)
     from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
     class _Committed(WriterCommitMessage):
@@ -676,7 +653,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("api", "python", "agg"),
 )
 def api_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # distributed index: no global sequence window — the only index
     # choice that scales.
     import pyspark.pandas as ps
@@ -729,7 +705,6 @@ def api_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_scripting_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
 
-    apply_runtime_confs(spark)
     spark.conf.set("spark.sql.scripting.enabled", "true")
     register_views(spark, sf_dir)
     return spark.sql(
@@ -779,7 +754,6 @@ PARAM_MIN_CENTS = 5_000_000
 def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
 
-    apply_runtime_confs(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -825,7 +799,6 @@ def o13_file_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_path,
     )
 
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     layout = deterministic_tmp_dir("introspect_rf", table_path(sf_dir, "lineitem"))
     publish_store(

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 def _materialize(df: DataFrame) -> DataFrame:
     """Persist a (small, derived) table that feeds a self-join.
@@ -217,7 +216,6 @@ def _minhash_bands(sigs: DataFrame) -> DataFrame:
     tags=("dedup",),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return (
         load(spark, sf_dir, "documents")
         .groupBy(F.lower(F.sha2(F.col("text"), 256)).alias("text_hash"))
@@ -271,7 +269,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import broadcast_gate
 
-    apply_runtime_confs(spark)
     t = JACCARD_THRESHOLD
     # PPJoin proper: order every shingle set by GLOBAL document
     # frequency, rarest first (ties on hash). Prefixes then hold the
@@ -422,7 +419,6 @@ SQL_MINHASH_PAIRS_CTES = f"""{_SQL_SHINGLE_CTE},
     tags=("dedup", "lsh"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     sigs = minhash_signature_store(spark, sf_dir)
     bands = _minhash_bands(sigs)
     a = bands.alias("a")
@@ -519,7 +515,6 @@ _SQL_SIG_MATCHES_NM = _SQL_SIG_MATCHES.replace("sig_a", "sig_n").replace("sig_b"
     tags=("dedup", "lsh", "training"),
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     sigs = minhash_signature_store(spark, sf_dir)
     bands = _minhash_bands(sigs)
     new_b = bands.filter(F.col("doc_id") % INCR_NEW_MOD == 0).select(
@@ -679,7 +674,6 @@ def versioned_minhash_store(spark: SparkSession, sf_dir: str):
     tags=("dedup", "lsh", "training", "txlog", "incremental"),
 )
 def dedup_incremental_store_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     t = versioned_minhash_store(spark, sf_dir)
     v0, v1, v2 = (set(t.live_files(v)) for v in (0, 1, 2))
     reused_01 = int(v0 <= v1)
@@ -827,7 +821,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from data_pipeline_with_hdfs_sql_integration_spark.streaming import windows as W
 
-    apply_runtime_confs(spark)
     index_bands = _materialize(
         _minhash_bands(
             minhash_signature_store(spark, sf_dir).filter(F.col("doc_id") % INCR_NEW_MOD != 0)
@@ -933,7 +926,6 @@ def _sql_simhash_select() -> str:
     tags=("dedup", "simhash"),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return _simhash_df(spark, sf_dir)
 
 
@@ -990,7 +982,6 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "simhash"),
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     sh = _materialize(_simhash_df(spark, sf_dir))
     band_vals = F.array(
         *[F.shiftright(F.col("simhash"), 10 * j).bitwiseAND(F.lit(1023)) for j in range(tf.SIMHASH_BANDS)]
@@ -1076,7 +1067,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "simhash"),
 )
 def dedup_simhash_pairs_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     sh = _materialize(_simhash_df(spark, sf_dir))
     band_vals = F.array(
         *[F.shiftright(F.col("simhash"), 10 * j).bitwiseAND(F.lit(1023)) for j in range(tf.SIMHASH_BANDS)]
@@ -1142,7 +1132,6 @@ def dedup_simhash_pairs_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "embedding"),
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     e = (
         load(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < EMB_SUBSET)
@@ -1191,7 +1180,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.streaming import windows as W
 
-    apply_runtime_confs(spark)
     docs = W.documents_stream_duplicated(spark, sf_dir)
     deduped = docs.select(
         F.lower(F.sha2(F.col("text"), 256)).alias("text_hash")
@@ -1270,7 +1258,6 @@ def _span_gram_sql() -> str:
     tags=("dedup", "text", "training"),
 )
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = _docs_parallel(spark, sf_dir)
     th = F.transform(tf.tokens(F.col("text")), lambda s: tf.poly_hash_str(s))
     base = _materialize(
@@ -1443,7 +1430,6 @@ def _register_dedup_embedding_lsh() -> None:
     def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 
-        apply_runtime_confs(spark)
         # Size the banding from the corpus: one cheap count(*) over the
         # raw scan (column-pruned to nothing — parquet answers it from
         # row-group metadata). At 100 TB this is the index build step's
@@ -1588,7 +1574,6 @@ def _register_sim_ann_lsh_batch() -> None:
     def sim_ann_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 
-        apply_runtime_confs(spark)
         n = load(spark, sf_dir, "embeddings").count()
         width = emb_lsh_band_bits(n)
         bands_per_word = EMB_LSH_WORD_BITS // width
@@ -1814,7 +1799,6 @@ def _register_dedup_semantic() -> None:
     def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         from data_pipeline_with_hdfs_sql_integration_spark.catalog import broadcast_gate
 
-        apply_runtime_confs(spark)
         _cent, assigned = sim.ivf_index_store(spark, sf_dir)
         # Scan-native vector read (no repartition exchange): the only
         # vector math here is one cosine per surviving candidate, so
@@ -2033,7 +2017,6 @@ def _register_dedup_incremental_semantic() -> None:
     def dedup_incremental_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         from data_pipeline_with_hdfs_sql_integration_spark.catalog import broadcast_gate
 
-        apply_runtime_confs(spark)
         _cent, assigned = sim.ivf_index_store(spark, sf_dir)
         e = sim._vecs(spark, sf_dir)
         sigs = sim.lsh_signature_store(spark, sf_dir)
@@ -2300,7 +2283,6 @@ def _register_dedup_incremental_semantic_versions() -> None:
     def dedup_incremental_semantic_versions(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        apply_runtime_confs(spark)
         # index_fp ∪ batch_fp covers each probe row at most once (the
         # generations are disjoint vec_id sets), so the monolithic
         # store's build-time max-occupancy bound gates salting here
@@ -2641,7 +2623,6 @@ def _register_dedup_semantic_quantizer_refresh() -> None:
     ) -> DataFrame:
         import os
 
-        apply_runtime_confs(spark)
         t = versioned_ivf2_refresh_store(spark, sf_dir)
         occ1 = max_fine_cell_rows(t.snapshot(spark, 1))
         occ2 = max_fine_cell_rows(t.snapshot(spark, 2))
@@ -2747,7 +2728,6 @@ def _register_dedup_semantic_probe2() -> None:
     def dedup_semantic_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
         from data_pipeline_with_hdfs_sql_integration_spark.catalog import broadcast_gate
 
-        apply_runtime_confs(spark)
         e = sim._vecs(spark, sf_dir)
         # Same size-gated broadcast treatment as dedup_semantic: small
         # corpora get a map-side vector attach, large keep the shuffle.
@@ -2838,7 +2818,6 @@ CONT_THRESHOLD = 0.8
     tags=("dedup", "text", "containment"),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     sh = _shingle_hashes(spark, sf_dir).filter(F.col("doc_id") < CONT_SUBSET)
     a = sh.select(F.col("doc_id").alias("contained_doc"), F.col("sh").alias("sha_"))
     b = sh.select(F.col("doc_id").alias("container_doc"), F.col("sh").alias("shb_"))
@@ -2921,7 +2900,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "text", "containment", "training"),
 )
 def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # No size(sh) >= 1 guard (r13): _token_base admits only docs with
     # >= 3 tokens, so every sh holds >= 1 shingle — the filter was
     # provably a no-op, and because sh is an EXPRESSION column

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 @query(
@@ -56,7 +55,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_
     tags=("events", "analytics"),
 )
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase")
     cohort = p.groupBy("user_id").agg(F.date_trunc("day", F.min("ts")).alias("cohort_day"))
@@ -108,7 +106,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "analytics"),
 )
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     s = (
         ev.filter(F.col("event_type") == "signup")
@@ -166,7 +163,6 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "temporal"),
 )
 def twa_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros("ts")
@@ -229,7 +225,6 @@ GAPFILL_HOURS = 72  # 3 days from the stream's origin
     tags=("events", "temporal"),
 )
 def gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("user_id") < GAPFILL_USERS)
     users = ev.select("user_id").distinct()
     grid = users.crossJoin(
@@ -317,7 +312,6 @@ CEP_PATTERNS = [
     tags=("events", "cep"),
 )
 def cep_journey_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     j = (
         ev.groupBy("user_id")
@@ -396,7 +390,6 @@ def cep_journey_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "temporal"),
 )
 def gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("user_id") < GAPFILL_USERS)
     users = ev.select("user_id").distinct()
     grid = users.crossJoin(
@@ -505,7 +498,6 @@ def gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "temporal", "histogram"),
 )
 def events_interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     us = (F.col("ts").cast("double") * 1_000_000).cast("long")
@@ -565,7 +557,6 @@ def events_interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("events", "attribution", "temporal"),
 )
 def events_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     conv = ev.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("cu"),
@@ -631,7 +622,6 @@ def events_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "rollup", "engagement"),
 )
 def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.select(
         F.date_trunc("day", "ts").alias("day"), "user_id"
@@ -707,7 +697,6 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "rollup", "engagement", "sketch", "approx"),
 )
 def events_dau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.select(F.date_trunc("day", "ts").alias("day"), "user_id").distinct()
     days = daily.select("day").distinct()
@@ -801,7 +790,6 @@ def events_dau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "window", "agg"),
 )
 def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = ev.select(
@@ -874,7 +862,6 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "agg", "join"),
 )
 def mine_association_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     baskets = ev.select(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day"), "event_type"
@@ -944,7 +931,6 @@ def mine_association_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "window", "topk"),
 )
 def events_trigram_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = ev.select(
@@ -986,7 +972,6 @@ def events_trigram_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "timeseries", "agg"),
 )
 def events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     h = ev.groupBy(
         "event_type", F.hour("ts").cast("long").alias("hour_of_day")

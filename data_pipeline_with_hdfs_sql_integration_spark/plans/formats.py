@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 def _roundtrip_dir(fmt: str, sf_dir: str) -> str:
@@ -47,7 +46,6 @@ def _roundtrip_dir(fmt: str, sf_dir: str) -> str:
     tags=("formats", "csv"),
 )
 def format_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     s = load(spark, sf_dir, "supplier")
     path = _roundtrip_dir("csv", sf_dir)
     s.write.mode("overwrite").option("header", "true").csv(path)
@@ -74,7 +72,6 @@ def format_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("formats", "json"),
 )
 def format_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     n = load(spark, sf_dir, "nation")
     path = _roundtrip_dir("json", sf_dir)
     n.write.mode("overwrite").json(path)
@@ -102,7 +99,6 @@ def format_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("formats", "orc"),
 )
 def format_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     p = load(spark, sf_dir, "part")
     path = _roundtrip_dir("orc", sf_dir)
     p.write.mode("overwrite").orc(path)
@@ -146,7 +142,6 @@ def format_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def format_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders")
     path = _roundtrip_dir("evolve", sf_dir)
     # Two write generations with different schemas into one dataset.
@@ -211,7 +206,6 @@ def format_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     t = build_once(
         "events_2commit", table_path(sf_dir, "events"), 1, _build_2commit(ev)
@@ -254,7 +248,6 @@ def format_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     t = build_once(
         "events_2commit", table_path(sf_dir, "events"), 1, _build_2commit(ev)
@@ -296,7 +289,6 @@ def format_txlog_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
 
     def build(t):
@@ -355,7 +347,6 @@ def format_txlog_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
 
     def build(t):
@@ -430,7 +421,6 @@ def format_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    apply_runtime_confs(spark)
     target = tempfile.mkdtemp(prefix="dps_badcsv_")
     path = os.path.join(target, "rows.csv")
     with open(path, "w") as f:
@@ -502,7 +492,6 @@ def format_txlog_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
 
     def build(t):
@@ -586,7 +575,6 @@ def format_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -675,7 +663,6 @@ def format_txlog_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
@@ -753,7 +740,6 @@ def format_txlog_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
@@ -848,7 +834,6 @@ def format_txlog_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders")
 
     def build(t):
@@ -928,7 +913,6 @@ def format_txlog_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
@@ -1030,7 +1014,6 @@ def format_txlog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -1098,7 +1081,6 @@ def format_txlog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -1178,7 +1160,6 @@ def format_txlog_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum,
     )
 
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -1278,7 +1259,6 @@ def format_txlog_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_once,
     )
 
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -1398,7 +1378,6 @@ def format_txlog_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         zorder2,
     )
 
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice", "l_returnflag"
     )

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import _pin
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 PR_ITERS = 3
 PR_SCALE = 1_000_000_000_000  # 1e12 fixed-point rank units
@@ -89,7 +88,6 @@ _PR_CTES, _PR_FINAL = _sql_pagerank()
     tags=("graph",),
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     # The distinct edge relation drives every round AND both union
     # branches below — persist it (one dedup shuffle total); the
@@ -188,7 +186,6 @@ GROUP BY depth
 def recursive_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
 
-    apply_runtime_confs(spark)
     register_views(spark, sf_dir)
     return spark.sql(_RECURSIVE_ORG_SQL)
 
@@ -264,7 +261,6 @@ _TRI_EDGE_SQL = f"""
     tags=("graph", "join"),
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     from pyspark.sql import Window
 
     li = load(spark, sf_dir, "lineitem")

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 # 2024-01-01T00:00:00Z in microseconds; events start just after it.
 BASE_US = 1_704_067_200_000_000
@@ -93,7 +92,6 @@ def _make_fit_group():
     tags=("udaf", "grouped-map", "timeseries"),
 )
 def grouped_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").select(
         "event_type",
         F.expr(f"(unix_micros(ts) - {BASE_US}) div {US_PER_HOUR}").alias("x"),
@@ -134,8 +132,6 @@ def grouped_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("udaf", "grouped"),
 )
 def udaf_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
-
     @F.pandas_udf("double")
     def wmedian(v: pd.Series, w: pd.Series) -> float:
         # Sort by value; the first value whose cumulative weight
@@ -213,7 +209,6 @@ def udaf_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     # ONE exchange establishes hash(suppkey) and every downstream
     # operator reuses it: hash(suppkey) satisfies the (suppkey, v)
     # grouping (partitioning keys ⊆ grouping keys), the suppkey

@@ -14,7 +14,6 @@ from pyspark.sql import types as T
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 @query(
@@ -32,7 +31,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_
     tags=("json", "agg"),
 )
 def json_extract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     raw = F.get_json_object("props", "$.k")
     # Count the RAW extraction (presence of $.k), matching the oracle:
     # counting the long-cast would silently skip non-numeric values.
@@ -57,7 +55,6 @@ def json_extract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("json", "filter"),
 )
 def json_struct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     schema = T.StructType([T.StructField("k", T.IntegerType())])
     ev = load(spark, sf_dir, "events").withColumn("p", F.from_json("props", schema))
     return (
@@ -90,7 +87,6 @@ def json_struct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("json", "variant", "agg"),
 )
 def json_variant_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     v = ev.select("event_type", F.parse_json("props").alias("v")).select(
         "event_type",

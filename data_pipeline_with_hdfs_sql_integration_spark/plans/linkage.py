@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 FUZZY_MAX_DIST = 2
 ZSCORE_THRESHOLD = 1.6
@@ -54,7 +53,6 @@ ZSCORE_THRESHOLD = 1.6
     tags=("linkage", "join"),
 )
 def fuzzy_match_partnames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     names = load(spark, sf_dir, "part").select("p_name").distinct()
     probes = names.select(
         F.col("p_name").alias("orig"),
@@ -115,7 +113,6 @@ def fuzzy_match_partnames(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("linkage", "anomaly"),
 )
 def anomaly_zscore_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     j = orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey).select(
@@ -216,7 +213,6 @@ MAD_THRESHOLD = 2.0
     tags=("linkage", "anomaly", "robust"),
 )
 def anomaly_mad_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     j = orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey).select(
@@ -347,7 +343,6 @@ MS_NBINS = 1200
     tags=("linkage", "anomaly", "robust", "sketch"),
 )
 def anomaly_mad_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     j = orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey).select(

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 UPDATE_MOD = 97
 N_INSERTS = 5
@@ -91,7 +90,6 @@ def merge_upsert(
     tags=("merge", "upsert"),
 )
 def merge_upsert_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     base = load(spark, sf_dir, "customer")
     updates = base.filter(F.col("c_custkey") % UPDATE_MOD == 0).select(
         "c_custkey",
@@ -162,7 +160,6 @@ def merge_upsert_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("merge", "cdc", "diff"),
 )
 def diff_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders")
     v1 = o.select(
         F.col("o_orderkey").alias("k"),

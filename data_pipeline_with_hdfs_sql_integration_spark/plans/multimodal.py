@@ -44,7 +44,6 @@ from pyspark.sql import types as T
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 #: Canonical multimodal record schema (payload + typed metadata).
 MEDIA_SCHEMA = T.StructType(
@@ -306,7 +305,6 @@ def extract_features(media: DataFrame, batch_decode_fake: bool = True) -> DataFr
     tags=("multimodal",),
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return extract_features(media_table(spark, sf_dir)).select(
         "media_id", "n_bytes", "checksum", F.element_at("feat", 1).alias("feat_len")
     )
@@ -329,7 +327,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal",),
 )
 def multimodal_metadata_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load(spark, sf_dir, "documents")
     nb = F.octet_length(F.encode("text", "utf-8")).cast("long")
     return docs.groupBy("source").agg(
@@ -368,7 +365,6 @@ FRAME_EVERY_S = 2  # sample one frame every 2 seconds
     tags=("multimodal", "video"),
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load(spark, sf_dir, "documents")
     v = docs.select(
         F.col("doc_id").alias("media_id"),
@@ -499,8 +495,6 @@ def audio_frame_energy(payload: bytes, frame_len: int = 256, fake: bool = False)
     tags=("multimodal", "arrow"),
 )
 def arrow_doc_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
-
     def _stats(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -553,8 +547,6 @@ WAV_OFFSET = 1001
     tags=("multimodal", "audio"),
 )
 def multimodal_wav_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
-
     def _synthesize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Generator stage: real WAV bytes via the stdlib writer.
         import io
@@ -650,7 +642,6 @@ PNG_MOD = 251
     tags=("multimodal", "image"),
 )
 def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     enc, dec = png_codec()
     w, h, mod = PNG_W, PNG_H, PNG_MOD
 
@@ -732,7 +723,6 @@ _RS = "((d.doc_id * 7 + ({y}) * 13 + ({x}) * 5) % " + str(251) + ")"
     tags=("multimodal", "image"),
 )
 def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     enc, dec = png_codec()
     sw, sh, mod = PNG_W, PNG_H, PNG_MOD
     w, h = sw // 2, sh // 2
@@ -1584,7 +1574,6 @@ def jpeg_progressive_codec():
     tags=("multimodal", "image"),
 )
 def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     enc, dec = jpeg_codec()
     w, h, mod = JPG_W, JPG_H, JPG_MOD
 
@@ -1680,7 +1669,6 @@ JPGP_MULS = (11, 3, 17)
     tags=("multimodal", "image"),
 )
 def multimodal_progressive_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     enc, dec = jpeg_progressive_codec()
     w, h, mod = JPG_W, JPG_H, JPG_MOD
     ma, mb, mc = JPGP_MULS
@@ -1785,7 +1773,6 @@ Y4M_SAMPLE_STRIDE = 2  # decode-side frame sampling: every 2nd frame
     tags=("multimodal", "video"),
 )
 def multimodal_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     w, h, fps, mod, stride = Y4M_W, Y4M_H, Y4M_FPS, Y4M_MOD, Y4M_SAMPLE_STRIDE
 
     def _synthesize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -39,7 +39,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.plans.dedup import (
     minhash_signature_store,
 )
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 #: Winnowing parameters: token k-grams, window of w gram hashes.
 #: Noise threshold k=4 tokens, guarantee threshold t=k+w-1=7 tokens:
@@ -178,7 +177,6 @@ def _sql_winnow_ctes() -> str:
     tags=("text", "dedup", "winnowing"),
 )
 def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     return _winnow_fp_rows(docs)
 
@@ -222,7 +220,6 @@ def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "winnowing", "join"),
 )
 def dedup_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     # Referenced by both the df-ceiling aggregate and the pair join.
     fp = _winnow_fp_rows(docs).select("doc_id", "fp_hash").distinct().persist()
@@ -304,7 +301,6 @@ def _sql_cosine_verify_tail() -> str:
     tags=("text", "similarity", "dedup", "join"),
 )
 def text_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import memo_persist
     from data_pipeline_with_hdfs_sql_integration_spark.plans.text_analysis import (
         token_tf_base,
@@ -399,7 +395,6 @@ PREFIX_N = 12
     tags=("dedup", "text"),
 )
 def dedup_prefix_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     th = F.transform(tf.tokens(F.col("text")), lambda t: tf.poly_hash_str(t))
     pref = docs.select(

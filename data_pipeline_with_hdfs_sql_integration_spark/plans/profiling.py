@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 @query(
@@ -57,7 +56,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_
     tags=("profiling", "quality"),
 )
 def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders")
     # min/max aggregate on the NATIVE type (numeric/timestamp order,
     # not lexicographic), then the one-row result is stringified.
@@ -138,8 +136,6 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("profiling", "quality"),
 )
 def audit_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
-
     def orphans(
         name: str,
         child: DataFrame,
@@ -228,7 +224,6 @@ def audit_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("profiling", "maintenance", "agg"),
 )
 def audit_table_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     M = 1_000_000_007
 
     def digest(df: DataFrame, name: str, expr: Column) -> DataFrame:
@@ -297,7 +292,6 @@ def audit_table_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "profiling", "maintenance"),
 )
 def stream_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     from data_pipeline_with_hdfs_sql_integration_spark.streaming.windows import (
         events_stream,
         run_to_memory,
@@ -377,7 +371,6 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_prefix_sum,
     )
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     s = ev.filter(F.col("event_type").isin("view", "click")).select(
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -462,7 +455,6 @@ CHI2_CRIT_MILLI_DF8 = 15_507
     tags=("profiling", "stats", "agg"),
 )
 def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("long")
     band = (
@@ -545,7 +537,6 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_prefix_sum,
     )
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     s = ev.filter(F.col("event_type").isin("view", "click")).select(
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -637,7 +628,6 @@ KS_NBINS = 1200
     tags=("profiling", "stats", "anomaly", "sketch"),
 )
 def stats_ks_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     s = ev.filter(F.col("event_type").isin("view", "click")).select(
         F.least(
@@ -752,7 +742,6 @@ def stats_ks_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("profiling", "stats", "anomaly", "sketch"),
 )
 def stats_mwu_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     s = ev.filter(F.col("event_type").isin("view", "click")).select(
         F.least(
@@ -845,7 +834,6 @@ BENFORD_PPM = (301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153, 45757)
     tags=("profiling", "stats", "maintenance"),
 )
 def audit_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     digit = F.substring(
         F.round(F.col("o_totalprice") * 100).cast("long").cast("string"), 1, 1
@@ -899,7 +887,6 @@ def audit_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def observe_scan_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Observation
 
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     obs_in = Observation("input")
     obs_kept = Observation("kept")

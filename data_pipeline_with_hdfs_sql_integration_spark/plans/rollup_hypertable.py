@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
@@ -56,7 +55,6 @@ def hourly_rollup(events: DataFrame) -> DataFrame:
     tags=("timeseries", "rollup"),
 )
 def rollup_hourly_to_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     hourly = hourly_rollup(load(spark, sf_dir, "events"))
     return (
         hourly.groupBy(F.date_format("bucket", "yyyy-MM-dd").alias("day"), "event_type")
@@ -100,7 +98,6 @@ def rollup_hourly_to_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     return (
@@ -159,7 +156,6 @@ def rollup_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.date_trunc("day", "ts").alias("day"), "event_type"
@@ -220,7 +216,6 @@ def rollup_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "rollup", "ohlc"),
 )
 def rollup_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     okey = F.struct(F.col("ts"), F.col("event_id"))
     return (
@@ -278,7 +273,6 @@ def _ewma_sql() -> str:
 def rollup_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("user_id") < EWMA_USERS)
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     num = None
@@ -346,7 +340,6 @@ def rollup_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_downsample_extrema(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     pts = ev.select(
         "user_id",
@@ -422,7 +415,6 @@ LATE_MOD = 17  # event_id % 17 == 0 simulates the late-arriving batch (~6%)
     tags=("timeseries", "rollup", "incremental"),
 )
 def rollup_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         "event_type",

@@ -22,7 +22,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.functions.textfns import MOD
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 HASH_A = 104_729
 HASH_B = 12_345
@@ -55,7 +54,6 @@ def sql_hash_bucket(expr: str, buckets: int = 100) -> str:
     tags=("sampling",),
 )
 def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders").filter(hash_bucket(F.col("o_orderkey")) < 10)
     return o.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_sampled"),
@@ -83,7 +81,6 @@ def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sampling", "stratified"),
 )
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     rate = (
         F.when(F.col("c_mktsegment") == "BUILDING", 40)
         .when(F.col("c_mktsegment") == "MACHINERY", 20)
@@ -118,7 +115,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sampling", "training", "split"),
 )
 def sample_split_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     d = load(spark, sf_dir, "documents")
     b = hash_bucket(F.col("doc_id"))
     split = (
@@ -186,7 +182,6 @@ def _boot_mult_sql(u: str) -> str:
     tags=("sampling", "stats", "training"),
 )
 def sample_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     a, b = tf.MINHASH_PARAMS[BOOT_HASH_IDX]
     c = BOOT_CDF_PPM

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 @query(
@@ -39,7 +38,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_
     tags=("functions", "datetime"),
 )
 def fn_datetime_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit("1999-01-01 00:00:00").cast("timestamp")
     days = F.datediff(cutoff, F.col("o_orderdate")).cast("long")
@@ -76,7 +74,6 @@ def fn_datetime_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "string"),
 )
 def fn_string_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     p = load(spark, sf_dir, "part")
     return (
         p.groupBy(
@@ -125,7 +122,6 @@ def fn_string_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fn_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
 
-    apply_runtime_confs(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -176,7 +172,6 @@ def fn_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "scalar", "cleaning"),
 )
 def fn_try_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     orders = load(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     d = F.col("o_orderkey") % 7

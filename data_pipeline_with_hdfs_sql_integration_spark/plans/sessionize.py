@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 GAP_MINUTES = 30
 
@@ -60,7 +59,6 @@ GAP_MINUTES = 30
     tags=("timeseries", "session"),
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = GAP_MINUTES * 60 * 1_000_000
@@ -108,7 +106,6 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "null"),
 )
 def fn_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.nullif(F.col("o_orderstatus"), F.lit("O")).alias("status_or_null"),

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, read_parquet
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 QUERY_VEC_ID = 0
 TOPK = 20
@@ -171,7 +170,6 @@ def _sql_cosine(a: str, b: str) -> str:
     tags=("similarity",),
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     e = _vecs(spark, sf_dir)
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("qv"))
     return (
@@ -269,7 +267,6 @@ def _lsh_sig_expr(vcol: str, word: int) -> str:
     tags=("similarity", "lsh"),
 )
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     e = _vecs(spark, sf_dir)
     # Persisted: referenced twice (query-vector lookup + candidate
     # scan); recomputing means two full interpreter-bound signature
@@ -827,7 +824,6 @@ _KMEANS_CTES, _KMEANS_FINAL = _sql_kmeans_ctes()
     tags=("similarity", "ivf"),
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     e = _vecs(spark, sf_dir)
     cent, assigned = ivf_index_store(spark, sf_dir)
     # Query probe: the ONE query vector against cells × dims centroids.
@@ -887,7 +883,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "clustering"),
 )
 def cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # The cluster profile is a pure aggregate over the stored
     # assignment table — k-means runs in the index-build job, once.
     _cent, assigned = ivf_index_store(spark, sf_dir)
@@ -947,7 +942,6 @@ _SQL_IDOT = (
     tags=("similarity", "quantization"),
 )
 def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     e = _vecs(spark, sf_dir)
     mx = F.array_max(F.transform("v", lambda x: F.abs(x)))
     scale = F.when(mx == 0, F.lit(1.0)).otherwise(mx / 127.0)
@@ -1007,8 +1001,6 @@ def sim_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # import annotations` stringifies the UDF's type hints, and pyspark
     # resolves them against the function's module globals.
     from pyspark.sql.functions import pandas_udf
-
-    apply_runtime_confs(spark)
 
     @pandas_udf("double")
     def _cos(v: pd.Series, qv: pd.Series) -> pd.Series:
@@ -1251,7 +1243,6 @@ def pq_index_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     tags=("similarity", "pq"),
 )
 def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # Scan-native vector read (r13): every consumer of e here is either
     # a single-vector lookup (query subvectors, the rerank q) or the
     # 300-candidate rerank probe — none does per-row corpus math, so
@@ -1331,7 +1322,6 @@ def _rp_cols() -> list:
     tags=("similarity", "projection"),
 )
 def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return _vecs(spark, sf_dir).select("vec_id", *_rp_cols())
 
 
@@ -1439,7 +1429,6 @@ _MMR_CTES, _MMR_FINAL = _sql_mmr()
     tags=("similarity", "topk"),
 )
 def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     e = _vecs(spark, sf_dir)
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("qv"))
     cand = (
@@ -1544,7 +1533,6 @@ GRID_CELL = 0.01
     tags=("similarity", "join", "spatial"),
 )
 def sim_grid_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     pts = _vecs_scan(spark, sf_dir).select(
         "vec_id",
         F.element_at("v", 1).cast("double").alias("x"),
@@ -1665,7 +1653,6 @@ def _register_pipeline_embedding_curation() -> None:
     def pipeline_embedding_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql import Window
 
-        apply_runtime_confs(spark)
         base = registry.get("dedup_semantic").fn(spark, sf_dir).persist()
         surv = base.filter(F.col("keep") == 1).select(
             "vec_id",

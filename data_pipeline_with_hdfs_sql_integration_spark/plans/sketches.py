@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 CMS_DEPTH = 4  # pairwise-independent hash rows (reuse MINHASH_PARAMS[:4])
 CMS_WIDTH = 256  # buckets per row
@@ -85,7 +84,6 @@ def _sql_bucket(th: str, a: int, b: int) -> str:
     tags=("sketch", "text", "approx"),
 )
 def sketch_count_min_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     occ = docs.select(
         F.explode(tf.tokens(F.col("text"))).alias("tok")
@@ -152,7 +150,6 @@ def sketch_count_min_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sketch", "streaming", "approx"),
 )
 def stream_sketch_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     from data_pipeline_with_hdfs_sql_integration_spark.streaming.windows import (
         events_stream,
         run_to_memory,
@@ -221,7 +218,6 @@ HQ_QS_PM = (500, 900, 950, 990)  # per-mille quantiles to report
     tags=("sketch", "quantile", "agg"),
 )
 def sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load_parallel(spark, sf_dir, "orders")
     b = F.least(
         F.greatest(
@@ -337,7 +333,6 @@ def _quantile_readoff(hist: DataFrame, qs_pm: tuple[int, ...], bin_w: float) -> 
     tags=("sketch", "quantile", "streaming", "approx"),
 )
 def stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     from data_pipeline_with_hdfs_sql_integration_spark.streaming.windows import (
         events_stream,
         run_to_memory,
@@ -393,7 +388,6 @@ def stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sketch_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     o = load_parallel(spark, sf_dir, "orders")
     b = F.least(
         F.greatest(F.floor(F.col("o_totalprice") / HQ_BIN_W).cast("long"), F.lit(0)),
@@ -525,7 +519,6 @@ def _bloom_word_mask(df: DataFrame) -> DataFrame:
 def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import memo_persist
 
-    apply_runtime_confs(spark)
     # Plain scans: the per-row work here is 3 affine hashes — the
     # load_parallel repartition exchange costs more than the
     # parallelism it buys, and members' own distinct exchange already
@@ -675,7 +668,6 @@ KMV_PARAM_IDX = 7
 def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     li = load_parallel(spark, sf_dir, "lineitem")
     a, b = tf.MINHASH_PARAMS[KMV_PARAM_IDX]
     hashed = li.select(
@@ -798,7 +790,6 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sketch_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     ev = load_parallel(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )

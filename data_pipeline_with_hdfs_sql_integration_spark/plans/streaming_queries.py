@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 from data_pipeline_with_hdfs_sql_integration_spark.streaming import stateful
 from data_pipeline_with_hdfs_sql_integration_spark.streaming import windows as W
 
@@ -38,7 +37,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.streaming import windows as W
     tags=("streaming",),
 )
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return W.tumbling_counts(spark, sf_dir)
 
 
@@ -56,7 +54,6 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return W.sliding_counts(spark, sf_dir)
 
 
@@ -91,7 +88,6 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session"),
 )
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return W.session_windows(spark, sf_dir)
 
 
@@ -112,7 +108,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join"),
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return W.static_join_counts(spark, sf_dir)
 
 
@@ -131,7 +126,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup"),
 )
 def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return W.dedup_counts(spark, sf_dir)
 
 
@@ -154,7 +148,6 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join"),
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return W.stream_stream_pairs(spark, sf_dir)
 
 
@@ -176,7 +169,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return stateful.user_running_totals(spark, sf_dir)
 
 
@@ -203,7 +195,6 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def stream_stateful_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     return stateful.user_running_totals_tws(spark, sf_dir)
 
 
@@ -239,7 +230,6 @@ def stream_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_merge_latest_snapshot,
     )
 
-    apply_runtime_confs(spark)
     digest = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     root = os.path.join(tempfile.gettempdir(), f"dps_mergesnap_{digest}")
     # Fresh run each invocation: the snapshot is the query RESULT, so
@@ -293,7 +283,6 @@ def stream_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "dedup", "state-ttl"),
 )
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = W.events_stream_duplicated(spark, sf_dir)
     deduped = ev.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 @query(
@@ -43,7 +42,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_
     tags=("subquery", "semi-join"),
 )
 def subq_exists_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -78,7 +76,6 @@ def subq_exists_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "scalar"),
 )
 def subq_scalar_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     p = load(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23").select("p_partkey")
     li = load(spark, sf_dir, "lineitem")
     # Restrict the per-part aggregate to the brand's parts *before*
@@ -127,7 +124,6 @@ def subq_scalar_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "having"),
 )
 def subq_in_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     li = load(spark, sf_dir, "lineitem")
     # The HAVING aggregate IS the output's sum_qty: for a qualifying
     # order, re-summing l_quantity over a second lineitem scan joined
@@ -179,7 +175,6 @@ def subq_in_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "outer-join"),
 )
 def join_outer_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     per_cust = (
@@ -216,7 +211,6 @@ def join_outer_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "anti-join"),
 )
 def subq_scalar_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     c = load(spark, sf_dir, "customer")
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
         (
@@ -266,7 +260,6 @@ def subq_scalar_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def subq_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
 
-    apply_runtime_confs(spark)
     register_views(spark, sf_dir)
     return spark.sql(
         """

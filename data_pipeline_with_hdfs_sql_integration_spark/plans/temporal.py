@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 @query(
@@ -43,7 +42,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_
     tags=("temporal", "join"),
 )
 def temporal_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     v = ev.filter(F.col("event_type") == "view").select(
@@ -104,7 +102,6 @@ def temporal_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("temporal", "join"),
 )
 def temporal_range_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     hour_us = 3_600_000_000
     ev = load(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -171,7 +168,6 @@ IVL_BUCKET_US = 3_600_000_000
     tags=("temporal", "join", "events"),
 )
 def temporal_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     ev = load(spark, sf_dir, "events")
     iv = ev.filter(F.col("event_type").isin("view", "error")).select(
         "event_id",

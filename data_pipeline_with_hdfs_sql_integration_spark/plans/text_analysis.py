@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, table_row_count
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
 # language ID. Deterministic, shared with the oracle.
@@ -65,7 +64,6 @@ def token_tf_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text",),
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     t = tf.tokens(F.col("text"))
     return docs.select(
@@ -98,7 +96,6 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text",),
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents").filter(F.length("text") > 0)
     t = tf.tokens(F.col("text"))
     sw = list(QUALITY_STOPWORDS)
@@ -152,7 +149,6 @@ def _lang_score_sql(lang: str) -> str:
     tags=("text",),
 )
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     t = tf.tokens(F.col("text"))
     scored = docs.select(
@@ -194,7 +190,6 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "dedup"),
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     token_hashes = F.transform(tf.tokens(F.col("text")), lambda s: tf.poly_hash_str(s))
     return docs.select("doc_id", tf.poly_hash_longs(token_hashes).alias("fingerprint"))
@@ -219,7 +214,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "tokens"),
 )
 def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     lowered = F.lower(F.col("text"))
     return docs.select(
@@ -265,7 +259,6 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "tokens", "training"),
 )
 def text_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     tok = F.explode(tf.tokens(F.col("text"))).alias("tok")
     toks = docs.select(tok).filter(F.length("tok") >= 2)
@@ -321,7 +314,6 @@ BPE_MERGE_ROUNDS = 16
     tags=("text", "tokens", "training"),
 )
 def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     from pyspark.storagelevel import StorageLevel
 
     docs = load_parallel(spark, sf_dir, "documents")
@@ -402,7 +394,6 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "topk"),
 )
 def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(tf.tokens(F.col("text"))).alias("tok"))
     return (
@@ -435,7 +426,6 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "normalize"),
 )
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     norm = F.trim(
         F.regexp_replace(
@@ -492,7 +482,6 @@ IDF_SCALE = 1_000_000
 def text_tfidf_topterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    apply_runtime_confs(spark)
     # The corpus size from the parquet footers on the driver: counting
     # with Spark ran a job at plan-build time. Off-local paths have no
     # driver listing and count the PLAIN scan (footer metadata, no
@@ -562,7 +551,6 @@ MAX_TOKENS = 5000
     tags=("text", "pipeline"),
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     t = tf.tokens(F.col("text"))
     n_tokens = F.size(t)
@@ -613,7 +601,6 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "index"),
 )
 def text_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     # Aggregate the shared (doc_id, tok, tf) base instead of the raw
     # exploded stream: doc_id is unique per token there, so every
     # DISTINCT aggregate becomes a plain one — count_distinct ->
@@ -676,7 +663,6 @@ def text_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.streaming import windows as W
 
-    apply_runtime_confs(spark)
     docs = W.documents_stream(spark, sf_dir)
     t = tf.tokens(F.col("text"))
     n_tokens = F.size(t)
@@ -735,7 +721,6 @@ PHRASE_W1, PHRASE_W2 = "table", "scan"
 def search_phrase_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     pos = docs.select(
         "doc_id", F.posexplode(tf.tokens(F.col("text"))).alias("pos", "token")
@@ -817,7 +802,6 @@ QM_THRESHOLD_FP = 5_500_000  # 0.55 at the x1e7 score scale
     tags=("text", "training", "model"),
 )
 def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents").filter(F.length("text") > 0)
     t = tf.tokens(F.col("text"))
     sw = list(QUALITY_STOPWORDS)
@@ -898,7 +882,6 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quality_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import memo_persist
 
-    apply_runtime_confs(spark)
     # ONE hash(doc_id) exchange serves every doc-keyed operator
     # (guide §2.4, the window_weighted_median pattern): the small-input
     # CPU spread is keyed by doc_id instead of round-robin, so the
@@ -991,7 +974,6 @@ def quality_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "quality", "training"),
 )
 def quality_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     chars = docs.select(
         "doc_id",
@@ -1037,7 +1019,6 @@ def quality_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "quality", "training", "python-boundary"),
 )
 def quality_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents").select("doc_id", "text")
 
     def _score(batches):
@@ -1117,7 +1098,6 @@ def quality_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "pipeline", "training", "dedup"),
 )
 def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     t = tf.tokens(F.col("text"))
     scored = docs.select(
@@ -1197,7 +1177,6 @@ def _register_text_langid_confusion() -> None:
         tags=("text", "quality", "model"),
     )
     def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-        apply_runtime_confs(spark)
         preds = registry._REGISTRY["text_langid"].fn(spark, sf_dir)
         return preds.groupBy("labeled_lang", "predicted_lang").agg(
             F.count("*").alias("n")
@@ -1260,7 +1239,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_row_number,
     )
 
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(tf.tokens(F.col("text"))).alias("tok"))

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load_parallel
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 SEQ_LEN = 512  # tokens per packed training sequence
 PACK_SHARDS = 32  # pack within shards: prefix-sum parallelism
@@ -83,7 +82,6 @@ _H_MOD = 4294967296
     tags=("training", "window"),
 )
 def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -193,7 +191,6 @@ def _gram_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("training", "dedup"),
 )
 def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     grams = _gram_hashes(spark, sf_dir)
     eval_g = (
         grams.filter(F.col("doc_id") < EVAL_MAX_DOC_ID)
@@ -258,7 +255,6 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("training", "text"),
 )
 def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     t = tf.tokens(F.col("text"))
     toks = docs.select("doc_id", t.alias("t")).filter(F.size("t") >= 2)
@@ -333,7 +329,6 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("training", "window"),
 )
 def shuffle_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     hkey = (F.col("doc_id").cast("long") * _KNUTH) % _H_MOD
     keyed = docs.select("doc_id", hkey.alias("hkey"))
@@ -398,7 +393,6 @@ MIX_BUDGET_DIV = 2  # budget = total corpus tokens // 2
 def mix_weighted_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     # Persisted barrier: the metadata table feeds BOTH the corpus-total
     # aggregate and the per-language window — without it each branch
@@ -473,7 +467,6 @@ CHUNK_STRIDE = 48  # 16-token overlap between neighbors
     tags=("training", "text"),
 )
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     t = tf.tokens(F.col("text"))
     sized = docs.select("doc_id", t.alias("t"), F.size(t).alias("n")).filter(F.col("n") > 0)
@@ -531,7 +524,6 @@ SAMPLE_HASH_MOD = 1_000_000
     tags=("training", "sampling"),
 )
 def sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     t = tf.tokens(F.col("text"))
     scored = docs.select(
@@ -599,7 +591,6 @@ def _register_split_leakage_audit() -> None:
             dedup_minhash_lsh,
         )
 
-        apply_runtime_confs(spark)
         pairs = dedup_minhash_lsh(spark, sf_dir)
 
         def split(idcol):
@@ -661,7 +652,6 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     hkey = (F.col("doc_id").cast("long") * F.lit(_KNUTH)) % F.lit(_H_MOD)
     sharded = docs.select(
@@ -723,7 +713,6 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("training", "mixing", "stats"),
 )
 def mix_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     g = docs.groupBy("lang", "source").agg(F.count("*").alias("n"))
     t = g.agg(F.sum("n").alias("total"), F.count("*").alias("n_cells"))
@@ -809,7 +798,6 @@ def mix_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mix_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    apply_runtime_confs(spark)
     docs = load_parallel(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
@@ -922,7 +910,6 @@ def _labeled_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("training", "contamination", "embedding", "similarity"),
 )
 def contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     e = _labeled_vecs(spark, sf_dir)
     ev = e.filter(F.col("vec_id") < CONTAM_EVAL_MAX_VEC_ID).select(
         F.col("vec_id").alias("eval_id"), F.col("v").alias("qv")
@@ -990,7 +977,6 @@ def contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("training", "contamination", "embedding", "profiling"),
 )
 def contamination_semantic_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     e = _labeled_vecs(spark, sf_dir)
     ev = e.filter(F.col("vec_id") < CONTAM_EVAL_MAX_VEC_ID).select(
         F.col("v").alias("qv")

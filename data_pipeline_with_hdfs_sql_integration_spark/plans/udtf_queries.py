@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 MAX_POS = 5
 
@@ -50,8 +49,6 @@ MAX_POS = 5
 )
 def udtf_word_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
-
-    apply_runtime_confs(spark)
 
     @udtf(returnType=f"pos int, word string")
     class WordPositions:
@@ -134,7 +131,6 @@ SESSION_GAP_MINUTES = 30
 def udtf_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
-    apply_runtime_confs(spark)
     gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
 
     @udtf(

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 
 @query(
@@ -35,7 +34,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_
     tags=("window",),
 )
 def window_lag_lead_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
@@ -73,7 +71,6 @@ def window_lag_lead_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "range-frame"),
 )
 def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     o = load(spark, sf_dir, "orders").withColumn(
         "day_no",
         F.datediff(F.col("o_orderdate"), F.lit("1992-01-01 00:00:00").cast("timestamp")).cast("long"),
@@ -109,7 +106,6 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window",),
 )
 def window_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_runtime_confs(spark)
     customer = load(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return (

@@ -11,9 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Runtime (session-mutable) confs every query assumes. Applied both at
-#: build time and defensively by `apply_runtime_confs` because the
-#: driver may hand us a session we didn't build.
+#: Runtime (session-mutable) confs every query assumes. Applied at build
+#: time and by the registry before every query call (registry.query),
+#: because a caller may hand us a session we didn't build.
 RUNTIME_CONFS = {
     # Deterministic timestamp semantics vs the DuckDB oracle (UTC-naive).
     "spark.sql.session.timeZone": "UTC",

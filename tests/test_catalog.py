@@ -45,6 +45,18 @@ def test_repeat_read_of_unchanged_path_starts_no_job(spark, tmp_path):
     assert _rows(again) == _rows(first)
 
 
+def test_repeat_build_cache_starts_no_job(spark, tmp_path):
+    """build_cache reads its stored main through read_parquet, so a
+    second build on one sf_dir (each o10/o11 build, each bench cache
+    probe) starts no Spark job."""
+    from data_pipeline_with_hdfs_sql_integration_spark.plans.cache_queries import build_cache
+
+    build_cache(spark, SF_DIR, str(tmp_path / "c1"))
+    cache, jobs = _jobs_started(spark, lambda: build_cache(spark, SF_DIR, str(tmp_path / "c2")))
+    assert jobs == 0
+    assert cache.main.columns == ["c_nationkey", "o_totalprice"]
+
+
 def test_rewrite_with_added_column_shows_new_schema(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.range(5).write.parquet(path)

@@ -264,6 +264,55 @@ def test_cache_warm_all_layout_is_partition_pruned(spark):
     assert df.count() == cache.main.filter(F.col(cache.key_col) == 5).count()
 
 
+class _RecordingFS:
+    """Hadoop FileSystem proxy that records setReplication calls."""
+
+    def __init__(self, fs, calls):
+        self._fs, self._calls = fs, calls
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def setReplication(self, path, n):
+        self._calls[path.toUri().getPath()] = n
+        return self._fs.setReplication(path, n)
+
+
+def _data_files(root):
+    return {os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs if not f.startswith(".")}
+
+
+def test_replication_reaches_every_main_and_partition_file(spark, tmp_path, monkeypatch):
+    """db_to_store stores main at main_replication (reference 2x,
+    server.py:49) and warm_all sets cache_replication on the files
+    nested under key=*/, not only on the layout root."""
+    from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
+    from data_pipeline_with_hdfs_sql_integration_spark.operators import block_locations
+
+    calls = {}
+    real = block_locations.hadoop_fs
+
+    def recording(s, path):
+        fs, hpath = real(s, path)
+        return _RecordingFS(fs, calls), hpath
+
+    monkeypatch.setattr(block_locations, "hadoop_fs", recording)
+    pipe = Pipeline(
+        spark, str(tmp_path / "main"), str(tmp_path / "cache"), "k", "v", cache_replication=3
+    )
+    pipe.db_to_store(
+        spark.createDataFrame([(1, 10), (2, 5), (2, 7)], "k int, v long"),
+        attempts=1, sleep_s=0.0,
+    )
+    main_files = _data_files(tmp_path / "main")
+    assert main_files and calls == dict.fromkeys(main_files, 2)
+    calls.clear()
+    pipe._cache().warm_all()
+    cache_files = _data_files(tmp_path / "cache")
+    assert any(f"{os.sep}k=" in f for f in cache_files)
+    assert calls == dict.fromkeys(cache_files, 3)
+
+
 def test_foreach_batch_exactly_once_sink(spark):
     import tempfile
 

@@ -171,32 +171,22 @@ class TestGlobalPrefixSum:
         assert got == want
         assert any(v is None for v in want.values())  # first row NULL
 
-    def test_set_replication_failure_is_logged_not_swallowed(
-        self, spark, tmp_path, caplog
-    ):
-        """partition_cache._set_replication must emit a debug record
-        when the FileSystem call fails (a durability signal on a real
-        cluster), instead of silently passing."""
+    def test_set_replication_failure_is_logged_not_swallowed(self, spark, caplog):
+        """set_replication must emit a debug record when the
+        FileSystem call fails (a durability signal on a real cluster),
+        instead of silently passing."""
         import logging
 
-        from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import (
-            PartitionCache,
+        from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import (
+            set_replication,
         )
 
-        main = spark.createDataFrame([(1, 10)], ["k", "v"])
-        pc = PartitionCache(
-            spark=spark,
-            main=main,
-            key_col="k",
-            value_col="v",
-            cache_root=str(tmp_path / "cache"),
-        )
         with caplog.at_level(
             logging.DEBUG,
-            logger="data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache",
+            logger="data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations",
         ):
             # An illegal path forces the Hadoop Path constructor to throw.
-            pc._set_replication("")
+            set_replication(spark, "", 1)
         assert any(
             "setReplication" in r.message for r in caplog.records
         )

@@ -134,21 +134,48 @@ def test_contamination_flags_planted_duplicate(spark, tmp_path):
 
 
 def test_hostile_timezone_repinned_by_queries(spark, duck):
-    """A session whose timezone was switched under us must still produce
-    oracle-identical results: apply_runtime_confs (called by every
-    query fn) repins UTC, so timestamp grouping/formatting cannot
-    drift with the host or a prior user of the session."""
+    """A session whose runtime confs were switched under us (timezone,
+    AQE, DPP, pushdown, ...) must still produce oracle-identical
+    results: the registry applies RUNTIME_CONFS before every query call,
+    through ``QuerySpec.fn`` and the module attribute alike (one
+    callable), so timestamp grouping/formatting cannot drift with the
+    host or a prior user of the session."""
+    import importlib
+
+    from data_pipeline_with_hdfs_sql_integration_spark.session import RUNTIME_CONFS
     from tests.oracle_utils import compare
 
-    old = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    hostile = {
+        k: "America/New_York" if k == "spark.sql.session.timeZone" else "false"
+        for k in RUNTIME_CONFS
+    }
+    old = {k: spark.conf.get(k) for k in RUNTIME_CONFS}
     try:
         for name in ("fn_datetime_rollup", "stream_tumbling_counts", "o07_pushdown_scan"):
             spec = _q(name)
-            sdf = spec.fn(spark, SF_DIR)
-            assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-            ok, msg = compare(sdf, duck.sql(spec.oracle))
-            assert ok, f"{name} under hostile timezone: {msg}"
-            spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+            attr = getattr(importlib.import_module(spec.fn.__module__), name)
+            assert attr is spec.fn
+            for fn in (spec.fn, attr):
+                for k, v in hostile.items():
+                    spark.conf.set(k, v)
+                sdf = fn(spark, SF_DIR)
+                assert {k: spark.conf.get(k) for k in RUNTIME_CONFS} == RUNTIME_CONFS
+                ok, msg = compare(sdf, duck.sql(spec.oracle))
+                assert ok, f"{name} under hostile confs: {msg}"
     finally:
-        spark.conf.set("spark.sql.session.timeZone", old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_no_plan_applies_runtime_confs_itself():
+    """The registry applies RUNTIME_CONFS around every query call; a
+    plan body that did it too would restate that rule."""
+    from pathlib import Path
+
+    from data_pipeline_with_hdfs_sql_integration_spark import plans
+
+    offenders = [
+        p.name for p in Path(plans.__file__).parent.glob("*.py")
+        if "apply_runtime_confs" in p.read_text()
+    ]
+    assert offenders == []
