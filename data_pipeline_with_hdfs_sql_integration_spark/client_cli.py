@@ -10,12 +10,11 @@ DbToHdfs | BlockLocations | CalcAvgLoan, ``-c/--code`` int default 0,
                    on separate lines
 - BlockLocations → ``error: <err>`` on error, else the host→count map
 
-grpcio is not installable in this container (probed rounds 2/5/6/7),
-so the transport is the JSON/HTTP skin (service.LenderHttpService),
-whose routes and fields mirror lender.proto message-for-message. The
-ONLY departures from the reference CLI are the additive ``--host`` /
-``--port`` flags (the reference hard-codes ``server:5000``,
-client.py:18); defaults preserve that address's port.
+The transport is the JSON/HTTP skin (service.LenderHttpService), whose
+routes and fields mirror lender.proto message-for-message, so the CLI
+needs no grpcio. The ONLY departures from the reference CLI are the
+additive ``--host`` / ``--port`` flags (the reference hard-codes
+``server:5000``, client.py:18); defaults preserve that address's port.
 """
 
 from __future__ import annotations
@@ -24,7 +23,7 @@ import argparse
 import json
 import sys
 
-from data_pipeline_with_hdfs_sql_integration_spark.service import LenderHttpClient
+from data_pipeline_with_hdfs_sql_integration_spark.service import VERBS, LenderHttpClient
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -34,7 +33,7 @@ def build_parser() -> argparse.ArgumentParser:
     parser.add_argument(
         "mode",
         help="which action to take",
-        choices=["DbToHdfs", "BlockLocations", "CalcAvgLoan"],
+        choices=list(VERBS),
     )
     parser.add_argument(
         "-c",

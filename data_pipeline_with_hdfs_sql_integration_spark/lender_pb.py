@@ -11,11 +11,10 @@ needed. The descriptor below mirrors lender.proto field-for-field
 classes serialize ARE the reference's wire format: a reference
 client's `CalcAvgLoanResp.FromString(...)` parses them unchanged.
 
-What this closes vs. the round-7 gap list: the MESSAGE layer of wire
-parity. The remaining absence is grpcio's HTTP/2 transport framing
-(compiled extension, not installable here) — `service.serve_grpc`
-documents that blocker; `LenderHttpService` carries these proto-wire
-bodies over HTTP via content negotiation (application/x-protobuf).
+In the package, `service.encode` / `service.decode` build and parse
+these messages for the HTTP skin (application/x-protobuf) and for
+`service.serve_grpc`; the JSON wire checks field types against
+`_FIELD_LAYOUT`.
 """
 
 from __future__ import annotations

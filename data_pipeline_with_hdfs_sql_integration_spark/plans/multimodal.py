@@ -40,22 +40,9 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-
-#: Canonical multimodal record schema (payload + typed metadata).
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, n_bytes long, checksum long, feat array<double>"

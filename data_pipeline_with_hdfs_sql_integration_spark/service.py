@@ -1,33 +1,26 @@
-"""Deployment skin for the three-verb service surface.
+"""Network skin for the three-verb service surface (lender.proto:28-37).
 
-The reference exposes its pipeline as a gRPC service (lender.proto:28-37)
-with three unary RPCs — DbToHdfs, BlockLocations, CalcAvgLoan — served
-by server.py:149-160 and driven by client.py:9-35. The engine's query
-capability behind those verbs lives in api.Pipeline; this module adds
-the network skin:
+The reference serves DbToHdfs, BlockLocations and CalcAvgLoan from one
+gRPC servicer (server.py:149-160). Here api.Pipeline runs them, and every
+skin derives from one verb table (``VERBS``), one codec pair
+(``encode`` / ``decode``) and one dispatcher (``LenderHttpService._handle``):
 
-- ``LenderHttpService`` / ``LenderHttpClient``: a dependency-free
-  JSON-over-HTTP transport (stdlib ThreadingHTTPServer + urllib) whose
-  routes, request fields, and response fields mirror lender.proto
-  message-for-message (status / block_entries+error / avg_loan+source+
-  error), so a reference client porting to HTTP changes transport only.
-  Since round 8 the same routes also negotiate
-  ``application/x-protobuf``: bodies are REAL lender.proto wire bytes
-  built by the runtime-generated message classes (lender_pb.py via the
-  _vendor protobuf shim) — the reference's own `FromString` parses the
-  responses unchanged. Message-layer wire parity is closed; only
-  grpcio's HTTP/2 frame transport remains absent (see serve_grpc).
-- ``serve_grpc``: the wire-identical gRPC variant, gated behind an
-  import-try because grpcio is not installed in this container.
+- ``LenderHttpService`` / ``LenderHttpClient``: one HTTP POST route per
+  verb. Bodies are JSON (no dependency) or, with Content-Type
+  ``application/x-protobuf``, lender.proto wire bytes that a reference
+  client's ``FromString`` parses unchanged. Both wires carry every field,
+  defaults included; a malformed body gets 400.
+- ``serve_grpc``: the same verbs on a grpc.Server. grpcio is optional;
+  without it ``serve_grpc`` raises NotImplementedError.
 
-Concurrency mirrors the reference's ThreadPoolExecutor(max_workers=10)
-server: ThreadingHTTPServer handles each request on its own thread, and
-SparkSession job submission is thread-safe, so concurrent CalcAvgLoan
-calls behave like the reference's concurrent RPCs.
+ThreadingHTTPServer handles each request on its own thread, like the
+reference's ThreadPoolExecutor(max_workers=10); Spark job submission is
+thread-safe, so concurrent CalcAvgLoan calls behave like concurrent RPCs.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import threading
 import urllib.request
@@ -35,21 +28,52 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable
 
 from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
-
-_VERBS = ("DbToHdfs", "BlockLocations", "CalcAvgLoan")
+from data_pipeline_with_hdfs_sql_integration_spark.lender_pb import _FIELD_LAYOUT, messages
 
 #: verb -> (request message, response message) names in lender.proto.
-_VERB_MESSAGES = {
+VERBS = {
     "DbToHdfs": ("Empty", "StatusString"),
     "BlockLocations": ("BlockLocationsReq", "BlockLocationsResp"),
     "CalcAvgLoan": ("CalcAvgLoanReq", "CalcAvgLoanResp"),
 }
 
-_PROTO_CT = "application/x-protobuf"
+_CTYPES = {"json": "application/json", "proto": "application/x-protobuf"}
+_PROTO = _CTYPES["proto"]
+#: JSON type of each lender.proto field type; calling one gives its default.
+_JSON_TYPES = {"string": str, "int32": int, "map<string,int32>": dict}
+
+
+def _fields(msg) -> dict:
+    """Every field of a lender.proto message, defaults included. Its only
+    message-typed fields are maps, which come back as a ``dict``."""
+    return {
+        f.name: dict(getattr(msg, f.name)) if f.message_type else getattr(msg, f.name)
+        for f in msg.DESCRIPTOR.fields
+    }
+
+
+def encode(ctype: str, message: str, body: dict) -> bytes:
+    """Serialize ``body``, the fields of lender.proto ``message``."""
+    if ctype == _PROTO:
+        return messages()[message](**body).SerializeToString()
+    return json.dumps(body).encode()
+
+
+def decode(ctype: str, message: str, raw: bytes) -> dict:
+    """Parse ``raw`` into every field of ``message``, defaults included.
+    A malformed body raises ValueError (JSON) or protobuf's DecodeError;
+    a proto body raises NotImplementedError when no protobuf runtime exists."""
+    if ctype == _PROTO:
+        return _fields(messages()[message].FromString(raw))
+    body = json.loads(raw or b"{}")
+    types = {name: _JSON_TYPES[ftype] for name, _num, ftype in _FIELD_LAYOUT[message]}
+    if not isinstance(body, dict) or any(type(v) is not types.get(k) for k, v in body.items()):
+        raise ValueError(f"expected a JSON {message} with fields {list(types)}")
+    return {name: body.get(name, t()) for name, t in types.items()}
 
 
 class LenderHttpService:
-    """Serve a Pipeline over JSON/HTTP with the proto's three verbs.
+    """Serve a Pipeline over HTTP with the proto's three verbs.
 
     ``db_to_store_fn`` supplies the DbToHdfs ingestion (the reference
     hard-codes its SQL extract in server.py:32-38; here the caller binds
@@ -103,12 +127,14 @@ class LenderHttpService:
 
     # -- transport ------------------------------------------------------
     def _handle(self, verb: str, body: dict) -> dict:
+        """Run one verb on a decoded request: the one dispatch point of
+        every skin (HTTP on either wire, gRPC)."""
         if verb == "DbToHdfs":
             return self.db_to_hdfs()
         if verb == "BlockLocations":
-            return self.block_locations(str(body.get("path", "")))
+            return self.block_locations(body["path"])
         if verb == "CalcAvgLoan":
-            return self.calc_avg_loan(int(body.get("county_code", 0)))
+            return self.calc_avg_loan(body["county_code"])
         raise KeyError(verb)
 
     def start(self) -> int:
@@ -118,50 +144,24 @@ class LenderHttpService:
         class Handler(BaseHTTPRequestHandler):
             def do_POST(self) -> None:  # noqa: N802 — http.server API
                 verb = self.path.strip("/")
-                if verb not in _VERBS:
-                    self.send_error(404, f"unknown rpc {verb!r}; known: {_VERBS}")
+                if verb not in VERBS:
+                    self.send_error(404, f"unknown rpc {verb!r}; known: {list(VERBS)}")
                     return
-                length = int(self.headers.get("Content-Length", 0) or 0)
-                raw = self.rfile.read(length) if length else b""
-                is_proto = self.headers.get("Content-Type", "").startswith(
-                    _PROTO_CT
-                )
-                if is_proto:
-                    # lender.proto wire bytes in, wire bytes out — the
-                    # reference's message layer verbatim.
-                    try:
-                        from data_pipeline_with_hdfs_sql_integration_spark.lender_pb import (
-                            messages,
-                        )
-
-                        classes = messages()
-                        from google.protobuf import json_format
-
-                        req_name, resp_name = _VERB_MESSAGES[verb]
-                        req = classes[req_name].FromString(raw)
-                        body = json_format.MessageToDict(
-                            req, preserving_proto_field_name=True
-                        )
-                    except NotImplementedError:
-                        self.send_error(
-                            415, "no protobuf runtime on this host"
-                        )
-                        return
-                    except Exception:
-                        self.send_error(400, "malformed protobuf body")
-                        return
-                    resp = json_format.ParseDict(
-                        service._handle(verb, body), classes[resp_name]()
-                    )
-                    payload, ctype = resp.SerializeToString(), _PROTO_CT
-                else:
-                    try:
-                        body = json.loads(raw or b"{}")
-                    except ValueError:
-                        self.send_error(400, "request body must be JSON")
-                        return
-                    payload = json.dumps(service._handle(verb, body)).encode()
-                    ctype = "application/json"
+                req, resp = VERBS[verb]
+                is_proto = self.headers.get("Content-Type", "").startswith(_PROTO)
+                ctype = _PROTO if is_proto else _CTYPES["json"]
+                try:
+                    length = int(self.headers.get("Content-Length") or 0)
+                    if length < 0:
+                        raise ValueError("negative Content-Length")
+                    body = decode(ctype, req, self.rfile.read(length))
+                except NotImplementedError:
+                    self.send_error(415, "no protobuf runtime on this host")
+                    return
+                except Exception as exc:  # noqa: BLE001 — any malformed body is a 400
+                    self.send_error(400, f"malformed {req} request", str(exc))
+                    return
+                payload = encode(ctype, resp, service._handle(verb, body))
                 self.send_response(200)
                 self.send_header("Content-Type", ctype)
                 self.send_header("Content-Length", str(len(payload)))
@@ -188,12 +188,8 @@ class LenderHttpService:
 
 class LenderHttpClient:
     """Client for LenderHttpService — the HTTP analog of client.py:9-35,
-    one method per proto verb, returning the response dicts verbatim.
-
-    ``wire="proto"`` sends/receives REAL lender.proto wire bytes via
-    the runtime message classes (lender_pb.messages) instead of JSON —
-    what a reference client's serialization layer produces/parses.
-    """
+    one method per proto verb, returning the response dicts with every
+    field. ``wire`` is ``"json"`` or ``"proto"`` (lender.proto bytes)."""
 
     def __init__(
         self,
@@ -202,52 +198,22 @@ class LenderHttpClient:
         timeout_s: float = 60.0,
         wire: str = "json",
     ) -> None:
+        if wire not in _CTYPES:
+            raise ValueError(f"wire must be one of {list(_CTYPES)}, got {wire!r}")
         self.base = f"http://{host}:{port}"
         self.timeout_s = timeout_s
-        assert wire in ("json", "proto")
-        self.wire = wire
+        self.ctype = _CTYPES[wire]
 
     def _call(self, verb: str, body: dict) -> dict:
-        if self.wire == "proto":
-            from data_pipeline_with_hdfs_sql_integration_spark.lender_pb import (
-                messages,
-            )
-
-            # messages() resolves the _vendor protobuf shim; only then
-            # can google.protobuf be imported in a fresh process.
-            classes = messages()
-            from google.protobuf import json_format
-
-            req_name, resp_name = _VERB_MESSAGES[verb]
-            data = json_format.ParseDict(
-                body, classes[req_name]()
-            ).SerializeToString()
-            ctype = _PROTO_CT
-        else:
-            data, ctype = json.dumps(body).encode(), "application/json"
-        req = urllib.request.Request(
+        req, resp = VERBS[verb]
+        request = urllib.request.Request(
             f"{self.base}/{verb}",
-            data=data,
-            headers={"Content-Type": ctype},
+            data=encode(self.ctype, req, body),
+            headers={"Content-Type": self.ctype},
             method="POST",
         )
-        with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
-            raw = resp.read()
-        if self.wire == "proto":
-            msg = classes[resp_name].FromString(raw)
-            out = json_format.MessageToDict(
-                msg, preserving_proto_field_name=True
-            )
-            # proto3 JSON mapping omits default-valued fields; the JSON
-            # transport always carries them — normalize to that shape.
-            for f in msg.DESCRIPTOR.fields:
-                out.setdefault(
-                    f.name, dict(getattr(msg, f.name)) if f.message_type
-                    and f.message_type.GetOptions().map_entry
-                    else getattr(msg, f.name)
-                )
-            return out
-        return json.loads(raw)
+        with urllib.request.urlopen(request, timeout=self.timeout_s) as r:
+            return decode(self.ctype, resp, r.read())
 
     def db_to_hdfs(self) -> dict:
         return self._call("DbToHdfs", {})
@@ -259,79 +225,32 @@ class LenderHttpClient:
         return self._call("CalcAvgLoan", {"county_code": county_code})
 
 
-def serve_grpc(pipeline: Pipeline, port: int = 5000, max_workers: int = 10):
-    """The wire-identical gRPC skin (server.py:149-160).
+def serve_grpc(service: LenderHttpService, port: int = 5000, max_workers: int = 10):
+    """Serve ``service``'s three verbs on a grpc.Server (server.py:149-160).
 
-    Round-8 probe: the MESSAGE layer is now fully available — the
-    _vendor protobuf shim resolves the runtime and lender_pb.messages()
-    builds the lender.proto classes without protoc, so proto wire
-    bytes round-trip end-to-end over the HTTP skin (content type
-    application/x-protobuf). The remaining blocker is grpcio itself:
-    `import grpc` fails (ModuleNotFoundError: No module named 'grpc');
-    grpcio is a compiled C extension with no wheel on this host and no
-    network to fetch one, and no copy ships inside google-cloud-sdk
-    (checked /usr/lib/google-cloud-sdk/lib/third_party — protobuf only).
-    Re-probed round 9 (2026-08-15): import still fails and `pip
-    download grpcio` cannot reach any index (NewConnectionError, name
-    resolution fails for the configured mirror) — the blocker is
-    environmental and stable. Accordingly the SUPPORTED wire surface
-    of this engine is the HTTP skin with application/x-protobuf
-    message bytes (LenderHttpService, wire='proto'): byte-compatible
-    lender.proto messages over HTTP/1.1. HTTP/2 gRPC framing remains
-    this import gate. When grpcio exists, this binds the three verbs
-    to a grpc.Server using the same runtime message classes."""
+    Each verb is a generic unary-unary handler: lender.proto bytes are
+    decoded and encoded by the HTTP skin's codec and the verb runs in
+    ``service._handle``. Returns the started server. Raises
+    NotImplementedError when grpcio is not installed; the HTTP skin with
+    ``wire="proto"`` then carries the same message bytes over HTTP/1.1."""
     try:
         import grpc
     except ImportError as exc:  # pragma: no cover — env-dependent
         raise NotImplementedError(
-            "grpcio is not installed in this environment (compiled "
-            "extension, not vendorable); use LenderHttpService — same "
-            "three-verb surface (lender.proto:28-37), and with "
-            "wire='proto' the same lender.proto message bytes."
+            "grpcio is not installed; use LenderHttpService, which serves "
+            "the same verbs and, with wire='proto', the same message bytes"
         ) from exc
+    from concurrent.futures import ThreadPoolExecutor
 
-    from data_pipeline_with_hdfs_sql_integration_spark.lender_pb import messages
-
-    classes = messages()
-    http = LenderHttpService(pipeline)
-
-    class LenderServicer:
-        def DbToHdfs(self, request, context):  # noqa: N802 — proto verb
-            return _dict_to_msg(http.db_to_hdfs(), classes["StatusString"])
-
-        def BlockLocations(self, request, context):  # noqa: N802
-            return _dict_to_msg(
-                http.block_locations(request.path),
-                classes["BlockLocationsResp"],
-            )
-
-        def CalcAvgLoan(self, request, context):  # noqa: N802
-            return _dict_to_msg(
-                http.calc_avg_loan(request.county_code),
-                classes["CalcAvgLoanResp"],
-            )
-
-    def _dict_to_msg(d: dict, cls):
-        from google.protobuf import json_format
-
-        return json_format.ParseDict(d, cls())
-
-    server = grpc.server(
-        __import__("concurrent.futures", fromlist=["futures"]).ThreadPoolExecutor(
-            max_workers=max_workers
-        )
-    )
-    # Generic handler: method name -> unary-unary servicer call with the
-    # runtime message classes (what generated _pb2_grpc stubs automate).
-    servicer = LenderServicer()
     handlers = {
-        name: grpc.unary_unary_rpc_method_handler(
-            getattr(servicer, name),
-            request_deserializer=classes[req].FromString,
-            response_serializer=classes[resp].SerializeToString,
+        verb: grpc.unary_unary_rpc_method_handler(
+            lambda body, context, verb=verb: service._handle(verb, body),
+            request_deserializer=functools.partial(decode, _PROTO, req),
+            response_serializer=functools.partial(encode, _PROTO, resp),
         )
-        for name, (req, resp) in _VERB_MESSAGES.items()
+        for verb, (req, resp) in VERBS.items()
     }
+    server = grpc.server(ThreadPoolExecutor(max_workers=max_workers))
     server.add_generic_rpc_handlers(
         (grpc.method_handlers_generic_handler("Lender", handlers),)
     )

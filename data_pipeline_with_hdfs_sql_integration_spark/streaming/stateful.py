@@ -41,8 +41,6 @@ STATE_SCHEMA = T.StructType(
     ]
 )
 
-HIGH_VALUE = 500.0  # inlined in the worker closure below
-
 
 def user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay → one emission per user with final totals."""

@@ -70,8 +70,8 @@ def test_bench_refuses_on_live_pidfile(tmp_path):
         }
         r = subprocess.run(
             [sys.executable, "-c",
-             "import sys; sys.path.insert(0, '/root/repo'); "
-             "import bench; bench._box_state()"],
+             "import sys; sys.path.insert(0, sys.argv[1]); "
+             "import bench; bench._box_state()", str(TOOLS.parent)],
             capture_output=True, text=True, env=env, timeout=60,
         )
         assert r.returncode == 4, r.stdout + r.stderr

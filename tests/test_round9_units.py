@@ -407,14 +407,15 @@ class TestSweepDigest:
         # it directly — digestlib has no import-time side effects.
         import importlib.util
 
+        tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
         spec = importlib.util.spec_from_file_location(
-            "digestlib_probe", "/root/repo/tools/digestlib.py"
+            "digestlib_probe", os.path.join(tools, "digestlib.py")
         )
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
         d = mod.digest
         # full_sweep must still route through the shared definition.
-        src = open("/root/repo/tools/full_sweep.py").read()
+        src = open(os.path.join(tools, "full_sweep.py")).read()
         assert "from digestlib import digest" in src
         assert "def _digest" not in src
         assert d([("a\x1fb",)]) != d([("a", "b")])

@@ -132,7 +132,92 @@ def test_grpc_skin_gated_without_grpcio(service):
     except ImportError:
         pass
     with pytest.raises(NotImplementedError):
-        serve_grpc(svc.pipeline)
+        serve_grpc(svc)
+
+
+def test_grpc_skin_serves_all_verbs(service, monkeypatch):
+    """serve_grpc against a stand-in grpc module that records the
+    handlers: each verb runs deserializer -> method -> serializer on
+    lender.proto bytes, through the service's own DbToHdfs ingestion."""
+    import sys
+    from types import SimpleNamespace
+
+    from data_pipeline_with_hdfs_sql_integration_spark.lender_pb import (
+        messages,
+        protobuf_available,
+    )
+
+    if not protobuf_available():
+        pytest.skip("no protobuf runtime on this host")
+    classes = messages()
+    recorded = {}
+
+    class FakeServer:
+        def add_generic_rpc_handlers(self, generic):
+            recorded["generic"] = generic
+
+        def add_insecure_port(self, address):
+            recorded["address"] = address
+
+        def start(self):
+            recorded["started"] = True
+
+    fake_grpc = SimpleNamespace(
+        server=lambda executor: FakeServer(),
+        unary_unary_rpc_method_handler=lambda fn, request_deserializer, response_serializer:
+            SimpleNamespace(fn=fn, load=request_deserializer, dump=response_serializer),
+        method_handlers_generic_handler=lambda name, handlers: (name, handlers),
+    )
+    monkeypatch.setitem(sys.modules, "grpc", fake_grpc)
+    svc, json_client = service
+    serve_grpc(svc, port=0)
+    ((name, handlers),) = recorded["generic"]
+    assert name == "Lender" and recorded["started"]
+
+    def call(verb, request, response_cls):
+        h = handlers[verb]
+        return response_cls.FromString(h.dump(h.fn(h.load(request.SerializeToString()), None)))
+
+    status = call("DbToHdfs", classes["Empty"](), classes["StatusString"]).status
+    assert status.startswith("Imported ")
+    req = classes["CalcAvgLoanReq"](county_code=5)
+    first = call("CalcAvgLoan", req, classes["CalcAvgLoanResp"])
+    assert first.source == "create" and first.avg_loan > 0 and first.error == ""
+    again = call("CalcAvgLoan", req, classes["CalcAvgLoanResp"])
+    assert again.source == "reuse" and again.avg_loan == first.avg_loan
+    assert json_client.calc_avg_loan(5)["avg_loan"] == first.avg_loan
+    blocks = call("BlockLocations", classes["BlockLocationsReq"](), classes["BlockLocationsResp"])
+    assert blocks.error == "" and sum(dict(blocks.block_entries).values()) >= 1
+
+
+@pytest.mark.parametrize(
+    "body, headers",
+    [
+        (b"[1]", {"Content-Type": "application/json"}),
+        (b'{"county_code": "abc"}', {"Content-Type": "application/json"}),
+        (b"{}", {"Content-Type": "application/json", "Content-Length": "abc"}),
+        (b"\xff\xff\xff", {"Content-Type": "application/x-protobuf"}),
+    ],
+    ids=["json-not-object", "json-field-type", "content-length", "proto-garbage"],
+)
+def test_malformed_request_is_400(service, body, headers):
+    """A malformed body is rejected where it is decoded, before any verb
+    runs, on either wire; the service keeps answering afterwards."""
+    import http.client
+
+    _, client = service
+    conn = http.client.HTTPConnection("127.0.0.1", int(client.base.rsplit(":", 1)[1]), timeout=30)
+    try:
+        conn.request("POST", "/CalcAvgLoan", body=body, headers=headers)
+        assert conn.getresponse().status == 400
+    finally:
+        conn.close()
+    assert set(client.calc_avg_loan(5)) == {"avg_loan", "source", "error"}
+
+
+def test_client_rejects_unknown_wire():
+    with pytest.raises(ValueError):
+        LenderHttpClient(5000, wire="xml")
 
 
 def test_cli_drives_all_verbs_over_socket(service):
