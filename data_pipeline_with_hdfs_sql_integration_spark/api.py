@@ -9,15 +9,14 @@ without the gRPC deployment skin.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import read_parquet
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import row_count
 from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import (
     block_histogram_dict,
-    hadoop_fs,
     set_replication,
 )
 from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import CacheResult, PartitionCache
@@ -39,6 +38,19 @@ class Pipeline:
     #: the WebHDFS REST protocol — the reference's actual wire path
     #: (server.py:72) — instead of the Hadoop FileSystem JVM API.
     webhdfs_url: str | None = None
+    #: The partition cache over ``main_path``, held for the engine's
+    #: life; it opens main only to create a partition.
+    cache: PartitionCache = field(init=False, repr=False)
+
+    def __post_init__(self) -> None:
+        self.cache = PartitionCache(
+            self.spark,
+            self.main_path,
+            self.key_col,
+            self.value_col,
+            self.cache_root,
+            replication=self.cache_replication,
+        )
 
     def db_to_store(
         self,
@@ -66,7 +78,7 @@ class Pipeline:
                 df = df.filter((F.col(band_col) > lo) & (F.col(band_col) < hi))
             df.write.mode("overwrite").parquet(self.main_path)
             set_replication(self.spark, self.main_path, self.main_replication)
-            n = read_parquet(self.spark, self.main_path).count()
+            n = row_count(self.spark, self.main_path)
             return f"Imported {n} rows to {self.main_path}"
 
         return with_retry(run, attempts=attempts, sleep_s=sleep_s)
@@ -86,20 +98,9 @@ class Pipeline:
             return block_histogram(self.webhdfs_url, path or self.main_path)
         return block_histogram_dict(self.spark, path or self.main_path)
 
-    def _cache(self) -> PartitionCache:
-        return PartitionCache(
-            self.spark,
-            read_parquet(self.spark, self.main_path),
-            self.key_col,
-            self.value_col,
-            self.cache_root,
-            replication=self.cache_replication,
-        )
-
     def calc_avg(self, key: object) -> CacheResult:
-        return self._cache().calc_avg(key)
+        return self.cache.calc_avg(key)
 
     def invalidate_cache(self) -> None:
         """Drop the whole partition cache; main is not read."""
-        fs, hpath = hadoop_fs(self.spark, self.cache_root)
-        fs.delete(hpath, True)
+        self.cache.invalidate()

@@ -5,22 +5,23 @@ same — parquet is self-describing — but pin the table *names* so every
 query addresses tables identically to the DuckDB oracle views.
 
 Every parquet read of a table, a derived store or the serve path's
-main goes through ``read_parquet``, which infers each path's schema
-once per session: inference costs a Spark job and 100+ ms of driver
-time per read, and plans load the same tables many times per build.
+main goes through ``read_parquet``, which takes its schema from
+``parquet_schema``. That infers each path's schema once per session:
+inference costs a Spark job and 100+ ms of driver time per read, and
+plans load the same tables many times per build.
 
 - Key: (applicationId, absolute path), holding the listing
   fingerprint the schema was inferred under — the relative path,
   ``st_mtime_ns`` and size of every data file (``_listing``) — plus the
   parquet confs that change inference. A read whose fingerprint or
   confs differ (the path was rewritten) re-infers and replaces it.
-- Value: the schema, never a DataFrame. A repeat read is
+- Value: the schema, never a DataFrame. Every read is
   ``spark.read.schema(s).parquet(path)`` — a fresh relation with fresh
   expression IDs, so two loads of one table still self-join.
 - Entries of other applicationIds (a restarted session) are evicted
   on access, as in ``memo_persist``; a lock guards the dict.
 - Non-local paths (hdfs://, s3a://...) have no driver-side listing and
-  keep the plain inferring read.
+  infer on every call.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -86,14 +88,14 @@ _SCHEMAS: dict[tuple, tuple] = {}
 _SCHEMAS_LOCK = threading.Lock()
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers a local path's schema
-    once per session and listing fingerprint (see the module
-    docstring). Inference runs outside the lock: concurrent cold reads
-    of one path each infer, and the last insert wins."""
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """A parquet path's schema, inferred once per session and listing
+    fingerprint (see the module docstring). Inference runs outside the
+    lock: concurrent cold calls for one path each infer, and the last
+    insert wins."""
     listing = _listing(path)
     if listing is None:
-        return spark.read.parquet(path)
+        return spark.read.parquet(path).schema
     key = (spark.sparkContext.applicationId, os.path.abspath(path))
     version = (tuple(listing), tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
     with _SCHEMAS_LOCK:
@@ -101,11 +103,17 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
             del _SCHEMAS[k]
         seen_version, schema = _SCHEMAS.get(key, (None, None))
     if seen_version == version:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
+        return schema
+    schema = spark.read.parquet(path).schema
     with _SCHEMAS_LOCK:
-        _SCHEMAS[key] = (version, df.schema)
-    return df
+        _SCHEMAS[key] = (version, schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from
+    ``parquet_schema``: a fresh relation that infers nothing."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -157,16 +165,14 @@ def table_on_disk_bytes(sf_dir: str, name: str) -> int:
     return sum(size for _f, size, _m in listing)
 
 
-def table_row_count(sf_dir: str, name: str) -> int:
-    """Row count of a table from its parquet footers, read on the
-    driver — no Spark job. Returns -1 for non-local paths, where the
-    caller must count with Spark."""
+def row_count(spark: SparkSession, path: str) -> int:
+    """Rows of a parquet path. A local path sums its parquet footers on
+    the driver (no Spark job); any other path counts with Spark."""
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
     listing = _listing(path)
     if listing is None:
-        return -1
+        return read_parquet(spark, path).count()
     return sum(
         pq.read_metadata(os.path.join(path, f) if f else path).num_rows
         for f, _size, _m in listing

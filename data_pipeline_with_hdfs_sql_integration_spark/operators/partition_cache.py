@@ -11,12 +11,17 @@ Reference behavior (server.py:95-147, the CalcAvgLoan RPC):
   caught and returned as an error (server.py:145-147)
 
 Spark-native design: the cache is a Hive-style partitioned parquet
-layout ``cache_root/<key_col>=<k>/`` so a reuse-path read is a direct
-small-file scan (and a full-layout read gets partition pruning for
-free). The exception taxonomy maps AnalysisException/path-missing →
-create and other Spark/IO errors → recreate. Replication tiering
-(reference: 2× main, 1× cache — server.py:49 vs 135) is applied per
-write via the Hadoop FileSystem API when the storage supports it.
+layout ``cache_root/<key_col>=<k>/`` holding only the value column. The
+cache only ever answers the average of that column, so a partition
+needs nothing else, and each create writes one column instead of main's
+full width. Main is opened only to create or recreate a partition; a
+reuse reads the partition alone, with its schema pinned from main's
+cached parquet schema (``catalog.parquet_schema``), so it starts no
+inference and builds no relation over main. A read that finds the path
+missing maps to create and any other Spark/IO error to recreate.
+Replication tiering (reference: 2× main, 1× cache — server.py:49 vs
+135) is applied per write via the Hadoop FileSystem API when the
+storage supports it.
 """
 
 from __future__ import annotations
@@ -24,11 +29,11 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import parquet_schema, read_parquet
 from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import hadoop_fs, set_replication
 
 # In-process single flight for partition writes: the partition paths
@@ -36,10 +41,14 @@ from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations imp
 # on. A partition directory appears before its files commit, so a
 # request that probed it mid-write would read no rows (and a second
 # writer would collide with the first); it waits for the write instead
-# and then takes the reuse path. Module-level because callers may
-# build a PartitionCache per request.
+# and then takes the reuse path. Module-level so that two caches over
+# one cache root (two build_cache calls, two Pipelines) share it.
 _WRITES: dict[str, threading.Event] = {}
 _WRITES_LOCK = threading.Lock()
+
+# Error text of a read whose path is gone: the reference's
+# FileNotFoundError, which maps to create (server.py:113).
+_PATH_MISSING = ("PATH_NOT_FOUND", "Path does not exist", "FileNotFound")
 
 
 @dataclass
@@ -55,8 +64,8 @@ class PartitionCache:
 
     Parameters
     ----------
-    main : DataFrame
-        The full dataset (the analog of /hdma-wi-2021.parquet).
+    main_path : str
+        The stored main dataset (the analog of /hdma-wi-2021.parquet).
     key_col, value_col : str
         Partition key and the column averaged by the flagship query.
     cache_root : str
@@ -69,48 +78,43 @@ class PartitionCache:
     def __init__(
         self,
         spark: SparkSession,
-        main: DataFrame,
+        main_path: str,
         key_col: str,
         value_col: str,
         cache_root: str,
         replication: int = 1,
     ) -> None:
         self.spark = spark
-        self.main = main
+        self.main_path = main_path
         self.key_col = key_col
         self.value_col = value_col
         self.cache_root = cache_root.rstrip("/")
         self.replication = replication
-        # Partition files carry main's schema minus the key column; pin
-        # it so every reuse-path read skips driver-side schema inference
-        # (one footer read per calc_avg otherwise). Filtered in Python:
-        # analysing main.drop(key_col) costs a plan analysis per request.
-        self._cache_schema = StructType([f for f in main.schema.fields if f.name != key_col])
+
+    @property
+    def main(self) -> DataFrame:
+        """Main projected to (key, value): a new relation per access."""
+        return read_parquet(self.spark, self.main_path).select(self.key_col, self.value_col)
 
     # -- paths ---------------------------------------------------------
     def partition_path(self, key: object) -> str:
         return f"{self.cache_root}/{self.key_col}={key}"
 
     # -- internals -----------------------------------------------------
-    def _avg_of(self, df: DataFrame) -> int | None:
-        """AVG truncated toward zero like Python int() (server.py:109).
+    def _observed_avg(self, df: DataFrame, write) -> int | None:
+        """AVG of the value column truncated toward zero like Python
+        int() (server.py:109); None for an empty input (the NumPy-NaN
+        analog).
 
-        Returns None for an empty input (NumPy-NaN analog).
-
-        Computed as an observed metric over a noop-sink pass — ONE
-        single-stage job (scan + running aggregate), mirroring the
-        create path's Observation ride-along. The previous
-        `.agg().collect()` planned a partial/final aggregate pair
-        around an Exchange, which AQE then ran as separate per-stage
-        jobs: ~2x the fixed per-job cost on every cache hit, and at
-        scale a (tiny but real) shuffle the observation never needs.
+        The average rides along as an observed metric on ``write(df)``,
+        the one action: the partition write on create, the noop sink on
+        reuse. So each path is ONE single-stage job (scan + running
+        aggregate); an ``.agg().collect()`` would plan a partial/final
+        aggregate pair around an Exchange, which AQE runs as separate
+        jobs, and a create would scan main's lineage twice.
         """
-        from pyspark.sql import Observation
-
         obs = Observation()
-        df.observe(obs, F.avg(self.value_col).alias("a")).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        write(df.observe(obs, F.avg(self.value_col).alias("a")))
         a = obs.get["a"]
         return None if a is None else int(a)
 
@@ -118,7 +122,7 @@ class PartitionCache:
         path = self.partition_path(key)
         # One key's subset is small by construction — coalesce(1) mirrors
         # the reference's single partition file per key (server.py:139-140).
-        subset.drop(self.key_col).coalesce(1).write.mode("overwrite").parquet(path)
+        subset.coalesce(1).write.mode("overwrite").parquet(path)
         set_replication(self.spark, path, self.replication)
 
     def _delete(self, path: str) -> None:
@@ -127,31 +131,20 @@ class PartitionCache:
 
     def _exists(self, path: str) -> bool:
         """Metadata-only FileSystem.exists probe — no Spark job, no
-        exception-driven control flow (an AnalysisException probe pays a
+        exception-driven control flow (a failed-read probe pays a
         full JVM stack unwind per cache miss and floods the logs)."""
         fs, hpath = hadoop_fs(self.spark, path)
         return bool(fs.exists(hpath))
 
     def _recompute(self, key: object, source: str) -> CacheResult:
-        # ONE job per create: the partition write is the only action, and
-        # the average rides along as an observed metric on the same scan
-        # (Observation API) — main's lineage is executed exactly once,
-        # with no persist round-trip and no second avg job. At 100 TB
-        # that halves the create path; in local benches it removes
-        # ~150 ms of per-key job overhead.
-        from pyspark.sql import Observation
-
-        subset = self.main.filter(F.col(self.key_col) == F.lit(key))
-        obs = Observation()
-        observed = subset.observe(obs, F.avg(self.value_col).alias("a"))
-        self._write_partition(observed, key)
-        a = obs.get["a"]
+        subset = self.main.filter(F.col(self.key_col) == F.lit(key)).select(self.value_col)
+        a = self._observed_avg(subset, lambda df: self._write_partition(df, key))
         if a is None:
             # Reference: int(NaN) raises → error response (server.py:145-147).
             # Roll back the (empty) partition so the key stays a miss.
             self._delete(self.partition_path(key))
             return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
-        return CacheResult(key, int(a), source)
+        return CacheResult(key, a, source)
 
     def _recompute_once(self, key: object, source: str) -> CacheResult:
         """_recompute unless another request in this process is already
@@ -183,24 +176,20 @@ class PartitionCache:
             return self.calc_avg(key)
         if not exists:
             return self._recompute_once(key, "create")  # server.py:113-116
+        value = parquet_schema(self.spark, self.main_path)[self.value_col]
         try:
-            cached = self.spark.read.schema(self._cache_schema).parquet(path)
-            avg = self._avg_of(cached)
-            if avg is None:
-                return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
-            return CacheResult(key, avg, "reuse")
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                # Raced deletion between the exists probe and the read.
-                return self._recompute_once(key, "create")
-            return self._recompute_once(key, "recreate")  # corrupt metadata etc.
+            cached = self.spark.read.schema(StructType([value])).parquet(path)
+            avg = self._observed_avg(
+                cached, lambda df: df.write.format("noop").mode("overwrite").save()
+            )
         except Exception as exc:
-            # With a pinned schema the path is first touched at job time,
-            # so a raced deletion surfaces here as FileNotFound — keep the
-            # reference's FileNotFoundError→create mapping (server.py:113).
-            if "FileNotFound" in str(exc) or "Path does not exist" in str(exc):
-                return self._recompute_once(key, "create")
-            return self._recompute_once(key, "recreate")  # server.py:118-121 (OSError)
+            # A deletion raced in since the exists probe (server.py:113) or
+            # the partition is unreadable (server.py:118-121, OSError).
+            missing = any(m in str(exc) for m in _PATH_MISSING)
+            return self._recompute_once(key, "create" if missing else "recreate")
+        if avg is None:
+            return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
+        return CacheResult(key, avg, "reuse")
 
     def calc_avg_many(self, keys: list) -> list[CacheResult]:
         """calc_avg over a key list with a few jobs in flight
@@ -227,10 +216,3 @@ class PartitionCache:
     def invalidate(self) -> None:
         """Drop the whole cache (performance_analyzer.py:26-34, O16)."""
         self._delete(self.cache_root)
-
-    def warm_all(self) -> None:
-        """Bulk idiomatic variant: one partitioned write materializes every
-        key at once (df.write.partitionBy) — at 100 TB this replaces N
-        per-key jobs with a single shuffle-free partitioned write."""
-        self.main.write.partitionBy(self.key_col).mode("overwrite").parquet(self.cache_root)
-        set_replication(self.spark, self.cache_root, self.replication)

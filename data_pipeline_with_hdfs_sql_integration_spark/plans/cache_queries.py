@@ -8,7 +8,6 @@ by ``o10_partition_cache_values``.
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,7 +17,6 @@ from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
     deterministic_tmp_dir,
     load,
     publish_store,
-    read_parquet,
     table_path,
 )
 from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import PartitionCache
@@ -47,7 +45,8 @@ def build_cache(spark: SparkSession, sf_dir: str, cache_root: str | None = None)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     # 'cachemainp': Hive-partitioned layout, v2 of the flat 'cachemain'
     # store (new kind => new digest dir, so a stale flat store never
-    # serves this layout).
+    # serves this layout). Partitioned by key, every create-path scan
+    # prunes to its key's directory.
     main_path = deterministic_tmp_dir("cachemainp", table_path(sf_dir, "orders"))
     publish_store(
         main_path,
@@ -59,17 +58,7 @@ def build_cache(spark: SparkSession, sf_dir: str, cache_root: str | None = None)
         .parquet(staging),
     )
     root = cache_root or tempfile.mkdtemp(prefix="dps_cache_")
-    # Two layout levers on the stored main, both free for a columnar
-    # engine and impossible for the reference (PyArrow reads its whole
-    # 1 MiB-block file):
-    # - partitionBy(key): every create-path scan PRUNES to its key's
-    #   directory instead of scanning all rows (PartitionFilters);
-    # - (key, value) projection: the scan reads 1 data column instead
-    #   of the full join width (pruned ReadSchema), and per-key
-    #   partition files shrink to the single value column the
-    #   reuse-path average needs.
-    main = read_parquet(spark, main_path).select(KEY_COL, VALUE_COL)
-    return PartitionCache(spark, main, KEY_COL, VALUE_COL, root)
+    return PartitionCache(spark, main_path, KEY_COL, VALUE_COL, root)
 
 
 @query(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, table_row_count
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load_parallel, row_count, table_path
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 
@@ -483,12 +483,8 @@ def text_tfidf_topterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     # The corpus size from the parquet footers on the driver: counting
-    # with Spark ran a job at plan-build time. Off-local paths have no
-    # driver listing and count the PLAIN scan (footer metadata, no
-    # load_parallel repartition exchange).
-    n_docs = table_row_count(sf_dir, "documents")
-    if n_docs < 0:
-        n_docs = load(spark, sf_dir, "documents").count()
+    # with Spark ran a job at plan-build time.
+    n_docs = row_count(spark, table_path(sf_dir, "documents"))
     # tfs feeds BOTH the df aggregate and the scored join — without the
     # persist the optimizer re-derives it per consumer and the corpus
     # is scanned + exploded + aggregated twice (r12 plan: two parquet

@@ -1,5 +1,6 @@
-"""catalog.read_parquet: one schema inference per path and listing
-fingerprint per session, with fresh relations on every read."""
+"""catalog.read_parquet and parquet_schema: one schema inference per
+path and listing fingerprint per session, with fresh relations on
+every read."""
 
 from __future__ import annotations
 
@@ -30,11 +31,27 @@ def _jobs_started(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _parquet_opens(monkeypatch) -> list:
+    """Record the path arguments of every DataFrameReader.parquet call
+    from here on."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    opened = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kwargs):
+        opened.extend(paths)
+        return real(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    return opened
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_repeat_read_of_unchanged_path_starts_no_job(spark, tmp_path):
+def test_repeat_read_of_unchanged_path_starts_no_job(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "t")
     spark.range(50).withColumn("s", F.col("id").cast("string")).write.parquet(path)
     first, first_jobs = _jobs_started(spark, lambda: read_parquet(spark, path))
@@ -43,6 +60,10 @@ def test_repeat_read_of_unchanged_path_starts_no_job(spark, tmp_path):
     assert again_jobs == 0
     assert again.schema == first.schema
     assert _rows(again) == _rows(first)
+    # A repeat parquet_schema opens no relation at all.
+    opened = _parquet_opens(monkeypatch)
+    assert catalog.parquet_schema(spark, path) == first.schema
+    assert opened == []
 
 
 def test_repeat_build_cache_starts_no_job(spark, tmp_path):
@@ -62,6 +83,7 @@ def test_rewrite_with_added_column_shows_new_schema(spark, tmp_path):
     spark.range(5).write.parquet(path)
     assert read_parquet(spark, path).columns == ["id"]
     spark.range(5).withColumn("x", F.col("id") * 2).write.mode("overwrite").parquet(path)
+    assert catalog.parquet_schema(spark, path).names == ["id", "x"]
     df = read_parquet(spark, path)
     assert df.columns == ["id", "x"]
     assert _rows(df) == [(i, 2 * i) for i in range(5)]
@@ -153,20 +175,22 @@ def test_concurrent_cold_reads_agree(spark, tmp_path):
     assert read_parquet(spark, path).schema == schemas[0]
 
 
-def test_listing_helpers_agree(spark, tmp_path):
-    """table_on_disk_bytes and table_row_count read the same listing;
-    off-local paths answer -1."""
+def test_listing_helpers_agree(spark, tmp_path, monkeypatch):
+    """table_on_disk_bytes and row_count read the same listing;
+    off-local paths answer -1 for the size and count with Spark."""
     sf = str(tmp_path)
     path = catalog.table_path(sf, "orders")
     spark.range(30).repartition(3).write.parquet(path)
     listing = catalog._listing(path)
     assert len(listing) == 3
     assert catalog.table_on_disk_bytes(sf, "orders") == sum(size for _f, size, _m in listing)
-    assert catalog.table_row_count(sf, "orders") == 30
-    assert catalog.table_row_count(SF_DIR, "documents") == load(spark, SF_DIR, "documents").count()
+    assert catalog.row_count(spark, path) == 30
+    docs = catalog.table_path(SF_DIR, "documents")
+    assert catalog.row_count(spark, docs) == load(spark, SF_DIR, "documents").count()
     assert catalog._listing("hdfs://nowhere/x.parquet") is None
-    assert catalog.table_row_count("hdfs://nowhere", "orders") == -1
     assert catalog.table_on_disk_bytes("hdfs://nowhere", "orders") == -1
+    monkeypatch.setattr(catalog, "_listing", lambda p: None)
+    assert catalog.row_count(spark, docs) == spark.read.parquet(docs).count()
 
 
 def _write_store(path, data="data"):

@@ -79,8 +79,9 @@ def test_cache_invalidate(cache):
 def test_avg_truncates_toward_zero(cache):
     # int() truncation parity with reference server.py:109.
     res = cache.calc_avg(5)
+    main = cache.main
     row = (
-        cache.main.filter(cache.main[cache.key_col] == 5)
+        main.filter(main[cache.key_col] == 5)
         .agg({cache.value_col: "avg"})
         .collect()[0][0]
     )
@@ -203,6 +204,88 @@ def test_pipeline_facade_end_to_end(spark):
     assert sum(hist.values()) >= 1
 
 
+def _stored_pipeline(spark, tmp_path):
+    """A Pipeline over a stored main with a column beside key and value."""
+    from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
+
+    pipe = Pipeline(spark, str(tmp_path / "main"), str(tmp_path / "cache"), "k", "v")
+    pipe.db_to_store(
+        spark.createDataFrame([(1, 10, "a"), (1, 21, "b"), (2, 5, "c")], "k int, v long, tag string"),
+        attempts=1, sleep_s=0.0,
+    )
+    return pipe
+
+
+def test_pipeline_reuse_reads_only_the_partition(spark, tmp_path, monkeypatch):
+    """A reuse opens one parquet relation, the partition; main is
+    opened only to create."""
+    from tests.test_catalog import _parquet_opens
+
+    pipe = _stored_pipeline(spark, tmp_path)
+    assert pipe.calc_avg(1).source == "create"
+    paths = _parquet_opens(monkeypatch)
+    res = pipe.calc_avg(1)
+    assert (res.avg, res.source) == (15, "reuse")
+    assert paths == [str(tmp_path / "cache" / "k=1")]
+
+
+def test_pipeline_partition_stores_only_the_value_column(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    pipe = _stored_pipeline(spark, tmp_path)
+    assert pipe.calc_avg(1).source == "create"
+    files = glob.glob(str(tmp_path / "cache" / "k=1" / "*.parquet"))
+    assert files
+    assert {tuple(pq.read_schema(f).names) for f in files} == {("v",)}
+
+
+def test_exists_probe_racing_a_deletion_still_creates(spark, tmp_path, monkeypatch):
+    """The partition vanishes between the exists probe and the read:
+    the read's path-missing error maps to create, not recreate."""
+    from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import (
+        PartitionCache,
+    )
+
+    pipe = _stored_pipeline(spark, tmp_path)
+    monkeypatch.setattr(PartitionCache, "_exists", lambda self, path: True)
+    res = pipe.calc_avg(2)
+    assert (res.avg, res.source, res.error) == (5, "create", "")
+
+
+def test_calc_avg_many_matches_sequential_and_fault_paths(spark, tmp_path):
+    """calc_avg_many = N independent calc_avg state machines, 3 in
+    flight: same sources, same averages, input order preserved —
+    including the recreate-on-corruption and empty-key fault paths."""
+    import glob
+
+    from data_pipeline_with_hdfs_sql_integration_spark.plans.cache_queries import (
+        CACHE_KEYS,
+        build_cache,
+    )
+
+    cache = build_cache(spark, SF_DIR, str(tmp_path / "cache"))
+    keys = list(CACHE_KEYS) + [9999]  # last key has no rows
+    first = cache.calc_avg_many(keys)
+    assert [r.key for r in first] == keys
+    assert [r.source for r in first] == ["create"] * len(CACHE_KEYS) + [""]
+    assert first[-1].avg == 0 and first[-1].error
+    second = cache.calc_avg_many(keys)
+    assert [r.source for r in second] == ["reuse"] * len(CACHE_KEYS) + [""]
+    assert [r.avg for r in second] == [r.avg for r in first]
+    # sequential reference
+    seq = [cache.calc_avg(k) for k in keys]
+    assert [r.avg for r in seq] == [r.avg for r in first]
+    # corrupt one key's partition: that key recreates, others reuse
+    bad = CACHE_KEYS[1]
+    for p in glob.glob(cache.partition_path(bad) + "/*.parquet"):
+        with open(p, "wb") as fh:
+            fh.write(b"garbage")
+    third = cache.calc_avg_many(keys)
+    want = ["reuse", "recreate"] + ["reuse"] * (len(CACHE_KEYS) - 2) + [""]
+    assert [r.source for r in third] == want
+    assert [r.avg for r in third] == [r.avg for r in first]
+
+
 def test_salted_join_equals_plain_join(spark):
     from pyspark.sql import functions as F
 
@@ -248,22 +331,6 @@ def test_approx_distinct_within_error_bound(spark):
         assert r["hll_within_5pct"] is True, r
 
 
-def test_cache_warm_all_layout_is_partition_pruned(spark):
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_pipeline_with_hdfs_sql_integration_spark.plans.cache_queries import build_cache
-
-    cache = build_cache(spark, SF_DIR, tempfile.mkdtemp(prefix="dps_warm_"))
-    cache.warm_all()
-    df = spark.read.parquet(cache.cache_root).filter(F.col(cache.key_col) == 5)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    # The equality filter must prune at the partition level, not scan+filter.
-    assert "PartitionFilters" in plan and "c_nationkey" in plan.split("PartitionFilters", 1)[1][:200]
-    assert df.count() == cache.main.filter(F.col(cache.key_col) == 5).count()
-
-
 class _RecordingFS:
     """Hadoop FileSystem proxy that records setReplication calls."""
 
@@ -284,7 +351,7 @@ def _data_files(root):
 
 def test_replication_reaches_every_main_and_partition_file(spark, tmp_path, monkeypatch):
     """db_to_store stores main at main_replication (reference 2x,
-    server.py:49) and warm_all sets cache_replication on the files
+    server.py:49) and each create sets cache_replication on the files
     nested under key=*/, not only on the layout root."""
     from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
     from data_pipeline_with_hdfs_sql_integration_spark.operators import block_locations
@@ -307,7 +374,7 @@ def test_replication_reaches_every_main_and_partition_file(spark, tmp_path, monk
     main_files = _data_files(tmp_path / "main")
     assert main_files and calls == dict.fromkeys(main_files, 2)
     calls.clear()
-    pipe._cache().warm_all()
+    assert [pipe.calc_avg(k).source for k in (1, 2)] == ["create", "create"]
     cache_files = _data_files(tmp_path / "cache")
     assert any(f"{os.sep}k=" in f for f in cache_files)
     assert calls == dict.fromkeys(cache_files, 3)

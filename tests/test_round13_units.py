@@ -73,40 +73,6 @@ def test_long_cents_pricing_equals_decimal(spark, sf_dir):
             assert repr(got[k][f]) == repr(want[k][f]), (k, f, got[k][f], want[k][f])
 
 
-def test_calc_avg_many_matches_sequential_and_fault_paths(spark, tmp_path):
-    """calc_avg_many = N independent calc_avg state machines, 3 in
-    flight: same sources, same averages, input order preserved —
-    including the recreate-on-corruption and empty-key fault paths."""
-    import glob
-
-    from data_pipeline_with_hdfs_sql_integration_spark.plans.cache_queries import (
-        CACHE_KEYS,
-        build_cache,
-    )
-
-    cache = build_cache(spark, SF_DIR, str(tmp_path / "cache"))
-    keys = list(CACHE_KEYS) + [9999]  # last key has no rows
-    first = cache.calc_avg_many(keys)
-    assert [r.key for r in first] == keys
-    assert [r.source for r in first] == ["create"] * len(CACHE_KEYS) + [""]
-    assert first[-1].avg == 0 and first[-1].error
-    second = cache.calc_avg_many(keys)
-    assert [r.source for r in second] == ["reuse"] * len(CACHE_KEYS) + [""]
-    assert [r.avg for r in second] == [r.avg for r in first]
-    # sequential reference
-    seq = [cache.calc_avg(k) for k in keys]
-    assert [r.avg for r in seq] == [r.avg for r in first]
-    # corrupt one key's partition: that key recreates, others reuse
-    bad = CACHE_KEYS[1]
-    for p in glob.glob(cache.partition_path(bad) + "/*.parquet"):
-        with open(p, "wb") as fh:
-            fh.write(b"garbage")
-    third = cache.calc_avg_many(keys)
-    want = ["reuse", "recreate"] + ["reuse"] * (len(CACHE_KEYS) - 2) + [""]
-    assert [r.source for r in third] == want
-    assert [r.avg for r in third] == [r.avg for r in first]
-
-
 def test_cent_grid_long_exact_on_grid(spark):
     """cent_grid_long recovers the exact integer for every cent-grid
     value in the money range, including the float-hostile ones."""

@@ -13,13 +13,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as e  # noqa: E402
 
 qs = e.queries()
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.localdata/sf10"
+SF = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".localdata", "sf10")
 requested = [n for n in os.environ.get("SWEEP_ONLY", "").split(",") if n]
 unknown = [n for n in requested if n not in qs]
 if unknown:

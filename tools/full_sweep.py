@@ -13,8 +13,10 @@ scrub) compare even at sf10 where their multi-million-row results
 made exact collection a harness limitation, never an engine one.
 Value semantics are IDENTICAL to the exact mode (same per-value str()
 forms, multiset equality via the hash sum)."""
-import sys, time; sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+import os, sys, time
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 from busy import claim as _claim
 # Pidfile handshake (round-11 lesson): declare this process as a
 # box-owning workload so bench.py refuses to time queries while the

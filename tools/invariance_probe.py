@@ -30,8 +30,9 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 from busy import claim
 
 claim("probe")  # bench.py refuses to time while this runs
@@ -61,7 +62,7 @@ SHAPES = {
 
 RUNNER = r"""
 import json, sys
-sys.path.insert(0, "/root/repo"); sys.path.insert(0, "/root/repo/tools")
+sys.path[:0] = [sys.argv[4], sys.argv[4] + "/tools"]
 from pyspark.sql import SparkSession
 shape = json.loads(sys.argv[1]); sf = sys.argv[2]; names = sys.argv[3].split(",")
 b = SparkSession.builder.master(f"local[{shape['cpus']}]")
@@ -91,7 +92,7 @@ print("PROBE_RESULT " + json.dumps(out))
 
 def run_shape(tag: str, sf: str, names: str) -> dict:
     p = subprocess.run(
-        [sys.executable, "-c", RUNNER, json.dumps(SHAPES[tag]), sf, names],
+        [sys.executable, "-c", RUNNER, json.dumps(SHAPES[tag]), sf, names, REPO],
         capture_output=True,
         text=True,
     )
@@ -103,7 +104,7 @@ def run_shape(tag: str, sf: str, names: str) -> dict:
 
 
 def main() -> None:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.localdata/sf10"
+    sf = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".localdata", "sf10")
     names = os.environ.get("SWEEP_ONLY", "")
     if not names:
         raise SystemExit("set SWEEP_ONLY=q1,q2,...")

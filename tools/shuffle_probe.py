@@ -17,8 +17,9 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 from busy import claim as _claim
 
 _claim("probe")  # bench.py refuses to time while this runs (round-11 lesson)
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 import __spark_entry__ as e  # noqa: E402
 
 qs = e.queries()
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.localdata/sf10"
+SF = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".localdata", "sf10")
 requested = [n for n in os.environ.get("SWEEP_ONLY", "").split(",") if n]
 unknown = [n for n in requested if n not in qs]
 if unknown:
