@@ -22,6 +22,13 @@ plans load the same tables many times per build.
   on access, as in ``memo_persist``; a lock guards the dict.
 - Non-local paths (hdfs://, s3a://...) have no driver-side listing and
   infer on every call.
+
+Every derived directory a plan builds (index stores, layout copies,
+transaction-log tables, the serve path's main) is published by
+``publish_store``: the build writes a private directory, and
+``publish_store`` alone writes the ``_SUCCESS`` marker and renames it
+into place. Plan code never names the marker; it reads the published
+store back through ``read_parquet``.
 """
 
 from __future__ import annotations
@@ -323,21 +330,23 @@ def memo_persist(spark: SparkSession, key: tuple, build) -> DataFrame:
 STORE_BUILD_TIMES: dict[str, float] = {}
 
 
-def _has_success(path: str) -> bool:
+def is_complete(path: str) -> bool:
+    """True when ``path`` carries the completion marker, which
+    ``publish_store`` (and Spark's own committer) writes last."""
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def publish_store(target: str, build, complete=_has_success) -> None:
+def publish_store(target: str, build, complete=is_complete) -> None:
     """Materialize a derived directory exactly once, atomically.
 
     ``build(path)`` writes the directory; ``complete(path)`` tells a
     finished one from a partial one. No-op if ``target`` is complete.
     Otherwise builds into a private ``<target>.build-<uuid>`` (removed
-    if the build raises) and renames it into place, atomic on POSIX:
-    racing builders each build, one rename wins and the rest drop their
-    copies. An incomplete ``target`` in the way, re-probed just before,
-    is renamed aside and deleted. Raises RuntimeError when nothing
-    complete can be published.
+    if the build raises), marks it complete and renames it into place,
+    atomic on POSIX: racing builders each build, one rename wins and
+    the rest drop their copies. An incomplete ``target`` in the way,
+    re-probed just before, is renamed aside and deleted. Raises
+    RuntimeError when nothing complete can be published.
     """
     import shutil
     import time
@@ -349,6 +358,8 @@ def publish_store(target: str, build, complete=_has_success) -> None:
     t0 = time.monotonic()
     try:
         build(staged)
+        os.makedirs(staged, exist_ok=True)
+        open(os.path.join(staged, "_SUCCESS"), "w").close()
     except BaseException:
         shutil.rmtree(staged, ignore_errors=True)
         raise

@@ -5,12 +5,20 @@ aggregation, and a partition-pruned layout read.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
+    deterministic_tmp_dir,
+    load,
+    load_parallel,
+    publish_store,
+    read_parquet,
+    table_path,
+)
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.operators.skew import salted_group_count
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
@@ -144,6 +152,22 @@ def agg_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return salted_group_count(ev, "event_type", n_salts=16)
 
 
+def _day_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events partitioned by event day: the fact of both pruning
+    queries, published once per source version. Keyed on the SOURCE
+    file's content version (mtime+size): a regenerated fixture can
+    never serve a stale partitioned copy."""
+    path = deterministic_tmp_dir("layout_day", table_path(sf_dir, "events"))
+    publish_store(
+        path,
+        lambda staged: load(spark, sf_dir, "events")
+        .withColumn("event_day", F.to_date("ts"))
+        .write.partitionBy("event_day")
+        .parquet(staged),
+    )
+    return read_parquet(spark, path)
+
+
 @query(
     "layout_partition_pruning",
     oracle="""
@@ -164,23 +188,8 @@ def agg_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layout", "pruning"),
 )
 def layout_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
-        deterministic_tmp_dir,
-        table_path,
-    )
-
-    ev = load(spark, sf_dir, "events")
-    # Keyed on the SOURCE file's content version (mtime+size): a
-    # regenerated fixture can never serve a stale partitioned copy.
-    path = deterministic_tmp_dir("layout_day", table_path(sf_dir, "events"))
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        ev.withColumn("event_day", F.to_date("ts")).write.mode("overwrite").partitionBy(
-            "event_day"
-        ).parquet(path)
-    day = (
-        spark.read.parquet(path)
-        .filter(F.col("event_day") == F.lit("2024-01-10").cast("date"))
+    day = _day_layout(spark, sf_dir).filter(
+        F.col("event_day") == F.lit("2024-01-10").cast("date")
     )
     return day.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -214,10 +223,6 @@ def layout_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layout", "bucketing", "join"),
 )
 def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
-        deterministic_tmp_dir,
-        table_path,
-    )
     from data_pipeline_with_hdfs_sql_integration_spark.operators.bucketing import (
         bucketed_join,
     )
@@ -282,20 +287,12 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layout", "pruning", "join"),
 )
 def layout_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
-        deterministic_tmp_dir,
-        table_path,
-    )
-
-    ev = load(spark, sf_dir, "events")
-    fact_path = deterministic_tmp_dir("layout_day", table_path(sf_dir, "events"))
-    if not os.path.exists(os.path.join(fact_path, "_SUCCESS")):
-        ev.withColumn("event_day", F.to_date("ts")).write.mode("overwrite").partitionBy(
-            "event_day"
-        ).parquet(fact_path)
-    dim_path = deterministic_tmp_dir("day_dim_tier", table_path(sf_dir, "events"))
-    if not os.path.exists(os.path.join(dim_path, "_SUCCESS")):
-        days = ev.groupBy(F.to_date("ts").alias("d")).agg(F.count("*").alias("n"))
+    def build_dim(staged: str) -> None:
+        days = (
+            load(spark, sf_dir, "events")
+            .groupBy(F.to_date("ts").alias("d"))
+            .agg(F.count("*").alias("n"))
+        )
         tot = days.agg(F.sum("n").alias("s"), F.count("*").alias("k"))
         dim = days.crossJoin(F.broadcast(tot)).select(
             "d",
@@ -304,9 +301,12 @@ def layout_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
             .otherwise(F.lit("cold"))
             .alias("tier"),
         )
-        dim.coalesce(1).write.mode("overwrite").parquet(dim_path)
-    fact = spark.read.parquet(fact_path)
-    hot = spark.read.parquet(dim_path).filter(F.col("tier") == "hot").select("d")
+        dim.coalesce(1).write.parquet(staged)
+
+    dim_path = deterministic_tmp_dir("day_dim_tier", table_path(sf_dir, "events"))
+    publish_store(dim_path, build_dim)
+    fact = _day_layout(spark, sf_dir)
+    hot = read_parquet(spark, dim_path).filter(F.col("tier") == "hot").select("d")
     return (
         fact.join(hot, fact.event_day == hot.d)
         .groupBy("event_type")
@@ -374,18 +374,11 @@ def agg_collect_sorted_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layout", "zorder", "pruning"),
 )
 def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
-        deterministic_tmp_dir,
-        table_path,
-    )
     from data_pipeline_with_hdfs_sql_integration_spark.operators.zorder import (
         scale_to_grid,
         zorder2,
     )
 
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice", "l_returnflag"
-    )
     # Keyed on the SOURCE file's content version (mtime+size) AND the
     # layout parameters (partition count): a regenerated fixture or a
     # re-tuned layout can never serve a stale z-ordered copy. 64 z-range
@@ -395,8 +388,11 @@ def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = deterministic_tmp_dir(
         f"layout_zorder_p{n_zparts}_g256", table_path(sf_dir, "lineitem")
     )
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def build(staged: str) -> None:
+        li = load(spark, sf_dir, "lineitem").select(
+            "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice", "l_returnflag"
+        )
         # One cheap bounds aggregate (4 scalars to the driver), then
         # both dimensions are normalized onto the full interleave grid
         # so Z cells are compact squares, not thin slivers.
@@ -413,10 +409,11 @@ def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(n_zparts, "_z")
             .sortWithinPartitions("_z")
             .drop("_z")
-            .write.mode("overwrite")
-            .parquet(path)
+            .write.parquet(staged)
         )
-    box = spark.read.parquet(path).filter(
+
+    publish_store(path, build)
+    box = read_parquet(spark, path).filter(
         F.col("l_partkey").between(10, 59) & F.col("l_suppkey").between(1, 5)
     )
     return box.groupBy("l_returnflag").agg(
@@ -452,30 +449,23 @@ def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layout", "maintenance", "compaction"),
 )
 def layout_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
-        deterministic_tmp_dir,
-        table_path,
+    frag = deterministic_tmp_dir("layout_frag64", table_path(sf_dir, "events"))
+    publish_store(
+        frag,
+        lambda staged: load(spark, sf_dir, "events").repartition(64).write.parquet(staged),
     )
 
-    ev = load(spark, sf_dir, "events")
-    frag = deterministic_tmp_dir("layout_frag64", table_path(sf_dir, "events"))
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-        ev.repartition(64).write.mode("overwrite").parquet(frag)
-    compacted = deterministic_tmp_dir("layout_compacted", table_path(sf_dir, "events"))
-    if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
+    def build_compacted(staged: str) -> None:
         total_bytes = sum(
-            f.stat().st_size
-            for f in __import__("pathlib").Path(frag).glob("*.parquet")
+            os.path.getsize(f) for f in glob.glob(os.path.join(frag, "*.parquet"))
         )
         target = max(1, total_bytes // (128 * 1024 * 1024))
-        (
-            spark.read.parquet(frag)
-            .coalesce(int(target))
-            .write.mode("overwrite")
-            .parquet(compacted)
-        )
+        read_parquet(spark, frag).coalesce(target).write.parquet(staged)
+
+    compacted = deterministic_tmp_dir("layout_compacted", table_path(sf_dir, "events"))
+    publish_store(compacted, build_compacted)
     return (
-        spark.read.parquet(compacted)
+        read_parquet(spark, compacted)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

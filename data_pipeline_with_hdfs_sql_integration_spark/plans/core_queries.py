@@ -796,6 +796,7 @@ def o13_file_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
         deterministic_tmp_dir,
         publish_store,
+        read_parquet,
         table_path,
     )
 
@@ -810,7 +811,7 @@ def o13_file_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(staging)
         ),
     )
-    back = spark.read.parquet(layout)
+    back = read_parquet(spark, layout)
     return (
         back.select("l_returnflag", F.input_file_name().alias("f"))
         .groupBy("l_returnflag")

@@ -176,6 +176,61 @@ def _build_2commit(ev: DataFrame):
     return build
 
 
+def _build_sliced(li: DataFrame, max_ok: int, n_slices: int):
+    """Builder for the lineitem tables cut into ``n_slices`` commits by
+    l_orderkey band — shared by the skipping, delete and history
+    queries, each under its own build_once key because the latter two
+    mutate their table after the build."""
+
+    def build(t):
+        for i in range(n_slices):
+            # Slice 0 opens at -1: keys may START at 0 and a > 0 lower
+            # bound would silently drop them from the table (caught by
+            # the delete query's complement-band oracle).
+            lo_i = -1 if i == 0 else (max_ok * i) // n_slices
+            hi_i = max_ok if i == n_slices - 1 else (max_ok * (i + 1)) // n_slices
+            t.append(
+                li.filter(
+                    (F.col("l_orderkey") > F.lit(lo_i))
+                    & (F.col("l_orderkey") <= F.lit(hi_i))
+                )
+            )
+
+    return build
+
+
+def _orders_cdf(spark: SparkSession, sf_dir: str):
+    """The three-commit orders table (append, merge upsert, range
+    delete) whose change feed format_txlog_cdf and format_txlog_ivm
+    read: one builder under one build_once key, so whichever query
+    runs first builds the table both see."""
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import table_path
+    from data_pipeline_with_hdfs_sql_integration_spark.operators.txlog import (
+        build_once,
+    )
+
+    def build(t):
+        orders = load(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderpriority", "o_totalprice"
+        )
+        max_key = orders.agg(F.max("o_orderkey")).first()[0]
+        t.append(
+            orders.filter(F.col("o_orderkey") % 3 != 0).repartitionByRange(
+                8, "o_orderkey"
+            )
+        )
+        upsert = orders.filter(
+            (F.col("o_orderkey") % 2 == 0)
+            & (F.col("o_orderkey") <= max_key // 8)
+        ).withColumn("o_totalprice", F.col("o_totalprice") * 2)
+        t.merge(spark, upsert, "o_orderkey")
+        t.delete_range(
+            spark, "o_orderkey", max_key // 2 + 1, (5 * max_key) // 8
+        )
+
+    return build_once("orders_cdf", table_path(sf_dir, "orders"), 2, build)
+
+
 @query(
     "format_time_travel",
     oracle="""
@@ -668,23 +723,9 @@ def format_txlog_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_ok = li.agg(F.max("l_orderkey")).first()[0]
     n_slices = 8
-
-    def build(t):
-        for i in range(n_slices):
-            # Slice 0 opens at -1: keys may START at 0 and a > 0 lower
-            # bound would silently drop them from the table (caught by
-            # the delete query's complement-band oracle).
-            lo_i = -1 if i == 0 else (max_ok * i) // n_slices
-            hi_i = max_ok if i == n_slices - 1 else (max_ok * (i + 1)) // n_slices
-            t.append(
-                li.filter(
-                    (F.col("l_orderkey") > F.lit(lo_i))
-                    & (F.col("l_orderkey") <= F.lit(hi_i))
-                )
-            )
-
     t = build_once(
-        "lineitem_sliced_v2", table_path(sf_dir, "lineitem"), n_slices - 1, build
+        "lineitem_sliced_v2", table_path(sf_dir, "lineitem"), n_slices - 1,
+        _build_sliced(li, max_ok, n_slices),
     )
     lo, hi = max_ok // 4, (2 * max_ok) // 5
     # prune() bounds are inclusive; the predicate is (lo, hi], so ask
@@ -745,23 +786,9 @@ def format_txlog_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_ok = li.agg(F.max("l_orderkey")).first()[0]
     n_slices = 8
-
-    def build(t):
-        for i in range(n_slices):
-            # Slice 0 opens at -1: keys may START at 0 and a > 0 lower
-            # bound would silently drop them from the table (caught by
-            # the delete query's complement-band oracle).
-            lo_i = -1 if i == 0 else (max_ok * i) // n_slices
-            hi_i = max_ok if i == n_slices - 1 else (max_ok * (i + 1)) // n_slices
-            t.append(
-                li.filter(
-                    (F.col("l_orderkey") > F.lit(lo_i))
-                    & (F.col("l_orderkey") <= F.lit(hi_i))
-                )
-            )
-
     t = build_once(
-        "lineitem_sliced_del_v2", table_path(sf_dir, "lineitem"), n_slices - 1, build
+        "lineitem_sliced_del_v2", table_path(sf_dir, "lineitem"), n_slices - 1,
+        _build_sliced(li, max_ok, n_slices),
     )
     lo, hi = max_ok // 2, (5 * max_ok) // 8
     pre_version = t.latest_version()
@@ -918,20 +945,9 @@ def format_txlog_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_ok = li.agg(F.max("l_orderkey")).first()[0]
     n_slices = 8
-
-    def build(t):
-        for i in range(n_slices):
-            lo_i = -1 if i == 0 else (max_ok * i) // n_slices
-            hi_i = max_ok if i == n_slices - 1 else (max_ok * (i + 1)) // n_slices
-            t.append(
-                li.filter(
-                    (F.col("l_orderkey") > F.lit(lo_i))
-                    & (F.col("l_orderkey") <= F.lit(hi_i))
-                )
-            )
-
     t = build_once(
-        "lineitem_sliced_hist", table_path(sf_dir, "lineitem"), n_slices - 1, build
+        "lineitem_sliced_hist", table_path(sf_dir, "lineitem"), n_slices - 1,
+        _build_sliced(li, max_ok, n_slices),
     )
     lo, hi = max_ok // 2, (5 * max_ok) // 8
     t.delete_range(spark, "l_orderkey", lo + 1, hi)  # idempotent re-run
@@ -1009,32 +1025,7 @@ def format_txlog_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("format", "txlog", "cdf", "cdc"),
 )
 def format_txlog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import table_path
-    from data_pipeline_with_hdfs_sql_integration_spark.operators.txlog import (
-        build_once,
-    )
-
-    orders = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-
-    def build(t):
-        max_key = orders.agg(F.max("o_orderkey")).first()[0]
-        t.append(
-            orders.filter(F.col("o_orderkey") % 3 != 0).repartitionByRange(
-                8, "o_orderkey"
-            )
-        )
-        upsert = orders.filter(
-            (F.col("o_orderkey") % 2 == 0)
-            & (F.col("o_orderkey") <= max_key // 8)
-        ).withColumn("o_totalprice", F.col("o_totalprice") * 2)
-        t.merge(spark, upsert, "o_orderkey")
-        t.delete_range(
-            spark, "o_orderkey", max_key // 2 + 1, (5 * max_key) // 8
-        )
-
-    t = build_once("orders_cdf", table_path(sf_dir, "orders"), 2, build)
+    t = _orders_cdf(spark, sf_dir)
     feed = None
     for v in (0, 1, 2):
         part = t.changes(spark, v, "o_orderkey")
@@ -1254,32 +1245,7 @@ def format_txlog_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("format", "txlog", "cdf", "ivm"),
 )
 def format_txlog_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import table_path
-    from data_pipeline_with_hdfs_sql_integration_spark.operators.txlog import (
-        build_once,
-    )
-
-    orders = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-
-    def build(t):
-        max_key = orders.agg(F.max("o_orderkey")).first()[0]
-        t.append(
-            orders.filter(F.col("o_orderkey") % 3 != 0).repartitionByRange(
-                8, "o_orderkey"
-            )
-        )
-        upsert = orders.filter(
-            (F.col("o_orderkey") % 2 == 0)
-            & (F.col("o_orderkey") <= max_key // 8)
-        ).withColumn("o_totalprice", F.col("o_totalprice") * 2)
-        t.merge(spark, upsert, "o_orderkey")
-        t.delete_range(
-            spark, "o_orderkey", max_key // 2 + 1, (5 * max_key) // 8
-        )
-
-    t = build_once("orders_cdf", table_path(sf_dir, "orders"), 2, build)
+    t = _orders_cdf(spark, sf_dir)
 
     def signed_agg(df: DataFrame) -> DataFrame:
         sign = F.when(

@@ -421,7 +421,6 @@ def ivf_index_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         cent.write.parquet(os.path.join(staging, "centroids"))
         assigned.write.parquet(os.path.join(staging, "assignments"))
         probes.write.parquet(os.path.join(staging, "probes"))
-        open(os.path.join(staging, "_SUCCESS"), "w").close()
 
     publish_store(store, build)
     return (
@@ -619,7 +618,6 @@ def ivf2_index_store(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(staging, "meta.json"), "w") as fh:
             json.dump({"max_fine_cell_rows": int(max_occ or 0)}, fh)
         al1.unpersist()
-        open(os.path.join(staging, "_SUCCESS"), "w").close()
 
     publish_store(store, build)
     return store
@@ -1208,7 +1206,6 @@ def pq_index_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
         codebook, codes = _pq_build(spark, sf_dir)
         codebook.write.parquet(os.path.join(staging, "codebook"))
         codes.write.parquet(os.path.join(staging, "codes"))
-        open(os.path.join(staging, "_SUCCESS"), "w").close()
 
     publish_store(store, build)
     return (

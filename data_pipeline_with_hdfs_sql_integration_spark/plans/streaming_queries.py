@@ -237,17 +237,19 @@ def stream_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     # Re-stage the events file through a duplicated dir with
     # maxFilesPerTrigger=1 so the merge sees >=2 micro-batches.
-    from data_pipeline_with_hdfs_sql_integration_spark.streaming import windows as W
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
+        normalize_events_ts,
+        parquet_schema,
+        table_path,
+    )
 
-    path = W.table_path(sf_dir, "events")
+    path = table_path(sf_dir, "events")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     stage = os.path.join(root, "stage")
     os.makedirs(stage)
     for name in ("events_a.parquet", "events_b.parquet"):
         os.symlink(path, os.path.join(stage, name))
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import normalize_events_ts
-
     ev = normalize_events_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -41,29 +41,6 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def jdbc_driver_jars() -> list[str]:
-    """Locally-available JDBC driver jars to put on the session classpath.
-
-    ``SPARK_GRAFT_JDBC_JARS`` (comma-separated) wins; otherwise probe the
-    standard local artifact caches for a DuckDB JDBC driver — when one
-    exists, the JDBC source (sources/jdbc.py) can run live end-to-end
-    against a file-backed DuckDB database (tests/test_jdbc_live.py).
-    """
-    env = os.environ.get("SPARK_GRAFT_JDBC_JARS")
-    if env is not None:
-        return [p for p in env.split(",") if p]
-    import glob
-
-    out: list[str] = []
-    for pat in (
-        "~/.cache/coursier/**/duckdb_jdbc*.jar",
-        "~/.ivy2/**/duckdb_jdbc*.jar",
-        "~/.m2/**/duckdb_jdbc*.jar",
-    ):
-        out.extend(glob.glob(os.path.expanduser(pat), recursive=True))
-    return sorted(out)[:1]
-
-
 #: Parent dir of the vendored `google.protobuf` alias shim
 #: (_vendor/google/__init__.py) that satisfies the
 #: transformWithStateInPandas worker's protobuf import from the host's
@@ -130,9 +107,11 @@ def get_spark(app_name: str = "data_pipeline_with_hdfs_sql_integration_spark", s
         # slowdown once the registry outgrew the default.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
-    jars = jdbc_driver_jars()
+    # Comma-separated JDBC driver jars for sources/jdbc.py: a
+    # deployment setting (e.g. the MySQL connector's path).
+    jars = os.environ.get("SPARK_GRAFT_JDBC_JARS")
     if jars:
-        builder = builder.config("spark.jars", ",".join(jars))
+        builder = builder.config("spark.jars", jars)
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

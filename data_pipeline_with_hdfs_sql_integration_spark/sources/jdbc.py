@@ -8,13 +8,16 @@ MySQL with the whole SQL statement shipped to the database
   pushes filters/pruning into the source, and reads N partitions in
   parallel via ``partitionColumn/lowerBound/upperBound/numPartitions``.
 
-No MySQL server exists in this environment, but a DuckDB JDBC driver
-jar does (session.jdbc_driver_jars), so both modes run LIVE end-to-end
-against a file-backed DuckDB database in tests/test_jdbc_live.py:
-seed via ``raw_connection`` DDL, extract via ``query`` /
-``table_partitioned``, with filter pushdown asserted on the plan.
-The registry has no JDBC query only because the correctness driver's
-plain session lacks the driver jar on its classpath.
+The driver jar reaches the session's classpath through
+``SPARK_GRAFT_JDBC_JARS`` (comma-separated paths, read by
+``session.get_spark``); a deployment names its own (MySQL) jar there.
+tests/test_jdbc_live.py runs both modes LIVE end-to-end against a
+file-backed DuckDB database, whose JDBC jar tests/conftest.py finds in
+the local artifact caches: seed via ``raw_connection`` DDL, extract
+via ``query`` / ``table_partitioned``, with filter pushdown asserted
+on the plan. The registry has no JDBC query only because the
+correctness driver's plain session lacks the driver jar on its
+classpath.
 """
 
 from __future__ import annotations

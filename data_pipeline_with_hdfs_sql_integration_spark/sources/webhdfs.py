@@ -12,13 +12,8 @@ deployment with a real NameNode gets wire parity:
 * ``GETFILEBLOCKLOCATIONS`` — the reference's exact call.
 * ``LISTSTATUS`` / ``GETFILESTATUS`` — directory recursion, so a
   directory of parquet part-files aggregates like the JVM-API version.
-* ``OPEN`` — the NameNode 307-redirect-to-DataNode read protocol
-  (offset/length ranged reads), the building block for a
-  locality-aware custom reader.
 
-Stdlib HTTP (urllib) — no `requests` dependency; redirects for OPEN
-are followed manually because the redirect target (a DataNode) is part
-of the protocol, not an incidental hop.
+Stdlib HTTP (urllib) — no `requests` dependency.
 
 All functions take ``base_url`` like ``http://host:9870`` and an
 absolute HDFS path. Errors follow the WebHDFS RemoteException JSON
@@ -118,33 +113,3 @@ def block_histogram(base_url: str, path: str, *, timeout: float = 30.0) -> dict[
         for f in walk_files(base_url, path, timeout=timeout)
         for b in get_file_block_locations(base_url, f, timeout=timeout)
     )
-
-
-def open_read(base_url: str, path: str, *, offset: int | None = None,
-              length: int | None = None, timeout: float = 30.0) -> bytes:
-    """``op=OPEN`` with the documented two-step protocol: the NameNode
-    answers 307 with a DataNode Location; the body is read from there.
-    Servers that stream directly (no redirect) also work."""
-    url = _url(base_url, path, "OPEN", offset=offset, length=length)
-
-    class _NoRedirect(urllib.request.HTTPRedirectHandler):
-        def redirect_request(self, req, fp, code, msg, headers, newurl):
-            return None
-
-    opener = urllib.request.build_opener(_NoRedirect)
-    try:
-        with opener.open(url, timeout=timeout) as resp:
-            return resp.read()
-    except urllib.error.HTTPError as exc:
-        if exc.code in (301, 302, 307):
-            loc = exc.headers.get("Location")
-            if not loc:
-                raise WebHdfsError("redirect without Location") from exc
-            with urllib.request.urlopen(loc, timeout=timeout) as resp:
-                return resp.read()
-        try:
-            body = json.loads(exc.read().decode("utf-8"))
-            msg = body.get("RemoteException", {}).get("message", str(exc))
-        except Exception:
-            msg = str(exc)
-        raise WebHdfsError(msg) from exc

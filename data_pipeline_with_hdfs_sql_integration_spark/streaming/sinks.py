@@ -61,17 +61,17 @@ def stream_merge_latest_snapshot(
     """
     from pyspark.sql import functions as F
 
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import is_complete
+
     def _merge(batch_df, epoch_id: int) -> None:
         sp = batch_df.sparkSession
         batch_latest = batch_df.groupBy("user_id").agg(
             F.max(F.struct("ts", "event_id", "event_type", "value")).alias("r")
         ).select("user_id", "r.*")
-        import os
-
-        # Path-existence check, NOT a bare except: a transient read
-        # error on a real snapshot must FAIL the batch (retryable),
-        # never silently restart the snapshot from this batch alone.
-        if os.path.exists(os.path.join(out_path, "_SUCCESS")):
+        # Marker check, NOT a bare except: a transient read error on a
+        # real snapshot must FAIL the batch (retryable), never silently
+        # restart the snapshot from this batch alone.
+        if is_complete(out_path):
             current = sp.read.parquet(out_path)
             merged = (
                 current.unionByName(batch_latest)

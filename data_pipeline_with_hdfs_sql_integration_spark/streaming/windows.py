@@ -18,28 +18,38 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import normalize_events_ts, table_path
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
+    normalize_events_ts,
+    parquet_schema,
+    table_path,
+)
+
+
+def _linked_stream(spark: SparkSession, path: str, tag: str, names: tuple[str, ...]) -> DataFrame:
+    """The single parquet file ``path`` as a bounded file stream, with
+    its schema pinned from the static footer (streams cannot infer).
+    FileStreamSource requires a directory, so each of ``names`` is a
+    zero-copy symlink to ``path`` in a temp dir; two names deliver
+    every row twice. The dir is DETERMINISTIC per (tag, source path):
+    checkpoints record source file paths, so a random dir per call
+    would break checkpoint resume ("Wrong basePath")."""
+    schema = parquet_schema(spark, path)
+    digest = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
+    stream_dir = os.path.join(tempfile.gettempdir(), f"dps_{tag}_{digest}")
+    os.makedirs(stream_dir, exist_ok=True)
+    for name in names:
+        link = os.path.join(stream_dir, name)
+        if not os.path.islink(link):
+            os.symlink(path, link)
+    return spark.readStream.schema(schema).parquet(stream_dir)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a bounded file stream (schema pinned from the
-    static footer — streams cannot infer). `ts` is normalized to a
+    """events.parquet as a bounded file stream. `ts` is normalized to a
     timestamp whatever the physical layout (see catalog.normalize_events_ts)."""
-    path = table_path(sf_dir, "events")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    # FileStreamSource requires a directory; symlink the single file into
-    # a temp dir (zero-copy) and stream that. The dir must be DETERMINISTIC
-    # per source path: checkpoints record source file paths, so a random
-    # dir per call would break checkpoint resume ("Wrong basePath").
-    digest = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"dps_stream_{digest}")
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.islink(link):
-        os.symlink(path, link)
-    stream = spark.readStream.schema(schema).parquet(stream_dir)
-    return normalize_events_ts(stream)
+    path = table_path(sf_dir, "events")
+    return normalize_events_ts(_linked_stream(spark, path, "stream", ("events.parquet",)))
 
 
 def run_to_memory(agg: DataFrame, output_mode: str = "complete") -> tuple[SparkSession, str]:
@@ -62,18 +72,10 @@ def events_stream_duplicated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same bounded stream with every event delivered TWICE (two
     symlinks to the same file in the stream dir) — the at-least-once
     delivery a dedup operator exists to absorb."""
-    path = table_path(sf_dir, "events")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    digest = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"dps_stream2x_{digest}")
-    os.makedirs(stream_dir, exist_ok=True)
-    for name in ("events_a.parquet", "events_b.parquet"):
-        link = os.path.join(stream_dir, name)
-        if not os.path.islink(link):
-            os.symlink(path, link)
-    stream = spark.readStream.schema(schema).parquet(stream_dir)
-    return normalize_events_ts(stream)
+    path = table_path(sf_dir, "events")
+    names = ("events_a.parquet", "events_b.parquet")
+    return normalize_events_ts(_linked_stream(spark, path, "stream2x", names))
 
 
 def tumbling_counts(spark: SparkSession, sf_dir: str, width: str = "1 hour", watermark: str = "15 minutes") -> DataFrame:
@@ -190,29 +192,15 @@ def session_windows(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") -
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet as a bounded file stream (schema pinned from
-    the static footer; plain types, no nanos conversion needed)."""
+    """documents.parquet as a bounded file stream (plain types, no
+    nanos conversion needed)."""
     path = table_path(sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
-    digest = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"dps_docstream_{digest}")
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "documents.parquet")
-    if not os.path.islink(link):
-        os.symlink(path, link)
-    return spark.readStream.schema(schema).parquet(stream_dir)
+    return _linked_stream(spark, path, "docstream", ("documents.parquet",))
 
 
 def documents_stream_duplicated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The document stream with every file delivered TWICE (two
     symlinks) — at-least-once corpus ingestion for dedup to absorb."""
     path = table_path(sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
-    digest = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"dps_docstream2x_{digest}")
-    os.makedirs(stream_dir, exist_ok=True)
-    for name in ("documents_a.parquet", "documents_b.parquet"):
-        link = os.path.join(stream_dir, name)
-        if not os.path.islink(link):
-            os.symlink(path, link)
-    return spark.readStream.schema(schema).parquet(stream_dir)
+    names = ("documents_a.parquet", "documents_b.parquet")
+    return _linked_stream(spark, path, "docstream2x", names)

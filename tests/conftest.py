@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -10,6 +11,26 @@ sys.path.insert(0, str(REPO))
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MID = "/root/testdata/sf0.01"
+
+
+def _duckdb_jdbc_jars() -> str:
+    """The first DuckDB JDBC driver jar in the local artifact caches
+    (coursier, ivy, maven), or "" — what tests/test_jdbc_live.py runs
+    the JDBC source against."""
+    import glob
+
+    found = []
+    for pat in (
+        "~/.cache/coursier/**/duckdb_jdbc*.jar",
+        "~/.ivy2/**/duckdb_jdbc*.jar",
+        "~/.m2/**/duckdb_jdbc*.jar",
+    ):
+        found.extend(glob.glob(os.path.expanduser(pat), recursive=True))
+    return sorted(found)[0] if found else ""
+
+
+# Set before any session is built: get_spark reads it into spark.jars.
+os.environ.setdefault("SPARK_GRAFT_JDBC_JARS", _duckdb_jdbc_jars())
 
 
 @pytest.fixture(scope="session")

@@ -197,11 +197,18 @@ def _write_store(path, data="data"):
     os.makedirs(path)
     with open(os.path.join(path, "part-0"), "w") as f:
         f.write(data)
-    open(os.path.join(path, "_SUCCESS"), "w").close()
 
 
 def test_publish_store_raises_when_every_rename_fails(tmp_path, monkeypatch):
     store = str(tmp_path / "store")
+
+    def broken(path):
+        _write_store(os.path.join(path, "sub"))
+        raise ValueError("build failed")
+
+    with pytest.raises(ValueError, match="build failed"):
+        catalog.publish_store(store, broken)
+    assert os.listdir(tmp_path) == []  # neither the target nor a marker
 
     def refuse(src, dst):
         raise OSError("rename refused")
@@ -233,3 +240,56 @@ def test_publish_store_complete_probe_and_build_time(tmp_path):
 
     catalog.publish_store(store, must_not_run, complete=has_part)
 
+    # The default probe is the marker publish_store writes itself: a
+    # build of subdirectories only is published complete, and once.
+    nested = str(tmp_path / "nested")
+    calls = []
+
+    def build(path):
+        calls.append(path)
+        _write_store(os.path.join(path, "sub"))
+
+    catalog.publish_store(nested, build)
+    catalog.publish_store(nested, build)
+    assert catalog.is_complete(nested) and len(calls) == 1
+    assert sorted(os.listdir(nested)) == ["_SUCCESS", "sub"]
+
+
+def test_layout_stores_concurrent_first_use(spark, tmp_path):
+    """Two concurrent first calls of each layout query over a fresh
+    copy of the tables (every derived store cold) answer exactly what
+    a solo call over SF_DIR answers, and leave no build or stale
+    sibling behind."""
+    import glob
+    import shutil
+    import tempfile
+
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    names = [
+        "layout_partition_pruning",
+        "layout_dynamic_partition_pruning",
+        "layout_zorder_pruning",
+        "layout_compaction",
+    ]
+    qs = all_queries()
+
+    def rows(name, sf_dir):
+        return sorted(map(tuple, qs[name].fn(spark, sf_dir).collect()))
+
+    solo = {n: rows(n, SF_DIR) for n in names}
+    copy = str(tmp_path / "sf")
+    os.makedirs(copy)
+    for t in catalog.TABLES:
+        shutil.copyfile(catalog.table_path(SF_DIR, t), catalog.table_path(copy, t))
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [(n, pool.submit(rows, n, copy)) for n in names * 2]
+            got = [(n, f.result()) for n, f in futures]
+    finally:
+        stores = catalog.clear_derived_stores(copy)
+    for n, r in got:
+        assert r == solo[n], n
+    assert {"dps_layout_day", "dps_layout_compacted"} <= {s.rsplit("_", 1)[0] for s in stores}
+    tmp = tempfile.gettempdir()
+    assert [p for s in stores for p in glob.glob(os.path.join(tmp, s + ".*"))] == []

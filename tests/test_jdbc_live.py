@@ -10,6 +10,8 @@ row-for-row against the direct parquet scan.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tests.conftest import SF_DIR
@@ -17,14 +19,9 @@ from tests.conftest import SF_DIR
 DRIVER = "org.duckdb.DuckDBDriver"
 
 
-def _jar_available() -> bool:
-    from data_pipeline_with_hdfs_sql_integration_spark.session import jdbc_driver_jars
-
-    return bool(jdbc_driver_jars())
-
-
 pytestmark = pytest.mark.skipif(
-    not _jar_available(), reason="no DuckDB JDBC driver jar in local artifact caches"
+    not os.environ.get("SPARK_GRAFT_JDBC_JARS"),
+    reason="no DuckDB JDBC driver jar in local artifact caches",
 )
 
 

@@ -179,3 +179,18 @@ def test_no_plan_applies_runtime_confs_itself():
         if "apply_runtime_confs" in p.read_text()
     ]
     assert offenders == []
+
+
+def test_only_catalog_names_the_completion_marker():
+    """catalog.publish_store writes the _SUCCESS marker and
+    catalog.is_complete probes it; no other module spells it."""
+    from pathlib import Path
+
+    import data_pipeline_with_hdfs_sql_integration_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    offenders = [
+        str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+        if "_SUCCESS" in p.read_text(encoding="utf-8")
+    ]
+    assert offenders == ["catalog.py"]

@@ -2,8 +2,8 @@
 mock NameNode/DataNode — the protocol the reference actually speaks
 for BlockLocations (server.py:70-87). No real NameNode exists in the
 sandbox, so the mock serves the documented WebHDFS v1 JSON shapes
-(GETFILEBLOCKLOCATIONS / GETFILESTATUS / LISTSTATUS / OPEN with the
-307 NameNode→DataNode redirect) over a real socket."""
+(GETFILEBLOCKLOCATIONS / GETFILESTATUS / LISTSTATUS) over a real
+socket."""
 
 from __future__ import annotations
 
@@ -49,18 +49,6 @@ class _Handler(BaseHTTPRequestHandler):
         parsed = urllib.parse.urlparse(self.path)
         q = dict(urllib.parse.parse_qsl(parsed.query))
         op = q.get("op", "")
-        # DataNode leg of the OPEN redirect protocol.
-        if parsed.path.startswith("/datanode/v1"):
-            path = parsed.path[len("/datanode/v1"):]
-            data = FILES[path]["bytes"]
-            off = int(q.get("offset", 0))
-            ln = int(q["length"]) if "length" in q else len(data) - off
-            chunk = data[off : off + ln]
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(chunk)))
-            self.end_headers()
-            self.wfile.write(chunk)
-            return
         assert parsed.path.startswith("/webhdfs/v1")
         path = parsed.path[len("/webhdfs/v1"):]
         if op == "GETFILEBLOCKLOCATIONS":
@@ -89,13 +77,6 @@ class _Handler(BaseHTTPRequestHandler):
                          "pathSuffix": f[len(prefix):]}
                         for f, v in sorted(FILES.items()) if f.startswith(prefix)]
             self._json(200, {"FileStatuses": {"FileStatus": children}})
-        elif op == "OPEN":
-            # NameNode leg: 307 to the DataNode URL, params forwarded.
-            loc = f"http://{self.headers['Host']}/datanode/v1{path}?{parsed.query}"
-            self.send_response(307)
-            self.send_header("Location", loc)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
         else:
             self._json(400, {"RemoteException": {
                 "exception": "UnsupportedOperationException",
@@ -135,12 +116,6 @@ def test_liststatus_recursion(namenode):
         "/data/part-0.parquet", "/data/part-1.parquet"]
     assert webhdfs.walk_files(namenode, "/data/part-1.parquet") == [
         "/data/part-1.parquet"]
-
-
-def test_open_follows_datanode_redirect(namenode):
-    assert webhdfs.open_read(namenode, "/data/part-0.parquet") == b"PAR1-part0-payload"
-    assert webhdfs.open_read(namenode, "/data/part-0.parquet",
-                             offset=5, length=5) == b"part0"
 
 
 def test_remote_exception_surfaces(namenode):
