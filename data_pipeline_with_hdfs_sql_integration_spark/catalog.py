@@ -34,6 +34,7 @@ store back through ``read_parquet``.
 from __future__ import annotations
 
 import os
+import string
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -263,17 +264,20 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load events with `ts` normalized to a timestamp (see
-    normalize_events_ts). nanosAsLong stays on so a legacy
-    TIMESTAMP(NANOS) fixture reads as long instead of erroring."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalize_events_ts). A legacy TIMESTAMP(NANOS) fixture reads as
+    long under session.RUNTIME_CONFS' nanosAsLong."""
     df = read_parquet(spark, table_path(sf_dir, "events"))
     return normalize_events_ts(df)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL entry points)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
+def run_sql(spark: SparkSession, sf_dir: str, text: str, args: dict | None = None) -> DataFrame:
+    """Run SQL `text` whose `{table}` placeholders name tables under
+    `sf_dir`; `args` binds its parameter markers. pyspark's formatter
+    binds each loaded table to a fresh `_pyspark_<uuid>` view and drops
+    it after parsing, so concurrent queries never share a view name.
+    Only the tables the text names are loaded."""
+    names = {field for _, field, _, _ in string.Formatter().parse(text) if field}
+    return spark.sql(text, args, **{n: load(spark, sf_dir, n) for n in names})
 
 
 # One persisted copy per (application, key) for derived frames that

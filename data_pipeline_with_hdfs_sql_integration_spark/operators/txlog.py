@@ -116,8 +116,8 @@ def _file_stats(path: str) -> dict:
     date/timestamp bounds are stored as ISO strings (naive UTC) with
     a type tag and decoded for comparison at prune time. NOTE: Spark
     writes INT96 timestamps by default, which carry NO footer stats —
-    _write_files pins outputTimestampType=TIMESTAMP_MICROS so txlog
-    timestamp columns are skippable."""
+    session.RUNTIME_CONFS pins outputTimestampType=TIMESTAMP_MICROS so
+    txlog timestamp columns are skippable."""
     import datetime
 
     import pyarrow.parquet as pq
@@ -454,17 +454,7 @@ class TxTable:
         only, no second data pass; they ride in the commit entry so
         every snapshot resolution gets data-skipping bounds for free."""
         group = os.path.join(self.data_dir, f"g-{uuid.uuid4().hex}")
-        # Spark's default INT96 timestamps carry NO parquet footer
-        # stats; MICROS (the modern type, what Delta writes) do —
-        # without this, timestamp columns could never data-skip.
-        conf = df.sparkSession.conf
-        key = "spark.sql.parquet.outputTimestampType"
-        saved = conf.get(key, None)
-        try:
-            conf.set(key, "TIMESTAMP_MICROS")
-            df.write.parquet(group)
-        finally:
-            conf.unset(key) if saved is None else conf.set(key, saved)
+        df.write.parquet(group)
         # Log entries are ROOT-RELATIVE so the whole table directory is
         # relocatable (build-under-temp + atomic rename publish, future
         # moves between stores). Pre-round-9 tables logged absolute

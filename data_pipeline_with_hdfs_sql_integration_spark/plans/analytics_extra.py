@@ -22,6 +22,7 @@ from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.operators.skew import salted_group_count
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
+from data_pipeline_with_hdfs_sql_integration_spark.session import child_session
 
 
 @query(
@@ -671,10 +672,11 @@ def agg_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scale-activated (10 GB probe-scan threshold) and declines when "
     "the build side is broadcastable, so at test SFs the query pins "
     "the decision explicitly: applicationSideScanSizeThreshold=1 and "
-    "broadcast disabled FOR THIS BUILD ONLY (session confs "
-    "save/restored), then asserts might_contain + bloom_filter_agg in "
-    "the optimized plan and executes the join under those confs via an "
-    "eager localCheckpoint. On a real cluster the same plan appears "
+    "broadcast disabled FOR THIS BUILD ONLY (on a child session, "
+    "session.child_session, so the shared session never sees them), "
+    "then asserts might_contain + bloom_filter_agg in the optimized "
+    "plan and executes the join under those confs via an eager "
+    "localCheckpoint. On a real cluster the same plan appears "
     "with default confs once the probe scan crosses the threshold. "
     "Bloom pruning is a pure optimization — values oracled against the "
     "plain join. Complements sketch_bloom_membership (the hand-rolled, "
@@ -696,34 +698,24 @@ def layout_bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in tuned}
-    try:
-        for k, v in tuned.items():
-            spark.conf.set(k, v)
-        o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000.0)
-        li = load(spark, sf_dir, "lineitem")
-        j = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n_items"),
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("sum_price"),
-            )
+    tuned_spark = child_session(spark, tuned)
+    o = load(tuned_spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000.0)
+    li = load(tuned_spark, sf_dir, "lineitem")
+    j = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n_items"),
+            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("sum_price"),
         )
-        opt = j._jdf.queryExecution().optimizedPlan().toString()
-        assert "might_contain" in opt and "bloom_filter_agg" in opt, (
-            "runtime bloom filter did not inject:\n" + opt
-        )
-        # Execute NOW, while the tuned confs are live, so the collected
-        # result really ran the bloom-pruned plan; the returned frame
-        # is a scan of the materialized (tiny) grouped output.
-        out = j.localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
+    )
+    opt = j._jdf.queryExecution().optimizedPlan().toString()
+    assert "might_contain" in opt and "bloom_filter_agg" in opt, (
+        "runtime bloom filter did not inject:\n" + opt
+    )
+    # Execute NOW, under the tuned confs, so the collected result really
+    # ran the bloom-pruned plan; the returned frame is a scan of the
+    # materialized (tiny) grouped output.
+    return j.localCheckpoint(eager=True)

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, run_sql
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 
 SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
@@ -315,12 +315,11 @@ def agg_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "groupingsets"),
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
     # groupingSets has no stable DataFrame builder pre-4.0 — the SQL
     # form IS the DataFrame plan (same Expand+Aggregate).
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         SELECT coalesce(o_orderpriority, 'ALL') AS priority,
                coalesce(o_orderstatus, 'ALL') AS status,
@@ -328,11 +327,11 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS grouping_id,
                CAST(count(*) AS BIGINT) AS n_orders,
                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
                                 (o_orderpriority), (o_orderstatus), ())
         ORDER BY grouping_id, priority, status
-        """
+        """,
     )
 
 

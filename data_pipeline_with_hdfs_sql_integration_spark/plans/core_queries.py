@@ -26,7 +26,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, run_sql
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 
 # Band filter analog of the reference's loan_amount ∈ (30000, 800000)
@@ -260,29 +260,29 @@ def o13_block_locations(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY n.n_name
     """,
     doc="The raw-SQL entry point: the same Q5-shaped query as "
-    "join_region_revenue, but submitted as SQL text over the registered "
-    "temp views (catalog.register_views) instead of the DataFrame API — "
-    "proving both surfaces compile to the same Catalyst plans. The SQL "
-    "string is (modulo the oracle's identical text) what a user of the "
-    "reference's MySQL path would write directly.",
+    "join_region_revenue, but submitted as SQL text with its tables "
+    "bound through pyspark's SQL formatter (catalog.run_sql) instead "
+    "of the DataFrame API — proving both surfaces compile to the same "
+    "Catalyst plans. The SQL string is (modulo the `{table}` "
+    "placeholders) what a user of the reference's MySQL path would "
+    "write directly.",
     tags=("sql", "api"),
 )
 def sql_interface_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         SELECT n.n_name AS nation,
                CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        FROM region r
-        JOIN nation n   ON n.n_regionkey = r.r_regionkey
-        JOIN customer c ON c.c_nationkey = n.n_nationkey
-        JOIN orders o   ON o.o_custkey = c.c_custkey
-        JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        FROM {region} r
+        JOIN {nation} n   ON n.n_regionkey = r.r_regionkey
+        JOIN {customer} c ON c.c_nationkey = n.n_nationkey
+        JOIN {orders} o   ON o.o_custkey = c.c_custkey
+        JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
         WHERE r.r_name = 'ASIA'
         GROUP BY n.n_name
-        """
+        """,
     )
 
 
@@ -296,7 +296,7 @@ _TPCH_Q1_SQL = """
            CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))) AS DECIMAL(38,6))
                AS sum_charge,
            CAST(count(*) AS BIGINT) AS count_order
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_shipdate <= TIMESTAMP '2024-11-01 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
@@ -305,11 +305,12 @@ _TPCH_Q1_SQL = """
 
 @query(
     "sql_interface_tpch_q1",
-    oracle=_TPCH_Q1_SQL,
-    doc="Dialect-parity proof: the LITERAL same SQL text (module "
+    oracle=_TPCH_Q1_SQL.format(lineitem="lineitem"),
+    doc="Dialect-parity proof: the same SQL template (module "
     "constant _TPCH_Q1_SQL, a Q1 pricing summary) runs unmodified "
-    "through spark.sql over registered views AND through DuckDB as "
-    "its own oracle — zero per-engine edits, exact decimal sums. "
+    "through spark.sql with its table bound by pyspark's formatter "
+    "AND, filled in with the bare table name, through DuckDB as its "
+    "own oracle — zero per-engine edits, exact decimal sums. "
     "This is the strongest statement the SQL front door can make: a "
     "user's ANSI query needs no translation layer. The sums stay "
     "DECIMAL end-to-end (explicitly widened to the same DECIMAL(38,s) "
@@ -317,21 +318,18 @@ _TPCH_Q1_SQL = """
     "per engine once the unscaled sum passes 2^53 — the sf1 sweep "
     "caught exactly that in round 7 — and unlike engine-native plans "
     "this query cannot use the split-cast spelling without breaking "
-    "the same-text property, so it returns the exact type instead.",
+    "the same-template property, so it returns the exact type instead.",
     tags=("sql", "api"),
 )
 def sql_interface_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_TPCH_Q1_SQL)
+    return run_sql(spark, sf_dir, _TPCH_Q1_SQL)
 
 
 _LATERAL_TOPK_SQL = """
     SELECT c.c_custkey, o.o_orderkey,
            CAST(o.o_totalprice AS DOUBLE) AS o_totalprice
-    FROM customer c,
-    LATERAL (SELECT o_orderkey, o_totalprice FROM orders
+    FROM {customer} c,
+    LATERAL (SELECT o_orderkey, o_totalprice FROM {orders}
              WHERE o_custkey = c.c_custkey
              ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
     WHERE c.c_mktsegment = 'BUILDING'
@@ -340,10 +338,10 @@ _LATERAL_TOPK_SQL = """
 
 @query(
     "sql_lateral_topk",
-    oracle=_LATERAL_TOPK_SQL,
+    oracle=_LATERAL_TOPK_SQL.format(customer="customer", orders="orders"),
     doc="Correlated LATERAL derived table (top-2 orders per BUILDING "
     "customer) — the SQL-standard per-row subquery surface, submitted "
-    "as IDENTICAL SQL text to both engines (Spark parses LATERAL with "
+    "as the same SQL template to both engines (Spark parses LATERAL with "
     "a correlated ORDER BY ... LIMIT since 3.4; DuckDB natively). "
     "Catalyst decorrelates it into the same window/rank shape as "
     "window_topk_per_group — per-key top-k never executes as one "
@@ -352,10 +350,7 @@ _LATERAL_TOPK_SQL = """
     tags=("sql", "subquery", "api"),
 )
 def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_TOPK_SQL)
+    return run_sql(spark, sf_dir, _LATERAL_TOPK_SQL)
 
 
 PYDS_N = 20_000  # synthetic telemetry rows
@@ -687,8 +682,8 @@ def api_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM c, thr
         GROUP BY 1
     """,
-    doc="SQL scripting (Spark 4 BEGIN...END batches, "
-    "spark.sql.scripting.enabled): a compound script DECLAREs a "
+    doc="SQL scripting (Spark 4 BEGIN...END batches; "
+    "spark.sql.scripting.enabled is on by default): a compound script DECLAREs a "
     "session variable, SETs it from a data-derived scalar (the exact "
     "integer mean — sum div count, never a float avg), and the final "
     "statement splits order totals around it — the "
@@ -703,24 +698,22 @@ def api_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "api"),
 )
 def sql_scripting_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
-
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         BEGIN
           DECLARE thr BIGINT DEFAULT 0;
           SET thr = (SELECT sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                            div count(*) FROM orders);
+                            div count(*) FROM {orders});
           SELECT CASE WHEN CAST(round(o_totalprice * 100) AS BIGINT) >= thr
                       THEN 'above' ELSE 'below' END AS side,
                  count(*) AS n,
                  sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS total_cents
-          FROM orders
+          FROM {orders}
           GROUP BY 1;
         END
-        """
+        """,
     )
 
 
@@ -752,15 +745,14 @@ PARAM_MIN_CENTS = 5_000_000
     tags=("sql", "api"),
 )
 def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         SELECT c.c_mktsegment,
                count(*) AS n_orders,
                sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS total_cents
-        FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+        FROM {orders} o JOIN {customer} c ON c.c_custkey = o.o_custkey
         WHERE c.c_mktsegment = :segment
           AND CAST(round(o.o_totalprice * 100) AS BIGINT) >= :min_cents
         GROUP BY c.c_mktsegment

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, run_sql
 from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import _pin
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 
@@ -151,26 +151,26 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RECURSIVE_ORG_SQL = """
 WITH RECURSIVE org AS (
-    SELECT s_suppkey AS id, 0 AS depth FROM supplier WHERE s_suppkey = 0
+    SELECT s_suppkey AS id, 0 AS depth FROM {supplier} WHERE s_suppkey = 0
     UNION ALL
     SELECT s.s_suppkey AS id, o.depth + 1 AS depth
-    FROM supplier s JOIN org o
+    FROM {supplier} s JOIN org o
       ON CAST(floor((s.s_suppkey - 1) / 2.0) AS BIGINT) = o.id
     WHERE s.s_suppkey >= 1
 )
 SELECT CAST(depth AS INT) AS depth,
        CAST(count(*) AS BIGINT) AS n_suppliers,
        CAST(sum(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal
-FROM org JOIN supplier ON s_suppkey = id
+FROM org JOIN {supplier} ON s_suppkey = id
 GROUP BY depth
 """
 
 
 @query(
     "recursive_hierarchy_rollup",
-    oracle=_RECURSIVE_ORG_SQL,
+    oracle=_RECURSIVE_ORG_SQL.format(supplier="supplier"),
     doc="Recursive CTE (WITH RECURSIVE, new SQL surface in Spark 4): "
-    "the LITERAL same SQL text runs unmodified in Spark and DuckDB — "
+    "the same SQL template runs unmodified in Spark and DuckDB — "
     "dialect parity for recursion, like sql_interface_tpch_q1 for "
     "aggregation. The hierarchy is a derived binary-heap org chart "
     "over supplier (parent(k) = floor((k-1)/2), root 0 — arithmetic, "
@@ -184,10 +184,7 @@ GROUP BY depth
     tags=("sql", "recursive", "graph"),
 )
 def recursive_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_RECURSIVE_ORG_SQL)
+    return run_sql(spark, sf_dir, _RECURSIVE_ORG_SQL)
 
 
 # -------------------------------------------------------------- triangles

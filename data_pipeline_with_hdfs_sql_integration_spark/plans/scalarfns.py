@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, run_sql
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 
 
@@ -120,17 +120,16 @@ def fn_string_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("functions", "string", "sql"),
 )
 def fn_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         WITH m AS (
             SELECT p_partkey,
                    CASE WHEN p_partkey % 3 = 0 THEN upper(p_brand)
                         WHEN p_partkey % 3 = 1 THEN lower(p_brand)
                         ELSE p_brand END AS mixed
-            FROM part
+            FROM {part}
         ),
         c AS (SELECT mixed, mixed COLLATE UTF8_LCASE AS ci FROM m)
         SELECT lower(ci) AS canon,
@@ -138,7 +137,7 @@ def fn_collation_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(DISTINCT mixed) AS n_case_variants
         FROM c
         GROUP BY ci
-        """
+        """,
     )
 
 

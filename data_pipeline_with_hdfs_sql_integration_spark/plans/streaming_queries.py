@@ -244,7 +244,6 @@ def stream_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = table_path(sf_dir, "events")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = parquet_schema(spark, path)
     stage = os.path.join(root, "stage")
     os.makedirs(stage)

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, run_sql
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 
 
@@ -258,20 +258,19 @@ def subq_scalar_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "null", "anti-join"),
 )
 def subq_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return run_sql(
+        spark,
+        sf_dir,
         """
         SELECT
-            (SELECT count(*) FROM orders
+            (SELECT count(*) FROM {orders}
              WHERE o_custkey NOT IN
-                   (SELECT NULLIF(c_custkey, 0) FROM customer WHERE c_custkey < 10))
+                   (SELECT NULLIF(c_custkey, 0) FROM {customer} WHERE c_custkey < 10))
                 AS n_with_null_inlist,
-            (SELECT count(*) FROM orders
+            (SELECT count(*) FROM {orders}
              WHERE o_custkey NOT IN
-                   (SELECT c_custkey FROM customer
+                   (SELECT c_custkey FROM {customer}
                     WHERE c_custkey < 10 AND c_custkey <> 0))
                 AS n_clean_inlist
-        """
+        """,
     )

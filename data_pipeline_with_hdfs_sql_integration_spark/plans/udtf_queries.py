@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import run_sql
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 
 MAX_POS = 5
@@ -61,10 +61,11 @@ def udtf_word_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, w
 
     spark.udtf.register("dps_word_positions", WordPositions)
-    load(spark, sf_dir, "documents").createOrReplaceTempView("dps_udtf_docs")
-    expanded = spark.sql(
+    expanded = run_sql(
+        spark,
+        sf_dir,
         "SELECT d.doc_id, t.pos, t.word "
-        "FROM dps_udtf_docs d, LATERAL dps_word_positions(d.text) t"
+        "FROM {documents} d, LATERAL dps_word_positions(d.text) t",
     )
     return expanded.groupBy("pos").agg(
         F.count("*").alias("n_docs"),
@@ -184,8 +185,9 @@ def udtf_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
     spark.udtf.register("dps_session_stats", SessionStats)
-    load(spark, sf_dir, "events").createOrReplaceTempView("dps_udtf_events")
-    return spark.sql(
-        "SELECT * FROM dps_session_stats(TABLE(dps_udtf_events) "
-        "PARTITION BY user_id ORDER BY (ts, event_id))"
+    return run_sql(
+        spark,
+        sf_dir,
+        "SELECT * FROM dps_session_stats(TABLE({events}) "
+        "PARTITION BY user_id ORDER BY (ts, event_id))",
     )

@@ -13,7 +13,9 @@ from pyspark.sql import SparkSession
 
 #: Runtime (session-mutable) confs every query assumes. Applied at build
 #: time and by the registry before every query call (registry.query),
-#: because a caller may hand us a session we didn't build.
+#: because a caller may hand us a session we didn't build. Query bodies
+#: never set a conf on the session they are given: concurrent queries
+#: share it. A body that needs tuned confs builds on `child_session`.
 RUNTIME_CONFS = {
     # Deterministic timestamp semantics vs the DuckDB oracle (UTC-naive).
     "spark.sql.session.timeZone": "UTC",
@@ -34,6 +36,13 @@ RUNTIME_CONFS = {
     # Dynamic partition pruning (default on; pinned — it is the whole
     # point of the partitioned layouts in plans/analytics_extra.py).
     "spark.sql.optimizer.dynamicPartitionPruning.enabled": "true",
+    # A legacy TIMESTAMP(NANOS) column reads as long instead of erroring
+    # (catalog.normalize_events_ts converts it).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Spark's default INT96 timestamps carry no parquet footer stats;
+    # MICROS (what Delta writes) do, so txlog tables can data-skip on
+    # timestamp columns. Spark has no per-write option for it.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 
 
@@ -87,6 +96,18 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on this build — builder already set it
     return spark
+
+
+def child_session(spark: SparkSession, tuned: dict[str, str]) -> SparkSession:
+    """A new session on `spark`'s SparkContext with `spark`'s modifiable
+    confs plus `tuned`. It has its own confs and temp views, so a query
+    that needs tuned confs runs on it and the shared session never sees
+    them. The copy is needed: a child starts from the builder confs only."""
+    child = spark.newSession()
+    confs = {k: v for k, v in spark.conf.getAll.items() if spark.conf.isModifiable(k)}
+    for k, v in {**confs, **tuned}.items():
+        child.conf.set(k, v)
+    return child
 
 
 def get_spark(app_name: str = "data_pipeline_with_hdfs_sql_integration_spark", shuffle_partitions: int | None = None) -> SparkSession:

@@ -101,7 +101,9 @@ def user_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session.tws_ready — the worker process imports google.protobuf)
     and (b) the RocksDB state store provider (the default HDFS-backed
     provider cannot host TWS's multiple column families); the provider
-    conf is set for THIS query's start and restored after.
+    conf is set on a child session (session.child_session) that runs
+    the stream and holds its memory-sink table, so the shared session
+    never sees it.
 
     Raises NotImplementedError when the environment cannot supply
     protobuf — the registered query keeps the honesty gate the
@@ -109,7 +111,7 @@ def user_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import tempfile
 
-    from data_pipeline_with_hdfs_sql_integration_spark.session import tws_ready
+    from data_pipeline_with_hdfs_sql_integration_spark.session import child_session, tws_ready
 
     if not tws_ready(spark):
         raise NotImplementedError(
@@ -163,13 +165,9 @@ def user_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
     rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    try:
-        prior = spark.conf.get(provider_key)
-    except Exception:
-        prior = None
-    ev = events_stream(spark, sf_dir)
+    tuned_spark = child_session(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb})
+    ev = events_stream(tuned_spark, sf_dir)
     agg = ev.groupBy("user_id").transformWithStateInPandas(
         _UserTotals(),
         outputStructType=OUTPUT_SCHEMA,
@@ -177,22 +175,15 @@ def user_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="None",
     )
     name = f"stateful_tws_{uuid.uuid4().hex[:8]}"
-    spark.conf.set(provider_key, rocksdb)
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dps_tws_ck_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-    out = spark.table(name)
+    q = (
+        agg.writeStream.outputMode("update")
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="dps_tws_ck_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    out = tuned_spark.table(name)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return out.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")

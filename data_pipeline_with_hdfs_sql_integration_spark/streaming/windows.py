@@ -47,7 +47,6 @@ def _linked_stream(spark: SparkSession, path: str, tag: str, names: tuple[str, .
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a bounded file stream. `ts` is normalized to a
     timestamp whatever the physical layout (see catalog.normalize_events_ts)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, "events")
     return normalize_events_ts(_linked_stream(spark, path, "stream", ("events.parquet",)))
 
@@ -72,7 +71,6 @@ def events_stream_duplicated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same bounded stream with every event delivered TWICE (two
     symlinks to the same file in the stream dir) — the at-least-once
     delivery a dedup operator exists to absorb."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, "events")
     names = ("events_a.parquet", "events_b.parquet")
     return normalize_events_ts(_linked_stream(spark, path, "stream2x", names))

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_MID
 
 
 def _q(name):
@@ -32,8 +32,8 @@ _NAMES = [
 ]
 
 
-def _rows(spark, name):
-    df = _q(name).fn(spark, SF_DIR)
+def _rows(spark, name, sf_dir=SF_DIR):
+    df = _q(name).fn(spark, sf_dir)
     return sorted(tuple(str(x) for x in r) for r in df.select(*sorted(df.columns)).collect())
 
 
@@ -45,3 +45,77 @@ def test_concurrent_queries_match_solo_results(spark):
         futures = [(n, pool.submit(_rows, spark, n)) for n in _NAMES * 2]
         for n, fut in futures:
             assert fut.result(timeout=300) == solo[n], n
+
+
+# Every body that reads its tables through SQL text or needs tuned
+# confs: the shapes that could leak one call's session state into
+# another's.
+_SESSION_STATE_NAMES = [
+    "sql_interface_region_revenue",
+    "sql_interface_tpch_q1",
+    "sql_lateral_topk",
+    "sql_scripting_threshold",
+    "sql_parameterized",
+    "fn_collation_ci",
+    "recursive_hierarchy_rollup",
+    "agg_grouping_sets",
+    "subq_not_in_null_aware",
+    "udtf_word_positions",
+    "udtf_session_stats",
+    "layout_bloom_join_pruning",
+]
+# The confs layout_bloom_join_pruning and the TWS stateful query tune.
+_TUNED_KEYS = [
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    "spark.sql.streaming.stateStore.providerClass",
+]
+
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _mid_with_half_documents(tmp_path):
+    """SF_DIR_MID with every other document: the full sf0.001 and sf0.01
+    documents tables give udtf_word_positions the same counts."""
+    import pyarrow.parquet as pq
+
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import TABLES
+
+    for t in TABLES:
+        src = f"{SF_DIR_MID}/{t}.parquet"
+        if t == "documents":
+            docs = pq.read_table(src)
+            pq.write_table(docs.take(list(range(0, docs.num_rows, 2))), tmp_path / f"{t}.parquet")
+        else:
+            (tmp_path / f"{t}.parquet").symlink_to(src)
+    return str(tmp_path)
+
+
+def test_two_datasets_on_one_session_match_solo_results(spark, tmp_path):
+    """Concurrent calls on two datasets through one session each get
+    their own dataset's answer, and leave the session's confs and
+    temp views as they were."""
+    from data_pipeline_with_hdfs_sql_integration_spark.session import RUNTIME_CONFS, tws_ready
+
+    names = list(_SESSION_STATE_NAMES)
+    if tws_ready(spark):
+        names.append("stream_stateful_user_totals_tws")
+    keys = [*RUNTIME_CONFS, *_TUNED_KEYS]
+    confs_before = {k: spark.conf.get(k, None) for k in keys}
+    views_before = _temp_views(spark)
+    datasets = (SF_DIR, _mid_with_half_documents(tmp_path))
+    calls = [(n, d) for n in names for d in datasets]
+    solo = {c: _rows(spark, *c) for c in calls}
+    for n in names:
+        # Else a wrong-dataset answer could not show.
+        assert solo[(n, datasets[0])] != solo[(n, datasets[1])], n
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        futures = [(c, pool.submit(_rows, spark, *c)) for c in calls * 2]
+        wrong = [c for c, fut in futures if fut.result(timeout=600) != solo[c]]
+    assert wrong == []
+    assert {k: spark.conf.get(k, None) for k in keys} == confs_before
+    assert _temp_views(spark) - views_before == set()

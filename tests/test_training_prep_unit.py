@@ -145,9 +145,10 @@ def test_hostile_timezone_repinned_by_queries(spark, duck):
     from data_pipeline_with_hdfs_sql_integration_spark.session import RUNTIME_CONFS
     from tests.oracle_utils import compare
 
-    hostile = {
-        k: "America/New_York" if k == "spark.sql.session.timeZone" else "false"
-        for k in RUNTIME_CONFS
+    hostile = {k: "false" for k in RUNTIME_CONFS} | {
+        "spark.sql.session.timeZone": "America/New_York",
+        # An enum conf: "false" is not a value it accepts.
+        "spark.sql.parquet.outputTimestampType": "INT96",
     }
     old = {k: spark.conf.get(k) for k in RUNTIME_CONFS}
     try:
@@ -177,6 +178,26 @@ def test_no_plan_applies_runtime_confs_itself():
     offenders = [
         p.name for p in Path(plans.__file__).parent.glob("*.py")
         if "apply_runtime_confs" in p.read_text()
+    ]
+    assert offenders == []
+
+
+def test_only_session_changes_session_state():
+    """Concurrent queries share one session, so no body may bind a
+    temp view name or set a conf on it: tables reach SQL through
+    catalog.run_sql's formatter, and tuned confs live on a
+    session.child_session. session.py alone sets confs."""
+    from pathlib import Path
+
+    import data_pipeline_with_hdfs_sql_integration_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    offenders = [
+        str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+        if str(p.relative_to(root)) != "session.py" and any(
+            s in p.read_text(encoding="utf-8")
+            for s in ("createOrReplaceTempView(", ".conf.set(", ".conf.unset(")
+        )
     ]
     assert offenders == []
 

@@ -3,9 +3,9 @@ the driver generated BENCH_r11.json while a 24-core sf10 sweep owned the
 box — 7 untouched queries read as >2x regressions and the committed
 record said "perf regressed 21%" when the truth was "the box was busy").
 
-Heavy tools (full_sweep.py, shuffle_probe.py, gen_sf.py) call claim()
-at startup; bench.py calls live() before creating its session and
-refuses to time queries while any claimant is alive. Stale files
+Heavy tools (full_sweep.py, gen_sf.py) call claim() at startup;
+bench.py calls live() before creating its session and refuses to time
+queries while any claimant is alive. Stale files
 (claimant pid gone) are unlinked on sight, so a crashed sweep can never
 wedge future benches.
 """
@@ -59,8 +59,7 @@ def foreign_spark_procs() -> list[str]:
     the contaminator forgot to claim()."""
     hits = []
     me = os.getpid()
-    markers = ("org.apache.spark", "full_sweep.py", "shuffle_probe.py",
-               "ab_bench.py", "duckdb")
+    markers = ("org.apache.spark", "full_sweep.py", "ab_bench.py", "duckdb")
     for p in Path("/proc").iterdir():
         if not p.name.isdigit() or int(p.name) == me:
             continue
