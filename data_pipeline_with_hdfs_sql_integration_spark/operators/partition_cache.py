@@ -10,15 +10,31 @@ Reference behavior (server.py:95-147, the CalcAvgLoan RPC):
 - empty key (NumPy mean of zero rows = NaN, ``int(NaN)`` raises) →
   caught and returned as an error (server.py:145-147)
 
-Spark-native design: the cache is a Hive-style partitioned parquet
-layout ``cache_root/<key_col>=<k>/`` holding only the value column. The
-cache only ever answers the average of that column, so a partition
-needs nothing else, and each create writes one column instead of main's
-full width. Main is opened only to create or recreate a partition; a
-reuse reads the partition alone, with its schema pinned from main's
-cached parquet schema (``catalog.parquet_schema``), so it starts no
-inference and builds no relation over main. A read that finds the path
-missing maps to create and any other Spark/IO error to recreate.
+Layout: a Hive-style partitioned parquet layout ``cache_root/<key_col>=<k>/``
+holding only the value column. The cache only ever answers the average
+of that column, so a partition needs nothing else, and main is opened
+only to create or recreate a partition.
+
+Which engine answers is chosen from the paths' scheme alone:
+
+- Local main and cache root (no scheme, or ``file://``): Arrow on the
+  driver, like the reference, and no Spark job. A reuse is
+  ``pq.read_table(partition, columns=[value])`` plus a mean; a create
+  scans main with ``pyarrow.dataset`` (Hive partitioning, so a
+  key-partitioned main prunes to its key's files), filters on the key
+  and publishes the partition through ``catalog.publish_store``, so a
+  reader sees either no partition or a complete one. On a local path
+  Spark's ``local[N]`` executors and Arrow's threaded scanner use the
+  same cores, and a Spark job adds tens to hundreds of milliseconds of
+  scheduling to a request that reads a few megabytes.
+- Anything else (hdfs://, s3a://): one Spark job per request. A reuse
+  reads the partition alone; a create filters main and writes the
+  partition in place with ``mode("overwrite")``.
+
+Both engines answer Spark's ``avg`` truncated like ``int()``
+(server.py:109); ``_arrow_avg`` keeps Spark's decimal rounding. A
+partition that is missing maps to create and any other read error to
+recreate; a key with no rows is an in-band error and publishes nothing.
 Replication tiering (reference: 2× main, 1× cache — server.py:49 vs
 135) is applied per write via the Hadoop FileSystem API when the
 storage supports it.
@@ -26,29 +42,66 @@ storage supports it.
 
 from __future__ import annotations
 
+import decimal
+import os
 import threading
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import parquet_schema, read_parquet
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import is_complete, publish_store, read_parquet
 from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import hadoop_fs, set_replication
 
 # In-process single flight for partition writes: the partition paths
 # being created or recreated, each with the event its waiters block
-# on. A partition directory appears before its files commit, so a
-# request that probed it mid-write would read no rows (and a second
-# writer would collide with the first); it waits for the write instead
-# and then takes the reuse path. Module-level so that two caches over
-# one cache root (two build_cache calls, two Pipelines) share it.
+# on. A Spark-written partition directory appears before its files
+# commit, so a request that probed it mid-write would read no rows; it
+# waits for the write instead and then takes the reuse path. On either
+# engine it keeps concurrent misses of one key to one create.
+# Module-level so that two caches over one cache root (two build_cache
+# calls, two Pipelines) share it.
 _WRITES: dict[str, threading.Event] = {}
 _WRITES_LOCK = threading.Lock()
 
-# Error text of a read whose path is gone: the reference's
+# Error text of a Spark read whose path is gone: the reference's
 # FileNotFoundError, which maps to create (server.py:113).
 _PATH_MISSING = ("PATH_NOT_FOUND", "Path does not exist", "FileNotFound")
+
+
+def _local_path(path: str) -> str | None:
+    """The filesystem path of a local ``path`` (no scheme, or
+    ``file://``); None for any other scheme."""
+    url = urlparse(path)
+    if url.scheme == "":
+        return path
+    return url.path if url.scheme == "file" else None
+
+
+def _arrow_avg(values: pa.ChunkedArray) -> int | None:
+    """Spark's ``avg`` of ``values`` truncated like ``int()``; None when
+    no value is non-null (the NumPy-NaN analog).
+
+    Spark divides a decimal(p, s) sum exactly and rounds half up to
+    scale s + 4: 14.99, 15.00, 15.00 average to 14.996667, so 14.
+    Arrow's ``pc.mean`` rounds to scale s (15.00, so 15), so the sum is
+    taken exactly and divided in Python's ``decimal``."""
+    n = len(values) - values.null_count
+    if n == 0:
+        return None
+    t = values.type
+    if not pa.types.is_decimal(t):
+        return int(pc.sum(values).as_py() / n)
+    total = pc.sum(values.cast(pa.decimal128(38, t.scale))).as_py()
+    with decimal.localcontext() as ctx:
+        ctx.prec = 80
+        mean = (total / n).quantize(decimal.Decimal(1).scaleb(-(t.scale + 4)), decimal.ROUND_HALF_UP)
+    return int(mean)
 
 
 @dataclass
@@ -90,6 +143,8 @@ class PartitionCache:
         self.value_col = value_col
         self.cache_root = cache_root.rstrip("/")
         self.replication = replication
+        #: Arrow on the driver answers when main and the cache are local.
+        self._local = _local_path(main_path) is not None and _local_path(self.cache_root) is not None
 
     @property
     def main(self) -> DataFrame:
@@ -102,9 +157,9 @@ class PartitionCache:
 
     # -- internals -----------------------------------------------------
     def _observed_avg(self, df: DataFrame, write) -> int | None:
-        """AVG of the value column truncated toward zero like Python
-        int() (server.py:109); None for an empty input (the NumPy-NaN
-        analog).
+        """Spark's AVG of the value column truncated toward zero like
+        Python int() (server.py:109); None for an empty input (the
+        NumPy-NaN analog).
 
         The average rides along as an observed metric on ``write(df)``,
         the one action: the partition write on create, the noop sink on
@@ -118,44 +173,76 @@ class PartitionCache:
         a = obs.get["a"]
         return None if a is None else int(a)
 
-    def _write_partition(self, subset: DataFrame, key: object) -> None:
-        path = self.partition_path(key)
-        # One key's subset is small by construction — coalesce(1) mirrors
-        # the reference's single partition file per key (server.py:139-140).
-        subset.coalesce(1).write.mode("overwrite").parquet(path)
-        set_replication(self.spark, path, self.replication)
+    def _read_avg(self, path: str) -> int | None:
+        """Average of a stored partition; raises when it is missing
+        (FileNotFoundError or Spark's path-not-found) or unreadable."""
+        if self._local:
+            return _arrow_avg(pq.read_table(_local_path(path), columns=[self.value_col])[self.value_col])
+        cached = self.spark.read.parquet(path).select(self.value_col)
+        return self._observed_avg(cached, lambda df: df.write.format("noop").mode("overwrite").save())
 
     def _delete(self, path: str) -> None:
         fs, hpath = hadoop_fs(self.spark, path)
         fs.delete(hpath, True)
 
     def _exists(self, path: str) -> bool:
-        """Metadata-only FileSystem.exists probe — no Spark job, no
-        exception-driven control flow (a failed-read probe pays a
-        full JVM stack unwind per cache miss and floods the logs)."""
+        """Metadata-only probe, no Spark job: a local partition counts
+        once ``publish_store`` has marked it complete; any other path
+        once ``FileSystem.exists`` sees it."""
+        if self._local:
+            return is_complete(_local_path(path))
         fs, hpath = hadoop_fs(self.spark, path)
         return bool(fs.exists(hpath))
 
     def _recompute(self, key: object, source: str) -> CacheResult:
-        subset = self.main.filter(F.col(self.key_col) == F.lit(key)).select(self.value_col)
-        a = self._observed_avg(subset, lambda df: self._write_partition(df, key))
-        if a is None:
+        path = self.partition_path(key)
+        if self._local:
+            main = ds.dataset(_local_path(self.main_path), format="parquet", partitioning="hive")
+            subset = main.to_table(columns=[self.value_col], filter=ds.field(self.key_col) == key)
+            avg = _arrow_avg(subset[self.value_col])
+            if avg is not None:
+
+                def build(staged: str) -> None:
+                    os.makedirs(staged)
+                    pq.write_table(subset, os.path.join(staged, "part-00000.parquet"))
+
+                # A recreate replaces a partition that is complete but
+                # unreadable, which publish_store would otherwise keep.
+                complete = is_complete if source == "create" else (lambda _path: False)
+                publish_store(_local_path(path), build, complete=complete)
+        else:
+            subset = self.main.filter(F.col(self.key_col) == F.lit(key)).select(self.value_col)
+            # One key's subset is small by construction — coalesce(1) mirrors
+            # the reference's single partition file per key (server.py:139-140).
+            avg = self._observed_avg(
+                subset, lambda df: df.coalesce(1).write.mode("overwrite").parquet(path)
+            )
+        if avg is None:
             # Reference: int(NaN) raises → error response (server.py:145-147).
-            # Roll back the (empty) partition so the key stays a miss.
-            self._delete(self.partition_path(key))
+            # Nothing of the key stays behind, so it stays a miss.
+            self._delete(path)
             return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
-        return CacheResult(key, a, source)
+        set_replication(self.spark, path, self.replication)
+        return CacheResult(key, avg, source)
 
     def _recompute_once(self, key: object, source: str) -> CacheResult:
         """_recompute unless another request in this process is already
-        writing the partition; then wait for it and re-run calc_avg."""
+        writing the partition; then wait for it and re-run calc_avg. A
+        local create first re-probes the partition, so a request whose
+        probe or read missed just before another request published it
+        answers reuse."""
         path = self.partition_path(key)
         with _WRITES_LOCK:
             pending = _WRITES.get(path)
-            if pending is None:
+            published = (
+                pending is None and source == "create" and self._local
+                and is_complete(_local_path(path))
+            )
+            if pending is None and not published:
                 done = _WRITES[path] = threading.Event()
         if pending is not None:
             pending.wait()
+        if pending is not None or published:
             return self.calc_avg(key)
         try:
             return self._recompute(key, source)
@@ -176,34 +263,30 @@ class PartitionCache:
             return self.calc_avg(key)
         if not exists:
             return self._recompute_once(key, "create")  # server.py:113-116
-        value = parquet_schema(self.spark, self.main_path)[self.value_col]
         try:
-            cached = self.spark.read.schema(StructType([value])).parquet(path)
-            avg = self._observed_avg(
-                cached, lambda df: df.write.format("noop").mode("overwrite").save()
-            )
+            avg = self._read_avg(path)
         except Exception as exc:
             # A deletion raced in since the exists probe (server.py:113) or
             # the partition is unreadable (server.py:118-121, OSError).
-            missing = any(m in str(exc) for m in _PATH_MISSING)
+            missing = isinstance(exc, FileNotFoundError) or any(m in str(exc) for m in _PATH_MISSING)
             return self._recompute_once(key, "create" if missing else "recreate")
         if avg is None:
             return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
         return CacheResult(key, avg, "reuse")
 
     def calc_avg_many(self, keys: list) -> list[CacheResult]:
-        """calc_avg over a key list with a few jobs in flight
-        (guide §2.6 "overlap independent jobs"): each key's
-        create/recreate is an independent Spark job whose write tail
-        leaves most cores idle, so the driver submits 3 keys at a time
-        from a thread pool and the next key's scan back-fills the
-        executors the current key's tail frees. Semantics are exactly
-        N calc_avg calls — same per-key create/reuse/recreate/error
-        state machine, results in input order; Spark's scheduler is
-        job-concurrent by design and nothing here shares mutable state
-        across keys (each call builds its own Observation and writes
-        its own partition directory). Measured on the 5-key bench
-        probe: create pass 1.29x faster, reuse 1.57x (r13)."""
+        """calc_avg over a key list, 3 keys in flight from a thread
+        pool. Semantics are exactly N calc_avg calls — same per-key
+        create/reuse/recreate/error state machine, results in input
+        order; nothing here shares mutable state across keys.
+
+        On the Spark engine (non-local paths) each key's create or
+        recreate is an independent Spark job whose write tail leaves
+        most cores idle, so the next key's scan back-fills the executors
+        the current key's tail frees (guide §2.6 "overlap independent
+        jobs"; r13's 5-key bench probe: create pass 1.29x faster, reuse
+        1.57x). On the Arrow engine the overlap is only the parquet IO
+        and decode, which run outside the GIL."""
         from concurrent.futures import ThreadPoolExecutor
 
         if len(keys) <= 1:

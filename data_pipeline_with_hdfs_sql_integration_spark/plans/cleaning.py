@@ -249,5 +249,4 @@ def stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = W.events_stream(spark, sf_dir)
     agg = _scrub_report(_scrub_chain(ev))
-    spark2, name = W.run_to_memory(agg, output_mode="complete")
-    return spark2.table(name)
+    return W.run_to_memory(agg, output_mode="complete")

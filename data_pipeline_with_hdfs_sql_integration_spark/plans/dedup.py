@@ -1189,8 +1189,7 @@ def stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_contents"))
     )
-    spark2, name = W.run_to_memory(agg, output_mode="complete")
-    return spark2.table(name)
+    return W.run_to_memory(agg, output_mode="complete")
 
 
 # --------------------------------------------------- repeated substring spans

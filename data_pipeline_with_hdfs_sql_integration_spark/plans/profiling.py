@@ -307,8 +307,7 @@ def stream_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_rows"),
         (F.sum(digest) % M).alias("checksum"),
     )
-    spark, name = run_to_memory(agg)
-    return spark.table(name)
+    return run_to_memory(agg)
 
 
 @query(

@@ -164,8 +164,7 @@ def stream_sketch_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = ev.select(
         F.posexplode(F.array(*[bucket(d) for d in range(CMS_DEPTH)])).alias("d", "bucket")
     ).groupBy("d", "bucket").agg(F.count("*").alias("cnt"))
-    spark, name = run_to_memory(cells)
-    return spark.table(name)
+    return run_to_memory(cells)
 
 
 # -------------------------------------------------- histogram quantiles
@@ -344,8 +343,7 @@ def stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(HQE_NBINS - 1),
     )
     hist = ev.select(b.alias("bin")).groupBy("bin").agg(F.count(F.lit(1)).alias("cnt"))
-    spark2, name = run_to_memory(hist)
-    return _quantile_readoff(spark2.table(name), HQ_QS_PM, HQE_BIN_W)
+    return _quantile_readoff(run_to_memory(hist), HQ_QS_PM, HQE_BIN_W)
 
 
 @query(

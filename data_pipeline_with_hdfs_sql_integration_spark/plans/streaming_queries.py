@@ -289,5 +289,4 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         ["event_id"]
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    spark2, name = W.run_to_memory(agg)
-    return spark2.table(name)
+    return W.run_to_memory(agg)

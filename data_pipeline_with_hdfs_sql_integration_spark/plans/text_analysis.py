@@ -677,8 +677,7 @@ def stream_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(~F.col("keep"), 1)).alias("n_filtered"),
         )
     )
-    spark2, name = W.run_to_memory(agg, output_mode="complete")
-    return spark2.table(name)
+    return W.run_to_memory(agg, output_mode="complete")
 
 
 PHRASE_W1, PHRASE_W2 = "table", "scan"

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import functools
 import json
+import logging
 import threading
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -29,6 +30,8 @@ from typing import Callable
 
 from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
 from data_pipeline_with_hdfs_sql_integration_spark.lender_pb import _FIELD_LAYOUT, messages
+
+_log = logging.getLogger(__name__)
 
 #: verb -> (request message, response message) names in lender.proto.
 VERBS = {
@@ -105,6 +108,7 @@ class LenderHttpService:
         try:
             return {"status": self.db_to_store_fn()}
         except Exception as exc:  # noqa: BLE001 — status-string contract
+            _log.warning("DbToHdfs failed", exc_info=True)
             return {"status": f"ERROR: {exc}"}
 
     def block_locations(self, path: str) -> dict:
@@ -113,17 +117,22 @@ class LenderHttpService:
         try:
             return {"block_entries": self.pipeline.block_report(path or None), "error": ""}
         except Exception as exc:  # noqa: BLE001
+            _log.warning("BlockLocations(%r) failed", path, exc_info=True)
             return {"block_entries": {}, "error": str(exc)}
 
     def calc_avg_loan(self, county_code: int) -> dict:
         """CalcAvgLoan (lender.proto:35-36) → CalcAvgLoanResp. The
         create/reuse/recreate source indicator comes from the partition
-        cache state machine (server.py:95-143 ≙ operators/partition_cache)."""
+        cache state machine (server.py:95-143 ≙ operators/partition_cache).
+        An in-band error (a key with no rows) is logged like a raised one."""
         try:
             res = self.pipeline.calc_avg(county_code)
-            return {"avg_loan": res.avg, "source": res.source, "error": res.error or ""}
         except Exception as exc:  # noqa: BLE001
+            _log.warning("CalcAvgLoan(%s) failed", county_code, exc_info=True)
             return {"avg_loan": 0, "source": "", "error": str(exc)}
+        if res.error:
+            _log.warning("CalcAvgLoan(%s): %s", county_code, res.error)
+        return {"avg_loan": res.avg, "source": res.source, "error": res.error}
 
     # -- transport ------------------------------------------------------
     def _handle(self, verb: str, body: dict) -> dict:

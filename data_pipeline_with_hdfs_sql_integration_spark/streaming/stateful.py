@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from data_pipeline_with_hdfs_sql_integration_spark.streaming.windows import events_stream
+from data_pipeline_with_hdfs_sql_integration_spark.streaming.windows import events_stream, run_to_memory
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -76,18 +76,9 @@ def user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # availableNow may split the replay into several micro-batches, each
     # re-emitting a user's updated totals — keep the final (max-n) row.
-    out = spark.table(name)
+    out = run_to_memory(agg, output_mode="update")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return out.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
 

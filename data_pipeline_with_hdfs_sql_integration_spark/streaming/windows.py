@@ -51,10 +51,13 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(_linked_stream(spark, path, "stream", ("events.parquet",)))
 
 
-def run_to_memory(agg: DataFrame, output_mode: str = "complete") -> tuple[SparkSession, str]:
-    """Drive a streaming aggregation to completion into a memory sink;
-    returns (spark, table_name). availableNow processes the whole
-    bounded input, then the query stops."""
+def run_to_memory(agg: DataFrame, output_mode: str = "complete") -> DataFrame:
+    """Drive a streaming aggregation to completion into a memory sink
+    and return its rows as a frame. availableNow processes the whole
+    bounded input, then the query stops. The memory sink registers its
+    table as a temp view in the caller's session; the returned frame
+    is resolved to the sink itself, so the view is dropped before
+    returning and the rows live as long as the frame."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     q = (
         agg.writeStream.outputMode(output_mode)
@@ -64,7 +67,9 @@ def run_to_memory(agg: DataFrame, output_mode: str = "complete") -> tuple[SparkS
         .start()
     )
     q.awaitTermination()
-    return agg.sparkSession, name
+    out = agg.sparkSession.table(name)
+    agg.sparkSession.catalog.dropTempView(name)
+    return out
 
 
 def events_stream_duplicated(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,8 +91,7 @@ def tumbling_counts(spark: SparkSession, sf_dir: str, width: str = "1 hour", wat
             F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_dec"),
         )
     )
-    spark, name = run_to_memory(agg)
-    return spark.table(name).select(
+    return run_to_memory(agg).select(
         F.col("w.start").alias("window_start"),
         "event_type",
         "n_events",
@@ -102,8 +106,7 @@ def sliding_counts(spark: SparkSession, sf_dir: str, width: str = "1 hour", slid
         .groupBy(F.window("ts", width, slide).alias("w"))
         .agg(F.count("*").alias("n_events"))
     )
-    spark, name = run_to_memory(agg)
-    return spark.table(name).select(F.col("w.start").alias("window_start"), "n_events")
+    return run_to_memory(agg).select(F.col("w.start").alias("window_start"), "n_events")
 
 
 def static_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,8 +126,7 @@ def static_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_dec"),
         )
     )
-    spark, name = run_to_memory(agg)
-    return spark.table(name).select(
+    return run_to_memory(agg).select(
         "c_mktsegment", "n_events", F.col("sum_dec").cast("double").alias("sum_value")
     )
 
@@ -141,8 +143,7 @@ def dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_events"))
     )
-    spark, name = run_to_memory(agg)
-    return spark.table(name).select("event_type", "n_events")
+    return run_to_memory(agg).select("event_type", "n_events")
 
 
 def stream_stream_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,8 +170,7 @@ def stream_stream_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") > F.col("signup_ts"))
         & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 30 MINUTES")),
     ).select("user_id", "signup_ts", "purchase_ts")
-    spark, name = run_to_memory(joined, output_mode="append")
-    return spark.table(name)
+    return run_to_memory(joined, output_mode="append")
 
 
 def session_windows(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") -> DataFrame:
@@ -180,8 +180,7 @@ def session_windows(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") -
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    spark, name = run_to_memory(agg)
-    return spark.table(name).select(
+    return run_to_memory(agg).select(
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
         "user_id",

@@ -217,13 +217,26 @@ def _stored_pipeline(spark, tmp_path):
 
 
 def test_pipeline_reuse_reads_only_the_partition(spark, tmp_path, monkeypatch):
-    """A reuse opens one parquet relation, the partition; main is
-    opened only to create."""
-    from tests.test_catalog import _parquet_opens
+    """On local paths a create publishes its partition whole and a reuse
+    opens no Spark relation and starts no Spark job. On the Spark engine
+    (any other scheme) a reuse opens one relation, the partition; main
+    is opened only to create."""
+    from tests.test_catalog import _jobs_started, _parquet_opens
 
     pipe = _stored_pipeline(spark, tmp_path)
-    assert pipe.calc_avg(1).source == "create"
     paths = _parquet_opens(monkeypatch)
+    created, create_jobs = _jobs_started(spark, lambda: pipe.calc_avg(1))
+    assert (created.avg, created.source, create_jobs) == (15, "create", 0)
+    assert glob.glob(str(tmp_path / "cache" / "*.build-*")) == []
+    assert os.path.exists(tmp_path / "cache" / "k=1" / "_SUCCESS")
+    res, jobs = _jobs_started(spark, lambda: pipe.calc_avg(1))
+    assert (res.avg, res.source) == (15, "reuse")
+    assert paths == [] and jobs == 0
+
+    monkeypatch.setattr(pipe.cache, "_local", False)
+    pipe.invalidate_cache()
+    assert pipe.calc_avg(1).source == "create"
+    paths.clear()
     res = pipe.calc_avg(1)
     assert (res.avg, res.source) == (15, "reuse")
     assert paths == [str(tmp_path / "cache" / "k=1")]
@@ -250,6 +263,63 @@ def test_exists_probe_racing_a_deletion_still_creates(spark, tmp_path, monkeypat
     monkeypatch.setattr(PartitionCache, "_exists", lambda self, path: True)
     res = pipe.calc_avg(2)
     assert (res.avg, res.source, res.error) == (5, "create", "")
+
+
+def _generated_main(spark, path, vtype, layout):
+    """A main of (k int, v vtype) over 8 keys written by Spark, flat or
+    Hive-partitioned by k. Key 6 is 14.99, 15.00, 15.00 (x100 for the
+    integral types) and key 7 averages -1.5 in every type."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(7)
+    integral = vtype in ("int", "bigint")
+    cents = {k: [rng.randint(-100000, 100000) for _ in range(rng.randint(1, 40))] for k in range(6)}
+    cents.update({6: [1499, 1500, 1500], 7: [-1, -2] if integral else [-100, -200]})
+    rows = [(k, str(c) if integral else f"{c / 100:.2f}") for k, cs in cents.items() for c in cs]
+    df = spark.createDataFrame(rows, "k int, v string").select("k", F.col("v").cast(vtype).alias("v"))
+    writer = df.write.partitionBy("k") if layout == "hive" else df.write
+    writer.parquet(path)
+    return sorted(cents)
+
+
+@pytest.mark.parametrize("layout", ["flat", "hive"])
+@pytest.mark.parametrize("vtype", ["int", "bigint", "double", "decimal(10,2)"])
+def test_arrow_engine_matches_spark_avg_on_every_key(spark, tmp_path, vtype, layout):
+    """The local (Arrow) engine answers Spark's avg, truncated, on every
+    key: on create, reuse and recreate of a garbage partition file. An
+    empty key is an in-band error that publishes nothing."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import (
+        PartitionCache,
+    )
+
+    keys = _generated_main(spark, str(tmp_path / "main"), vtype, layout)
+    cache = PartitionCache(spark, str(tmp_path / "main"), "k", "v", str(tmp_path / "cache"))
+
+    def spark_avg(k):
+        subset = cache.main.filter(F.col("k") == k).select("v")
+        return cache._observed_avg(subset, lambda df: df.write.format("noop").mode("overwrite").save())
+
+    want = {k: spark_avg(k) for k in keys}
+    assert None not in want.values()
+    if vtype == "decimal(10,2)":
+        assert want[6] == 14  # Arrow's pc.mean would give 15.00, so 15
+    assert want[7] == -1
+    for k in keys:
+        assert [(r.avg, r.source) for r in (cache.calc_avg(k), cache.calc_avg(k))] == [
+            (want[k], "create"), (want[k], "reuse")]
+    for f in glob.glob(cache.partition_path(6) + "/*.parquet"):
+        with open(f, "wb") as fh:
+            fh.write(b"garbage")
+    assert [(r.avg, r.source) for r in (cache.calc_avg(6), cache.calc_avg(6))] == [
+        (want[6], "recreate"), (want[6], "reuse")]
+    assert spark_avg(99) is None
+    empty = cache.calc_avg(99)
+    assert (empty.avg, empty.source) == (0, "") and empty.error
+    assert not os.path.exists(cache.partition_path(99))
 
 
 def test_calc_avg_many_matches_sequential_and_fault_paths(spark, tmp_path):

@@ -4,6 +4,7 @@ driven verb-by-verb over a real socket."""
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 import urllib.error
@@ -82,11 +83,28 @@ def test_three_verbs_over_http(service, spark):
     assert blocks["error"] == "" and sum(blocks["block_entries"].values()) >= 1
 
 
-def test_calc_avg_loan_missing_key_is_in_band_error(service):
+def _service_warnings(caplog) -> list:
+    return [r for r in caplog.records if r.name == "data_pipeline_with_hdfs_sql_integration_spark.service"]
+
+
+def test_calc_avg_loan_missing_key_is_in_band_error(service, caplog):
     _, client = service
     client.db_to_hdfs()
-    resp = client.calc_avg_loan(9999)
+    with caplog.at_level(logging.WARNING):
+        resp = client.calc_avg_loan(9999)
     assert resp["avg_loan"] == 0 and resp["source"] == "" and resp["error"]
+    (rec,) = _service_warnings(caplog)
+    assert rec.levelno == logging.WARNING
+    assert rec.getMessage() == f"CalcAvgLoan(9999): {resp['error']}"
+
+
+def test_calc_avg_loan_exception_is_logged_with_traceback(service, caplog):
+    _, client = service  # no DbToHdfs yet, so main does not exist
+    with caplog.at_level(logging.WARNING):
+        resp = client.calc_avg_loan(5)
+    assert resp["avg_loan"] == 0 and resp["source"] == "" and resp["error"]
+    (rec,) = _service_warnings(caplog)
+    assert rec.getMessage() == "CalcAvgLoan(5) failed" and rec.exc_info
 
 
 def test_block_locations_bad_path_is_in_band_error(service):
