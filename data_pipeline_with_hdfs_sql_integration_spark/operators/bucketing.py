@@ -7,27 +7,13 @@ on that key run with zero Exchange: bucket i of A joins bucket i of B
 on the same executor. The write cost is paid once; every downstream
 join, groupBy, or dedup on the bucket key is shuffle-free.
 
-Local note: saveAsTable uses the session warehouse dir; callers pass a
-database-qualified or plain table name.
+Callers write both sides themselves (``layout_bucketed_join`` does)
+and pass the table names.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int = 32,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    writer = df.write.mode(mode).format("parquet").bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
 
 
 def bucketed_join(

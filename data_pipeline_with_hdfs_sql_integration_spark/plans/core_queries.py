@@ -513,7 +513,12 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         time.sleep(0.5)
     q.stop()
     q.awaitTermination()
-    return spark.table(name)
+    # The memory sink registered its table as a temp view in the
+    # caller's session: resolve the frame to the sink, then drop the
+    # view (as streaming/windows.run_to_memory does).
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @query(

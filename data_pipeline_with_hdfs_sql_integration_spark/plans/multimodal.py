@@ -431,39 +431,6 @@ def resize_image(payload: bytes, w: int, h: int, fake: bool = False) -> bytes:
     return bytes(payload[(i * len(payload)) // (w * h)] for i in range(w * h))
 
 
-def audio_frame_energy(payload: bytes, frame_len: int = 256, fake: bool = False) -> list[float]:
-    """Audio frame energy — REAL (since round 8) for RIFF/PCM WAV
-    payloads: the stdlib `wave` reader decodes 16-bit samples and each
-    frame reports its mean absolute amplitude (the envelope feature a
-    VAD/segmentation stage runs). Non-WAV formats keep the
-    deterministic byte-domain fake behind `fake=True`."""
-    if payload and bytes(payload[:4]) == b"RIFF":
-        import io
-        import struct
-        import wave
-
-        with wave.open(io.BytesIO(bytes(payload))) as wf:
-            assert wf.getsampwidth() == 2, "16-bit PCM expected"
-            raw = wf.readframes(wf.getnframes())
-        samples = struct.unpack(f"<{len(raw) // 2}h", raw)
-        return [
-            round(sum(abs(s) for s in fr) / len(fr), 6)
-            for fr in (
-                samples[i : i + frame_len]
-                for i in range(0, len(samples), frame_len)
-            )
-        ]
-    if not fake:
-        raise NotImplementedError(
-            "audio decode beyond RIFF/PCM WAV requires librosa/soundfile "
-            "(not installed); pass fake=True for the deterministic stand-in"
-        )
-    if not payload:
-        return []
-    frames = [payload[i : i + frame_len] for i in range(0, len(payload), frame_len)]
-    return [round(sum(fr) / len(fr), 6) for fr in frames]
-
-
 @query(
     "arrow_doc_byte_stats",
     oracle="""

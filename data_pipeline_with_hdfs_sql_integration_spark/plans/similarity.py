@@ -648,13 +648,6 @@ def ivf2_max_occupancy(spark: SparkSession, sf_dir: str) -> int:
         return 2**62
 
 
-def ivf2_fine_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cell_id, sub_id): primary fine cell per vector."""
-    import os
-
-    return read_parquet(spark, os.path.join(ivf2_index_store(spark, sf_dir), "fine"))
-
-
 def _sql_kmeans2_ctes() -> tuple[str, str]:
     """DuckDB CTE chain mirroring ivf2_index_store on top of
     ``_KMEANS_CTES``; returns (ctes, fine_probe_cte_name). The chain

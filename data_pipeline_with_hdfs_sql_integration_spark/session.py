@@ -3,11 +3,21 @@
 Local testing runs on local[N]; the same configs are the ones that
 matter on a multi-executor cluster (AQE, skew-join handling,
 partition sizing, Arrow for the Pandas-UDF slow path).
+
+`get_spark` starts the driver JVM from a class-data-sharing archive
+of the classes an earlier session loaded, recorded and built by the
+first session for this JDK and Spark classpath (`_archive_plan`).
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
 
 from pyspark.sql import SparkSession
 
@@ -110,6 +120,128 @@ def child_session(spark: SparkSession, tuned: dict[str, str]) -> SparkSession:
     return child
 
 
+def _archive_key(java: str, spark_home: str) -> str:
+    """Names the archive after what it is valid for: the JDK (its
+    launcher path and module image) and the Spark classpath the
+    launcher builds (every jar's name, size and mtime, plus the
+    environment entries the launcher appends)."""
+    jdk = os.path.dirname(os.path.dirname(java))
+    parts = [java]
+    for p in [os.path.join(jdk, "lib", "modules"), *sorted(glob.glob(os.path.join(spark_home, "jars", "*")))]:
+        st = os.stat(p)
+        parts.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
+    parts += [os.environ.get(v, "") for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")]
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
+
+
+def _archive_plan():
+    """The class-data-sharing plan for the driver JVM about to start:
+    `(java options, empty conf dir, recorder)`, or None to launch it
+    as is. With an archive for this JDK and classpath, the JVM maps
+    its pre-parsed classes; without one, the first session to claim
+    the class list (O_EXCL) records the classes it loads, and
+    `recorder` is `(java, class list, archive)` for `_build_archive`.
+
+    JDK 17 neither dumps nor shares an archive whose classpath holds a
+    non-empty directory, and the launcher puts the conf dir on it: so
+    the JVM gets an empty conf dir, and a conf dir holding anything but
+    `*.template` files means no archive."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not java or not os.path.isfile(java):
+        return None
+    java = os.path.realpath(java)
+    spark_home = _find_spark_home()
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(conf) and not all(n.endswith(".template") for n in os.listdir(conf)):
+        return None
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    root = os.path.join(cache, "spark-graft")
+    try:
+        empty_conf = os.path.join(root, "conf")
+        os.makedirs(empty_conf, exist_ok=True)
+        key = os.path.join(root, _archive_key(java, spark_home))
+        if os.path.isfile(f"{key}.jsa"):
+            return f"-XX:SharedArchiveFile={key}.jsa -Xlog:cds=off", empty_conf, None
+        os.close(os.open(f"{key}.classlist", os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644))
+    except OSError:
+        return None  # no cache dir, or another session records
+    return (f"-XX:DumpLoadedClassList={key}.classlist -Xlog:cds=off", empty_conf,
+            (java, f"{key}.classlist", f"{key}.jsa"))
+
+
+@contextlib.contextmanager
+def _driver_jvm_env():
+    """Sets the driver JVM's launch environment for `_archive_plan` while
+    a new gateway starts, restores it afterwards and yields the plan's
+    recorder (None when there is nothing to record)."""
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        yield None  # the JVM is already running
+        return
+    plan = _archive_plan()
+    if plan is None:
+        yield None
+        return
+    opts, conf_dir, recorder = plan
+    saved = {k: os.environ.get(k) for k in ("SPARK_SUBMIT_OPTS", "SPARK_CONF_DIR")}
+    # SPARK_SUBMIT_OPTS reaches the driver JVM (beside any
+    # --driver-java-options in PYSPARK_SUBMIT_ARGS), not the launcher's.
+    os.environ["SPARK_SUBMIT_OPTS"] = " ".join(filter(None, (saved["SPARK_SUBMIT_OPTS"], opts)))
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        yield recorder
+    except BaseException:
+        if recorder is not None:
+            with contextlib.suppress(OSError):
+                os.remove(recorder[1])  # let a later session record
+        raise
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+
+
+def _build_archive(proc, java: str, classpath: str, classlist: str, archive: str) -> None:
+    """At exit: end the recording JVM (stop the context so Python's
+    accumulator server goes first; closing its stdin makes the gateway
+    exit), then dump its class list into a private
+    `<archive>.build-<pid>` and rename it into place only when the dump
+    succeeded. The JVM maps nothing else, because a truncated archive
+    crashes it."""
+    if proc.poll() is None:
+        from pyspark import SparkContext
+
+        if SparkContext._active_spark_context is not None:
+            with contextlib.suppress(Exception):
+                SparkContext._active_spark_context.stop()
+        proc.stdin.close()
+        try:
+            proc.wait(timeout=60)
+        except subprocess.TimeoutExpired:
+            return
+    staged = f"{archive}.build-{os.getpid()}"
+    try:
+        done = subprocess.run(
+            [java, "-Xshare:dump", f"-XX:SharedClassListFile={classlist}",
+             f"-XX:SharedArchiveFile={staged}", "-cp", classpath],
+            stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+            timeout=600,
+        )
+        if done.returncode == 0:
+            os.rename(staged, archive)
+    except (OSError, subprocess.TimeoutExpired):
+        pass
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(staged)
+
+
 def get_spark(app_name: str = "data_pipeline_with_hdfs_sql_integration_spark", shuffle_partitions: int | None = None) -> SparkSession:
     n = default_parallelism()
     builder = (
@@ -135,6 +267,11 @@ def get_spark(app_name: str = "data_pipeline_with_hdfs_sql_integration_spark", s
         builder = builder.config("spark.jars", jars)
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _driver_jvm_env() as recorder:
+        spark = builder.getOrCreate()
+    if recorder is not None:
+        java, classlist, archive = recorder
+        classpath = spark._jvm.System.getProperty("java.class.path")
+        atexit.register(_build_archive, spark.sparkContext._gateway.proc, java, classpath, classlist, archive)
     spark.sparkContext.setLogLevel("WARN")
     return apply_runtime_confs(spark)

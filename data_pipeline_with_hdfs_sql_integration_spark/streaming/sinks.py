@@ -33,20 +33,6 @@ def stream_to_parquet_exactly_once(
     q.awaitTermination()
 
 
-def read_final_epoch(spark: SparkSession, out_root: str) -> DataFrame:
-    """Latest epoch's contents (complete mode ⇒ the final epoch is the
-    whole result)."""
-    import os
-    import re
-
-    epochs = [
-        int(m.group(1))
-        for d in os.listdir(out_root)
-        if (m := re.match(r"epoch=(\d+)$", d))
-    ]
-    return spark.read.parquet(f"{out_root}/epoch={max(epochs)}")
-
-
 def stream_merge_latest_snapshot(
     spark: "SparkSession", events, out_path: str, checkpoint: str
 ) -> None:

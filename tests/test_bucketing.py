@@ -10,12 +10,11 @@ from tests.conftest import SF_DIR
 @pytest.fixture(scope="module")
 def bucketed(spark):
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
-    from data_pipeline_with_hdfs_sql_integration_spark.operators.bucketing import write_bucketed
 
     orders = load(spark, SF_DIR, "orders")
     li = load(spark, SF_DIR, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
-    write_bucketed(orders, "b_orders", "o_orderkey", n_buckets=8)
-    write_bucketed(li, "b_lineitem", "o_orderkey", n_buckets=8)
+    for df, name in ((orders, "b_orders"), (li, "b_lineitem")):
+        df.write.mode("overwrite").format("parquet").bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(name)
     yield ("b_orders", "b_lineitem")
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")

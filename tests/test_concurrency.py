@@ -123,8 +123,14 @@ def test_two_datasets_on_one_session_match_solo_results(spark, tmp_path):
 
 def test_streaming_queries_leave_no_memory_sink_view(spark):
     """A memory-sink query hands back a frame resolved to the sink and
-    drops the sink's temp view: repeat calls leave no stream_out_* entry
-    in the session's catalog, and each call's rows stay readable."""
+    drops the sink's temp view: repeat calls leave no stream_out_* or
+    stream_pyds_* entry in the session's catalog, and each call's rows
+    stay readable."""
     solo = [_rows(spark, "stream_tumbling_counts") for _ in range(3)]
     assert solo[0] and solo[0] == solo[1] == solo[2]
-    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")] == []
+    pyds = [_rows(spark, "stream_python_datasource") for _ in range(2)]
+    assert pyds[0] and pyds[0] == pyds[1]
+    assert [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith(("stream_out_", "stream_pyds_"))
+    ] == []

@@ -43,24 +43,17 @@ def test_payload_binary_type(spark):
     assert schema["n_bytes"] == "bigint"
 
 
-def test_resize_and_audio_stubs_gate_and_fake():
+def test_resize_stub_gates_and_fakes():
     """Formats the repo codecs can't parse still gate / fake; the
-    PNG/JPEG/WAV paths are real (tested below)."""
+    PNG/JPEG paths are real (tested below)."""
     import pytest
 
-    from data_pipeline_with_hdfs_sql_integration_spark.plans.multimodal import (
-        audio_frame_energy,
-        resize_image,
-    )
+    from data_pipeline_with_hdfs_sql_integration_spark.plans.multimodal import resize_image
 
     with pytest.raises(NotImplementedError):
         resize_image(b"xy", 2, 2)
-    with pytest.raises(NotImplementedError):
-        audio_frame_energy(b"xy")
     thumb = resize_image(bytes(range(100)), 4, 4, fake=True)
     assert len(thumb) == 16 and thumb == resize_image(bytes(range(100)), 4, 4, fake=True)
-    e = audio_frame_energy(bytes([10] * 300), frame_len=256, fake=True)
-    assert e == [10.0, 10.0]
 
 
 def test_resize_image_real_png_and_jpeg():
@@ -90,28 +83,6 @@ def test_resize_image_real_png_and_jpeg():
     w3, h3, got3 = pdec(out3)
     assert (w3, h3) == (3, 3)
     assert got3 == [px[(y * 4) // 3 * 4 + (x * 4) // 3] for y in range(3) for x in range(3)]
-
-
-def test_audio_frame_energy_real_wav():
-    """audio_frame_energy decodes genuine RIFF/PCM WAV via the stdlib
-    reader and reports per-frame mean |amplitude| over int16 samples."""
-    import io
-    import struct
-    import wave
-
-    from data_pipeline_with_hdfs_sql_integration_spark.plans.multimodal import (
-        audio_frame_energy,
-    )
-
-    samples = [1000, -1000, 500, -500] * 128  # 512 samples
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(8000)
-        wf.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-    e = audio_frame_energy(buf.getvalue(), frame_len=256)
-    assert e == [750.0, 750.0]
 
 
 # ------------------------------------------------------------- PNG codec

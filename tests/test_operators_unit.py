@@ -450,13 +450,19 @@ def test_replication_reaches_every_main_and_partition_file(spark, tmp_path, monk
     assert calls == dict.fromkeys(cache_files, 3)
 
 
+def _final_epoch(spark, out_root):
+    """The latest epoch dir stream_to_parquet_exactly_once wrote: in
+    complete mode, the whole result."""
+    epochs = [int(d.split("=")[1]) for d in os.listdir(out_root) if d.startswith("epoch=")]
+    return spark.read.parquet(f"{out_root}/epoch={max(epochs)}")
+
+
 def test_foreach_batch_exactly_once_sink(spark):
     import tempfile
 
     from pyspark.sql import functions as F
 
     from data_pipeline_with_hdfs_sql_integration_spark.streaming.sinks import (
-        read_final_epoch,
         stream_to_parquet_exactly_once,
     )
     from data_pipeline_with_hdfs_sql_integration_spark.streaming.windows import events_stream
@@ -464,7 +470,7 @@ def test_foreach_batch_exactly_once_sink(spark):
     root = tempfile.mkdtemp(prefix="dps_sink_stream_")
     agg = events_stream(spark, SF_DIR).groupBy("event_type").agg(F.count("*").alias("n"))
     stream_to_parquet_exactly_once(agg, f"{root}/out", f"{root}/ckpt")
-    result = {r["event_type"]: r["n"] for r in read_final_epoch(spark, f"{root}/out").collect()}
+    result = {r["event_type"]: r["n"] for r in _final_epoch(spark, f"{root}/out").collect()}
 
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
 
@@ -498,7 +504,6 @@ def test_streaming_checkpoint_resume_is_idempotent(spark):
     from pyspark.sql import functions as F
 
     from data_pipeline_with_hdfs_sql_integration_spark.streaming.sinks import (
-        read_final_epoch,
         stream_to_parquet_exactly_once,
     )
     from data_pipeline_with_hdfs_sql_integration_spark.streaming.windows import events_stream
@@ -508,12 +513,12 @@ def test_streaming_checkpoint_resume_is_idempotent(spark):
         events_stream(spark, SF_DIR).groupBy("event_type").agg(F.count("*").alias("n"))
     )
     stream_to_parquet_exactly_once(build(), f"{root}/out", f"{root}/ckpt")
-    first = {r["event_type"]: r["n"] for r in read_final_epoch(spark, f"{root}/out").collect()}
+    first = {r["event_type"]: r["n"] for r in _final_epoch(spark, f"{root}/out").collect()}
     epochs_before = sorted(os.listdir(f"{root}/out"))
 
     # Same checkpoint, same (exhausted) source: a resumed run must be a no-op.
     stream_to_parquet_exactly_once(build(), f"{root}/out", f"{root}/ckpt")
-    second = {r["event_type"]: r["n"] for r in read_final_epoch(spark, f"{root}/out").collect()}
+    second = {r["event_type"]: r["n"] for r in _final_epoch(spark, f"{root}/out").collect()}
     assert first == second
     assert sorted(os.listdir(f"{root}/out")) == epochs_before
 
@@ -541,43 +546,6 @@ def test_zorder_colocates_2d_neighbours(spark):
     # Locality: a 4x4 tile occupies exactly 16 consecutive codes.
     tile = sorted(rows[(x, y)] for x in range(8, 12) for y in range(24, 28))
     assert tile == list(range(tile[0], tile[0] + 16))
-
-
-def test_compact_parquet_reduces_files_preserves_rows(spark):
-    import tempfile
-
-    from data_pipeline_with_hdfs_sql_integration_spark.operators.maintenance import compact_parquet
-
-    path = tempfile.mkdtemp(prefix="dps_compact_")
-    spark.range(0, 10000).repartition(40).write.mode("overwrite").parquet(path)
-    before, after = compact_parquet(spark, path, target_file_bytes=1 << 30)
-    assert before == 40 and after == 1
-    assert spark.read.parquet(path).count() == 10000
-
-
-def test_incremental_ingest_high_watermark(spark):
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
-    from data_pipeline_with_hdfs_sql_integration_spark.operators.maintenance import (
-        incremental_ingest,
-    )
-
-    root = tempfile.mkdtemp(prefix="dps_incr_")
-    dest, state = f"{root}/dest", f"{root}/state.json"
-    ev = load(spark, SF_DIR, "events").select("event_id", "ts")
-    cutoff = "2024-01-15 00:00:00"
-    first = ev.filter(F.col("ts") < F.lit(cutoff).cast("timestamp"))
-    n1 = incremental_ingest(spark, first, "ts", dest, state)
-    assert n1 == first.count() > 0
-    # Second run over the FULL source ingests only post-watermark rows.
-    n2 = incremental_ingest(spark, ev, "ts", dest, state)
-    assert n1 + n2 == ev.count()
-    assert spark.read.parquet(dest).count() == ev.count()
-    # Third run: nothing new.
-    assert incremental_ingest(spark, ev, "ts", dest, state) == 0
 
 
 def test_ignore_corrupt_files_resilience(spark):

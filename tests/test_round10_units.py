@@ -232,7 +232,7 @@ def test_ivf2_fine_cells_scale_with_corpus(spark):
     sub = spark.read.parquet(os.path.join(store, "subcentroids"))
     n_fine = sub.count()
     assert n_fine > 16, f"level-2 refinement degenerated to {n_fine} cells"
-    fine = sim.ivf2_fine_assignment(spark, SF_DIR)
+    fine = spark.read.parquet(os.path.join(store, "fine"))  # (vec_id, cell_id, sub_id)
     fp = sim.ivf2_fine_probes(spark, SF_DIR)
     n = fine.count()
     joined = fine.join(

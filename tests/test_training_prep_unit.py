@@ -186,7 +186,9 @@ def test_only_session_changes_session_state():
     """Concurrent queries share one session, so no body may bind a
     temp view name or set a conf on it: tables reach SQL through
     catalog.run_sql's formatter, and tuned confs live on a
-    session.child_session. session.py alone sets confs."""
+    session.child_session. session.py alone sets confs, and alone
+    writes the driver JVM's launch environment (SPARK_SUBMIT_OPTS,
+    SPARK_CONF_DIR), so no other module names either variable."""
     from pathlib import Path
 
     import data_pipeline_with_hdfs_sql_integration_spark as pkg
@@ -196,7 +198,8 @@ def test_only_session_changes_session_state():
         str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
         if str(p.relative_to(root)) != "session.py" and any(
             s in p.read_text(encoding="utf-8")
-            for s in ("createOrReplaceTempView(", ".conf.set(", ".conf.unset(")
+            for s in ("createOrReplaceTempView(", ".conf.set(", ".conf.unset(",
+                      "SPARK_SUBMIT_OPTS", "SPARK_CONF_DIR")
         )
     ]
     assert offenders == []
