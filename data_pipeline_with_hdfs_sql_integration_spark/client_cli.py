@@ -20,6 +20,7 @@ additive ``--host`` / ``--port`` flags (the reference hard-codes
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import sys
 
@@ -55,25 +56,25 @@ def main(argv: list[str] | None = None, out=None) -> int:
     stdout (injectable for the socket test)."""
     out = out or sys.stdout
     args = build_parser().parse_args(argv)
-    client = LenderHttpClient(port=args.port, host=args.host)
-    if args.mode == "DbToHdfs":
-        resp = client.db_to_hdfs()
-        print(resp["status"], file=out)
-    elif args.mode == "CalcAvgLoan":
-        resp = client.calc_avg_loan(args.code)
-        if resp.get("error"):
-            print(f"error: {resp['error']}", file=out)
-        else:
-            print(resp["avg_loan"], file=out)
-            print(resp["source"], file=out)
-    else:  # BlockLocations
-        resp = client.block_locations(args.file)
-        if resp.get("error"):
-            print(f"error: {resp['error']}", file=out)
-        else:
-            # The reference prints the proto map container; the JSON
-            # object is the deterministic analog (sorted for stability).
-            print(json.dumps(resp["block_entries"], sort_keys=True), file=out)
+    with contextlib.closing(LenderHttpClient(port=args.port, host=args.host)) as client:
+        if args.mode == "DbToHdfs":
+            resp = client.db_to_hdfs()
+            print(resp["status"], file=out)
+        elif args.mode == "CalcAvgLoan":
+            resp = client.calc_avg_loan(args.code)
+            if resp.get("error"):
+                print(f"error: {resp['error']}", file=out)
+            else:
+                print(resp["avg_loan"], file=out)
+                print(resp["source"], file=out)
+        else:  # BlockLocations
+            resp = client.block_locations(args.file)
+            if resp.get("error"):
+                print(f"error: {resp['error']}", file=out)
+            else:
+                # The reference prints the proto map container; the JSON
+                # object is the deterministic analog (sorted for stability).
+                print(json.dumps(resp["block_entries"], sort_keys=True), file=out)
     return 0
 
 

@@ -13,18 +13,30 @@ skin derives from one verb table (``VERBS``), one codec pair
 - ``serve_grpc``: the same verbs on a grpc.Server. grpcio is optional;
   without it ``serve_grpc`` raises NotImplementedError.
 
-ThreadingHTTPServer handles each request on its own thread, like the
-reference's ThreadPoolExecutor(max_workers=10); Spark job submission is
-thread-safe, so concurrent CalcAvgLoan calls behave like concurrent RPCs.
+Connections stay open, as a gRPC channel does. The server speaks
+HTTP/1.1 keep-alive and serves each connection on its own thread, so
+concurrent clients are served concurrently, like the reference's
+ThreadPoolExecutor(max_workers=10); the verbs are thread-safe.
+``LenderHttpClient`` keeps one ``http.client.HTTPConnection`` per
+calling thread. Both ends set TCP_NODELAY: each writes headers and body
+as two sends, and with Nagle's algorithm the second send waits for the
+peer's delayed ACK, about 40 ms a request. ``stop()`` shuts down the
+connections still open, so it returns while clients hold idle ones.
 """
 
 from __future__ import annotations
 
+import contextlib
 import functools
+import http.client
+import io
 import json
 import logging
+import socket
 import threading
-import urllib.request
+import time
+import urllib.error
+import weakref
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable
 
@@ -75,6 +87,44 @@ def decode(ctype: str, message: str, raw: bytes) -> dict:
     return {name: body.get(name, t()) for name, t in types.items()}
 
 
+class _Server(ThreadingHTTPServer):
+    """ThreadingHTTPServer whose ``server_close`` also ends the
+    connections it still serves: an idle keep-alive handler blocks in
+    ``readline`` until its socket is shut down, and then its thread exits."""
+
+    def __init__(self, *args) -> None:
+        super().__init__(*args)
+        self._open: dict[socket.socket, threading.Thread] = {}
+        self._open_lock = threading.Lock()
+
+    def process_request(self, request, client_address) -> None:
+        # Registered before the thread starts, so that a connection
+        # accepted just before shutdown() is ended too.
+        thread = threading.Thread(
+            target=self.process_request_thread, args=(request, client_address), daemon=True
+        )
+        with self._open_lock:
+            self._open[request] = thread
+        thread.start()
+
+    def shutdown_request(self, request) -> None:
+        with self._open_lock:
+            self._open.pop(request, None)  # None: never accepted (verify_request)
+        super().shutdown_request(request)
+
+    def server_close(self) -> None:
+        super().server_close()
+        # Under the lock, so that no handler closes its socket meanwhile.
+        with self._open_lock:
+            threads = list(self._open.values())
+            for sock in self._open:
+                with contextlib.suppress(OSError):
+                    sock.shutdown(socket.SHUT_RDWR)
+        deadline = time.monotonic() + 5
+        for thread in threads:
+            thread.join(max(0.0, deadline - time.monotonic()))
+
+
 class LenderHttpService:
     """Serve a Pipeline over HTTP with the proto's three verbs.
 
@@ -94,7 +144,7 @@ class LenderHttpService:
         self.pipeline = pipeline
         self.db_to_store_fn = db_to_store_fn
         self._requested_port = port
-        self._httpd: ThreadingHTTPServer | None = None
+        self._httpd: _Server | None = None
         self._thread: threading.Thread | None = None
 
     # -- verb implementations (proto response dicts) --------------------
@@ -151,6 +201,9 @@ class LenderHttpService:
         service = self
 
         class Handler(BaseHTTPRequestHandler):
+            protocol_version = "HTTP/1.1"  # keep-alive
+            disable_nagle_algorithm = True
+
             def do_POST(self) -> None:  # noqa: N802 — http.server API
                 verb = self.path.strip("/")
                 if verb not in VERBS:
@@ -180,7 +233,7 @@ class LenderHttpService:
             def log_message(self, *args) -> None:  # quiet test output
                 pass
 
-        self._httpd = ThreadingHTTPServer(("127.0.0.1", self._requested_port), Handler)
+        self._httpd = _Server(("127.0.0.1", self._requested_port), Handler)
         self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
         self._thread.start()
         return self._httpd.server_address[1]
@@ -198,7 +251,13 @@ class LenderHttpService:
 class LenderHttpClient:
     """Client for LenderHttpService — the HTTP analog of client.py:9-35,
     one method per proto verb, returning the response dicts with every
-    field. ``wire`` is ``"json"`` or ``"proto"`` (lender.proto bytes)."""
+    field. ``wire`` is ``"json"`` or ``"proto"`` (lender.proto bytes).
+
+    Each calling thread keeps one open connection (``http.client`` sets
+    TCP_NODELAY in ``connect()``) until ``close()`` or the thread ends.
+    A reused connection that fails before a response arrives, because
+    the server closed or restarted, is reopened and the request sent
+    once more. A reply other than 200 raises ``urllib.error.HTTPError``."""
 
     def __init__(
         self,
@@ -209,20 +268,46 @@ class LenderHttpClient:
     ) -> None:
         if wire not in _CTYPES:
             raise ValueError(f"wire must be one of {list(_CTYPES)}, got {wire!r}")
+        self.host, self.port = host, port
         self.base = f"http://{host}:{port}"
         self.timeout_s = timeout_s
         self.ctype = _CTYPES[wire]
+        self._local = threading.local()
+        # Weak: a thread's connection is dropped when the thread ends.
+        self._conns: weakref.WeakSet[http.client.HTTPConnection] = weakref.WeakSet()
+
+    def close(self) -> None:
+        """Close the connections of every thread; a later call reconnects."""
+        for conn in list(self._conns):
+            conn.close()
+
+    def _post(self, conn: http.client.HTTPConnection, verb: str, payload: bytes):
+        conn.request("POST", f"/{verb}", payload, {"Content-Type": self.ctype})
+        return conn.getresponse()
 
     def _call(self, verb: str, body: dict) -> dict:
         req, resp = VERBS[verb]
-        request = urllib.request.Request(
-            f"{self.base}/{verb}",
-            data=encode(self.ctype, req, body),
-            headers={"Content-Type": self.ctype},
-            method="POST",
-        )
-        with urllib.request.urlopen(request, timeout=self.timeout_s) as r:
-            return decode(self.ctype, resp, r.read())
+        payload = encode(self.ctype, req, body)
+        conn = getattr(self._local, "conn", None)
+        if conn is None:
+            conn = self._local.conn = http.client.HTTPConnection(self.host, self.port, timeout=self.timeout_s)
+            self._conns.add(conn)
+        reused = conn.sock is not None
+        try:
+            try:
+                r = self._post(conn, verb, payload)
+            except ConnectionError:  # RemoteDisconnected: no status line
+                if not reused:
+                    raise
+                conn.close()
+                r = self._post(conn, verb, payload)
+            raw = r.read()
+        except BaseException:
+            conn.close()  # a half-used connection cannot carry the next request
+            raise
+        if r.status != 200:
+            raise urllib.error.HTTPError(f"{self.base}/{verb}", r.status, r.reason, r.headers, io.BytesIO(raw))
+        return decode(self.ctype, resp, raw)
 
     def db_to_hdfs(self) -> dict:
         return self._call("DbToHdfs", {})

@@ -259,6 +259,13 @@ def get_spark(app_name: str = "data_pipeline_with_hdfs_sql_integration_spark", s
         # instead of hitting the cache — measured as a session-wide
         # slowdown once the registry outgrew the default.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # PySpark's per-call origin capture: every Column and functions
+        # call otherwise adds ~8 py4j round trips and a Python stack walk
+        # (a warm agg_pricing_summary build sends 877 commands with it,
+        # 247 without). PySpark reads this once per process, so it takes
+        # effect only at session build. Analysis errors then carry no
+        # Python call site.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Comma-separated JDBC driver jars for sources/jdbc.py: a
     # deployment setting (e.g. the MySQL connector's path).

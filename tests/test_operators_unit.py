@@ -286,10 +286,15 @@ def _generated_main(spark, path, vtype, layout):
 
 @pytest.mark.parametrize("layout", ["flat", "hive"])
 @pytest.mark.parametrize("vtype", ["int", "bigint", "double", "decimal(10,2)"])
-def test_arrow_engine_matches_spark_avg_on_every_key(spark, tmp_path, vtype, layout):
+def test_arrow_engine_matches_spark_avg_on_every_key(spark, tmp_path, vtype, layout, monkeypatch):
     """The local (Arrow) engine answers Spark's avg, truncated, on every
-    key: on create, reuse and recreate of a garbage partition file. An
-    empty key is an in-band error that publishes nothing."""
+    key: on create, reuse and recreate of a garbage partition file, and
+    on reuse of a Spark-written partition (two part files, `_SUCCESS`,
+    `.crc` siblings). A partition with no data file recreates, and one
+    deleted after the exists probe creates. An empty key is an in-band
+    error that publishes nothing."""
+    import shutil
+
     from pyspark.sql import functions as F
 
     from data_pipeline_with_hdfs_sql_integration_spark.operators.partition_cache import (
@@ -316,6 +321,22 @@ def test_arrow_engine_matches_spark_avg_on_every_key(spark, tmp_path, vtype, lay
             fh.write(b"garbage")
     assert [(r.avg, r.source) for r in (cache.calc_avg(6), cache.calc_avg(6))] == [
         (want[6], "recreate"), (want[6], "reuse")]
+    cache.main.filter(F.col("k") == 6).select("v").repartition(2).write.mode("overwrite").parquet(
+        cache.partition_path(6))
+    names = os.listdir(cache.partition_path(6))
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    assert len(glob.glob(cache.partition_path(6) + "/*.parquet")) == 2
+    res = cache.calc_avg(6)
+    assert (res.avg, res.source) == (want[6], "reuse")
+    for f in glob.glob(cache.partition_path(7) + "/*.parquet"):
+        os.remove(f)
+    assert [(r.avg, r.source) for r in (cache.calc_avg(7), cache.calc_avg(7))] == [
+        (want[7], "recreate"), (want[7], "reuse")]
+    shutil.rmtree(cache.partition_path(5))
+    with monkeypatch.context() as m:
+        m.setattr(PartitionCache, "_exists", lambda self, path: True)
+        res = cache.calc_avg(5)
+    assert (res.avg, res.source) == (want[5], "create")
     assert spark_avg(99) is None
     empty = cache.calc_avg(99)
     assert (empty.avg, empty.source) == (0, "") and empty.error

@@ -805,3 +805,19 @@ def test_contamination_semantic_is_broadcast_map_pass(spark):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     # partial_max before the exchange: the grouped max reduces per task.
     assert "partial_max" in plan
+
+
+def test_warm_build_sends_no_origin_capture(spark, monkeypatch):
+    """get_spark turns PySpark's per-call origin capture off, so a warm
+    plan build sends no PySparkCurrentOrigin command (with it on, every
+    Column and functions call sends about 8 more py4j commands)."""
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    build = all_queries()["agg_pricing_summary"].fn
+    build(spark, SF_DIR)
+    client = spark._jvm._gateway_client
+    send, sent = client.send_command, []
+    monkeypatch.setattr(client, "send_command",
+                        lambda command, *args, **kw: (sent.append(command), send(command, *args, **kw))[1])
+    build(spark, SF_DIR)
+    assert sent and not [c for c in sent if "PySparkCurrentOrigin" in c]

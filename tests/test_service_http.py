@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import logging
 import os
+import socket
 import tempfile
+import threading
+import time
 import urllib.error
 import urllib.request
 
@@ -48,9 +51,11 @@ def service(spark):
         ),
     )
     port = svc.start()
+    client = LenderHttpClient(port)
     try:
-        yield svc, LenderHttpClient(port)
+        yield svc, client
     finally:
+        client.close()
         svc.stop()
 
 
@@ -119,6 +124,63 @@ def test_unknown_verb_is_404(service):
     with pytest.raises(urllib.error.HTTPError) as err:
         urllib.request.urlopen(req, timeout=10)
     assert err.value.code == 404
+
+
+def test_client_keeps_one_connection_and_reconnects(service, monkeypatch):
+    """One client thread's calls share one accepted connection, with
+    TCP_NODELAY on both ends. A non-200 reply raises HTTPError and
+    closes the connection, as does close(); a server restart on the
+    same port kills it under the client. Either way the next call
+    reconnects and answers; with no server at all, it fails after one
+    retry."""
+    svc, client = service
+    server = svc._httpd
+    accepted = []
+    accept = server.process_request
+    monkeypatch.setattr(server, "process_request",
+                        lambda request, address: (accepted.append(address), accept(request, address))[1])
+    for _ in range(20):
+        assert client.block_locations("/no/such/file")["error"]
+    assert len(accepted) == 1
+    (server_sock,) = server._open
+    for sock in (server_sock, client._local.conn.sock):
+        assert sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+
+    with pytest.raises(urllib.error.HTTPError) as err:
+        client.calc_avg_loan("abc")  # a JSON field of the wrong type: 400
+    assert err.value.code == 400
+    assert client.block_locations("/no/such/file")["error"]
+    assert len(accepted) == 2
+    client.close()
+    assert client.block_locations("/no/such/file")["error"]
+    assert len(accepted) == 3
+
+    port = server.server_address[1]
+    svc.stop()
+    restarted = LenderHttpService(svc.pipeline, port=port)
+    assert restarted.start() == port
+    try:
+        assert client.block_locations("/no/such/file")["error"]
+    finally:
+        restarted.stop()
+    with pytest.raises(ConnectionError):
+        client.block_locations("/no/such/file")
+
+
+def test_stop_ends_idle_keep_alive_connections(service):
+    """A client that made one call keeps its connection open and its
+    handler thread waiting for the next request; stop() ends both."""
+    svc, client = service
+    before = set(threading.enumerate())
+    assert client.block_locations("/no/such/file")["error"]
+    handlers = [t for t in set(threading.enumerate()) - before if "process_request" in t.name]
+    assert len(handlers) == 1
+    t0 = time.monotonic()
+    svc.stop()
+    assert time.monotonic() - t0 < 5
+    for t in handlers:
+        t.join(timeout=5)
+    assert not any(t.is_alive() for t in handlers)
 
 
 def test_concurrent_calc_avg_loan_requests(service):
