@@ -6,9 +6,12 @@ query addresses tables identically to the DuckDB oracle views.
 
 Every parquet read of a table, a derived store or the serve path's
 main goes through ``read_parquet``, which takes its schema from
-``parquet_schema``. That infers each path's schema once per session:
-inference costs a Spark job and 100+ ms of driver time per read, and
-plans load the same tables many times per build.
+``parquet_schema``. That infers each path's schema once per session,
+since plans load the same tables many times per build. A local path's
+schema comes from one parquet footer read on the driver
+(``_footer_schema``, 1-3 ms); a path it cannot type exactly
+(Hive-partitioned directories, nested or unusual column types) is
+inferred by Spark, which costs a Spark job and 100+ ms.
 
 - Key: (applicationId, absolute path), holding the listing
   fingerprint the schema was inferred under — the relative path,
@@ -33,6 +36,7 @@ store back through ``read_parquet``.
 
 from __future__ import annotations
 
+import json
 import os
 import string
 import threading
@@ -83,36 +87,135 @@ def _listing(path: str) -> list[tuple[str, int, int]] | None:
     return [("", st.st_size, st.st_mtime_ns)]
 
 
-# Confs that change what parquet schema inference returns; a change
-# re-infers like a rewrite does.
-_INFERENCE_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.parquet.mergeSchema",
-)
+# Confs that change what parquet schema inference returns, with Spark's
+# defaults; a change re-infers like a rewrite does.
+_INFERENCE_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "false",
+    "spark.sql.parquet.binaryAsString": "false",
+    "spark.sql.parquet.int96AsTimestamp": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    "spark.sql.parquet.mergeSchema": "false",
+}
 _SCHEMAS: dict[tuple, tuple] = {}
 _SCHEMAS_LOCK = threading.Lock()
+
+# The Spark schema a Spark writer stores in the footer's key-value metadata.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def inference_confs(spark: SparkSession) -> dict[str, str]:
+    """`spark`'s value of each of ``_INFERENCE_CONFS``, lowercased."""
+    return {c: str(spark.conf.get(c, d)).lower() for c, d in _INFERENCE_CONFS.items()}
+
+
+def _max_decimal_digits(physical: str, length: int) -> int:
+    """Spark's precision limit for a parquet DECIMAL stored as `physical`
+    (0: Spark does not read it as a decimal)."""
+    if physical == "FIXED_LEN_BYTE_ARRAY":
+        return min(38, len(str(2 ** (8 * length - 1) - 1)) - 1)
+    return {"INT32": 9, "INT64": 18, "BYTE_ARRAY": 38}.get(physical, 0)
+
+
+def _column_type(column, confs: dict[str, str]):
+    """The Spark type Spark's parquet schema converter gives a flat
+    column, or None when the type is outside the types mapped here
+    (INT96, nanosecond or time-of-day values, unsigned ints, UUID,
+    JSON, ...)."""
+    from pyspark.sql import types as T
+
+    physical = column.physical_type
+    logical = json.loads(column.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "Decimal":
+        precision, scale = logical["precision"], logical["scale"]
+        if 1 <= precision <= _max_decimal_digits(physical, column.length):
+            return T.DecimalType(precision, scale)
+        return None
+    if kind == "None":
+        plain = {"BOOLEAN": T.BooleanType(), "INT32": T.IntegerType(), "INT64": T.LongType(),
+                 "FLOAT": T.FloatType(), "DOUBLE": T.DoubleType()}
+        if physical == "BYTE_ARRAY":
+            as_string = confs["spark.sql.parquet.binaryAsString"] == "true"
+            return T.StringType() if as_string else T.BinaryType()
+        return plain.get(physical)
+    if kind == "String" and physical == "BYTE_ARRAY":
+        return T.StringType()
+    if kind == "Date" and physical == "INT32":
+        return T.DateType()
+    if kind == "Int" and logical["isSigned"]:
+        ints = {("INT32", 8): T.ByteType(), ("INT32", 16): T.ShortType(),
+                ("INT32", 32): T.IntegerType(), ("INT64", 64): T.LongType()}
+        return ints.get((physical, logical["bitWidth"]))
+    if kind == "Timestamp" and physical == "INT64" and logical["timeUnit"] in ("milliseconds", "microseconds"):
+        ntz = confs["spark.sql.parquet.inferTimestampNTZ.enabled"] == "true"
+        return T.TimestampNTZType() if ntz and not logical["isAdjustedToUTC"] else T.TimestampType()
+    return None
+
+
+def _footer_schema(path: str, listing, confs: dict[str, str]) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, built on the
+    driver from one footer: the first data file in path order, the one
+    Spark reads when schemas are not merged. None when only Spark can
+    answer: merged schemas, summary files, subdirectories (Hive
+    partitions), an unreadable footer, a nested column, a type
+    ``_column_type`` does not map, or a Spark schema in the footer
+    that differs from the mapped one (field metadata, char/varchar).
+    Every field is nullable, as Spark makes a file source's schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructField
+
+    if confs["spark.sql.parquet.mergeSchema"] == "true" or not listing:
+        return None
+    names = [f for f, _size, _m in listing]
+    if any(os.sep in f for f in names):
+        return None
+    if any(os.path.exists(os.path.join(path, n)) for n in ("_metadata", "_common_metadata")):
+        return None
+    try:
+        md = pq.read_metadata(os.path.join(path, names[0]) if names[0] else path)
+    except (OSError, ValueError):  # Spark reports what is wrong with the file
+        return None
+    fields = []
+    for i in range(md.num_columns):
+        column = md.schema.column(i)
+        # A nested column's path also names its parents; a repeated
+        # top-level column reads as an array.
+        flat = column.path == column.name and column.max_repetition_level == 0
+        spark_type = _column_type(column, confs) if flat else None
+        if spark_type is None:
+            return None
+        fields.append(StructField(column.name, spark_type, True))
+    schema = StructType(fields)
+    stored = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is not None:
+        try:
+            written = StructType.fromJson(json.loads(stored)).fields
+        except (ValueError, KeyError, TypeError):  # a schema pyspark cannot parse
+            return None
+        if [StructField(f.name, f.dataType, True, f.metadata) for f in written] != schema.fields:
+            return None
+    return schema
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """A parquet path's schema, inferred once per session and listing
-    fingerprint (see the module docstring). Inference runs outside the
+    fingerprint (see the module docstring): from the footer when
+    ``_footer_schema`` can, else by Spark. Inference runs outside the
     lock: concurrent cold calls for one path each infer, and the last
     insert wins."""
     listing = _listing(path)
     if listing is None:
         return spark.read.parquet(path).schema
     key = (spark.sparkContext.applicationId, os.path.abspath(path))
-    version = (tuple(listing), tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    confs = inference_confs(spark)
+    version = (tuple(listing), tuple(confs.values()))
     with _SCHEMAS_LOCK:
         for k in [k for k in _SCHEMAS if k[0] != key[0]]:
             del _SCHEMAS[k]
         seen_version, schema = _SCHEMAS.get(key, (None, None))
     if seen_version == version:
         return schema
-    schema = spark.read.parquet(path).schema
+    schema = _footer_schema(path, listing, confs) or spark.read.parquet(path).schema
     with _SCHEMAS_LOCK:
         _SCHEMAS[key] = (version, schema)
     return schema

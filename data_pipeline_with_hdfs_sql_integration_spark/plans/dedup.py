@@ -218,7 +218,7 @@ def _minhash_bands(sigs: DataFrame) -> DataFrame:
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load(spark, sf_dir, "documents")
-        .groupBy(F.lower(F.sha2(F.col("text"), 256)).alias("text_hash"))
+        .groupBy(F.sha2(F.col("text"), 256).alias("text_hash"))
         .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
     )
 
@@ -1182,7 +1182,7 @@ def stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = W.documents_stream_duplicated(spark, sf_dir)
     deduped = docs.select(
-        F.lower(F.sha2(F.col("text"), 256)).alias("text_hash")
+        F.sha2(F.col("text"), 256).alias("text_hash")
     ).dropDuplicates(["text_hash"])
     agg = (
         deduped.select(F.substring("text_hash", 1, 1).alias("bucket"))

@@ -1130,7 +1130,7 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "source",
             "n_tokens",
-            F.lower(F.sha2(F.col("text"), 256)).alias("h"),
+            F.sha2(F.col("text"), 256).alias("h"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

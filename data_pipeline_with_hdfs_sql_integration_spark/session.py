@@ -53,6 +53,11 @@ RUNTIME_CONFS = {
     # MICROS (what Delta writes) do, so txlog tables can data-skip on
     # timestamp columns. Spark has no per-write option for it.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # String case mapping (lower, upper) is the JVM's, as in Spark 3.5,
+    # not ICU's: the first ICU call in a JVM builds a title-case table
+    # over every code point (~1.5 s of the tokenizer's first pass over
+    # sf0.01 documents). ASCII maps the same either way.
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 
@@ -65,6 +70,13 @@ def default_parallelism() -> int:
 #: transformWithStateInPandas worker's protobuf import from the host's
 #: google-cloud-sdk copy. See the shim's docstring for the mechanism.
 TWS_VENDOR_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_vendor")
+
+
+#: Dir of the Python worker daemon module `spark_graft_daemon`, which
+#: imports pyspark from site-packages rather than Spark's pyspark.zip
+#: (see its docstring). A dir of its own, not a package: `python -m`
+#: must not run this package's __init__.
+WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
 
 
 def tws_ready(spark: SparkSession) -> bool:
@@ -94,7 +106,10 @@ def tws_ready(spark: SparkSession) -> bool:
     if TWS_VENDOR_DIR not in current.split(os.pathsep):
         current = os.pathsep.join(p for p in (TWS_VENDOR_DIR, current) if p)
         os.environ["PYTHONPATH"] = current
-    spark.sparkContext.environment["PYTHONPATH"] = current
+    # Merge: the worker env may already name WORKER_DIR (get_spark).
+    env = spark.sparkContext.environment
+    entries = [*current.split(os.pathsep), *env.get("PYTHONPATH", "").split(os.pathsep)]
+    env["PYTHONPATH"] = os.pathsep.join(dict.fromkeys(p for p in entries if p))
     return True
 
 
@@ -266,6 +281,11 @@ def get_spark(app_name: str = "data_pipeline_with_hdfs_sql_integration_spark", s
         # effect only at session build. Analysis errors then carry no
         # Python call site.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers import pyspark compiled, not from pyspark.zip:
+        # a fresh session's first mapInPandas took 2.0-2.2 s instead of
+        # 3.1-3.3 s on a 4-core host.
+        .config("spark.python.daemon.module", "spark_graft_daemon")
+        .config("spark.executorEnv.PYTHONPATH", WORKER_DIR)
     )
     # Comma-separated JDBC driver jars for sources/jdbc.py: a
     # deployment setting (e.g. the MySQL connector's path).

@@ -53,7 +53,8 @@ def _rows(df):
 
 def test_repeat_read_of_unchanged_path_starts_no_job(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "t")
-    spark.range(50).withColumn("s", F.col("id").cast("string")).write.parquet(path)
+    # An array column: the footer mapping leaves it to Spark's inference.
+    spark.range(50).withColumn("s", F.array(F.col("id").cast("string"))).write.parquet(path)
     first, first_jobs = _jobs_started(spark, lambda: read_parquet(spark, path))
     again, again_jobs = _jobs_started(spark, lambda: read_parquet(spark, path))
     assert first_jobs >= 1  # schema inference
@@ -64,6 +65,128 @@ def test_repeat_read_of_unchanged_path_starts_no_job(spark, tmp_path, monkeypatc
     opened = _parquet_opens(monkeypatch)
     assert catalog.parquet_schema(spark, path) == first.schema
     assert opened == []
+
+
+def _spark_schema(spark, path):
+    return spark.read.parquet(path).schema
+
+
+def _footer(spark, path):
+    """catalog._footer_schema under `spark`'s inference confs."""
+    return catalog._footer_schema(path, catalog._listing(path), catalog.inference_confs(spark))
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_footer_schema_of_every_fixture_table_is_sparks(spark, sf):
+    """Every fixture table but the nested embeddings gets Spark's
+    inferred schema from its footer (timestamp_ntz included)."""
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+    for name in catalog.TABLES:
+        path = catalog.table_path(sf_dir, name)
+        driver = _footer(spark, path)
+        if name == "embeddings":
+            assert driver is None
+        else:
+            assert driver == _spark_schema(spark, path), name
+    orders = _footer(spark, catalog.table_path(sf_dir, "orders"))
+    assert orders["o_orderdate"].dataType.simpleString() == "timestamp_ntz"
+
+
+def test_footer_schema_of_spark_written_types(spark, tmp_path):
+    """A Spark-written file: the flat columns map exactly, the file with
+    an array column falls back."""
+    df = spark.sql(
+        "SELECT timestamp'2020-01-02 03:04:05' AS ts, timestamp_ntz'2020-01-02 03:04:05' AS ntz,"
+        " CAST(12.5 AS DECIMAL(10,2)) AS dec, CAST(1 AS TINYINT) AS ti,"
+        " CAST(2 AS SMALLINT) AS si, array(1L, 2L) AS arr, 'x' AS s, date'2020-01-02' AS d,"
+        " CAST('ab' AS BINARY) AS b, 1.5f AS f, true AS bo"
+    )
+    with_array, flat = str(tmp_path / "with_array"), str(tmp_path / "flat")
+    df.write.parquet(with_array)
+    df.drop("arr").write.parquet(flat)
+    got = _footer(spark, with_array)
+    assert got is None or got == _spark_schema(spark, with_array)
+    assert _footer(spark, flat) == _spark_schema(spark, flat)
+    assert [f.dataType.simpleString() for f in _footer(spark, flat).fields] == [
+        "timestamp", "timestamp_ntz", "decimal(10,2)", "tinyint", "smallint", "string",
+        "date", "binary", "float", "boolean",
+    ]
+
+
+def test_footer_schema_honours_inference_confs(spark, tmp_path):
+    """binaryAsString and inferTimestampNTZ change the footer mapping as
+    they change Spark's; a Spark schema in the footer that disagrees
+    with the mapping falls back."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_with_hdfs_sql_integration_spark.session import child_session
+
+    arrow = str(tmp_path / "arrow.parquet")
+    pq.write_table(pa.table({
+        "b": pa.array([b"x"]), "ts": pa.array([1], pa.timestamp("us")),
+        "tz": pa.array([1], pa.timestamp("ms", tz="UTC")), "i8": pa.array([1], pa.int8()),
+        "d": pa.array([1], pa.decimal128(30, 2)), "dt": pa.array([1], pa.date32()),
+    }), arrow)
+    written = str(tmp_path / "spark")
+    spark.sql(
+        "SELECT timestamp_ntz'2020-01-02 03:04:05' AS ntz, CAST('a' AS BINARY) AS b"
+    ).write.parquet(written)
+    for tuned in ({}, {"spark.sql.parquet.binaryAsString": "true"},
+                  {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}):
+        session = child_session(spark, tuned)
+        assert _footer(session, arrow) == _spark_schema(session, arrow), tuned
+        got = _footer(session, written)
+        assert (got is None) == bool(tuned), tuned
+        assert got is None or got == _spark_schema(session, written)
+    session = child_session(spark, {"spark.sql.parquet.mergeSchema": "true"})
+    assert _footer(session, arrow) is None
+
+
+def test_footer_schema_falls_back_for_spark_only_layouts(spark, tmp_path):
+    """Hive partitions, INT96, unsigned ints and nanosecond timestamps
+    are left to Spark (whose nanosAsLong schema read_parquet keeps)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    hive = str(tmp_path / "hive")
+    spark.range(6).withColumn("p", (F.col("id") % 2).cast("int")).write.partitionBy("p").parquet(hive)
+    ts = pa.table({"ts": pa.array([1_500_000_000_123_456_789], pa.timestamp("ns"))})
+    nanos, int96 = str(tmp_path / "nanos.parquet"), str(tmp_path / "int96.parquet")
+    pq.write_table(ts, nanos)
+    pq.write_table(ts, int96, use_deprecated_int96_timestamps=True)
+    unsigned = str(tmp_path / "unsigned.parquet")
+    pq.write_table(pa.table({"u": pa.array([1], pa.uint32())}), unsigned)
+    assert _footer(spark, hive) is None
+    for path in (hive, nanos, int96, unsigned):
+        got = _footer(spark, path)
+        assert got is None or got == _spark_schema(spark, path), path
+        assert catalog.parquet_schema(spark, path) == _spark_schema(spark, path), path
+    assert catalog.parquet_schema(spark, nanos)["ts"].dataType.simpleString() == "bigint"
+
+
+def test_first_load_of_a_fixture_table_starts_no_job(spark, tmp_path, monkeypatch):
+    """A first catalog.load of a footer-typed table starts no Spark job
+    and opens no relation but its read; a repeat reads no footer."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    names = ("orders", "lineitem", "events", "documents")
+    for name in names:
+        shutil.copy(catalog.table_path(SF_DIR, name), catalog.table_path(str(tmp_path), name))
+    opened = _parquet_opens(monkeypatch)
+    for name in names:
+        df, jobs = _jobs_started(spark, lambda: load(spark, str(tmp_path), name))
+        assert jobs == 0, name
+        assert df.schema == load(spark, SF_DIR, name).schema
+    assert opened == [p for n in names for p in (catalog.table_path(str(tmp_path), n),
+                                                 catalog.table_path(SF_DIR, n))]
+    footers = []
+    real = pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata", lambda *a, **k: footers.append(a) or real(*a, **k))
+    load(spark, str(tmp_path), "orders")
+    assert footers == []
 
 
 def test_repeat_build_cache_starts_no_job(spark, tmp_path):
