@@ -11,20 +11,24 @@ since plans load the same tables many times per build. A local path's
 schema comes from one parquet footer read on the driver
 (``_footer_schema``, 1-3 ms); a path it cannot type exactly
 (Hive-partitioned directories, nested or unusual column types) is
-inferred by Spark, which costs a Spark job and 100+ ms.
+inferred by Spark, which costs a Spark job and 100+ ms. The memo holds
+schemas, never DataFrames: every read is a fresh relation with fresh
+expression IDs, so two loads of one table still self-join.
 
-- Key: (applicationId, absolute path), holding the listing
-  fingerprint the schema was inferred under — the relative path,
-  ``st_mtime_ns`` and size of every data file (``_listing``) — plus the
-  parquet confs that change inference. A read whose fingerprint or
-  confs differ (the path was rewritten) re-infers and replaces it.
-- Value: the schema, never a DataFrame. Every read is
-  ``spark.read.schema(s).parquet(path)`` — a fresh relation with fresh
-  expression IDs, so two loads of one table still self-join.
-- Entries of other applicationIds (a restarted session) are evicted
-  on access, as in ``memo_persist``; a lock guards the dict.
-- Non-local paths (hdfs://, s3a://...) have no driver-side listing and
-  infer on every call.
+Freshness: a local source's version is its ``_listing``, the relative
+path, size, ``st_mtime_ns`` and ``st_ino`` of every data file. Every
+session cache keys on it: the schema memo (with the parquet confs that
+change inference), ``memo_persist`` (the listing of its ``sf_dir``)
+and the derived stores (``deterministic_tmp_dir`` puts its digest in
+the directory name). A part file rewritten in place, a file added or
+removed, or a replacement renamed into place changes the listing, and
+the next call rebuilds. The one change it cannot see is bytes that
+change with the same size, mtime and inode. The memos are scoped to
+the applicationId, and entries of another (a restarted session) are
+evicted on access. Non-local paths (hdfs://, s3a://...) have no
+driver-side listing: their schema is inferred on every read,
+``memo_persist`` keeps its first frame, and a derived store is keyed
+to the path alone.
 
 Every derived directory a plan builds (index stores, layout copies,
 transaction-log tables, the serve path's main) is published by
@@ -62,11 +66,12 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _listing(path: str) -> list[tuple[str, int, int]] | None:
-    """(relative path, size, st_mtime_ns) of every data file under a
-    local parquet path, from the driver's file listing — no Spark job.
-    Names starting with ``_`` or ``.`` (_SUCCESS, .crc) are skipped.
-    None for non-local paths (hdfs://, s3a://...)."""
+def _listing(path: str) -> list[tuple[str, int, int, int]] | None:
+    """(relative path, size, st_mtime_ns, st_ino) of every data file
+    under a local path, from the driver's file listing — no Spark job.
+    The version of the path for every session cache (see the module
+    docstring). Names starting with ``_`` or ``.`` (_SUCCESS, .crc) are
+    skipped. None for a missing or non-local path (hdfs://, s3a://...)."""
     if os.path.isdir(path):
         out = []
         for root, _dirs, files in os.walk(path):
@@ -78,13 +83,40 @@ def _listing(path: str) -> list[tuple[str, int, int]] | None:
                     st = os.stat(full)
                 except FileNotFoundError:  # removed mid-walk by a writer
                     continue
-                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns, st.st_ino))
         return sorted(out)
     try:
         st = os.stat(path)
     except OSError:
         return None
-    return [("", st.st_size, st.st_mtime_ns)]
+    return [("", st.st_size, st.st_mtime_ns, st.st_ino)]
+
+
+# Guards the dict bookkeeping of every session memo below.
+_MEMO_LOCK = threading.Lock()
+
+
+def _versioned(memo: dict, spark: SparkSession, key: tuple, version, build) -> tuple:
+    """(the value ``build()`` makes for ``key`` at ``version``, the value
+    it replaced or None), memoized in ``memo`` per applicationId.
+    Entries of other applicationIds are evicted. ``build()`` runs
+    outside the lock: racing cold calls each build, and the first
+    insert at ``version`` wins."""
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, *key)
+    with _MEMO_LOCK:
+        for k in [k for k in memo if k[0] != app_id]:
+            del memo[k]
+        entry = memo.get(key)
+    if entry is not None and entry[0] == version:
+        return entry[1], None
+    built = build()
+    with _MEMO_LOCK:
+        entry = memo.get(key)
+        if entry is not None and entry[0] == version:
+            return entry[1], None
+        memo[key] = (version, built)
+    return built, None if entry is None else entry[1]
 
 
 # Confs that change what parquet schema inference returns, with Spark's
@@ -97,7 +129,6 @@ _INFERENCE_CONFS = {
     "spark.sql.parquet.mergeSchema": "false",
 }
 _SCHEMAS: dict[tuple, tuple] = {}
-_SCHEMAS_LOCK = threading.Lock()
 
 # The Spark schema a Spark writer stores in the footer's key-value metadata.
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -166,7 +197,7 @@ def _footer_schema(path: str, listing, confs: dict[str, str]) -> StructType | No
 
     if confs["spark.sql.parquet.mergeSchema"] == "true" or not listing:
         return None
-    names = [f for f, _size, _m in listing]
+    names = [row[0] for row in listing]
     if any(os.sep in f for f in names):
         return None
     if any(os.path.exists(os.path.join(path, n)) for n in ("_metadata", "_common_metadata")):
@@ -197,34 +228,34 @@ def _footer_schema(path: str, listing, confs: dict[str, str]) -> StructType | No
     return schema
 
 
-def parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """A parquet path's schema, inferred once per session and listing
-    fingerprint (see the module docstring): from the footer when
-    ``_footer_schema`` can, else by Spark. Inference runs outside the
-    lock: concurrent cold calls for one path each infer, and the last
-    insert wins."""
+def _memo_schema(spark: SparkSession, path: str) -> StructType | None:
+    """A local path's schema, inferred once per session, listing and
+    inference confs: from the footer when ``_footer_schema`` can, else
+    by Spark. None for a non-local path."""
     listing = _listing(path)
     if listing is None:
-        return spark.read.parquet(path).schema
-    key = (spark.sparkContext.applicationId, os.path.abspath(path))
+        return None
     confs = inference_confs(spark)
-    version = (tuple(listing), tuple(confs.values()))
-    with _SCHEMAS_LOCK:
-        for k in [k for k in _SCHEMAS if k[0] != key[0]]:
-            del _SCHEMAS[k]
-        seen_version, schema = _SCHEMAS.get(key, (None, None))
-    if seen_version == version:
-        return schema
-    schema = _footer_schema(path, listing, confs) or spark.read.parquet(path).schema
-    with _SCHEMAS_LOCK:
-        _SCHEMAS[key] = (version, schema)
+    schema, _ = _versioned(
+        _SCHEMAS, spark, (os.path.abspath(path),), (tuple(listing), tuple(confs.values())),
+        lambda: _footer_schema(path, listing, confs) or spark.read.parquet(path).schema,
+    )
     return schema
 
 
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """A parquet path's schema: memoized for a local path, inferred by
+    Spark for any other."""
+    schema = _memo_schema(spark, path)
+    return spark.read.parquet(path).schema if schema is None else schema
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the schema from
-    ``parquet_schema``: a fresh relation that infers nothing."""
-    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    """``spark.read.parquet(path)``, with the memoized schema for a
+    local path: a fresh relation that infers nothing. A non-local path
+    opens its one relation, which infers."""
+    schema = _memo_schema(spark, path)
+    return spark.read.parquet(path) if schema is None else spark.read.schema(schema).parquet(path)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -261,8 +292,8 @@ def _estimated_scan_splits(spark: SparkSession, path: str) -> int:
         return -1
     max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20)
-    total = sum(size for _f, size, _m in listing)
-    chunks = sum(max(1, -(-size // max_bytes)) for _f, size, _m in listing)
+    total = sum(size for _f, size, *_ in listing)
+    chunks = sum(max(1, -(-size // max_bytes)) for _f, size, *_ in listing)
     return max(1, min(chunks, -(-(total + chunks * open_cost) // max_bytes)))
 
 
@@ -273,7 +304,7 @@ def table_on_disk_bytes(sf_dir: str, name: str) -> int:
     listing = _listing(table_path(sf_dir, name))
     if listing is None:
         return -1
-    return sum(size for _f, size, _m in listing)
+    return sum(size for _f, size, *_ in listing)
 
 
 def row_count(spark: SparkSession, path: str) -> int:
@@ -286,7 +317,7 @@ def row_count(spark: SparkSession, path: str) -> int:
         return read_parquet(spark, path).count()
     return sum(
         pq.read_metadata(os.path.join(path, f) if f else path).num_rows
-        for f, _size, _m in listing
+        for f, *_ in listing
     )
 
 
@@ -383,46 +414,28 @@ def run_sql(spark: SparkSession, sf_dir: str, text: str, args: dict | None = Non
     return spark.sql(text, args, **{n: load(spark, sf_dir, n) for n in names})
 
 
-# One persisted copy per (application, key) for derived frames that
-# MANY queries re-derive identically (the hashed-token/shingle base,
-# parsed vector tables). Without the memo, every query call stacks a
-# fresh persist of the same data in the CacheManager — never
-# unpersisted, so a 79-query bench session accumulates dozens of
-# identical cached copies, and the eviction/GC churn shows up as a
-# session-wide slowdown (round 5: +31% on the common bench subset with
-# zero plan changes). The accessor re-persists after an external
-# clearCache, so callers may clear the session cache freely between
-# queries to bound memory at one query's working set.
-_MEMO_PERSIST: dict[tuple, DataFrame] = {}
-_MEMO_LOCK = threading.Lock()
+# One persisted copy per session, name and dataset of the derived
+# frames many queries re-derive identically (the hashed-token/shingle
+# base, parsed vector tables): a persist per query call would stack
+# identical cached copies in the CacheManager, and their eviction and
+# GC churn slows the whole session.
+_MEMO_PERSIST: dict[tuple, tuple] = {}
 
 
-def memo_persist(spark: SparkSession, key: tuple, build) -> DataFrame:
-    """Return the session's single persisted instance of the frame
-    `build()` constructs, creating (and re-persisting, if a
-    clearCache dropped it) on demand. `key` must determine the frame's
-    content (e.g. ("shingle_base", sf_dir)).
-
-    Entries are keyed by applicationId; on access, entries from OTHER
-    appIds (dead JVMs after a session restart) are evicted so the memo
-    can't grow for the life of the process or hand back DataFrames
-    bound to a gone SparkContext. The check-then-insert is guarded by
-    a lock for concurrent query builds (only the dict bookkeeping —
-    `build()` runs outside the lock; a racing duplicate build loses
-    the insert and its frame is simply never persisted)."""
+def memo_persist(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
+    """The session's one persisted copy of the frame ``build()`` makes
+    from the tables under ``sf_dir``; ``name`` and ``sf_dir`` must
+    determine its content. Versioned by ``_listing(sf_dir)``, taken
+    before ``build()``: a rewritten dataset rebuilds, and the replaced
+    frame is unpersisted first, since the CacheManager matches plans
+    and would answer the new frame with the old frame's cached rows. A
+    frame that a ``clearCache`` dropped is persisted again, so callers
+    may clear the session cache between queries."""
     from pyspark.storagelevel import StorageLevel
 
-    app_id = spark.sparkContext.applicationId
-    full_key = (app_id, *key)
-    with _MEMO_LOCK:
-        stale = [k for k in _MEMO_PERSIST if k[0] != app_id]
-        for k in stale:
-            del _MEMO_PERSIST[k]
-        df = _MEMO_PERSIST.get(full_key)
-    if df is None:
-        built = build()
-        with _MEMO_LOCK:
-            df = _MEMO_PERSIST.setdefault(full_key, built)
+    df, replaced = _versioned(_MEMO_PERSIST, spark, (name, sf_dir), _listing(sf_dir), build)
+    if replaced is not None:
+        replaced.unpersist()
     lvl = df.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
         df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -498,27 +511,18 @@ def publish_store(target: str, build, complete=is_complete) -> None:
 
 
 def clear_derived_stores(sf_dir: str) -> list[str]:
-    """Remove every PUBLISHED derived store keyed to ``sf_dir`` (or
-    its tables) so the next access rebuilds it in-process — which is
-    what makes ``STORE_BUILD_TIMES`` populate. bench.py's cold-store
-    pre-pass uses this: with /tmp warm across driver rounds, every
-    build is a cache hit, ``store_build_s`` commits as ``{}``, and a
-    regression caused by index-build cost can't be separated from
-    query cost (the round-6 accounting contract). Matching is by the
-    deterministic_tmp_dir digest of the SF's source paths — only this
-    SF's derived artifacts are touched, never another session's.
-
-    NOT safe while another process is mid-read on the same SF's
-    stores (bench runs standalone; gate via
-    SPARK_GRAFT_BENCH_COLD_STORES=0 when sharing the box)."""
+    """Remove every published derived store keyed to ``sf_dir`` or its
+    tables as they are now, so the next access rebuilds it in-process
+    and lands its build time in ``STORE_BUILD_TIMES``; returns the
+    removed names. bench.py and perfbench clear before a cold pass.
+    Not safe while another process reads the same dataset's stores
+    (``SPARK_GRAFT_BENCH_COLD_STORES=0`` keeps bench.py from clearing)."""
     import glob
     import shutil
-    import tempfile
 
     removed: list[str] = []
     for src in [sf_dir] + [table_path(sf_dir, t) for t in TABLES]:
-        pattern = f"dps_*_{_source_digest(src)}"
-        for d in glob.glob(os.path.join(tempfile.gettempdir(), pattern)):
+        for d in glob.glob(deterministic_tmp_dir("*", src)):
             shutil.rmtree(d, ignore_errors=True)
             removed.append(os.path.basename(d))
     return sorted(removed)
@@ -535,25 +539,16 @@ def params_digest(*params) -> str:
     return hashlib.sha256(repr(params).encode()).hexdigest()[:8]
 
 
-def _source_digest(source_path: str) -> str:
-    """sha256[:16] of a source's absolute path, mtime and size: the
-    version key of every store derived from it (just the path when the
-    source is missing)."""
-    import hashlib
-
-    ap = os.path.abspath(source_path)
-    try:
-        st = os.stat(ap)
-        token = f"{ap}|{st.st_mtime_ns}|{st.st_size}"
-    except OSError:
-        token = ap
-    return hashlib.sha256(token.encode()).hexdigest()[:16]
-
-
 def deterministic_tmp_dir(kind: str, source_path: str) -> str:
-    """Stable scratch dir for artifacts derived from `source_path`,
-    keyed on the source's identity AND content version (mtime+size),
-    so regenerated fixtures can never serve a stale derived copy."""
+    """Stable scratch dir for artifacts derived from ``source_path``,
+    keyed on its absolute path and ``_listing`` (the path alone when the
+    source is missing or not local), so a rewritten source never serves
+    a stale derived copy."""
+    import hashlib
     import tempfile
 
-    return os.path.join(tempfile.gettempdir(), f"dps_{kind}_{_source_digest(source_path)}")
+    ap = os.path.abspath(source_path)
+    listing = _listing(ap)
+    token = ap if listing is None else repr((ap, listing))
+    digest = hashlib.sha256(token.encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), f"dps_{kind}_{digest}")

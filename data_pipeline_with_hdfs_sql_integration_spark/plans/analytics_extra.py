@@ -156,8 +156,8 @@ def agg_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _day_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events partitioned by event day: the fact of both pruning
     queries, published once per source version. Keyed on the SOURCE
-    file's content version (mtime+size): a regenerated fixture can
-    never serve a stale partitioned copy."""
+    file's listing (``catalog.deterministic_tmp_dir``): a regenerated
+    fixture can never serve a stale partitioned copy."""
     path = deterministic_tmp_dir("layout_day", table_path(sf_dir, "events"))
     publish_store(
         path,
@@ -380,8 +380,8 @@ def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         zorder2,
     )
 
-    # Keyed on the SOURCE file's content version (mtime+size) AND the
-    # layout parameters (partition count): a regenerated fixture or a
+    # Keyed on the SOURCE file's listing AND the layout parameters
+    # (partition count): a regenerated fixture or a
     # re-tuned layout can never serve a stale z-ordered copy. 64 z-range
     # partitions ≈ a 3-level quadtree split, tight enough that each row
     # group's (partkey, suppkey) min/max rectangle is small.

@@ -141,8 +141,7 @@ def _shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would stack five identical cached copies of the whole hashed
     # corpus in the CacheManager (the round-5 session-drift cause).
     base = memo_persist(
-        spark,
-        ("shingle_base", sf_dir),
+        spark, "shingle_base", sf_dir,
         lambda: _token_base(_docs_parallel(spark, sf_dir)),
     )
     return _sh_select(base)
@@ -877,8 +876,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Idempotent per-batch sink: foreachBatch is at-least-once, so a
         # replayed micro-batch must overwrite ITS OWN directory, not
         # append a second copy of its verdicts — effectively exactly-once
-        # (same contract as streaming/sinks.stream_to_parquet_exactly_once;
-        # plain dir names, not k=v, so read-back sees no partition column).
+        # (plain dir names, not k=v, so read-back sees no partition column).
         result.write.mode("overwrite").parquet(os.path.join(out, f"batch-{batch_id}"))
 
     q = (
@@ -1857,8 +1855,7 @@ def _register_dedup_semantic() -> None:
         from data_pipeline_with_hdfs_sql_integration_spark.catalog import memo_persist
 
         m = memo_persist(
-            spark,
-            ("semantic_m", sf_dir),
+            spark, "semantic_m", sf_dir,
             lambda: fp.join(bc(sigs), "vec_id").select(
                 "vec_id", "cell_id", "sub_id", "sig_lo", "sig_hi"
             ),
@@ -2054,8 +2051,7 @@ def _register_dedup_incremental_semantic() -> None:
         from data_pipeline_with_hdfs_sql_integration_spark.catalog import memo_persist
 
         m = memo_persist(
-            spark,
-            ("semantic_m", sf_dir),
+            spark, "semantic_m", sf_dir,
             lambda: fp.join(bc(sigs), "vec_id").select(
                 "vec_id", "cell_id", "sub_id", "sig_lo", "sig_hi"
             ),
@@ -2915,8 +2911,7 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import memo_persist
 
     ex = memo_persist(
-        spark,
-        ("containment_ex", sf_dir),
+        spark, "containment_ex", sf_dir,
         lambda: sh.select("doc_id", F.explode("sh").alias("s")),
     )
     dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))

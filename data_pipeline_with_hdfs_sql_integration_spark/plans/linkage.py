@@ -233,8 +233,7 @@ def anomaly_mad_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_with_hdfs_sql_integration_spark.catalog import memo_persist
 
     r = memo_persist(
-        spark,
-        ("anomaly_mad_r", sf_dir),
+        spark, "anomaly_mad_r", sf_dir,
         lambda: j.withColumn("rn", F.row_number().over(w)).withColumn(
             "n", F.count(F.lit(1)).over(wn)
         ),

@@ -316,8 +316,7 @@ def text_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join run twice). token_tf_base is the SAME relation tfidf
     # persists — one cached copy serves both queries in a session.
     candp = memo_persist(
-        spark,
-        ("minhash_candp", sf_dir),
+        spark, "minhash_candp", sf_dir,
         lambda: (
             ba.join(
                 bb,

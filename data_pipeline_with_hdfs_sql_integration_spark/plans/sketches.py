@@ -525,8 +525,7 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     members = memo_persist(
-        spark,
-        ("bloom_members", sf_dir),
+        spark, "bloom_members", sf_dir,
         lambda: (
             orders.filter(F.col("o_orderstatus") == "F")
             .select(F.col("o_custkey").alias("k"))

@@ -44,7 +44,7 @@ def token_tf_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks = docs.select("doc_id", F.explode(tf.tokens(F.col("text"))).alias("tok"))
         return toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
 
-    return memo_persist(spark, ("tfidf_tfs", sf_dir), build)
+    return memo_persist(spark, "tfidf_tfs", sf_dir, build)
 
 
 @query(
@@ -903,8 +903,7 @@ def quality_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached copy per session however often the query is constructed
     # (ADVICE r12).
     dg = memo_persist(
-        spark,
-        ("lm_bigram_dg", sf_dir),
+        spark, "lm_bigram_dg", sf_dir,
         lambda: toks.select("doc_id", F.explode(pairs).alias("g"))
         .groupBy("doc_id", F.col("g.a").alias("a"), F.col("g.b").alias("b"))
         .agg(F.count(F.lit(1)).alias("k")),
@@ -914,8 +913,7 @@ def quality_lm_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab^2 aggregate twice (r13 plan: two identical Exchange+
     # HashAggregate subtrees over the dg cache).
     cab = memo_persist(
-        spark,
-        ("lm_bigram_cab", sf_dir),
+        spark, "lm_bigram_cab", sf_dir,
         lambda: dg.groupBy("a", "b").agg(F.sum("k").alias("cab")),
     )
     ca = cab.groupBy("a").agg(F.sum("cab").alias("ca"))

@@ -1,36 +1,16 @@
-"""Streaming sinks beyond the memory sink: foreachBatch for
-exactly-once delivery to batch-oriented targets.
+"""Streaming sinks beyond the memory sink: a foreachBatch MERGE into a
+plain parquet snapshot (``stream_merge_snapshot``'s sink).
 
 foreachBatch hands each micro-batch to a function as a regular
-DataFrame together with a monotonically increasing epoch id. Writing
-to a path keyed by epoch (or MERGE-ing on a key) makes re-delivered
-batches idempotent — Spark replays an epoch after failure, and the
-overwrite of the same epoch dir yields the same bytes: effectively
-exactly-once into parquet.
+DataFrame together with a monotonically increasing epoch id. Spark
+replays an epoch after a failure, so the batch function must be
+idempotent: merging a batch keyed on the user id twice is a no-op,
+which makes the snapshot effectively exactly-once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def stream_to_parquet_exactly_once(
-    agg: DataFrame, out_root: str, checkpoint: str
-) -> None:
-    """Drive a (bounded) streaming aggregation into per-epoch parquet
-    dirs. Re-running an epoch overwrites its own dir — idempotent."""
-
-    def _write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_root}/epoch={epoch_id}")
-
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(_write_epoch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+from pyspark.sql import SparkSession
 
 
 def stream_merge_latest_snapshot(

@@ -1,6 +1,7 @@
-"""catalog.read_parquet and parquet_schema: one schema inference per
-path and listing fingerprint per session, with fresh relations on
-every read."""
+"""catalog's reads and session caches: one schema inference per path
+and listing per session with fresh relations on every read, the
+listing as the one version of the schema memo, memo_persist and the
+derived stores, and the atomic store publish."""
 
 from __future__ import annotations
 
@@ -306,7 +307,7 @@ def test_listing_helpers_agree(spark, tmp_path, monkeypatch):
     spark.range(30).repartition(3).write.parquet(path)
     listing = catalog._listing(path)
     assert len(listing) == 3
-    assert catalog.table_on_disk_bytes(sf, "orders") == sum(size for _f, size, _m in listing)
+    assert catalog.table_on_disk_bytes(sf, "orders") == sum(size for _f, size, *_ in listing)
     assert catalog.row_count(spark, path) == 30
     docs = catalog.table_path(SF_DIR, "documents")
     assert catalog.row_count(spark, docs) == load(spark, SF_DIR, "documents").count()
@@ -314,6 +315,214 @@ def test_listing_helpers_agree(spark, tmp_path, monkeypatch):
     assert catalog.table_on_disk_bytes("hdfs://nowhere", "orders") == -1
     monkeypatch.setattr(catalog, "_listing", lambda p: None)
     assert catalog.row_count(spark, docs) == spark.read.parquet(docs).count()
+
+
+def test_non_local_read_opens_one_relation(spark, tmp_path, monkeypatch):
+    """A path without a driver-side listing (hdfs://, s3a://) opens one
+    relation, which infers its schema."""
+    path = str(tmp_path / "t")
+    spark.range(5).write.parquet(path)
+    monkeypatch.setattr(catalog, "_listing", lambda p: None)
+    opened = _parquet_opens(monkeypatch)
+    df = read_parquet(spark, path)
+    assert opened == [path]
+    assert _rows(df) == [(i,) for i in range(5)]
+
+
+def test_listing_versions_every_rewrite(tmp_path):
+    """The listing, and so a derived store's directory, changes on a
+    part file rewritten in place, on an added file and on an equal-size
+    file renamed into place with the old mtime (only st_ino differs); it
+    is equal on an untouched path."""
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    part = table / "part-0.parquet"
+    part.write_bytes(b"a" * 10)
+    before, store = catalog._listing(str(table)), catalog.deterministic_tmp_dir("k", str(table))
+    assert catalog._listing(str(table)) == before
+
+    part.write_bytes(b"b" * 11)  # in place: same inode
+    rewritten = catalog._listing(str(table))
+    assert rewritten != before
+    assert catalog.deterministic_tmp_dir("k", str(table)) != store
+
+    (table / "part-1.parquet").write_bytes(b"c")
+    added = catalog._listing(str(table))
+    assert len(added) == 2 and added[0] == rewritten[0]
+
+    st = os.stat(part)
+    fresh = tmp_path / "fresh"
+    fresh.write_bytes(b"d" * 11)
+    os.utime(fresh, ns=(st.st_atime_ns, st.st_mtime_ns))
+    os.rename(fresh, part)
+    renamed = catalog._listing(str(table))
+    assert renamed != added
+    assert [row[:3] for row in renamed] == [row[:3] for row in added]
+
+
+def _sf_copy(root, documents) -> str:
+    """A copy of SF_DIR under ``root`` whose documents.parquet is a
+    directory holding one part file with the ``documents`` table."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(root)
+    for t in catalog.TABLES:
+        if t != "documents":
+            shutil.copyfile(catalog.table_path(SF_DIR, t), catalog.table_path(root, t))
+    os.makedirs(catalog.table_path(root, "documents"))
+    pq.write_table(documents, _docs_part(root))
+    return root
+
+
+def _docs_part(sf_dir) -> str:
+    return os.path.join(catalog.table_path(sf_dir, "documents"), "part-00000.parquet")
+
+
+def _drop_session_caches(*sf_dirs):
+    for key, (_version, df) in list(catalog._MEMO_PERSIST.items()):
+        if key[-1] in sf_dirs:
+            df.unpersist()
+            del catalog._MEMO_PERSIST[key]
+    for sf in sf_dirs:
+        catalog.clear_derived_stores(sf)
+
+
+def test_rewrite_in_place_reaches_memo_and_derived_store(spark, tmp_path):
+    """One session: a part file rewritten in place inside A's documents
+    directory reaches a memo_persist frame (text_tfidf_topterm) and a
+    derived store (dedup_minhash_lsh's MinHash signatures), so both
+    answer what they answer on B, the dataset the new file came from."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    docs = pq.read_table(catalog.table_path(SF_DIR, "documents"))
+    a = _sf_copy(str(tmp_path / "a"), docs)
+    b = _sf_copy(str(tmp_path / "b"), docs.take(list(range(0, docs.num_rows, 2))))
+    qs = all_queries()
+    names = ("text_tfidf_topterm", "dedup_minhash_lsh")
+
+    def rows(name, sf_dir):
+        return sorted(map(tuple, qs[name].fn(spark, sf_dir).collect()))
+
+    old_stores = []
+    try:
+        want = {n: rows(n, b) for n in names}
+        for n in names:
+            assert rows(n, a) != want[n], n
+        # clear_derived_stores finds only the current version's stores.
+        old_stores = [d for src in [a] + [catalog.table_path(a, t) for t in catalog.TABLES]
+                      for d in glob.glob(catalog.deterministic_tmp_dir("*", src))]
+        shutil.copyfile(_docs_part(b), _docs_part(a))
+        for n in names:
+            assert rows(n, a) == want[n], n
+    finally:
+        _drop_session_caches(a, b)
+        for d in old_stores:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_memo_persist_unpersists_replaced_frames(spark, tmp_path):
+    """Three rewrites of the dataset leave no more persisted RDDs than
+    one version does: each replaced memo frame is unpersisted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    path = catalog.table_path(sf, "region")
+    pq.write_table(pa.table({"id": list(range(3))}), path)
+    jsc = spark.sparkContext._jsc
+
+    def persisted(n_rows):
+        df = catalog.memo_persist(spark, "unit_rewrite", sf, lambda: read_parquet(spark, path))
+        assert df.count() == n_rows
+        return jsc.getPersistentRDDs().size()
+
+    try:
+        first = persisted(3)
+        for n in (4, 5, 6):
+            pq.write_table(pa.table({"id": list(range(n))}), path)
+            assert persisted(n) <= first
+    finally:
+        _drop_session_caches(sf)
+
+
+def test_memo_persist_single_copy_and_repersist(spark, tmp_path):
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return spark.range(100).withColumn("x", F.col("id") * 2)
+
+    a = catalog.memo_persist(spark, "unit_memo_test", str(tmp_path), build)
+    b = catalog.memo_persist(spark, "unit_memo_test", str(tmp_path), build)
+    assert a is b and calls["n"] == 1, "memo must build once and share the frame"
+    assert a.storageLevel.useMemory or a.storageLevel.useDisk
+    a.count()
+    spark.catalog.clearCache()
+    c = catalog.memo_persist(spark, "unit_memo_test", str(tmp_path), build)
+    assert c is a and calls["n"] == 1
+    assert c.storageLevel.useMemory or c.storageLevel.useDisk, (
+        "memo must re-persist after an external clearCache"
+    )
+    c.unpersist()
+
+
+def test_concurrent_memo_persist_shares_one_frame(spark, tmp_path):
+    """Racing cold calls may each build, but the first insert wins and
+    every caller gets that one persisted frame."""
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            frames = list(pool.map(
+                lambda _: catalog.memo_persist(spark, "unit_race", str(tmp_path), lambda: spark.range(4)),
+                range(16), timeout=300,
+            ))
+    finally:
+        sys.setswitchinterval(interval)
+    key = (spark.sparkContext.applicationId, "unit_race", str(tmp_path))
+    assert all(f is frames[0] for f in frames)
+    assert catalog._MEMO_PERSIST[key][1] is frames[0]
+    assert frames[0].storageLevel.useMemory or frames[0].storageLevel.useDisk
+    _drop_session_caches(str(tmp_path))
+
+
+def test_memo_persist_evicts_stale_app_ids(spark, tmp_path):
+    """Entries keyed by a dead application's id are evicted on access so
+    the memo cannot grow unboundedly across session restarts."""
+    stale_key = ("app-dead-0000", "some_store", "/tmp/x")
+    catalog._MEMO_PERSIST[stale_key] = (None, spark.range(1))
+    df = catalog.memo_persist(spark, "r7_evict_probe", str(tmp_path), lambda: spark.range(3))
+    assert df.count() == 3
+    assert stale_key not in catalog._MEMO_PERSIST
+    live = (spark.sparkContext.applicationId, "r7_evict_probe", str(tmp_path))
+    assert live in catalog._MEMO_PERSIST
+    df.unpersist()
+    catalog._MEMO_PERSIST.pop(live, None)
+
+
+def test_clear_derived_stores_forces_rebuild(spark):
+    """Removing a published store must (a) only touch dirs keyed to
+    this SF and (b) make the next access rebuild in-process, landing
+    the build in STORE_BUILD_TIMES."""
+    from data_pipeline_with_hdfs_sql_integration_spark.plans import similarity as sim
+
+    store = sim.ivf2_index_store(spark, SF_DIR)  # ensure published
+    assert os.path.exists(os.path.join(store, "_SUCCESS"))
+    removed = catalog.clear_derived_stores(SF_DIR)
+    assert os.path.basename(store) in removed
+    assert not os.path.exists(store)
+    catalog.STORE_BUILD_TIMES.pop(os.path.basename(store), None)
+    store2 = sim.ivf2_index_store(spark, SF_DIR)
+    assert store2 == store and os.path.exists(os.path.join(store, "_SUCCESS"))
+    assert catalog.STORE_BUILD_TIMES.get(os.path.basename(store), 0.0) > 0.0
 
 
 def _write_store(path, data="data"):

@@ -472,34 +472,10 @@ def test_replication_reaches_every_main_and_partition_file(spark, tmp_path, monk
 
 
 def _final_epoch(spark, out_root):
-    """The latest epoch dir stream_to_parquet_exactly_once wrote: in
-    complete mode, the whole result."""
+    """The latest epoch dir a complete-mode epoch write left: the whole
+    result."""
     epochs = [int(d.split("=")[1]) for d in os.listdir(out_root) if d.startswith("epoch=")]
     return spark.read.parquet(f"{out_root}/epoch={max(epochs)}")
-
-
-def test_foreach_batch_exactly_once_sink(spark):
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_pipeline_with_hdfs_sql_integration_spark.streaming.sinks import (
-        stream_to_parquet_exactly_once,
-    )
-    from data_pipeline_with_hdfs_sql_integration_spark.streaming.windows import events_stream
-
-    root = tempfile.mkdtemp(prefix="dps_sink_stream_")
-    agg = events_stream(spark, SF_DIR).groupBy("event_type").agg(F.count("*").alias("n"))
-    stream_to_parquet_exactly_once(agg, f"{root}/out", f"{root}/ckpt")
-    result = {r["event_type"]: r["n"] for r in _final_epoch(spark, f"{root}/out").collect()}
-
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
-
-    expected = {
-        r["event_type"]: r["n"]
-        for r in load(spark, SF_DIR, "events").groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-    assert result == expected
 
 
 def test_connected_components_known_graph(spark):
@@ -518,27 +494,41 @@ def test_connected_components_known_graph(spark):
 
 def test_streaming_checkpoint_resume_is_idempotent(spark):
     """Re-running a checkpointed availableNow query over an unchanged
-    source must not duplicate or alter results (exactly-once resume)."""
+    source must not duplicate or alter results (exactly-once resume).
+    Each epoch overwrites its own directory, so a replayed epoch is
+    idempotent too; the last epoch holds the whole batch result."""
     import os
     import tempfile
 
     from pyspark.sql import functions as F
 
-    from data_pipeline_with_hdfs_sql_integration_spark.streaming.sinks import (
-        stream_to_parquet_exactly_once,
-    )
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
     from data_pipeline_with_hdfs_sql_integration_spark.streaming.windows import events_stream
 
     root = tempfile.mkdtemp(prefix="dps_resume_")
-    build = lambda: (
-        events_stream(spark, SF_DIR).groupBy("event_type").agg(F.count("*").alias("n"))
-    )
-    stream_to_parquet_exactly_once(build(), f"{root}/out", f"{root}/ckpt")
+
+    def write_epoch(batch_df, epoch_id):
+        batch_df.write.mode("overwrite").parquet(f"{root}/out/epoch={epoch_id}")
+
+    def run():
+        agg = events_stream(spark, SF_DIR).groupBy("event_type").agg(F.count("*").alias("n"))
+        (
+            agg.writeStream.outputMode("complete")
+            .foreachBatch(write_epoch)
+            .option("checkpointLocation", f"{root}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+    run()
     first = {r["event_type"]: r["n"] for r in _final_epoch(spark, f"{root}/out").collect()}
     epochs_before = sorted(os.listdir(f"{root}/out"))
+    events = load(spark, SF_DIR, "events").groupBy("event_type").agg(F.count("*").alias("n"))
+    assert first == {r["event_type"]: r["n"] for r in events.collect()}
 
     # Same checkpoint, same (exhausted) source: a resumed run must be a no-op.
-    stream_to_parquet_exactly_once(build(), f"{root}/out", f"{root}/ckpt")
+    run()
     second = {r["event_type"]: r["n"] for r in _final_epoch(spark, f"{root}/out").collect()}
     assert first == second
     assert sorted(os.listdir(f"{root}/out")) == epochs_before

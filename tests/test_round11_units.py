@@ -5,15 +5,8 @@
    min/max aggregate format_txlog_zorder ran inside its timed query —
    round-10 ADVICE), including the None fallbacks a caller must treat
    as "go scan".
-2. catalog.clear_derived_stores: the bench cold-store pre-pass that
-   restores the round-6 store_build_s accounting contract (r10's
-   BENCH_DETAIL committed store_build_s={} because /tmp stayed warm
-   across driver rounds) — removing a published store must make the
-   next access rebuild it in-process and attribute the build time.
 """
 from __future__ import annotations
-
-import os
 
 from tests.conftest import SF_DIR
 
@@ -140,24 +133,6 @@ def test_maybe_requantize_commits_only_when_due(spark, tmp_path):
     # Already refreshed: hottest cell now 4 rows == limit -> not due.
     assert not maybe_requantize(spark, t, fresh, n_vectors=40, probes_per_vec=1)
     assert t.latest_version() == 1
-
-
-def test_clear_derived_stores_forces_rebuild(spark):
-    """Removing a published store must (a) only touch dirs keyed to
-    this SF and (b) make the next access rebuild in-process, landing
-    the build in STORE_BUILD_TIMES."""
-    from data_pipeline_with_hdfs_sql_integration_spark import catalog
-    from data_pipeline_with_hdfs_sql_integration_spark.plans import similarity as sim
-
-    store = sim.ivf2_index_store(spark, SF_DIR)  # ensure published
-    assert os.path.exists(os.path.join(store, "_SUCCESS"))
-    removed = catalog.clear_derived_stores(SF_DIR)
-    assert os.path.basename(store) in removed
-    assert not os.path.exists(store)
-    catalog.STORE_BUILD_TIMES.pop(os.path.basename(store), None)
-    store2 = sim.ivf2_index_store(spark, SF_DIR)
-    assert store2 == store and os.path.exists(os.path.join(store, "_SUCCESS"))
-    assert catalog.STORE_BUILD_TIMES.get(os.path.basename(store), 0.0) > 0.0
 
 
 def test_identity_partition_keys_direct_placement(spark):

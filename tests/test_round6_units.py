@@ -1,6 +1,6 @@
 """Round-6 behavior pins: prefix-containment losslessness on adversarial
-synthetic corpora, sketch-MAD error bounds, memo_persist semantics, and
-txlog in-flight-temp-file immunity."""
+synthetic corpora, sketch-MAD error bounds, and txlog
+in-flight-temp-file immunity."""
 
 from __future__ import annotations
 
@@ -103,30 +103,6 @@ def test_mad_sketch_median_within_half_bin(spark):
         # so the center-of-bin estimate is within half a bin — the
         # documented contract (SCALE.md: $250 at MS_BIN_C=50000 cents).
         assert abs(est - exact) <= MS_BIN_C // 2, (seg, est, exact)
-
-
-# ----------------------------------------------------------- memo_persist
-def test_memo_persist_single_copy_and_repersist(spark):
-    from data_pipeline_with_hdfs_sql_integration_spark.catalog import memo_persist
-
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return spark.range(100).withColumn("x", F.col("id") * 2)
-
-    a = memo_persist(spark, ("unit_memo_test",), build)
-    b = memo_persist(spark, ("unit_memo_test",), build)
-    assert a is b and calls["n"] == 1, "memo must build once and share the frame"
-    assert a.storageLevel.useMemory or a.storageLevel.useDisk
-    a.count()
-    spark.catalog.clearCache()
-    c = memo_persist(spark, ("unit_memo_test",), build)
-    assert c is a and calls["n"] == 1
-    assert c.storageLevel.useMemory or c.storageLevel.useDisk, (
-        "memo must re-persist after an external clearCache"
-    )
-    c.unpersist()
 
 
 # ------------------------------------------------------------------ txlog

@@ -31,23 +31,6 @@ def test_txlog_replays_past_eight_digit_versions(spark, tmp_path):
     assert v == 100000001
 
 
-# ----------------------------------------------------------- memo_persist
-def test_memo_persist_evicts_stale_app_ids(spark):
-    """Entries keyed by a dead application's id are evicted on access so
-    the memo cannot grow unboundedly across session restarts."""
-    from data_pipeline_with_hdfs_sql_integration_spark import catalog
-
-    stale_key = ("app-dead-0000", "some_store", "/tmp/x")
-    catalog._MEMO_PERSIST[stale_key] = spark.range(1)
-    df = catalog.memo_persist(spark, ("r7_evict_probe",), lambda: spark.range(3))
-    assert df.count() == 3
-    assert stale_key not in catalog._MEMO_PERSIST
-    live = (spark.sparkContext.applicationId, "r7_evict_probe")
-    assert live in catalog._MEMO_PERSIST
-    df.unpersist()
-    catalog._MEMO_PERSIST.pop(live, None)
-
-
 # ------------------------------------------------- sketch KS / MWU bounds
 def test_ks_sketch_within_one_bin_of_exact(spark):
     """Contract: the binned sup is a maximum over a SUBSET (bin
