@@ -18,17 +18,20 @@ expression IDs, so two loads of one table still self-join.
 Freshness: a local source's version is its ``_listing``, the relative
 path, size, ``st_mtime_ns`` and ``st_ino`` of every data file. Every
 session cache keys on it: the schema memo (with the parquet confs that
-change inference), ``memo_persist`` (the listing of its ``sf_dir``)
-and the derived stores (``deterministic_tmp_dir`` puts its digest in
-the directory name). A part file rewritten in place, a file added or
-removed, or a replacement renamed into place changes the listing, and
-the next call rebuilds. The one change it cannot see is bytes that
-change with the same size, mtime and inode. The memos are scoped to
+change inference), ``memo_persist`` (the listing of its ``sf_dir``),
+the derived stores (``deterministic_tmp_dir`` puts its digest in the
+directory name) and the prepared frames of ``prepared``, which record
+every listing their build asked for, every frame it persisted through
+``persist`` and the files behind every ``checkpoint``. A part file
+rewritten in place, a file added or removed, or a replacement renamed
+into place changes the listing, and the next call rebuilds. The one
+change it cannot see is bytes that change with the same size, mtime
+and inode. The memos are scoped to
 the applicationId, and entries of another (a restarted session) are
 evicted on access. Non-local paths (hdfs://, s3a://...) have no
 driver-side listing: their schema is inferred on every read,
-``memo_persist`` keeps its first frame, and a derived store is keyed
-to the path alone.
+``memo_persist`` keeps its first frame, a derived store is keyed to the
+path alone, and a query that reads one is rebuilt on every call.
 
 Every derived directory a plan builds (index stores, layout copies,
 transaction-log tables, the serve path's main) is published by
@@ -40,13 +43,17 @@ store back through ``read_parquet``.
 
 from __future__ import annotations
 
+import contextvars
+import hashlib
 import json
 import os
 import string
 import threading
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+from pyspark.storagelevel import StorageLevel
 
 TABLES = (
     "region",
@@ -66,12 +73,43 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+class _Build:
+    """What one query build read: every path ``_listing`` was asked
+    about (absolute) with the listing it returned, every frame
+    ``persist`` persisted, and the file roots behind every checkpoint
+    ``checkpoint`` made (by the checkpoint's RDD id; None when they are
+    not all file relations)."""
+
+    def __init__(self) -> None:
+        self.listings: dict[str, list | None] = {}
+        self.barriers: list[DataFrame] = []
+        self.checkpoints: dict[int, list[str] | None] = {}
+
+    def absorb(self, other: _Build) -> None:
+        self.listings.update(other.listings)
+        self.barriers.extend(other.barriers)
+        self.checkpoints.update(other.checkpoints)
+
+
+# The build of the query ``prepared`` is running in this context, if any.
+_BUILD: contextvars.ContextVar[_Build | None] = contextvars.ContextVar("catalog_build", default=None)
+
+
 def _listing(path: str) -> list[tuple[str, int, int, int]] | None:
     """(relative path, size, st_mtime_ns, st_ino) of every data file
     under a local path, from the driver's file listing — no Spark job.
     The version of the path for every session cache (see the module
-    docstring). Names starting with ``_`` or ``.`` (_SUCCESS, .crc) are
-    skipped. None for a missing or non-local path (hdfs://, s3a://...)."""
+    docstring), recorded into the running query build. Names starting
+    with ``_`` or ``.`` (_SUCCESS, .crc) are skipped. None for a
+    missing or non-local path (hdfs://, s3a://...)."""
+    listing = _walk(path)
+    build = _BUILD.get()
+    if build is not None:
+        build.listings[os.path.abspath(path)] = listing
+    return listing
+
+
+def _walk(path: str) -> list[tuple[str, int, int, int]] | None:
     if os.path.isdir(path):
         out = []
         for root, _dirs, files in os.walk(path):
@@ -96,25 +134,33 @@ def _listing(path: str) -> list[tuple[str, int, int, int]] | None:
 _MEMO_LOCK = threading.Lock()
 
 
-def _versioned(memo: dict, spark: SparkSession, key: tuple, version, build) -> tuple:
-    """(the value ``build()`` makes for ``key`` at ``version``, the value
-    it replaced or None), memoized in ``memo`` per applicationId.
-    Entries of other applicationIds are evicted. ``build()`` runs
-    outside the lock: racing cold calls each build, and the first
-    insert at ``version`` wins."""
+def _versioned(memo: dict, spark: SparkSession, key: tuple, holds, build) -> tuple:
+    """(the value memoized in ``memo`` for ``key``, the value it
+    replaced or None), per applicationId: entries of other
+    applicationIds are evicted. An entry is ``(version, value)`` and
+    answers while ``holds(entry)``; else ``build()`` returns a new
+    ``(version, value)``, which is stored unless the version is None
+    (that stores nothing and drops the entry that did not hold).
+    ``build()`` runs outside the lock: racing cold calls each build,
+    and an entry another call stored at the same version while this
+    one built wins."""
     app_id = spark.sparkContext.applicationId
     key = (app_id, *key)
     with _MEMO_LOCK:
         for k in [k for k in memo if k[0] != app_id]:
             del memo[k]
-        entry = memo.get(key)
-    if entry is not None and entry[0] == version:
-        return entry[1], None
-    built = build()
+        seen = memo.get(key)
+    if seen is not None and holds(seen):
+        return seen[1], None
+    version, built = build()
     with _MEMO_LOCK:
         entry = memo.get(key)
-        if entry is not None and entry[0] == version:
+        if entry is not None and entry is not seen and entry[0] == version:
             return entry[1], None
+        if version is None:
+            if entry is seen:
+                memo.pop(key, None)
+            return built, None
         memo[key] = (version, built)
     return built, None if entry is None else entry[1]
 
@@ -236,9 +282,10 @@ def _memo_schema(spark: SparkSession, path: str) -> StructType | None:
     if listing is None:
         return None
     confs = inference_confs(spark)
+    version = (tuple(listing), tuple(confs.values()))
     schema, _ = _versioned(
-        _SCHEMAS, spark, (os.path.abspath(path),), (tuple(listing), tuple(confs.values())),
-        lambda: _footer_schema(path, listing, confs) or spark.read.parquet(path).schema,
+        _SCHEMAS, spark, (os.path.abspath(path),), lambda entry: entry[0] == version,
+        lambda: (version, _footer_schema(path, listing, confs) or spark.read.parquet(path).schema),
     )
     return schema
 
@@ -425,21 +472,188 @@ _MEMO_PERSIST: dict[tuple, tuple] = {}
 def memo_persist(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
     """The session's one persisted copy of the frame ``build()`` makes
     from the tables under ``sf_dir``; ``name`` and ``sf_dir`` must
-    determine its content. Versioned by ``_listing(sf_dir)``, taken
-    before ``build()``: a rewritten dataset rebuilds, and the replaced
+    determine its content. Versioned by the digest of
+    ``_listing(sf_dir)``, taken before ``build()``: a rewritten dataset
+    rebuilds, and the replaced
     frame is unpersisted first, since the CacheManager matches plans
     and would answer the new frame with the old frame's cached rows. A
     frame that a ``clearCache`` dropped is persisted again, so callers
     may clear the session cache between queries."""
-    from pyspark.storagelevel import StorageLevel
-
-    df, replaced = _versioned(_MEMO_PERSIST, spark, (name, sf_dir), _listing(sf_dir), build)
+    version = _digest(_listing(sf_dir))
+    df, replaced = _versioned(
+        _MEMO_PERSIST, spark, (name, sf_dir), lambda entry: entry[0] == version, lambda: (version, build())
+    )
     if replaced is not None:
         replaced.unpersist()
-    lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
+    return persist(df)
+
+
+def _is_cached(df: DataFrame) -> bool:
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df``, persisted MEMORY_AND_DISK unless it is cached already,
+    and recorded as a barrier of the running query build (see
+    ``prepared``). Plan code persists through this helper only."""
+    if not _is_cached(df):
         df.persist(StorageLevel.MEMORY_AND_DISK)
+    build = _BUILD.get()
+    if build is not None:
+        build.barriers.append(df)
     return df
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, recorded into the running
+    query build with the file roots ``df`` reads: the checkpoint's plan
+    is one LogicalRDD, which no longer shows them (see ``prepared``).
+    Plan code checkpoints through this helper only."""
+    out = df.localCheckpoint(eager=True)
+    build = _BUILD.get()
+    if build is not None:
+        build.checkpoints[out._jdf.queryExecution().analyzed().rdd().id()] = _file_roots(df, build)
+    return out
+
+
+# The frame each (session, query, dataset) last built, with the build's
+# record; see ``prepared``.
+_PREPARED: dict[tuple, tuple] = {}
+
+#: Prepared-frame outcomes per query name: ``hit`` (the stored frame
+#: answered), ``miss`` (built and stored) and ``refused`` (built, not
+#: storable: see ``prepared``).
+PREPARED_COUNTS: dict[str, dict[str, int]] = {}
+
+# Analyzed-plan leaves that read no file.
+_FILELESS_LEAVES = frozenset({"LocalRelation", "Range", "OneRowRelation", "CTERelationRef", "UnionLoopRef"})
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.length())]
+
+
+def _from_driver(rdd) -> bool:
+    """True when every root of ``rdd``'s lineage is a collection the
+    driver handed to Spark (``createDataFrame`` of local rows)."""
+    deps = _seq(rdd.dependencies())
+    if not deps:
+        return rdd.getClass().getSimpleName() == "ParallelCollectionRDD"
+    return all(_from_driver(d.rdd()) for d in deps)
+
+
+def _file_roots(df: DataFrame, build: _Build) -> list[str] | None:
+    """The root path of every file relation in ``df``'s analyzed plan,
+    subqueries included, or None when a leaf reads anything else. The
+    analyzed plan, since the optimized one shows a persisted subtree as
+    one cached leaf. A checkpoint ``build`` recorded stands for the
+    roots recorded with it; an RDD of local rows reads no file."""
+    plan = df._jdf.queryExecution().analyzed()
+    roots: list[str] = []
+    for sub in [plan, *_seq(plan.subqueriesAll())]:
+        for leaf in _seq(sub.collectLeaves()):
+            kind = leaf.getClass().getSimpleName()
+            if kind in _FILELESS_LEAVES:
+                continue
+            if kind == "LogicalRelation" and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation":
+                roots += [r for r in leaf.relation().location().rootPaths().mkString("\n").split("\n") if r]
+            elif kind == "LogicalRDD":
+                rdd = leaf.rdd()
+                if rdd.id() in build.checkpoints:
+                    behind = build.checkpoints[rdd.id()]
+                else:
+                    behind = [] if _from_driver(rdd) else None
+                if behind is None:
+                    return None
+                roots += behind
+            else:
+                return None
+    return roots
+
+
+def _under_recorded(uri: str, paths: list[str]) -> bool:
+    """True when ``uri`` is a local path at or under one of the
+    absolute paths ``paths``."""
+    parsed = urlparse(uri)
+    if parsed.scheme not in ("", "file"):
+        return False
+    path = unquote(parsed.path)
+    return any(path == p or path.startswith(p.rstrip(os.sep) + os.sep) for p in paths)
+
+
+def _versioned_by(df: DataFrame, build: _Build) -> bool:
+    """True when ``build`` versions everything ``df`` reads: every
+    recorded listing is local, and every file root of ``df``'s plan
+    lies under a recorded path (a body that writes and reads back
+    through a bare ``spark.read`` fails the second test)."""
+    if any(listing is None for listing in build.listings.values()):
+        return False
+    roots = _file_roots(df, build)
+    return roots is not None and all(_under_recorded(r, list(build.listings)) for r in roots)
+
+
+def prepared(spark: SparkSession, name: str, sf_dir: str, conf_fingerprint: str, build) -> DataFrame:
+    """The frame ``build()`` makes for query ``name`` on ``sf_dir``, or
+    the one an earlier call on this session built, while that build
+    still holds: ``conf_fingerprint`` (all session confs) is unchanged,
+    every path the build listed lists the same, and every frame it
+    persisted through ``persist`` and left cached is still cached
+    (``clearCache`` drops them, and a plan re-run without its barriers
+    is not the plan that was built). A build is stored only when
+    ``_versioned_by`` holds. When a listing changed, the stale entry's
+    barriers are unpersisted before the rebuild, since the CacheManager
+    would answer the rebuilt plan with their rows. A call inside
+    another query's build passes its record on to that build. Stored
+    frames live until ``forget_prepared``.
+
+    What the check does not see: a value the body pulled to the driver
+    (``collect``, ``count``) from a read that no listing covers and
+    that its plan does not keep."""
+    outer = _BUILD.get()
+    outcome = ["hit"]
+
+    def holds(entry) -> bool:
+        (fingerprint, listings), (_df, record) = entry
+        if any(_listing(path) != listing for path, listing in listings):
+            for barrier in record.barriers:
+                barrier.unpersist()
+            return False
+        return fingerprint == conf_fingerprint and all(_is_cached(b) for b in record.barriers)
+
+    def make():
+        record = _Build()
+        token = _BUILD.set(record)
+        try:
+            df = build()
+        finally:
+            _BUILD.reset(token)
+        # A barrier the body unpersisted itself is not part of the plan.
+        record.barriers = [b for b in record.barriers if _is_cached(b)]
+        if not _versioned_by(df, record):
+            outcome[0] = "refused"
+            return None, (df, record)
+        outcome[0] = "miss"
+        return (conf_fingerprint, tuple(sorted(record.listings.items()))), (df, record)
+
+    (df, record), _ = _versioned(_PREPARED, spark, (spark, name, sf_dir), holds, make)
+    with _MEMO_LOCK:
+        counts = PREPARED_COUNTS.setdefault(name, {"hit": 0, "miss": 0, "refused": 0})
+        counts[outcome[0]] += 1
+    if outer is not None:
+        outer.absorb(record)
+    return df
+
+
+def forget_prepared() -> int:
+    """Drop every stored prepared frame and return how many there were.
+    A stored frame keeps its session and, once executed, its shuffle
+    files, broadcasts and checkpoint blocks; a long-lived session calls
+    this between queries (``global_rank.release_pins`` does)."""
+    with _MEMO_LOCK:
+        n = len(_PREPARED)
+        _PREPARED.clear()
+    return n
 
 
 # Wall-clock seconds spent *building* each derived store this process
@@ -512,17 +726,20 @@ def publish_store(target: str, build, complete=is_complete) -> None:
 
 def clear_derived_stores(sf_dir: str) -> list[str]:
     """Remove every published derived store keyed to ``sf_dir`` or its
-    tables as they are now, so the next access rebuilds it in-process
-    and lands its build time in ``STORE_BUILD_TIMES``; returns the
-    removed names. bench.py and perfbench clear before a cold pass.
-    Not safe while another process reads the same dataset's stores
-    (``SPARK_GRAFT_BENCH_COLD_STORES=0`` keeps bench.py from clearing)."""
+    tables, whichever version of them it was built from, so the next
+    access rebuilds it in-process and lands its build time in
+    ``STORE_BUILD_TIMES``; returns the removed names. bench.py and
+    perfbench clear before a cold pass. Not safe while another process
+    reads the same dataset's stores (``SPARK_GRAFT_BENCH_COLD_STORES=0``
+    keeps bench.py from clearing)."""
     import glob
     import shutil
+    import tempfile
 
     removed: list[str] = []
     for src in [sf_dir] + [table_path(sf_dir, t) for t in TABLES]:
-        for d in glob.glob(deterministic_tmp_dir("*", src)):
+        pattern = f"dps_*_{_digest(os.path.abspath(src))}_" + "?" * _DIGEST_LEN
+        for d in glob.glob(os.path.join(tempfile.gettempdir(), pattern)):
             shutil.rmtree(d, ignore_errors=True)
             removed.append(os.path.basename(d))
     return sorted(removed)
@@ -534,21 +751,23 @@ def params_digest(*params) -> str:
     Fold it into the store's `kind` so the cache key changes whenever
     the CONSTANTS change — a count alone can't (same plane count with
     different values must never serve stale signatures)."""
-    import hashlib
-
     return hashlib.sha256(repr(params).encode()).hexdigest()[:8]
 
 
+_DIGEST_LEN = 16
+
+
+def _digest(token) -> str:
+    return hashlib.sha256(repr(token).encode()).hexdigest()[:_DIGEST_LEN]
+
+
 def deterministic_tmp_dir(kind: str, source_path: str) -> str:
-    """Stable scratch dir for artifacts derived from ``source_path``,
-    keyed on its absolute path and ``_listing`` (the path alone when the
-    source is missing or not local), so a rewritten source never serves
-    a stale derived copy."""
-    import hashlib
+    """Stable scratch dir ``dps_<kind>_<path digest>_<listing digest>``
+    for artifacts derived from ``source_path``: keyed on its absolute
+    path and ``_listing`` (None when the source is missing or not
+    local), so a rewritten source never serves a stale derived copy and
+    ``clear_derived_stores`` finds every version by the path digest."""
     import tempfile
 
     ap = os.path.abspath(source_path)
-    listing = _listing(ap)
-    token = ap if listing is None else repr((ap, listing))
-    digest = hashlib.sha256(token.encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"dps_{kind}_{digest}")
+    return os.path.join(tempfile.gettempdir(), f"dps_{kind}_{_digest(ap)}_{_digest(_listing(ap))}")

@@ -43,17 +43,21 @@ _PINS: list[DataFrame] = []
 
 
 def _pin(df: DataFrame) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import persist
 
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PINS.append(df)
+    _PINS.append(persist(df))
     return df
 
 
 def release_pins() -> int:
-    """Unpersist every intermediate pinned since the last call; returns
-    how many were released. Call ONLY between queries — a plan returned
-    by these operators must be fully consumed first."""
+    """Unpersist every intermediate pinned since the last call and drop
+    the registry's prepared frames (``catalog.forget_prepared``), which
+    hold their executed plans; returns how many pins were released.
+    Call ONLY between queries — a plan returned by these operators must
+    be fully consumed first."""
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import forget_prepared
+
+    forget_prepared()
     n = len(_PINS)
     for df in _PINS:
         try:

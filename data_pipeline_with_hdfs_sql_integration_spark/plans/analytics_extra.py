@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
+    checkpoint,
     deterministic_tmp_dir,
     load,
     load_parallel,
@@ -718,4 +719,4 @@ def layout_bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Execute NOW, under the tuned confs, so the collected result really
     # ran the bloom-pruned plan; the returned frame is a scan of the
     # materialized (tiny) grouped output.
-    return j.localCheckpoint(eager=True)
+    return checkpoint(j)

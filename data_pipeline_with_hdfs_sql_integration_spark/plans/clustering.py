@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import checkpoint, load
 from data_pipeline_with_hdfs_sql_integration_spark.plans.dedup import (
     SQL_MINHASH_PAIRS_CTES,
     dedup_minhash_lsh,
@@ -51,22 +51,17 @@ def connected_components(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     # rounds) the plan alone overflows the driver heap. Checkpointing
     # truncates each round's plan to its materialized blocks.
     nodes = und.select(F.col("a").alias("n")).distinct()
-    edges = (
-        und.union(nodes.select(F.col("n").alias("a"), F.col("n").alias("b")))
-        .distinct()
-        .localCheckpoint(True)
-    )
-    labels = nodes.select(F.col("n").alias("node"), F.col("n").alias("label")).localCheckpoint(True)
+    edges = checkpoint(und.union(nodes.select(F.col("n").alias("a"), F.col("n").alias("b"))).distinct())
+    labels = checkpoint(nodes.select(F.col("n").alias("node"), F.col("n").alias("label")))
     # Labels only ever decrease, so sum(label) strictly decreases until
     # the fixpoint: a one-row aggregate is the convergence check.
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
 
     for _ in range(MAX_ITERATIONS):
-        labels = (
+        labels = checkpoint(
             edges.join(labels, edges.a == labels.node)
             .groupBy(F.col("b").alias("node"))
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(True)
         )
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
@@ -110,18 +105,12 @@ def connected_components_star(pairs: DataFrame, src: str, dst: str) -> DataFrame
     # truncates the plan to the materialized blocks; on a cluster the
     # same call (or a reliable checkpoint dir) is what GraphX-style
     # iterative algorithms do.
-    e = (
+    e = checkpoint(
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(True)
     )
-    nodes = (
-        e.select(F.col("a").alias("n"))
-        .union(e.select(F.col("b").alias("n")))
-        .distinct()
-        .localCheckpoint(True)
-    )
+    nodes = checkpoint(e.select(F.col("a").alias("n")).union(e.select(F.col("b").alias("n"))).distinct())
 
     def checksum(edges: DataFrame):
         row = edges.agg(
@@ -161,7 +150,7 @@ def connected_components_star(pairs: DataFrame, src: str, dst: str) -> DataFrame
 
     prev_e, prev = e, checksum(e)
     for _ in range(MAX_ITERATIONS):
-        e = small_star(large_star(prev_e)).localCheckpoint(True)
+        e = checkpoint(small_star(large_star(prev_e)))
         cur = checksum(e)
         # The (count, wrapping-sum) checksum is a cheap fast path that
         # can collide; on apparent convergence confirm the fixpoint

@@ -26,22 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, persist
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Persist a (small, derived) table that feeds a self-join.
-
-    Without this, both sides of the self-join re-run the whole hash
-    lineage — Spark's exchange reuse does not fire across the differing
-    a/b projections. Signatures are tiny next to raw text (the 100 TB
-    ratio is even more lopsided), so MEMORY_AND_DISK is safe at scale.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
 
 JACCARD_THRESHOLD = 0.5
 MINHASH_EST_THRESHOLD = 0.5
@@ -182,9 +169,7 @@ def _shingles_of(docs: DataFrame) -> DataFrame:
     core of _shingle_hashes, reused by the streaming ingestion gate on
     per-micro-batch frames (those are transient, so a plain persist —
     not the session memo — is correct here)."""
-    from pyspark.storagelevel import StorageLevel
-
-    base = _token_base(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    base = persist(_token_base(docs))
     return _sh_select(base)
 
 
@@ -289,7 +274,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token-hash array inlined by CollapseProject) re-computes per
     # emitted element: measured 73 s cold at sf0.1 vs 1.4 s with the
     # barrier. The pair table is (id, long) — tiny next to raw text.
-    ex = _materialize(raw.select("doc_id", F.explode("sh").alias("h")))
+    ex = persist(raw.select("doc_id", F.explode("sh").alias("h")))
     dfc = ex.groupBy("h").agg(F.count("*").alias("df"))
     ordered = (
         ex.join(dfc, "h")
@@ -301,7 +286,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
         )
     )
-    sh = _materialize(ordered)
+    sh = persist(ordered)
     prefix_len = (F.col("n") - F.ceil(F.col("n") * t) + 1).cast("int")
     # The prefix index ships ONLY (doc_id, n, h) — never the shingle
     # arrays. Candidate pairs dedup as bare id pairs, then the arrays
@@ -820,7 +805,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from data_pipeline_with_hdfs_sql_integration_spark.streaming import windows as W
 
-    index_bands = _materialize(
+    index_bands = persist(
         _minhash_bands(
             minhash_signature_store(spark, sf_dir).filter(F.col("doc_id") % INCR_NEW_MOD != 0)
         ).select(
@@ -980,7 +965,7 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "simhash"),
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _materialize(_simhash_df(spark, sf_dir))
+    sh = persist(_simhash_df(spark, sf_dir))
     band_vals = F.array(
         *[F.shiftright(F.col("simhash"), 10 * j).bitwiseAND(F.lit(1023)) for j in range(tf.SIMHASH_BANDS)]
     )
@@ -1065,7 +1050,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "simhash"),
 )
 def dedup_simhash_pairs_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _materialize(_simhash_df(spark, sf_dir))
+    sh = persist(_simhash_df(spark, sf_dir))
     band_vals = F.array(
         *[F.shiftright(F.col("simhash"), 10 * j).bitwiseAND(F.lit(1023)) for j in range(tf.SIMHASH_BANDS)]
     )
@@ -1257,7 +1242,7 @@ def _span_gram_sql() -> str:
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_parallel(spark, sf_dir)
     th = F.transform(tf.tokens(F.col("text")), lambda s: tf.poly_hash_str(s))
-    base = _materialize(
+    base = persist(
         docs.select("doc_id", th.alias("th")).filter(F.size("th") >= SPAN_NGRAM)
     )
 

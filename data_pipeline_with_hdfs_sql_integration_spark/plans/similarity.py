@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, read_parquet
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import load, load_parallel, persist, read_parquet
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 
@@ -88,17 +88,6 @@ def _vecs_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """Persist a small derived table referenced more than once (e.g. a
-    signature index feeding both the query-side lookup and the
-    candidate scan) — signatures are 16 bytes/vector, tiny next to the
-    raw vectors at any scale, and without this every reference re-runs
-    the interpreter-bound signature fold over the whole corpus."""
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def lsh_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,7 +260,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persisted: referenced twice (query-vector lookup + candidate
     # scan); recomputing means two full interpreter-bound signature
     # folds over the corpus instead of one.
-    sigs = _persist(
+    sigs = persist(
         e.selectExpr(
             "vec_id", "v",
             f"({_lsh_sig_expr('v', 0)}) AS sig_lo",
@@ -525,7 +514,7 @@ def ivf2_index_store(spark: SparkSession, sf_dir: str) -> str:
         en = _vecs(spark, sf_dir).select(
             "vec_id", "v", F.sqrt(tf.dot(F.col("v"), F.col("v"))).alias("nv")
         )
-        al1 = _persist(assigned.select("vec_id", "cell_id").join(en, "vec_id"))
+        al1 = persist(assigned.select("vec_id", "cell_id").join(en, "vec_id"))
 
         def _mat(c: DataFrame) -> DataFrame:
             # Θ(sqrt(N)) rows — the same constant-size driver
@@ -1421,24 +1410,22 @@ _MMR_CTES, _MMR_FINAL = _sql_mmr()
 def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _vecs(spark, sf_dir)
     q = e.filter(F.col("vec_id") == QUERY_VEC_ID).select(F.col("v").alias("qv"))
-    cand = (
+    cand = persist(
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(q))
         .select("vec_id", _cos_e6(F.col("v"), F.col("qv")).alias("rel_e6"), "v")
         .orderBy(F.col("rel_e6").desc(), F.col("vec_id").asc())
         .limit(MMR_POOL)
-        .persist()
     )
     ca = cand.alias("ca")
     cb = cand.alias("cb")
-    pairsim = (
+    pairsim = persist(
         ca.join(cb, F.col("ca.vec_id") != F.col("cb.vec_id"))
         .select(
             F.col("ca.vec_id").alias("pa"),
             F.col("cb.vec_id").alias("pb"),
             _cos_e6(F.col("ca.v"), F.col("cb.v")).alias("sim_e6"),
         )
-        .persist()
     )
     # Each greedy round's argmax is a 1-row driver collect (the
     # constant-size k-means-centers pattern); chaining the rounds as
@@ -1643,7 +1630,7 @@ def _register_pipeline_embedding_curation() -> None:
     def pipeline_embedding_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql import Window
 
-        base = registry.get("dedup_semantic").fn(spark, sf_dir).persist()
+        base = persist(registry.get("dedup_semantic").fn(spark, sf_dir))
         surv = base.filter(F.col("keep") == 1).select(
             "vec_id",
             "cell_id",

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import load_parallel, row_count, table_path
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import checkpoint, load_parallel, persist, row_count, table_path
 from data_pipeline_with_hdfs_sql_integration_spark.functions import textfns as tf
 from data_pipeline_with_hdfs_sql_integration_spark.registry import query
 
@@ -314,18 +314,15 @@ BPE_MERGE_ROUNDS = 16
     tags=("text", "tokens", "training"),
 )
 def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     docs = load_parallel(spark, sf_dir, "documents")
     chars = F.filter(F.split(F.col("tok"), ""), lambda x: x != "")
     # The ONLY full-corpus pass: token occurrences -> (distinct word, freq).
-    words = (
+    words = persist(
         docs.select(F.explode(tf.tokens(F.col("text"))).alias("tok"))
         .filter(F.length("tok") >= 2)
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(chars.alias("syms"), "freq")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     records = []
     for rnd in range(1, BPE_MERGE_ROUNDS + 1):
@@ -360,9 +357,9 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"THEN concat(slice(acc, 1, size(acc) - 1), array('{mq}')) "
             f"ELSE concat(acc, array(s)) END)"
         )
-        # localCheckpoint (eager) materializes AND truncates lineage, so
+        # The eager checkpoint materializes AND truncates lineage, so
         # the next round's plan holds exactly one fold expression.
-        nxt = words.select(apply_merge.alias("syms"), "freq").localCheckpoint(eager=True)
+        nxt = checkpoint(words.select(apply_merge.alias("syms"), "freq"))
         words.unpersist()
         words = nxt
     words.unpersist()
@@ -714,8 +711,6 @@ PHRASE_W1, PHRASE_W2 = "table", "scan"
     tags=("text", "search"),
 )
 def search_phrase_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     docs = load_parallel(spark, sf_dir, "documents")
     pos = docs.select(
         "doc_id", F.posexplode(tf.tokens(F.col("text"))).alias("pos", "token")
@@ -724,9 +719,7 @@ def search_phrase_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier each branch re-scans and re-tokenizes the whole corpus
     # (measured 2 scans in the plan); with it the corpus is tokenized
     # once and only the tiny posting table is read twice.
-    pos_f = pos.filter(F.col("token").isin(PHRASE_W1, PHRASE_W2)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    pos_f = persist(pos.filter(F.col("token").isin(PHRASE_W1, PHRASE_W2)))
     a = pos_f.filter(F.col("token") == PHRASE_W1).select("doc_id", "pos")
     b = pos_f.filter(F.col("token") == PHRASE_W2).select(
         "doc_id", (F.col("pos") - 1).alias("pos")
@@ -1112,12 +1105,10 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("s_fr") == best, "fr")
         .otherwise("zh")
     )
-    from pyspark.storagelevel import StorageLevel
-
     # Slim survivor projection, persisted: BOTH consumers (the dedup
     # aggregate and the manifest join-back) read ~50 bytes/doc from
     # cache instead of re-running the tokenize+langid lineage.
-    gated = (
+    gated = persist(
         scored.filter(
             (F.col("n_tokens") >= MIN_TOKENS)
             & (F.col("n_tokens") <= MAX_TOKENS)
@@ -1130,7 +1121,6 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             F.sha2(F.col("text"), 256).alias("h"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     deduped = gated.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
     return (

@@ -14,6 +14,16 @@ is given (a caller may hand us one we did not build). The wrapper is
 both the registered ``QuerySpec.fn`` and the module attribute, so a
 direct call, a registry call and a query calling another query all
 behave alike; a query body never applies the confs itself.
+
+The wrapper also prepares the query (``catalog.prepared``): a repeated
+call on one session and dataset returns the DataFrame the first call
+built while the session's confs, every listing the build read and every
+frame it persisted are unchanged, so it costs no plan build. Execution
+is not memoized: each action on the frame runs it again. A build that
+reads anything it cannot version (a non-local path, or files read back
+through a bare ``spark.read``) is rebuilt on every call. Stored frames
+stay until ``catalog.forget_prepared``, which
+``global_rank.release_pins`` calls between queries.
 """
 
 from __future__ import annotations
@@ -24,6 +34,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import prepared
 from data_pipeline_with_hdfs_sql_integration_spark.session import apply_runtime_confs
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -43,8 +54,8 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 def query(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()):
     """Decorator registering a query implementation; returns the
-    registered callable, which applies the runtime confs and then runs
-    ``fn``."""
+    registered callable, which applies the runtime confs and then
+    returns the prepared frame of ``fn``."""
 
     def wrap(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
@@ -52,8 +63,8 @@ def query(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = 
 
         @functools.wraps(fn)
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            apply_runtime_confs(spark)
-            return fn(spark, sf_dir)
+            confs = apply_runtime_confs(spark)
+            return prepared(spark, name, sf_dir, confs, lambda: fn(spark, sf_dir))
 
         _REGISTRY[name] = QuerySpec(name=name, fn=run, oracle=oracle, doc=doc or fn.__doc__ or "", tags=tags)
         return run

@@ -18,6 +18,7 @@ import hashlib
 import os
 import shutil
 import subprocess
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -113,24 +114,41 @@ def tws_ready(spark: SparkSession) -> bool:
     return True
 
 
-def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Set session-mutable confs on an externally-built session."""
+# The conf string (``conf_fingerprint``) each session had after its
+# last ``apply_runtime_confs``.
+_APPLIED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def conf_fingerprint(spark: SparkSession) -> str:
+    """Every conf of `spark` as one string, read in one JVM call
+    (``spark.conf.getAll`` converts the map key by key: ~130 ms)."""
+    return spark._jsparkSession.conf().getAll().toString()
+
+
+def apply_runtime_confs(spark: SparkSession) -> str:
+    """Set RUNTIME_CONFS on a session we may not have built and return
+    its ``conf_fingerprint``. The keys are set again only when the
+    confs differ from the ones this session had after its last apply,
+    so a conf changed in between is reset."""
+    confs = conf_fingerprint(spark)
+    if _APPLIED.get(spark) == confs:
+        return confs
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on this build — builder already set it
-    return spark
+    confs = conf_fingerprint(spark)
+    _APPLIED[spark] = confs
+    return confs
 
 
 def child_session(spark: SparkSession, tuned: dict[str, str]) -> SparkSession:
-    """A new session on `spark`'s SparkContext with `spark`'s modifiable
-    confs plus `tuned`. It has its own confs and temp views, so a query
-    that needs tuned confs runs on it and the shared session never sees
-    them. The copy is needed: a child starts from the builder confs only."""
-    child = spark.newSession()
-    confs = {k: v for k, v in spark.conf.getAll.items() if spark.conf.isModifiable(k)}
-    for k, v in {**confs, **tuned}.items():
+    """A clone of `spark` (its confs, on its SparkContext) with `tuned`
+    set. It has its own confs and temp views, so a query that needs
+    tuned confs runs on it and the shared session never sees them."""
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for k, v in tuned.items():
         child.conf.set(k, v)
     return child
 
@@ -301,4 +319,5 @@ def get_spark(app_name: str = "data_pipeline_with_hdfs_sql_integration_spark", s
         classpath = spark._jvm.System.getProperty("java.class.path")
         atexit.register(_build_archive, spark.sparkContext._gateway.proc, java, classpath, classlist, archive)
     spark.sparkContext.setLogLevel("WARN")
-    return apply_runtime_confs(spark)
+    apply_runtime_confs(spark)
+    return spark

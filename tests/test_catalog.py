@@ -389,12 +389,23 @@ def _drop_session_caches(*sf_dirs):
         catalog.clear_derived_stores(sf)
 
 
+def _outcomes(name) -> dict:
+    return dict(catalog.PREPARED_COUNTS.get(name, {"hit": 0, "miss": 0, "refused": 0}))
+
+
+def _grew(before: dict, after: dict) -> dict:
+    return {k: after[k] - before[k] for k in after}
+
+
 def test_rewrite_in_place_reaches_memo_and_derived_store(spark, tmp_path):
     """One session: a part file rewritten in place inside A's documents
-    directory reaches a memo_persist frame (text_tfidf_topterm) and a
-    derived store (dedup_minhash_lsh's MinHash signatures), so both
-    answer what they answer on B, the dataset the new file came from."""
-    import glob
+    directory reaches a memo_persist frame (text_tfidf_topterm), a
+    derived store (dedup_minhash_lsh's MinHash signatures), a frame
+    persisted per call (search_phrase_docs, dedup_winnowing_overlap:
+    the CacheManager would match their rebuilt plans to the old rows)
+    and the prepared frame each query answered A's repeat call with, so
+    all answer what they answer on B, the dataset the new file came
+    from."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -405,26 +416,197 @@ def test_rewrite_in_place_reaches_memo_and_derived_store(spark, tmp_path):
     a = _sf_copy(str(tmp_path / "a"), docs)
     b = _sf_copy(str(tmp_path / "b"), docs.take(list(range(0, docs.num_rows, 2))))
     qs = all_queries()
-    names = ("text_tfidf_topterm", "dedup_minhash_lsh")
+    names = ("text_tfidf_topterm", "dedup_minhash_lsh", "search_phrase_docs", "dedup_winnowing_overlap")
 
     def rows(name, sf_dir):
         return sorted(map(tuple, qs[name].fn(spark, sf_dir).collect()))
 
-    old_stores = []
     try:
         want = {n: rows(n, b) for n in names}
         for n in names:
             assert rows(n, a) != want[n], n
-        # clear_derived_stores finds only the current version's stores.
-        old_stores = [d for src in [a] + [catalog.table_path(a, t) for t in catalog.TABLES]
-                      for d in glob.glob(catalog.deterministic_tmp_dir("*", src))]
+            before = _outcomes(n)
+            assert rows(n, a) != want[n], n
+            assert _grew(before, _outcomes(n)) == {"hit": 1, "miss": 0, "refused": 0}, n
         shutil.copyfile(_docs_part(b), _docs_part(a))
         for n in names:
+            before = _outcomes(n)
             assert rows(n, a) == want[n], n
+            assert _grew(before, _outcomes(n)) == {"hit": 0, "miss": 1, "refused": 0}, n
     finally:
         _drop_session_caches(a, b)
-        for d in old_stores:
-            shutil.rmtree(d, ignore_errors=True)
+
+
+def _prepared_record(spark, name, sf_dir):
+    key = (spark.sparkContext.applicationId, spark, name, sf_dir)
+    return catalog._PREPARED[key][1][1]
+
+
+@pytest.mark.parametrize("name", ["dedup_ngram_jaccard", "text_tfidf_topterm"])
+def test_clear_cache_rebuilds_and_repersists(spark, name):
+    """A repeat call answers with the frame the first call built; after
+    a clearCache, which drops that frame's persist barriers (a per-call
+    persist in dedup_ngram_jaccard, a memo_persist frame in
+    text_tfidf_topterm), the next call rebuilds, persists its barriers
+    again and answers the same rows."""
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    fn = all_queries()[name].fn
+    first = fn(spark, SF_DIR)
+    want = _rows(first)
+    assert fn(spark, SF_DIR) is first
+    assert _prepared_record(spark, name, SF_DIR).barriers
+    spark.catalog.clearCache()
+    before = _outcomes(name)
+    again = fn(spark, SF_DIR)
+    assert _grew(before, _outcomes(name)) == {"hit": 0, "miss": 1, "refused": 0}
+    assert again is not first
+    barriers = _prepared_record(spark, name, SF_DIR).barriers
+    assert barriers and all(catalog._is_cached(b) for b in barriers)
+    assert _rows(again) == want
+
+
+def test_clear_derived_stores_between_calls_republishes(spark):
+    """Deleting the derived stores between two calls of
+    dedup_minhash_lsh is a miss: the second call publishes its MinHash
+    signature store again and answers the same rows."""
+    import tempfile
+
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    fn = all_queries()["dedup_minhash_lsh"].fn
+    want = _rows(fn(spark, SF_DIR))
+    stores = [s for s in catalog.clear_derived_stores(SF_DIR) if s.startswith("dps_minhashsigs")]
+    assert stores
+    before = _outcomes("dedup_minhash_lsh")
+    assert _rows(fn(spark, SF_DIR)) == want
+    assert _grew(before, _outcomes("dedup_minhash_lsh")) == {"hit": 0, "miss": 1, "refused": 0}
+    assert all(catalog.is_complete(os.path.join(tempfile.gettempdir(), s)) for s in stores)
+
+
+def test_sink_roundtrip_is_refused_and_writes_every_call(spark):
+    """o05_parquet_sink_roundtrip reads back a fresh mkdtemp directory
+    through a bare spark.read, which no listing versions: its build is
+    never stored, and each call writes its extract again."""
+    import glob
+    import tempfile
+
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    fn = all_queries()["o05_parquet_sink_roundtrip"].fn
+    sinks = os.path.join(tempfile.gettempdir(), "dps_sink_*")
+    dirs = set(glob.glob(sinks))
+    before = _outcomes("o05_parquet_sink_roundtrip")
+    answers = [_rows(fn(spark, SF_DIR)) for _ in range(2)]
+    assert answers[0] == answers[1]
+    assert _grew(before, _outcomes("o05_parquet_sink_roundtrip")) == {"hit": 0, "miss": 0, "refused": 2}
+    assert len(set(glob.glob(sinks)) - dirs) == 2
+
+
+def test_changed_conf_is_reset_and_keys_the_prepared_frame(spark):
+    """A runtime conf changed between two calls is set back before the
+    second call builds or looks up anything, so that call finds the
+    confs the first call's frame was built under and answers with it.
+    A change to any other conf stays and is a miss: analysis bakes
+    session confs into the plan."""
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    fn = all_queries()["o07_pushdown_scan"].fn
+    first = fn(spark, SF_DIR)
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    assert fn(spark, SF_DIR) is first
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    key, old = "spark.sql.caseSensitive", spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set(key, "true" if old == "false" else "false")
+    try:
+        before = _outcomes("o07_pushdown_scan")
+        again = fn(spark, SF_DIR)
+        assert _grew(before, _outcomes("o07_pushdown_scan")) == {"hit": 0, "miss": 1, "refused": 0}
+        assert again is not first and _rows(again) == _rows(first)
+    finally:
+        spark.conf.set(key, old)
+
+
+def _side_table(spark, tmp_path) -> str:
+    path = str(tmp_path / "side")
+    spark.range(5).write.parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("barrier", ["persist", "checkpoint"])
+def test_bare_read_behind_a_barrier_is_refused(spark, tmp_path, barrier):
+    """A body that persists or checkpoints a bare spark.read of a path
+    no listing covers is never stored, though the frame's optimized
+    plan shows that read only as a cached or checkpointed leaf; the
+    same body reading the path through the catalog is stored."""
+    path = _side_table(spark, tmp_path)
+    keep = getattr(catalog, barrier)
+    name = f"unit_bare_{barrier}"
+
+    def body(read):
+        def build():
+            side = keep(read(path))
+            side.count()
+            return load(spark, SF_DIR, "nation").crossJoin(side)
+        return build
+
+    before = _outcomes(name)
+    bare = [catalog.prepared(spark, name, SF_DIR, "confs", body(spark.read.parquet)) for _ in range(2)]
+    assert _grew(before, _outcomes(name)) == {"hit": 0, "miss": 0, "refused": 2}
+    assert len(bare[1].collect()) == 125
+    before = _outcomes(name)
+    for _ in range(2):
+        catalog.prepared(spark, name, SF_DIR, "confs", body(lambda p: read_parquet(spark, p)))
+    assert _grew(before, _outcomes(name)) == {"hit": 1, "miss": 1, "refused": 0}
+    catalog.forget_prepared()
+
+
+def test_bpe_merges_hit_after_unpersisting_its_barrier(spark):
+    """text_bpe_learn_merges unpersists its persisted vocabulary and
+    checkpoints every round; its build stores only barriers still
+    cached, so the repeat call is a hit."""
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    fn = all_queries()["text_bpe_learn_merges"].fn
+    first = fn(spark, SF_DIR)
+    before = _outcomes("text_bpe_learn_merges")
+    assert fn(spark, SF_DIR) is first
+    assert _grew(before, _outcomes("text_bpe_learn_merges")) == {"hit": 1, "miss": 0, "refused": 0}
+    assert _prepared_record(spark, "text_bpe_learn_merges", SF_DIR).barriers == []
+
+
+def test_release_pins_forgets_prepared_frames(spark):
+    """release_pins, which long-lived sessions call between queries,
+    drops every prepared frame, so the next call builds again."""
+    from data_pipeline_with_hdfs_sql_integration_spark.operators.global_rank import release_pins
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    fn = all_queries()["o02_broadcast_join"].fn
+    first = fn(spark, SF_DIR)
+    assert fn(spark, SF_DIR) is first
+    release_pins()
+    assert catalog._PREPARED == {}
+    before = _outcomes("o02_broadcast_join")
+    assert fn(spark, SF_DIR) is not first
+    assert _grew(before, _outcomes("o02_broadcast_join")) == {"hit": 0, "miss": 1, "refused": 0}
+
+
+def test_clear_derived_stores_removes_every_version(tmp_path):
+    """A store made for a table, the table rewritten, the new version's
+    store made: clear_derived_stores removes both."""
+    table = catalog.table_path(str(tmp_path), "orders")
+    with open(table, "wb") as f:
+        f.write(b"a" * 10)
+    old = catalog.deterministic_tmp_dir("unit_versions", table)
+    _write_store(old)
+    with open(table, "wb") as f:
+        f.write(b"b" * 11)
+    new = catalog.deterministic_tmp_dir("unit_versions", table)
+    assert new != old
+    _write_store(new)
+    removed = catalog.clear_derived_stores(str(tmp_path))
+    assert sorted(removed) == sorted(os.path.basename(d) for d in (old, new))
+    assert not os.path.exists(old) and not os.path.exists(new)
 
 
 def test_memo_persist_unpersists_replaced_frames(spark, tmp_path):
@@ -622,6 +804,6 @@ def test_layout_stores_concurrent_first_use(spark, tmp_path):
         stores = catalog.clear_derived_stores(copy)
     for n, r in got:
         assert r == solo[n], n
-    assert {"dps_layout_day", "dps_layout_compacted"} <= {s.rsplit("_", 1)[0] for s in stores}
+    assert {"dps_layout_day", "dps_layout_compacted"} <= {s.rsplit("_", 2)[0] for s in stores}
     tmp = tempfile.gettempdir()
     assert [p for s in stores for p in glob.glob(os.path.join(tmp, s + ".*"))] == []

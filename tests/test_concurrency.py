@@ -47,6 +47,25 @@ def test_concurrent_queries_match_solo_results(spark):
             assert fut.result(timeout=300) == solo[n], n
 
 
+def test_two_threads_share_one_prepared_query(spark, duck):
+    """Two threads calling one query on one session, before and after
+    its frame is prepared, each get the DuckDB oracle's answer."""
+    from data_pipeline_with_hdfs_sql_integration_spark import catalog
+    from tests.oracle_utils import compare
+
+    spec = _q("join_revenue_topk")
+    before = dict(catalog.PREPARED_COUNTS.get(spec.name, {"hit": 0}))
+
+    def answer(_):
+        return compare(spec.fn(spark, SF_DIR), duck.sql(spec.oracle))
+
+    for _wave in range(2):
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            for ok, msg in pool.map(answer, range(2), timeout=300):
+                assert ok, msg
+    assert catalog.PREPARED_COUNTS[spec.name]["hit"] - before["hit"] >= 2
+
+
 # Every body that reads its tables through SQL text or needs tuned
 # confs: the shapes that could leak one call's session state into
 # another's.

@@ -810,14 +810,20 @@ def test_contamination_semantic_is_broadcast_map_pass(spark):
 def test_warm_build_sends_no_origin_capture(spark, monkeypatch):
     """get_spark turns PySpark's per-call origin capture off, so a warm
     plan build sends no PySparkCurrentOrigin command (with it on, every
-    Column and functions call sends about 8 more py4j commands)."""
+    Column and functions call sends about 8 more py4j commands). The
+    second build runs on a new session, where the registry holds no
+    prepared frame, so it really builds."""
+    from data_pipeline_with_hdfs_sql_integration_spark import catalog
     from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
 
     build = all_queries()["agg_pricing_summary"].fn
     build(spark, SF_DIR)
+    fresh = spark.newSession()
     client = spark._jvm._gateway_client
     send, sent = client.send_command, []
+    before = dict(catalog.PREPARED_COUNTS["agg_pricing_summary"])
     monkeypatch.setattr(client, "send_command",
                         lambda command, *args, **kw: (sent.append(command), send(command, *args, **kw))[1])
-    build(spark, SF_DIR)
+    build(fresh, SF_DIR)
+    assert catalog.PREPARED_COUNTS["agg_pricing_summary"]["miss"] == before["miss"] + 1
     assert sent and not [c for c in sent if "PySparkCurrentOrigin" in c]

@@ -205,6 +205,24 @@ def test_only_session_changes_session_state():
     assert offenders == []
 
 
+def test_only_catalog_persists():
+    """Plan code persists through catalog.persist, which records every
+    barrier into the running query build: a bare persist would let a
+    prepared frame re-run without its barrier after a clearCache. It
+    checkpoints through catalog.checkpoint, which records the files
+    behind the checkpoint: its plan no longer shows them."""
+    from pathlib import Path
+
+    import data_pipeline_with_hdfs_sql_integration_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    offenders = [
+        str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+        if any(s in p.read_text(encoding="utf-8") for s in (".persist(", ".cache()", ".localCheckpoint("))
+    ]
+    assert offenders == ["catalog.py"]
+
+
 def test_only_catalog_names_the_completion_marker():
     """catalog.publish_store writes the _SUCCESS marker and
     catalog.is_complete probes it; no other module spells it."""
