@@ -22,7 +22,9 @@ change inference), ``memo_persist`` (the listing of its ``sf_dir``),
 the derived stores (``deterministic_tmp_dir`` puts its digest in the
 directory name) and the prepared frames of ``prepared``, which record
 every listing their build asked for, every frame it persisted through
-``persist`` and the files behind every ``checkpoint``. A part file
+``persist`` and the files behind every ``checkpoint``. The serve
+path's memos (``while_listed``: a cache partition's average, a local
+path's block map) key on it too. A part file
 rewritten in place, a file added or removed, or a replacement renamed
 into place changes the listing, and the next call rebuilds. The one
 change it cannot see is bytes that change with the same size, mtime
@@ -163,6 +165,30 @@ def _versioned(memo: dict, spark: SparkSession, key: tuple, holds, build) -> tup
             return built, None
         memo[key] = (version, built)
     return built, None if entry is None else entry[1]
+
+
+def while_listed(memo: dict, path: str, compute):
+    """``compute()``'s value for the files under a local ``path``,
+    memoized in ``memo`` (absolute path -> (listing, value)) while
+    ``_listing(path)`` returns the listing taken before that compute. A
+    missing or non-local path (listing None) computes on every call.
+    For values that depend on the files alone: unlike ``_versioned``,
+    which asks the JVM for the applicationId, it sends no py4j command
+    and no session scopes its entries. Racing misses each compute and
+    each stores the version it took first, so a store that lost a race
+    with a rewrite costs the next call one compute, never a stale
+    answer."""
+    listing = _listing(path)
+    if listing is None:
+        return compute()
+    key = os.path.abspath(path)
+    entry = memo.get(key)
+    if entry is not None and entry[0] == listing:
+        return entry[1]
+    value = compute()
+    with _MEMO_LOCK:
+        memo[key] = (listing, value)
+    return value
 
 
 # Confs that change what parquet schema inference returns, with Spark's
@@ -525,6 +551,11 @@ _PREPARED: dict[tuple, tuple] = {}
 #: answered), ``miss`` (built and stored) and ``refused`` (built, not
 #: storable: see ``prepared``).
 PREPARED_COUNTS: dict[str, dict[str, int]] = {}
+
+#: Outcomes of ``PartitionCache.calc_avg``: ``hit`` (a reuse answered
+#: from the memo), ``read`` (a reuse that read the partition),
+#: ``create``, ``recreate`` and ``error`` (an in-band error answer).
+CACHE_COUNTS: dict[str, int] = dict.fromkeys(("hit", "read", "create", "recreate", "error"), 0)
 
 # Analyzed-plan leaves that read no file.
 _FILELESS_LEAVES = frozenset({"LocalRelation", "Range", "OneRowRelation", "CTERelationRef", "UnionLoopRef"})

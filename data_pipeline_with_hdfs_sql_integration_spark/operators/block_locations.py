@@ -8,6 +8,17 @@ the JVM gateway — works uniformly for file://, hdfs://, s3a://. The
 listing is already on the driver, so the count is a plain Python loop
 like the reference's; no Spark job runs. ``set_replication`` walks the
 same listing to tier replication per stored directory.
+
+On a local path the host histogram depends only on the files, so
+``block_histogram_dict`` answers a repeat call from a memo versioned by
+the path's ``catalog._listing`` (name, size, ``st_mtime_ns`` and
+``st_ino`` of every data file; ``catalog.while_listed``) and walks
+nothing while that listing holds. Any other path (hdfs://, s3a://)
+asks the JVM on every call: on HDFS, block placement moves without any
+file changing, and only a read can see a lost DataNode. What the
+version cannot see: bytes rewritten with the same size, mtime and
+inode, and a ``_``- or ``.``-prefixed file, which the listing skips
+but the JVM counts as a block when it is not empty.
 """
 
 from __future__ import annotations
@@ -17,6 +28,8 @@ from collections import Counter
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import while_listed
 
 _log = logging.getLogger(__name__)
 
@@ -84,9 +97,16 @@ def host_counts(blocks: Iterable[dict]) -> dict[str, int]:
     return dict(Counter(host for b in blocks for host in b["hosts"]))
 
 
+# Host histogram of each local path, by absolute path, with the listing
+# it was computed under (see the module docstring).
+_HISTOGRAMS: dict[str, tuple] = {}
+
+
 def block_histogram_dict(spark: SparkSession, path: str) -> dict[str, int]:
-    """The reference's map<string,int32> response shape (lender.proto:10)."""
-    return host_counts(block_locations(spark, path))
+    """The reference's map<string,int32> response shape (lender.proto:10).
+    A local path answers from the listing-versioned memo while its files
+    are unchanged; any other path walks its blocks through the JVM."""
+    return dict(while_listed(_HISTOGRAMS, path, lambda: host_counts(block_locations(spark, path))))
 
 
 def block_location_histogram(spark: SparkSession, path: str) -> DataFrame:

@@ -35,6 +35,22 @@ Which engine answers is chosen from the paths' scheme alone:
   reads the partition alone; a create filters main and writes the
   partition in place with ``mode("overwrite")``.
 
+Reuse memo (Arrow engine only): a published partition never changes
+while its files are unchanged, so a reuse takes the partition's
+``catalog._listing`` (name, size, ``st_mtime_ns`` and ``st_ino`` of
+every data file) before any read and answers the average it stored
+under that listing (``catalog.while_listed``); it opens no file and
+sends no py4j command. A listing it has not stored takes the read path
+above and stores the result. Create and recreate store nothing, and
+``invalidate()`` clears the memo. The fault semantics stay the
+reference's: a deleted partition lists as None and creates; a file
+overwritten with garbage changes size or mtime, so it is read and
+recreates; a partition with no data file recreates. The one change the
+memo cannot see is bytes rewritten with the same size, mtime and
+inode; an Arrow read has no checksum to catch that either. The Spark
+engine reads on every request. ``catalog.CACHE_COUNTS`` counts the
+outcomes: memo hits, reads, creates, recreates and errors.
+
 Both engines answer Spark's ``avg`` truncated like ``int()``
 (server.py:109); ``_arrow_avg`` keeps Spark's decimal rounding. A
 partition that is missing maps to create and any other read error to
@@ -59,7 +75,13 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_with_hdfs_sql_integration_spark.catalog import is_complete, publish_store, read_parquet
+from data_pipeline_with_hdfs_sql_integration_spark.catalog import (
+    CACHE_COUNTS,
+    is_complete,
+    publish_store,
+    read_parquet,
+    while_listed,
+)
 from data_pipeline_with_hdfs_sql_integration_spark.operators.block_locations import hadoop_fs, set_replication
 
 # In-process single flight for partition writes: the partition paths
@@ -116,6 +138,13 @@ class CacheResult:
     error: str = ""
 
 
+def _counted(result: CacheResult, outcome: str) -> CacheResult:
+    """``result``, with ``outcome`` counted in ``CACHE_COUNTS``."""
+    with _WRITES_LOCK:
+        CACHE_COUNTS[outcome] += 1
+    return result
+
+
 class PartitionCache:
     """Materialized per-key query-result cache (SURVEY.md §2 O10/O11).
 
@@ -149,6 +178,9 @@ class PartitionCache:
         self.replication = replication
         #: Arrow on the driver answers when main and the cache are local.
         self._local = _local_path(main_path) is not None and _local_path(self.cache_root) is not None
+        #: Reuse memo of the Arrow engine: local partition path ->
+        #: (listing, average); see the module docstring.
+        self._memo: dict[str, tuple] = {}
 
     @property
     def main(self) -> DataFrame:
@@ -234,9 +266,9 @@ class PartitionCache:
             # Reference: int(NaN) raises → error response (server.py:145-147).
             # Nothing of the key stays behind, so it stays a miss.
             self._delete(path)
-            return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
+            return _counted(CacheResult(key, 0, "", f"no rows for {self.key_col}={key}"), "error")
         set_replication(self.spark, path, self.replication)
-        return CacheResult(key, avg, source)
+        return _counted(CacheResult(key, avg, source), source)
 
     def _recompute_once(self, key: object, source: str) -> CacheResult:
         """_recompute unless another request in this process is already
@@ -276,16 +308,23 @@ class PartitionCache:
             return self.calc_avg(key)
         if not exists:
             return self._recompute_once(key, "create")  # server.py:113-116
+        outcome = "hit"
+
+        def read() -> int | None:
+            nonlocal outcome
+            outcome = "read"
+            return self._read_avg(path)
+
         try:
-            avg = self._read_avg(path)
+            avg = while_listed(self._memo, _local_path(path), read) if self._local else read()
         except Exception as exc:
             # A deletion raced in since the exists probe (server.py:113) or
             # the partition is unreadable (server.py:118-121, OSError).
             missing = isinstance(exc, FileNotFoundError) or any(m in str(exc) for m in _PATH_MISSING)
             return self._recompute_once(key, "create" if missing else "recreate")
         if avg is None:
-            return CacheResult(key, 0, "", f"no rows for {self.key_col}={key}")
-        return CacheResult(key, avg, "reuse")
+            return _counted(CacheResult(key, 0, "", f"no rows for {self.key_col}={key}"), "error")
+        return _counted(CacheResult(key, avg, "reuse"), outcome)
 
     def calc_avg_many(self, keys: list) -> list[CacheResult]:
         """calc_avg over a key list, 3 keys in flight from a thread
@@ -310,5 +349,7 @@ class PartitionCache:
             return list(pool.map(self.calc_avg, keys))
 
     def invalidate(self) -> None:
-        """Drop the whole cache (performance_analyzer.py:26-34, O16)."""
+        """Drop the whole cache (performance_analyzer.py:26-34, O16)
+        and the reuse memo."""
+        self._memo.clear()
         self._delete(self.cache_root)

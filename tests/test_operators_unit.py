@@ -157,6 +157,32 @@ def test_o13_rows_equal_histogram_dict(spark):
     assert rows == block_histogram_dict(spark, f"{SF_DIR}/lineitem.parquet")
 
 
+def test_o13_answers_a_rewritten_lineitem(spark, tmp_path):
+    """A part file added to lineitem between two o13 calls on one
+    session is counted by the second: its prepared frame is versioned by
+    lineitem's listing, so the repeat call rebuilds."""
+    import shutil
+
+    from data_pipeline_with_hdfs_sql_integration_spark import catalog
+    from data_pipeline_with_hdfs_sql_integration_spark.registry import all_queries
+
+    sf = str(tmp_path / "sf")
+    lineitem = catalog.table_path(sf, "lineitem")
+    os.makedirs(lineitem)
+    shutil.copyfile(catalog.table_path(SF_DIR, "lineitem"), os.path.join(lineitem, "part-00000.parquet"))
+    fn = all_queries()["o13_block_locations"].fn
+
+    def blocks() -> int:
+        return sum(r["n_blocks"] for r in fn(spark, sf).collect())
+
+    assert blocks() == 1
+    before = dict(catalog.PREPARED_COUNTS["o13_block_locations"])
+    shutil.copyfile(catalog.table_path(SF_DIR, "lineitem"), os.path.join(lineitem, "part-00001.parquet"))
+    assert blocks() == 2
+    after = catalog.PREPARED_COUNTS["o13_block_locations"]
+    assert (after["hit"], after["miss"]) == (before["hit"], before["miss"] + 1)
+
+
 def test_invalidate_before_first_store_does_not_read_main(spark, tmp_path):
     from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
 
@@ -263,6 +289,129 @@ def test_exists_probe_racing_a_deletion_still_creates(spark, tmp_path, monkeypat
     monkeypatch.setattr(PartitionCache, "_exists", lambda self, path: True)
     res = pipe.calc_avg(2)
     assert (res.avg, res.source, res.error) == (5, "create", "")
+
+
+def _counts_grew(before: dict) -> dict:
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import CACHE_COUNTS
+
+    return {k: n - before[k] for k, n in CACHE_COUNTS.items() if n != before[k]}
+
+
+def test_repeat_reuse_answers_from_the_memo(spark, tmp_path, monkeypatch):
+    """A local reuse whose partition listing is unchanged answers the
+    average it stored and opens no parquet file; the counters tell the
+    memo hit from the read."""
+    import pyarrow.parquet as pq
+
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import CACHE_COUNTS
+
+    pipe = _stored_pipeline(spark, tmp_path)
+    opened = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(pq, "ParquetFile", lambda f, *a, **kw: (opened.append(f), real(f, *a, **kw))[1])
+    before = dict(CACHE_COUNTS)
+    assert [(r.avg, r.source) for r in (pipe.calc_avg(1), pipe.calc_avg(1))] == [(15, "create"), (15, "reuse")]
+    assert opened and _counts_grew(before) == {"create": 1, "read": 1}
+    opened.clear()
+    before = dict(CACHE_COUNTS)
+    assert (pipe.calc_avg(1).avg, pipe.calc_avg(1).source) == (15, "reuse")
+    assert opened == [] and _counts_grew(before) == {"hit": 2}
+    before = dict(CACHE_COUNTS)
+    assert pipe.calc_avg(99).error and _counts_grew(before) == {"error": 1}
+
+
+def test_concurrent_memo_hits_count_every_request(spark, tmp_path):
+    """8 threads share one memo and the outcome counters: every request
+    answers the same average and is counted once."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import CACHE_COUNTS
+
+    pipe = _stored_pipeline(spark, tmp_path)
+    assert [pipe.calc_avg(1).source for _ in range(2)] == ["create", "reuse"]
+    barrier = threading.Barrier(8, timeout=60)
+
+    def hits(_):
+        barrier.wait()
+        return [pipe.calc_avg(1).avg for _ in range(50)]
+
+    before = dict(CACHE_COUNTS)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            answers = [a for got in pool.map(hits, range(8), timeout=120) for a in got]
+    finally:
+        sys.setswitchinterval(interval)
+    assert answers == [15] * 400
+    assert _counts_grew(before) == {"hit": 400}
+
+
+def test_rewritten_partition_answers_the_new_average(spark, tmp_path):
+    """Valid rows written over a memoized partition change its listing,
+    so the next call reads them and answers their average."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import CACHE_COUNTS
+
+    pipe = _stored_pipeline(spark, tmp_path)
+    assert [pipe.calc_avg(1).avg for _ in range(3)] == [15, 15, 15]
+    (part,) = glob.glob(pipe.cache.partition_path(1) + "/*.parquet")
+    pq.write_table(pa.table({"v": pa.array([100, 200, 301], pa.int64())}), part)
+    before = dict(CACHE_COUNTS)
+    assert [(r.avg, r.source) for r in (pipe.calc_avg(1), pipe.calc_avg(1))] == [(200, "reuse"), (200, "reuse")]
+    assert _counts_grew(before) == {"read": 1, "hit": 1}
+
+
+def test_spark_engine_never_consults_the_memo(spark, tmp_path, monkeypatch):
+    """The Spark engine (hdfs://, s3a:// paths) reads the partition on
+    every reuse."""
+    from data_pipeline_with_hdfs_sql_integration_spark.catalog import CACHE_COUNTS
+    from data_pipeline_with_hdfs_sql_integration_spark.operators import partition_cache
+
+    pipe = _stored_pipeline(spark, tmp_path)
+    monkeypatch.setattr(pipe.cache, "_local", False)
+    monkeypatch.setattr(partition_cache, "while_listed", lambda *a: pytest.fail("memo consulted"))
+    before = dict(CACHE_COUNTS)
+    assert [(r.avg, r.source) for r in (pipe.calc_avg(1), pipe.calc_avg(1), pipe.calc_avg(1))] == [
+        (15, "create"), (15, "reuse"), (15, "reuse")]
+    assert _counts_grew(before) == {"create": 1, "read": 2}
+
+
+def test_db_to_store_rewrite_changes_the_next_block_report(spark, tmp_path):
+    from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
+
+    pipe = Pipeline(spark, str(tmp_path / "main"), str(tmp_path / "cache"), "k", "v")
+    rows = spark.createDataFrame([(i % 3, i) for i in range(30)], "k int, v long")
+    reports = []
+    for n in (1, 3):
+        pipe.db_to_store(rows.repartition(n), attempts=1, sleep_s=0.0)
+        assert len(glob.glob(str(tmp_path / "main" / "*.parquet"))) == n
+        reports.append(pipe.block_report())
+        assert pipe.block_report() == reports[-1]
+    assert [sum(r.values()) for r in reports] == [1, 3]
+
+
+def test_non_local_block_report_walks_every_call(spark, tmp_path, monkeypatch):
+    """A path with no driver-side listing (hdfs://, s3a://; here a
+    monkeypatched listing of None) asks the JVM on every call; a local
+    path walks once while its listing holds."""
+    from data_pipeline_with_hdfs_sql_integration_spark import catalog
+    from data_pipeline_with_hdfs_sql_integration_spark.operators import block_locations as bl
+
+    path = str(tmp_path / "t")
+    spark.range(10).coalesce(1).write.parquet(path)
+    walks = []
+    real = bl.hadoop_fs
+    monkeypatch.setattr(bl, "hadoop_fs", lambda s, p: (walks.append(p), real(s, p))[1])
+    first = bl.block_histogram_dict(spark, path)
+    assert bl.block_histogram_dict(spark, path) == first and len(walks) == 1
+    monkeypatch.setattr(catalog, "_listing", lambda p: None)
+    assert [bl.block_histogram_dict(spark, path) for _ in range(2)] == [first, first]
+    assert len(walks) == 3
 
 
 def _generated_main(spark, path, vtype, layout):

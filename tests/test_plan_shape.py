@@ -827,3 +827,25 @@ def test_warm_build_sends_no_origin_capture(spark, monkeypatch):
     build(fresh, SF_DIR)
     assert catalog.PREPARED_COUNTS["agg_pricing_summary"]["miss"] == before["miss"] + 1
     assert sent and not [c for c in sent if "PySparkCurrentOrigin" in c]
+
+
+def test_serve_memo_hits_send_no_py4j_command(spark, tmp_path, monkeypatch):
+    """On local paths a CalcAvgLoan answered from the reuse memo and a
+    repeat BlockLocations send no py4j command at all."""
+    from data_pipeline_with_hdfs_sql_integration_spark import catalog
+    from data_pipeline_with_hdfs_sql_integration_spark.api import Pipeline
+
+    pipe = Pipeline(spark, str(tmp_path / "main"), str(tmp_path / "cache"), "k", "v")
+    pipe.db_to_store(spark.createDataFrame([(1, 10), (1, 21), (2, 5)], "k int, v long"),
+                     attempts=1, sleep_s=0.0)
+    assert [pipe.calc_avg(1).source for _ in range(2)] == ["create", "reuse"]
+    blocks = pipe.block_report()
+    client = spark._jvm._gateway_client
+    send, sent = client.send_command, []
+    monkeypatch.setattr(client, "send_command",
+                        lambda command, *args, **kw: (sent.append(command), send(command, *args, **kw))[1])
+    hits = catalog.CACHE_COUNTS["hit"]
+    res = pipe.calc_avg(1)
+    assert (res.avg, res.source, catalog.CACHE_COUNTS["hit"]) == (15, "reuse", hits + 1)
+    assert pipe.block_report() == blocks
+    assert sent == []
